@@ -34,20 +34,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same harness default as Verify: the window-top-k auto-rewrite is ON
-    // (round-4 decision, SCALE.md); SPARK_GRAFT_REWRITE=0 is the off-switch
-    // for before/after comparisons
-    if (!sys.env.get("SPARK_GRAFT_REWRITE").contains("0"))
-      graft.plans.TopKPerKey.enableRewrite(spark)
+    val spark = Harness.session()
     def materialize(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       fn(spark, sfDir).queryExecution.toRdd.count(); ()
     }

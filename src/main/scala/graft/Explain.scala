@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of one or all
   * SparkEntry queries. Usage: runMain graft.Explain <sfDir> [queryName].
   */
@@ -9,17 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) Seq(args(1)) else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (!sys.env.get("SPARK_GRAFT_REWRITE").contains("0"))
-      graft.plans.TopKPerKey.enableRewrite(spark)
+    val spark = Harness.session()
     val unknown = names.filterNot(SparkEntry.queries.contains)
     if (unknown.nonEmpty) {
       System.err.println(s"[explain] unknown queries: ${unknown.mkString(", ")}; " +

@@ -1,28 +1,15 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /** Dump `SparkEntry.oracleSql` as `oracle_sql.json` into an existing
   * Verify output dir WITHOUT re-running the engine — for the case where
   * only the ORACLE text changed (e.g. adding MATERIALIZED hints to a
   * DuckDB mirror: same values, different evaluation strategy) and the
   * already-dumped Spark parquet results are still the results under
-  * test. Same serializer as [[Verify]]. */
+  * test. Same serializer as [[Verify]] ([[Verify.writeOracleSql]]). */
 object OracleDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir)
     println(s"[oracledump] wrote ${SparkEntry.oracleSql.size} oracle entries to $outDir/oracle_sql.json")
   }
 }

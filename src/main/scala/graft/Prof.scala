@@ -1,0 +1,192 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
+
+/** The engine's one profiler: each scenario times a maintenance or search
+  * path around its PUBLIC calls in a [[Harness.session]] and prints one
+  * `[scenario] …` line per measurement. Artifacts land under `workDir`
+  * (deleted and rebuilt by each run).
+  *
+  * Usage: runMain graft.Prof <scenario> <sfDir> <workDir> [scenario args…]
+  *
+  *  - `graph-incr [batches=3] [batchMod=20] [buckets=0]` — per-batch cost of
+  *    [[graft.sources.GraphLayout.upsertStored]];
+  *  - `pairs-phase [reps=3]` — phase split of the incremental pair-artifact
+  *    chain ([[graft.sources.PairsLayout]]);
+  *  - `graph-sweep [beams=4,8,16] [hopss=1,2,3,4] [nQueries=16] [k=8]` —
+  *    recall@10 and warm wall per (beam, hops) of the stored-graph walk.
+  */
+object Prof {
+  type Scenario = (SparkSession, Seq[String]) => Unit
+
+  val scenarios: ListMap[String, Scenario] = ListMap(
+    "graph-incr" -> graphIncr _,
+    "pairs-phase" -> pairsPhase _,
+    "graph-sweep" -> graphSweep _)
+
+  def main(args: Array[String]): Unit = {
+    val name = args.headOption.getOrElse("")
+    val run = scenarios.get(name)
+    if (run.isEmpty || args.length < 3) {
+      System.err.println(s"[prof] usage: graft.Prof <scenario> <sfDir> <workDir> [args...]; " +
+        s"unknown or incomplete '${args.mkString(" ")}'; valid: ${scenarios.keys.mkString(", ")}")
+      sys.exit(2)
+    }
+    val spark = Harness.session()
+    try run.get(spark, args.toSeq.drop(1)) finally spark.stop()
+  }
+
+  private def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  /** Bucket-confined graph maintenance (round-12 claim, SCALE.md "Bucket-
+    * confined graph maintenance"): per micro-batch, the wall of
+    * `upsertStored`, the bytes it wrote into the live graph relation
+    * (files carrying the batch's prefix) vs the relation's total, and its
+    * touched-bucket count. `writeBase`, the once-per-snapshot price, is
+    * timed separately so the per-batch number is the one that scales.
+    * `buckets` = 0 derives the grain from the corpus
+    * (`GraphLayout.bucketsFor`); at 32 buckets any batch ≥ ~100 vectors
+    * touches every bucket, so the confined fraction only shows once
+    * buckets ≫ batch. */
+  def graphIncr(spark: SparkSession, args: Seq[String]): Unit = {
+    import graft.sources.GraphLayout
+    val Seq(sfDir, workDir) = args.take(2)
+    val nBatches = args.lift(2).map(_.toInt).getOrElse(3)
+    val batchMod = args.lift(3).map(_.toInt).getOrElse(20)
+    val buckets = args.lift(4).map(_.toInt).getOrElse(0)
+    val k = 8
+    val e = Tables.embeddings(spark, sfDir)
+    val base = e.filter(col("vec_id") % batchMod >= nBatches)
+    val dir = s"$workDir/graph-incr"
+
+    def dirBytes(p: String, prefix: String): (Long, Int) = {
+      val fs = Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
+        .filter(f => !f.getName.startsWith("_") && f.getName.startsWith(prefix))
+      val touched = fs.flatMap(f =>
+        "_(\\d+)\\.".r.findFirstMatchIn(f.getName).map(_.group(1).toInt)).toSet
+      (fs.map(_.length()).sum, touched.size)
+    }
+
+    // two passes: pass 1 warms the JVM (codegen, catalog, shuffle infra);
+    // pass 2's numbers are the ones to read (the TimeQ warm-rep rule)
+    for (pass <- 1 to 2) {
+      var t0 = System.nanoTime()
+      GraphLayout.writeBase(spark, base, dir, k, buckets = buckets)
+      val bEff = GraphLayout.storedBuckets(spark, dir)
+      println(f"[graph-incr] pass $pass writeBase(n=${base.count()}, buckets=$bEff" +
+        (if (buckets == 0) " auto" else "") + f") ${secs(t0)}%.1f s")
+      // per-batch upserts run at the gate's micro-batch conf (the
+      // streamedGraphMaintenance foreachBatch scope): 4 shuffle partitions
+      graft.streaming.StreamOps.withShufflePartitions(spark, 4) {
+        for (b <- 0 until nBatches) {
+          val batch = e.filter(col("vec_id") % batchMod === b).select("vec_id", "embedding")
+          t0 = System.nanoTime()
+          GraphLayout.upsertStored(spark, dir, batch, s"pb-$b", k)
+          val tU = secs(t0)
+          val (wrote, touched) = dirBytes(s"$dir/graph", s"pb-${b}g.")
+          val (total, _) = dirBytes(s"$dir/graph", "")
+          println(f"[graph-incr] pass $pass batch $b (${batch.count()} vecs): " +
+            f"$tU%.2f s, wrote ${wrote / 1024}%d KiB of ${total / 1024}%d KiB live " +
+            f"($touched touched buckets)")
+        }
+      }
+      t0 = System.nanoTime()
+      val rows = GraphLayout.readGraph(spark, dir).count()
+      println(f"[graph-incr] pass $pass final read: $rows rows ${secs(t0)}%.1f s")
+    }
+  }
+
+  /** Phase timing of the incremental pair-artifact chain (round-13): the
+    * 90%-slice writeIndexed, the 10% batch upsert, the batch's own
+    * pipeline and the probe against the stored index in isolation (noop
+    * sinks), the compact, and the ordered read-back. */
+  def pairsPhase(spark: SparkSession, args: Seq[String]): Unit = {
+    import graft.operators.Dedup
+    import graft.sources.{PairsLayout, SignatureLayout}
+    val Seq(sfDir, workDir) = args.take(2)
+    val reps = args.lift(2).map(_.toInt).getOrElse(3)
+    def t[A](label: String)(f: => A): A = {
+      val t0 = System.nanoTime(); val r = f
+      println(f"[pairs-phase] $label: ${secs(t0)}%.2f s"); r
+    }
+    for (rep <- 1 to reps) {
+      println(s"[pairs-phase] rep $rep")
+      val docs = Tables.documents(spark, sfDir)
+      val d = s"$workDir/pairs-phase"
+      val old = docs.filter(col("doc_id") % 10 =!= 7)
+      val batch = docs.filter(col("doc_id") % 10 === 7)
+      t("writeIndexed (90% slice)") {
+        PairsLayout.writeIndexed(spark, old, d, 0.8)
+      }
+      t("upsert (10% batch)") {
+        PairsLayout.upsert(spark, d, batch, 0.8)
+      }
+      // within-batch minhash+verify alone — the baseline to subtract from
+      // the probe phase below
+      t("batch pipeline alone (noop)") {
+        val a = Dedup.minhashArtifactsWith(batch, 0.8)
+        try a.pairs.write.format("noop").mode("overwrite").save()
+        finally a.handles.foreach(_.unpersist())
+      }
+      // the candidate join + verify against the three STORED relations,
+      // separated from the batch's own pipeline and the staged writes
+      // (which overlap concurrently inside upsert); artifact untouched
+      t("probe-only vs stored index (noop)") {
+        val a = Dedup.minhashArtifactsWith(batch, 0.8)
+        try {
+          Dedup.probeIndex(a.shingles, a.bands,
+            SignatureLayout.readBands(spark, d),
+            SignatureLayout.readShingles(spark, d),
+            SignatureLayout.readSizes(spark, d), 0.8)
+            .write.format("noop").mode("overwrite").save()
+        } finally a.handles.foreach(_.unpersist())
+      }
+      t("compact") {
+        PairsLayout.compact(spark, d)
+      }
+      t("read + orderBy (toRdd.count)") {
+        PairsLayout.read(spark, d).orderBy(asc("d1"), asc("d2"))
+          .queryExecution.toRdd.count()
+      }
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
+
+  /** Graph-search knob sweep: recall@10 (from the same report the gate
+    * uses) and warm wall (min of 2) per (beam, hops) over a k-NN graph
+    * built once — the measured basis for the defaults beam=8, hops=3
+    * (SCALE.md "Graph ANN", recall levers). */
+  def graphSweep(spark: SparkSession, args: Seq[String]): Unit = {
+    import graft.sources.GraphLayout
+    val Seq(sfDir, workDir) = args.take(2)
+    def ints(i: Int, dflt: String) = args.lift(i).getOrElse(dflt).split(",").map(_.toInt).toSeq
+    val beams = ints(2, "4,8,16")
+    val hopss = ints(3, "1,2,3,4")
+    val nQ = args.lift(4).map(_.toInt).getOrElse(16)
+    val gk = args.lift(5).map(_.toInt).getOrElse(8)
+    val e = Tables.embeddings(spark, sfDir)
+    val dir = s"$workDir/graph-sweep"
+    var t0 = System.nanoTime()
+    GraphLayout.writeBase(spark, e, dir, gk)
+    val g = GraphLayout.readGraph(spark, dir)
+    println(f"[graph-sweep] graph artifact: ${g.count()} edges, build+count ${secs(t0)}%.1f s")
+    val queries = e.filter(col("vec_id") < nQ)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    for (beam <- beams; hops <- hopss) {
+      var best = Double.MaxValue
+      var recall = 0.0
+      for (_ <- 1 to 2) {
+        t0 = System.nanoTime()
+        val row = graft.operators.NnDescent
+          .graphRecall(e, g, queries, k = 10, beam = beam, hops = hops)
+          .head()
+        best = math.min(best, secs(t0))
+        recall = row.getAs[Double]("recall")
+        spark.sharedState.cacheManager.clearCache()
+      }
+      println(f"[graph-sweep] beam=$beam%2d hops=$hops recall@10=$recall%.4f warm=$best%.2f s")
+    }
+  }
+}

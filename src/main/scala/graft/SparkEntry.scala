@@ -103,9 +103,9 @@ object SparkEntry {
     // 2 refinement rounds of neighbor-of-neighbor join + exact top-k)
     // PRICES the graph build: unconditional rebuild + persisted read-back
     // (read-back loses sort order — the gate re-sorts deterministically)
-    // k = 16 edges: the GraphProf sweep (SCALE.md) measured degree as THE
-    // recall lever on this unclustered corpus (k=8 → 0.34 recall@10 at
-    // sf0.1, k=16 → 0.75, k=32 → 0.99 at beam 16-32)
+    // k = 16 edges: the graph-walk sweep (SCALE.md "Graph ANN") measured
+    // degree as THE recall lever on this unclustered corpus (k=8 → 0.34
+    // recall@10 at sf0.1, k=16 → 0.75, k=32 → 0.99 at beam 16-32)
     "q_knn_graph" -> ((s, dir) =>
       graft.sources.GraphLayout.rebuild(s, emb(s, dir), dir, k = 16)
         .orderBy(asc("vec_id"), asc("rn"))),
@@ -353,7 +353,7 @@ object SparkEntry {
     // rule) — largest df whose cumulative predicted join volume
     // (Σ df·(df−1)/2 over the histogram) fits budget rows/doc. O(budget·n)
     // candidates at ANY corpus shape with NO hand-set knob; the answer to
-    // the sf10 saturated-vocabulary adjudication (NgramProf: percentile
+    // the sf10 saturated-vocabulary adjudication (SCALE.md: percentile
     // caps move a 9e9-row volume by 11%, a budget bounds it outright, and
     // the r11 hand default of 256 ENOSPC'd exactly where the knob mattered)
     "q_dedup_ngram_budget" -> ((s, dir) =>
@@ -374,7 +374,7 @@ object SparkEntry {
     // width-parameterized scale path: 128-bit signature, band bits chosen
     // in-plan by CANDIDATE BUDGET over a fixed ladder (16..32) — the
     // geometry the 64-bit signature structurally caps at 4×16, and the
-    // measured answer to its sf10 ENOSPC (SimhashProf: 1.43e9 candidates
+    // measured answer to its sf10 ENOSPC (SCALE.md: 1.43e9 candidates
     // at 4×16 vs 2.77e7 at 4×32 over 500k docs)
     "q_dedup_simhash_wide" -> ((s, dir) =>
       Dedup.simhashWide(Tables.documents(s, dir), threshold = 0.5)),

@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    // SAME session shape as Bench (SPARK_GRAFT_CPUS-sized, UTC): a rewrite
-    // tuned under a different partition count / timezone than the session
-    // the driver grades would be tuned against the wrong plans
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (!sys.env.get("SPARK_GRAFT_REWRITE").contains("0"))
-      graft.plans.TopKPerKey.enableRewrite(spark)
+    // SAME session as Bench (Harness.session): a rewrite tuned under a
+    // different partition count / timezone than Bench's session would be
+    // tuned against the wrong plans
+    val spark = Harness.session()
     val unknown = args.drop(1).filterNot(SparkEntry.queries.contains)
     if (unknown.nonEmpty) {
       System.err.println(s"[timeq] unknown queries: ${unknown.mkString(", ")}; " +

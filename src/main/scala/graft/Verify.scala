@@ -1,27 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Write `SparkEntry.oracleSql` as `<outDir>/oracle_sql.json` — the one
+    * serializer behind both this dump and [[OracleDump]]. */
+  def writeOracleSql(outDir: String): Unit = {
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in the oracle SQL would otherwise make the oracle
+    // checker's json.load fail and silently zero the correctness gate.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional: run just these queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the window-top-k auto-rewrite (graft.plans.TopKPerKey.Rewrite) is ON
-    // by default since round 4 (decision record in SCALE.md): the full gate
-    // passes under it and the heap prune replaces WindowGroupLimit's local
-    // sorts. SPARK_GRAFT_REWRITE=0 is the off-switch.
-    if (!sys.env.get("SPARK_GRAFT_REWRITE").contains("0"))
-      graft.plans.TopKPerKey.enableRewrite(spark)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     def deleteRecursively(f: java.io.File): Unit = {
       val children = f.listFiles()
@@ -50,21 +55,7 @@ object Verify {
         spark.sharedState.cacheManager.clearCache()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir)
     spark.stop()
     // Fail LOUDLY (round-9 verdict #3): the per-query catch above is right
     // for the driver's full-gate sweep (the checker reports each missing

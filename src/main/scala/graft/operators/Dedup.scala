@@ -36,6 +36,15 @@ import graft.functions.VectorFns.signBucket
   */
 object Dedup {
 
+  /** Default MinHash signature width and LSH band height (8 seeds in 4
+    * bands of 2 rows), and the default SimHash hamming cut. One constant
+    * per knob, shared by the pipelines' defaults, their DuckDB mirrors and
+    * [[dedupRecall]], so the recall report always measures the candidate
+    * generation the pipelines actually run. */
+  val MinhashSeeds = 8
+  val MinhashRowsPerBand = 2
+  val SimhashMaxHamming = 8
+
   /** Distinct (doc_id, shingle) pairs; the shared inverted-index relation.
     * Cached: each dedup variant reads it 3-4× (signatures, sizes, both
     * intersection sides) — at cluster scale this is the materialize-once
@@ -126,7 +135,7 @@ object Dedup {
   }
 
   def minhash(documents: DataFrame, threshold: Double,
-              seeds: Int = 8, rowsPerBand: Int = 2): DataFrame =
+              seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): DataFrame =
     minhashWith(documents, threshold, seeds, rowsPerBand)._1
 
   /** [[minhash]] plus its cached shingle relation as an explicit handle
@@ -134,7 +143,8 @@ object Dedup {
     * LIBRARY caller must release the scratch itself — by handle, never by
     * plan-equality rebuild (round-5 advice #1). */
   def minhashWith(documents: DataFrame, threshold: Double,
-                  seeds: Int = 8, rowsPerBand: Int = 2): (DataFrame, Seq[DataFrame]) = {
+                  seeds: Int = MinhashSeeds,
+                  rowsPerBand: Int = MinhashRowsPerBand): (DataFrame, Seq[DataFrame]) = {
     val a = minhashArtifactsWith(documents, threshold, seeds, rowsPerBand)
     (a.pairs, a.handles)
   }
@@ -163,7 +173,8 @@ object Dedup {
   /** One shingle pass → pairs + the persistable signature relations.
     * [[minhashWith]] is the pairs-only view of this. */
   def minhashArtifactsWith(documents: DataFrame, threshold: Double,
-                           seeds: Int = 8, rowsPerBand: Int = 2): MinhashArtifacts = {
+                           seeds: Int = MinhashSeeds,
+                           rowsPerBand: Int = MinhashRowsPerBand): MinhashArtifacts = {
     val sh = shingleRows(documents, 3)
     val bands = bandRowsOf(sh, seeds, rowsPerBand)
     val cand = minhashCandidatesOf(bands)
@@ -442,12 +453,12 @@ object Dedup {
     * SAMPLE-SCALE by adjudication (round-10 sf10 campaign, the
     * [[dedupRecall]] scoping): on a vocabulary-SATURATED corpus —
     * distinct shingles plateau while df grows ∝ n — a percentile cap
-    * adapts to histogram SHAPE, not corpus SIZE: `graft.NgramProf`
-    * measured keepPct 90→99 moving an ≈9e9-row candidate volume by only
-    * 11% at 500k docs (SCALE.md). Use this form to pick parameters on a
-    * sample; the corpus-scale run is [[ngramJaccardBudget]], whose cap
-    * derives from predicted join WORK and bounds candidates at
-    * O(budget·n) for any corpus shape. */
+    * adapts to histogram SHAPE, not corpus SIZE: the sf10 df-histogram
+    * decomposition measured keepPct 90→99 moving an ≈9e9-row candidate
+    * volume by only 11% at 500k docs (SCALE.md "The ngram adjudication").
+    * Use this form to pick parameters on a sample; the corpus-scale run
+    * is [[ngramJaccardBudget]], whose cap derives from predicted join WORK
+    * and bounds candidates at O(budget·n) for any corpus shape. */
   def ngramJaccardCappedAdaptive(documents: DataFrame, threshold: Double,
                                  keepPct: Int = 99,
                                  skewSafe: Boolean = true): DataFrame =
@@ -484,8 +495,9 @@ object Dedup {
   }
 
   /** Candidate-BUDGET df cap — the third cap derivation, for the corpus
-    * class where the percentile form structurally fails. `graft.NgramProf`
-    * refuted the round-9 spill-hygiene theory at sf10: on a
+    * class where the percentile form structurally fails. The sf10
+    * df-histogram decomposition (SCALE.md "The ngram adjudication")
+    * refuted the round-9 spill-hygiene theory: on a
     * vocabulary-SATURATED corpus (29.8k distinct 3-gram shingles over
     * 500k docs, mean df ≈ 780) df grows ∝ n, the inverted-index join
     * emits Σ df·(df−1)/2 ≈ 9e9 candidate rows, and keepPct 90 → 99 moves
@@ -493,9 +505,9 @@ object Dedup {
     * not corpus SIZE ([[ngramJaccardCappedAdaptive]]'s honesty note made
     * operational). Here the cap derives from the WORK the join would do:
     * cumulative predicted candidates over the df histogram (the exact
-    * same Σ df·(df−1)/2 NgramProf computes) ordered by df, and the cap is
-    * the LARGEST df whose cumulative volume fits `candidateBudget` rows
-    * per doc — candidate generation is O(budget·n) BY CONSTRUCTION at
+    * same Σ df·(df−1)/2 that decomposition computes) ordered by df, and
+    * the cap is the LARGEST df whose cumulative volume fits
+    * `candidateBudget` rows per doc — candidate generation is O(budget·n) BY CONSTRUCTION at
     * any corpus shape, Zipf or saturated. On corpora where the full
     * volume already fits (the gate scales), the cap lands at max df and
     * output == [[ngramJaccard]] exactly (spec-pinned). Same verify as
@@ -516,7 +528,7 @@ object Dedup {
     * executor count scales with the corpus (per-node mass divides), but
     * exceeded one 77 GB-scratch node at n=500k (ENOSPC, measured);
     * budget=16 (≈1.5k verify rows/doc, 5.6e8 total) completes on the
-    * same box (`graft.NgramBudgetProf`, SCALE.md round-11). Size
+    * same box (SCALE.md "sf10: the budget cap demonstrated"). Size
     * budget ≈ per_node_scratch_rows · executors / n. The knob's
     * EXISTENCE is the fix: percentile caps had no setting that bounded
     * this corpus' volume at all. */
@@ -1361,14 +1373,14 @@ object Dedup {
   }
 
   def duckMinhashSql(table: String, threshold: Double,
-                     seeds: Int = 8, rowsPerBand: Int = 2): String =
+                     seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): String =
     s"""WITH ${duckMinhashCandCtes(table, seeds, rowsPerBand)},
        |${duckJaccard("cand", s"jac >= $threshold", "d1, d2, round(jac, 6) AS jaccard")}""".stripMargin
 
   /** DuckDB mirror of the persisted [[graft.sources.PairsLayout]] relation
     * (= [[nearDupPairs]]): the bare verified pair set, ordered. */
   def duckPairsSql(table: String, threshold: Double,
-                   seeds: Int = 8, rowsPerBand: Int = 2): String =
+                   seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): String =
     s"""WITH ${duckMinhashCandCtes(table, seeds, rowsPerBand)},
        |${duckJaccard("cand", s"jac >= $threshold", "d1, d2")}""".stripMargin
 
@@ -1378,7 +1390,7 @@ object Dedup {
     * smallest doc_id in its component, which is exactly the fixpoint the
     * Spark loop converges to. */
   def duckClustersSql(table: String, threshold: Double,
-                      seeds: Int = 8, rowsPerBand: Int = 2): String =
+                      seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): String =
     s"""WITH RECURSIVE ${duckMinhashCandCtes(table, seeds, rowsPerBand)},
        |${duckJaccardCtes("cand")},
        |pairs AS (SELECT d1, d2 FROM j WHERE jac >= $threshold),
@@ -1446,7 +1458,7 @@ object Dedup {
     * CTEs and Jaccard tail as [[duckMinhashSql]], then the two-level
     * degree aggregation. */
   def duckDupDegreeSql(table: String, threshold: Double,
-                       seeds: Int = 8, rowsPerBand: Int = 2): String =
+                       seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): String =
     s"""WITH ${duckMinhashCandCtes(table, seeds, rowsPerBand)},
        |${duckJaccardCtes("cand")},
        |pairs AS (SELECT d1, d2 FROM j WHERE jac >= $threshold),
@@ -1522,7 +1534,8 @@ object Dedup {
   /** DuckDB mirror of [[dupTriangles]] — the shared pair CTEs, then the
     * same lowest-vertex triangle enumeration and degree-wedge count. */
   def duckDupTrianglesSql(table: String, threshold: Double,
-                          seeds: Int = 8, rowsPerBand: Int = 2): String =
+                          seeds: Int = MinhashSeeds,
+                          rowsPerBand: Int = MinhashRowsPerBand): String =
     s"""WITH ${duckMinhashCandCtes(table, seeds, rowsPerBand)},
        |${duckJaccardCtes("cand")},
        |pairs AS (SELECT d1, d2 FROM j WHERE jac >= $threshold),
@@ -1621,7 +1634,8 @@ object Dedup {
     * arithmetic (`//` truncates positive BIGINTs exactly like Spark DIV;
     * DuckDB's HUGEINT sum is cast back to BIGINT inside the bound). */
   def duckDupPagerankSql(table: String, threshold: Double, iters: Int = 3,
-                         topN: Int = 20, seeds: Int = 8, rowsPerBand: Int = 2): String = {
+                         topN: Int = 20, seeds: Int = MinhashSeeds,
+                         rowsPerBand: Int = MinhashRowsPerBand): String = {
     // MATERIALIZED: DuckDB inlines plain CTEs per reference, so round i
     // would re-evaluate the whole minhash chain through r0..r_{i-1} —
     // the same O(2^T) lineage blowup the Spark loop's localCheckpoint
@@ -1754,7 +1768,7 @@ object Dedup {
     * [[duckClustersSql]], then group-keyed hash split + straddle recount. */
   def duckLeakageSplit(table: String, threshold: Double,
                        valPct: Int = 10,
-                       seeds: Int = 8, rowsPerBand: Int = 2): String =
+                       seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): String =
     s"""WITH RECURSIVE ${duckMinhashCandCtes(table, seeds, rowsPerBand)},
        |${duckJaccardCtes("cand")},
        |pairs AS (SELECT d1, d2 FROM j WHERE jac >= $threshold),
@@ -1806,7 +1820,8 @@ object Dedup {
     */
   def minhashIncremental(documents: DataFrame, threshold: Double,
                          batchMod: Int = 10, batchRem: Int = 7,
-                         seeds: Int = 8, rowsPerBand: Int = 2): DataFrame = {
+                         seeds: Int = MinhashSeeds,
+                         rowsPerBand: Int = MinhashRowsPerBand): DataFrame = {
     val sh = shingleRows(documents, 3)
     val bands = bandRowsOf(sh, seeds, rowsPerBand)
     val newB = bands.filter(col("doc_id") % batchMod === batchRem)
@@ -1844,7 +1859,7 @@ object Dedup {
     * cached-aggregate build sides must never broadcast (round-2 lesson).
     */
   def minhashAgainst(batch: DataFrame, corpus: DataFrame, threshold: Double,
-                     seeds: Int = 8, rowsPerBand: Int = 2): DataFrame =
+                     seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): DataFrame =
     minhashAgainstWith(batch, corpus, threshold, seeds, rowsPerBand)._1
 
   /** [[minhashAgainst]] plus handles on its two cached shingle relations,
@@ -1855,7 +1870,8 @@ object Dedup {
     * a no-op (a per-ingest corpus-cardinality cache leak) the moment this
     * operator changes shingle width or normalization. */
   def minhashAgainstWith(batch: DataFrame, corpus: DataFrame, threshold: Double,
-                         seeds: Int = 8, rowsPerBand: Int = 2): (DataFrame, Seq[DataFrame]) = {
+                         seeds: Int = MinhashSeeds,
+                         rowsPerBand: Int = MinhashRowsPerBand): (DataFrame, Seq[DataFrame]) = {
     val shB = shingleRows(batch, 3)
     val shC = shingleRows(corpus, 3)
     val cand = bandRowsOf(shB, seeds, rowsPerBand).as("x")
@@ -1908,8 +1924,8 @@ object Dedup {
     * [[minhashAgainst]] on the same (batch, corpus) relations, row-exact. */
   def minhashProbeIndexWith(batch: DataFrame, corpusBands: DataFrame,
                             corpusShingles: DataFrame, corpusSizes: DataFrame,
-                            threshold: Double, seeds: Int = 8,
-                            rowsPerBand: Int = 2): (DataFrame, Seq[DataFrame]) = {
+                            threshold: Double, seeds: Int = MinhashSeeds,
+                            rowsPerBand: Int = MinhashRowsPerBand): (DataFrame, Seq[DataFrame]) = {
     val shB = shingleRows(batch, 3)
     val bandsB = bandRowsOf(shB, seeds, rowsPerBand)
     (probeIndex(shB, bandsB, corpusBands, corpusShingles, corpusSizes, threshold), Seq(shB))
@@ -1949,7 +1965,8 @@ object Dedup {
     * own roles instead of the symmetric `a.doc_id < b.doc_id`. */
   def duckMinhashIncrementalSql(table: String, threshold: Double,
                                 batchMod: Int = 10, batchRem: Int = 7,
-                                seeds: Int = 8, rowsPerBand: Int = 2): String =
+                                seeds: Int = MinhashSeeds,
+                                rowsPerBand: Int = MinhashRowsPerBand): String =
     s"""WITH ${duckMinhashCandCtes(table, seeds, rowsPerBand)},
        |icand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
        |          FROM bands x JOIN bands y
@@ -2004,11 +2021,11 @@ object Dedup {
     // pipelines' outputs.
     val (shDf, _) = dfShinglesWith(documents)
     val found =
-      minhashCandidatesOf(bandRowsOf(sh, 8, 2))
+      minhashCandidatesOf(bandRowsOf(sh, MinhashSeeds, MinhashRowsPerBand))
         .withColumn("variant", lit("minhash"))
       .unionByName(rareCandidatesOf(shDf, lit(maxDf))
         .withColumn("variant", lit("ngram_capped")))
-      .unionByName(simhashCandPairs(documents, 8).select(col("d1"), col("d2"))
+      .unionByName(simhashCandPairs(documents, SimhashMaxHamming).select(col("d1"), col("d2"))
         .withColumn("variant", lit("simhash")))
     val nExp = exact.agg(count(lit(1)).as("n_expected"))
     // hint("merge") on the probe side: `exact` is a cached pair relation
@@ -2331,7 +2348,8 @@ object Dedup {
        |ORDER BY doc_id""".stripMargin
   }
 
-  def duckSimhashSql(table: String, threshold: Double, maxHamming: Int = 8): String = {
+  def duckSimhashSql(table: String, threshold: Double,
+                     maxHamming: Int = SimhashMaxHamming): String = {
     val sums = (0 until 64).map(i => s"sum(${duckSimhashBitFromChunk(s"c${i / 16}", i % 16)})")
     val chunkCols = (0 until 4).map(c => s"${duckMd5Chunk16("m", c)} AS c$c").mkString(", ")
     val bandRows = (0 until 4).map(b =>
@@ -2443,7 +2461,8 @@ object Dedup {
       .distinct()
   }
 
-  def simhash(documents: DataFrame, threshold: Double, maxHamming: Int = 8): DataFrame = {
+  def simhash(documents: DataFrame, threshold: Double,
+              maxHamming: Int = SimhashMaxHamming): DataFrame = {
     val cand = simhashCandPairs(documents, maxHamming)
     // candidate-first exact-Jaccard verify (hamming rides the groupBy key);
     // hint("merge") on the inverted-index sides — see jaccardOf for why a
@@ -2528,9 +2547,10 @@ object Dedup {
     * 64-bit entry budget-bound at 500k docs with a STRUCTURAL ceiling
     * behind it (SCALE.md "two decades up"): a 64-bit signature caps band
     * discrimination at 4×16 bits — band keys can never exceed 16 bits
-    * without dropping below 4 bands. `SimhashProf` quantified the cost
-    * at sf10: the 4×16 geometry emits 1.43e9 candidate rows (max bucket
-    * 18,749 of 500k docs), while 32-bit keys over a 128-bit signature
+    * without dropping below 4 bands. The sf10 band-occupancy measurement
+    * (SCALE.md "Width-parameterized SimHash") quantified the cost: the
+    * 4×16 geometry emits 1.43e9 candidate rows (max bucket 18,749 of
+    * 500k docs), while 32-bit keys over a 128-bit signature
     * emit 2.77e7 — 51× fewer with 4 bands intact.
     *
     * Band bits derive IN-PLAN by CANDIDATE BUDGET, not the occupancy
@@ -2563,7 +2583,8 @@ object Dedup {
     * 16-of-128. False positives cannot occur (hamming and Jaccard are
     * verified exactly); band candidate loss is the only approximation,
     * standard LSH — the budget is the recall-for-volume knob and its
-    * effect is measurable per corpus via `SimhashProf` before running
+    * effect is measurable per corpus from band-key occupancy
+    * (Σ c·(c−1)/2, SCALE.md "Width-parameterized SimHash") before running
     * anything quadratic. */
   def simhashWide(documents: DataFrame, threshold: Double, width: Int = 128,
                   maxHamming: Int = 16, candidateBudget: Int = 256): DataFrame = {

@@ -112,17 +112,11 @@ object NnDescent {
   private def bandKeys(index: DataFrame, tables: Int, targetOcc: Int): DataFrame =
     bandKeysOfSigns(signsOf(index, tables), targetOcc)
 
-  /** Optional candidate-volume sink for [[knnGraph]] — when non-null,
-    * each stage's candidate-pair count is recorded (forcing an eager
-    * count per stage, so ONLY profilers pass it; `graft.GraphVolProf`
-    * prints the three-decade table). The init volume is the quadratic
-    * risk surface the round-10 verdict flagged: band occupancy ×
-    * neighbor-of-neighbor fan-out. */
-  type ProfSink = scala.collection.mutable.Buffer[(String, Long)]
-
+  /** The NN-descent build described above. Candidate volume per node per
+    * stage measured flat across four decades (SCALE.md "NN-descent
+    * candidate volume"). */
   def knnGraph(index: DataFrame, k: Int = 8, tables: Int = 4,
-               rounds: Int = 2, targetOcc: Int = 16,
-               prof: ProfSink = null): DataFrame = {
+               rounds: Int = 2, targetOcc: Int = 16): DataFrame = {
     require(tables * Block <= 384, "sign blocks exceed embedding dims")
     val v = index.select(col("vec_id"),
         col("embedding").cast("array<double>").as("ed"))
@@ -146,9 +140,8 @@ object NnDescent {
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
       .distinct()
 
-    if (prof != null) prof += ("init" -> init.count())
     var g = topPerA(score(init)).localCheckpoint(true)
-    for (r <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       // reverse edges capped at k per target, then the general neighborhood
       val rev = g
         .withColumn("rrn", row_number().over(
@@ -162,7 +155,6 @@ object NnDescent {
         .filter(col("a") =!= col("b"))
         .union(g.select("a", "b"))
         .distinct()
-      if (prof != null) prof += (s"round$r" -> cand.count())
       g = topPerA(score(cand)).localCheckpoint(true)
     }
     g.select(col("a").as("vec_id"), col("b").as("nbr"), col("rn"),

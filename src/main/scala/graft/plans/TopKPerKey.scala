@@ -98,8 +98,9 @@ object TopKPerKey {
     * the plan and stack a redundant second prune (caught by the round-4
     * high-effort review, empirically confirmed against Spark 4.1.2's
     * batch order). Session default: ON in this engine's own harness entry
-    * points (Verify/Bench/TimeQ/Explain honor `SPARK_GRAFT_REWRITE=0` as
-    * the off-switch; see SCALE.md for the measured decision record).
+    * points — [[graft.Harness.session]] is the one place that reads the
+    * `SPARK_GRAFT_REWRITE=0` off-switch (see SCALE.md for the measured
+    * decision record).
     */
   object Rewrite extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
     import org.apache.spark.sql.catalyst.expressions._

@@ -44,17 +44,17 @@ object GraphLayout {
     * maintenance below the bucket count is the IO-confinement grain: a
     * micro-batch rewrites ~min(buckets, batch·(1+recut-spread)) buckets,
     * so buckets ≫ typical batch size is what makes per-batch write
-    * volume O(batch), not O(corpus) (round-12; GraphIncrProf measures
-    * the fraction). */
+    * volume O(batch), not O(corpus) (round-12; `graft.Prof graph-incr`
+    * measures the fraction). */
   private val DefaultBuckets = 32
 
   /** Target graph rows (n·k) per bucket for AUTO-sized artifacts —
     * constant bucket bytes as the corpus grows, which is what makes
-    * per-batch write IO corpus-INDEPENDENT (round-12 GraphIncrProf
-    * measured 98% → 42% → 5.4% of live bytes per batch across three
-    * decades at exactly this grain: 16k/32, 160k/320, 1.6M/3200 rows per
-    * relation = ~500 rows per bucket). Round-13 (r12 verdict #3): derived
-    * by default instead of hand-set per run. */
+    * per-batch write IO corpus-INDEPENDENT (round-12, SCALE.md
+    * "Bucket-confined graph maintenance": 98% → 42% → 5.4% of live bytes
+    * per batch across three decades at exactly this grain: 16k/32,
+    * 160k/320, 1.6M/3200 rows per relation = ~500 rows per bucket).
+    * Round-13 (r12 verdict #3): derived by default instead of hand-set per run. */
   private val TargetBucketRows = 500L
 
   /** buckets = clamp(32, 2^16, graphRows / 500) — `graphRows` is n·k. */
@@ -451,12 +451,6 @@ object GraphLayout {
   def upsertStored(spark: SparkSession, dir: String, batch: DataFrame,
                    batchId: String, k: Int = 8, tables: Int = 4,
                    targetOcc: Int = 16): Unit = {
-    val dbg = sys.env.contains("SPARK_GRAFT_GRAPH_DEBUG")
-    var tdbg = System.nanoTime()
-    def mark(what: String): Unit = {
-      if (dbg) println(f"[upsertStored] $what ${(System.nanoTime() - tdbg) / 1e9}%.2f s")
-      tdbg = System.nanoTime()
-    }
     recoverReplace(spark, s"$dir/graph")
     // a foreachBatch source relation re-plans per ACTION, and this method
     // references it from ~six subtrees (ids, signs, both score sides, the
@@ -527,13 +521,11 @@ object GraphLayout {
             deltaDf.localCheckpoint(true)
           }
         else deltaDf.localCheckpoint(true)
-      mark("delta")
       val touchedBk = delta
         .select(org.apache.spark.sql.functions
           .pmod(org.apache.spark.sql.functions.hash(col("vec_id")),
             org.apache.spark.sql.functions.lit(buckets)).as("bk"))
         .distinct().collect().map(_.getInt(0)).toSet
-      mark("touchedBk")
       val livep = new org.apache.hadoop.fs.Path(absPath(s"$dir/graph"))
       val touchedFiles = fs(spark, livep).listStatus(livep).map(_.getPath)
         .filter(p => !p.getName.startsWith("_") &&
@@ -594,7 +586,6 @@ object GraphLayout {
             s"$batchId-bd")
         })
       SignatureLayout.drainAll(commits) // drain-before-propagate (r13 ADVICE)
-      mark("commits")
       return
     }
     refresh(spark, s"$dir/graph")

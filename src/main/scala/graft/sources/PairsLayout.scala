@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.operators.Dedup
+import graft.operators.Dedup.{MinhashRowsPerBand, MinhashSeeds}
 
 /** Persisted near-dup PAIR artifact — the materialize-once seam the whole
   * dup-graph report family reads (round-6 verdict #1). The MinHash
@@ -35,7 +36,7 @@ object PairsLayout {
   /** Deterministic artifact dir for a (corpus dir, banding params) key,
     * under the repo-local `out/artifacts` root. */
   def dirFor(sfDir: String, threshold: Double,
-             seeds: Int = 8, rowsPerBand: Int = 2): String = {
+             seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$sfDir|$threshold|$seeds|$rowsPerBand".getBytes("UTF-8"))
       .take(6).map(b => f"$b%02x").mkString
@@ -46,7 +47,8 @@ object PairsLayout {
     * shingle scratch cached inside the pipeline is released by handle
     * after the write — the `-With` lifecycle, nothing leaks. */
   def write(spark: SparkSession, documents: DataFrame, dir: String,
-            threshold: Double, seeds: Int = 8, rowsPerBand: Int = 2): Unit = {
+            threshold: Double, seeds: Int = MinhashSeeds,
+            rowsPerBand: Int = MinhashRowsPerBand): Unit = {
     val (m, handles) = Dedup.minhashWith(documents, threshold, seeds, rowsPerBand)
     try m.select("d1", "d2").write.mode(SaveMode.Overwrite).parquet(s"$dir/pairs")
     finally handles.foreach(_.unpersist())
@@ -58,7 +60,8 @@ object PairsLayout {
     * corpus (round-8 verdict #2). Report-only artifacts ([[ensure]]
     * consumers) keep the cheaper pairs-only [[write]]. */
   def writeIndexed(spark: SparkSession, documents: DataFrame, dir: String,
-                   threshold: Double, seeds: Int = 8, rowsPerBand: Int = 2): Unit = {
+                   threshold: Double, seeds: Int = MinhashSeeds,
+                   rowsPerBand: Int = MinhashRowsPerBand): Unit = {
     val a = Dedup.minhashArtifactsWith(documents, threshold, seeds, rowsPerBand)
     try {
       // a rewritten snapshot invalidates all per-batch maintenance state:
@@ -104,7 +107,8 @@ object PairsLayout {
 
   /** Build-once-per-run + read: the form the report queries use. */
   def ensure(spark: SparkSession, documents: DataFrame, sfDir: String,
-             threshold: Double, seeds: Int = 8, rowsPerBand: Int = 2): DataFrame = {
+             threshold: Double, seeds: Int = MinhashSeeds,
+             rowsPerBand: Int = MinhashRowsPerBand): DataFrame = {
     val dir = dirFor(sfDir, threshold, seeds, rowsPerBand)
     built.onceIfAbsent(dir) {
       // add only AFTER a successful write: a failed build must retry on
@@ -169,16 +173,9 @@ object PairsLayout {
     *     with atomic commit under this seam (the [[IndexBuild]] swap
     *     note); the commit ORDER and marker-last rule survive that swap. */
   def upsert(spark: SparkSession, dir: String, batch: DataFrame,
-             threshold: Double, seeds: Int = 8, rowsPerBand: Int = 2,
+             threshold: Double, seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand,
              batchId: Option[String] = None): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col, count, expr, greatest, least, lit}
-    // phase marks (profiler-only, env-guarded — the upsertStored pattern)
-    val dbg = sys.env.contains("SPARK_GRAFT_PAIRS_DEBUG")
-    var tdbg = System.nanoTime()
-    def mark(what: String): Unit = {
-      if (dbg) println(f"[pairs_upsert] $what ${(System.nanoTime() - tdbg) / 1e9}%.2f s")
-      tdbg = System.nanoTime()
-    }
     // file-count discipline (round-9 ADVICE #4): batch deltas are sized to
     // the BATCH, not session parallelism — a long-running ingest appending
     // 32 files × 4 relations per micro-batch degrades probe read planning;
@@ -193,7 +190,6 @@ object PairsLayout {
         count(lit(1)).as("c")).head()
       if (r.isNullAt(0)) s"empty-0" else f"${r.getLong(0)}%016x-${r.getLong(1)}"
     }
-    mark("batch id digest")
     // md5-keyed prefix: collision-free across distinct batch ids, stable
     // across re-runs of the SAME id, and free of filesystem-hostile chars
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -242,14 +238,12 @@ object PairsLayout {
       Await.ready(pairsStage, Duration.Inf)
       staged.get
       Await.result(pairsStage, Duration.Inf)
-      mark("stage (probe + batch pipeline + 4 staged writes)")
       // ...then commit by batch-keyed rename: signatures, pairs, marker
       // LAST (replace-on-rerun semantics — see the recovery contract)
       SignatureLayout.commitAppend(spark, dir, prefix)
       SignatureLayout.moveInto(spark, s"$dir/stage_pairs", s"$dir/pairs", prefix)
       mfs.mkdirs(marker.getParent)
       mfs.create(marker, true).close()
-      mark("commit renames + marker")
     } finally a.handles.foreach(_.unpersist())
   }
 
@@ -295,7 +289,8 @@ object PairsLayout {
     * artifact build (q_pairs_artifact), so the fast read-side report
     * entries never hide the pipeline cost. */
   def rebuild(spark: SparkSession, documents: DataFrame, sfDir: String,
-              threshold: Double, seeds: Int = 8, rowsPerBand: Int = 2): DataFrame = {
+              threshold: Double, seeds: Int = MinhashSeeds,
+              rowsPerBand: Int = MinhashRowsPerBand): DataFrame = {
     val dir = dirFor(sfDir, threshold, seeds, rowsPerBand)
     built.always(dir) {
       write(spark, documents, dir, threshold, seeds, rowsPerBand)

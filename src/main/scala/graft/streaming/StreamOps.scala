@@ -39,7 +39,7 @@ object StreamOps {
         .option("pathGlobFilter", "events.parquet")
         .parquet(sfDir))
 
-  private def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
+  private[graft] def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
     spark.conf.set(key, n.toString)
@@ -630,8 +630,9 @@ object StreamOps {
     * every Nth micro-batch — the periodic maintenance the append
     * protocol's file-count note calls for on a long-running ingest
     * (without it every relation's file count grows by one delta per
-    * bucket per batch forever; CompactProf measures 544 → 32 files and a
-    * 1.3–1.5× probe win after 8–16 batches). Compaction is
+    * bucket per batch forever; measured when compaction landed, commit
+    * 1165a18: 544 → 32 files and a 1.3–1.5× probe win after 8–16
+    * batches). Compaction is
     * content-preserving and keeps batch markers, so it composes with the
     * replay contract: a restarted query re-delivering a compacted batch
     * still no-ops on its marker. Running it inside foreachBatch is
@@ -705,12 +706,6 @@ object StreamOps {
     // few-thousand-row corpus, where 32-partition stage scheduling is the
     // cost — same content at any partition count (ranks tie-break on
     // (desc s, asc b), never on physical order)
-    val dbg = sys.env.contains("SPARK_GRAFT_GRAPH_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(what: String): Unit = {
-      if (dbg) println(f"[stream_graph] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     // the 4-partition override is a GATE-SCALE scheduling win only (a
     // few-thousand-row base pays more in 32-partition stage scheduling
     // than in compute — the conf-scoping comment above); a corpus-scale
@@ -724,24 +719,19 @@ object StreamOps {
       }
     else
       GraphLayout.writeBase(spark, base, dir, k, knownCount = nBase)
-    mark(s"writeBase n=$nBase")
     withShufflePartitions(spark, 4) {
       val q = stream.writeStream.outputMode("append")
         .option("checkpointLocation", s"$dir/_checkpoint")
         .foreachBatch { (batch: DataFrame, bid: Long) =>
           GraphLayout.upsertStored(spark, dir, batch, s"mb-$bid", k)
-          mark(s"upsert mb-$bid")
           ()
         }
         .start()
       try q.processAllAvailable() finally q.stop()
     }
-    mark("stream drain")
-    val out = GraphLayout.readGraph(spark, dir)
+    GraphLayout.readGraph(spark, dir)
       .orderBy(asc("vec_id"), asc("rn"))
       .localCheckpoint()
-    mark("final read")
-    out
   }
 
   /** Streaming distinct-cardinality maintenance: each micro-batch ships
