@@ -29,10 +29,12 @@ import graft.functions.VectorFns.signBucket
   * Cache lifecycle: [[shingleRows]] and `simhash`'s signature relation are
   * `.cache()`d because their plans are referenced more than once per query.
   * The harness entry points (Verify / Bench / TimeQ) clear the session
-  * cache after every query; a LIBRARY embedder that calls these operators
-  * directly should do the same once results are materialized —
-  * `spark.sharedState.cacheManager.clearCache()` (or
-  * `spark.catalog.clearCache()`) — so no scratch cache outlives the query.
+  * cache after every query. A LIBRARY caller uses the handle-returning
+  * entries — [[minhashWith]], [[minhashArtifactsWith]],
+  * [[nearDupPairsWith]], [[cappedNgramWith]], [[pagerankOfPairsWith]],
+  * [[minhashAgainstWith]], [[minhashProbeIndexWith]] — and unpersists the
+  * returned handles once results are materialized; [[dedupRecall]]
+  * releases its own caches before returning.
   */
 object Dedup {
 
@@ -115,9 +117,6 @@ object Dedup {
       .select(col("d1"), col("d2"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy(asc("d1"), asc("d2"))
 
-  /** MinHash + LSH banding: `seeds` hash functions, bands of `rowsPerBand`;
-    * docs sharing any band bucket become candidates, then exact Jaccard
-    * filters ≥ threshold. */
   /** MinHash signature → LSH band rows (doc_id, band, bkey) — the single
     * source of truth for the banding scheme, shared by [[minhash]] and
     * [[minhashIncremental]] (the DuckDB side shares duckMinhashCandCtes the
@@ -134,6 +133,9 @@ object Dedup {
     )).as("bb")).select(col("doc_id"), col("bb.band"), col("bb.bkey"))
   }
 
+  /** MinHash + LSH banding: `seeds` hash functions, bands of `rowsPerBand`;
+    * docs sharing any band bucket become candidates, then exact Jaccard
+    * filters ≥ threshold. */
   def minhash(documents: DataFrame, threshold: Double,
               seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): DataFrame =
     minhashWith(documents, threshold, seeds, rowsPerBand)._1
@@ -414,28 +416,16 @@ object Dedup {
     * a 100× corpus where the head shingle appears in millions of docs.
     *
     * The Jaccard VERIFY still runs over the FULL shingle sets
-    * (candidate-first, [[jaccardOf]]), so every emitted pair carries the
-    * exact uncapped Jaccard — the cap only costs recall for pairs whose
-    * shared shingles are ALL frequent, which a ≥-threshold near-dup pair
-    * essentially never is (near-identical docs share their rare shingles).
-    * Recall vs the exact baseline is measurable by diffing against
-    * [[ngramJaccard]]; at the oracle scales the outputs are identical.
+    * ([[cappedNgramWith]]'s exact frequent completion), so every emitted
+    * pair carries the exact uncapped Jaccard — the cap only costs recall
+    * for pairs whose shared shingles are ALL frequent, which a
+    * ≥-threshold near-dup pair essentially never is (near-identical docs
+    * share their rare shingles). Recall vs the exact baseline is
+    * measurable by diffing against [[ngramJaccard]]; at the oracle scales
+    * the outputs are identical.
     */
-  def ngramJaccardCapped(documents: DataFrame, threshold: Double, maxDf: Int,
-                         skewSafe: Boolean = true): DataFrame =
-    ngramJaccardCappedWith(documents, threshold, maxDf, skewSafe)._1
-
-  /** [[ngramJaccardCapped]] plus handles on every cache the pipeline
-    * creates (the skew-safe form makes TWO corpus-scale caches — the
-    * distinct shingle rows and the df-joined relation — plus the shared
-    * rare-intersection scratch; round-8 ADVICE #4): the harness clears
-    * caches per query, a library caller releases these itself. */
-  def ngramJaccardCappedWith(documents: DataFrame, threshold: Double, maxDf: Int,
-                             skewSafe: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    val (shDf, h) = dfShinglesWith(documents, skewSafe)
-    val (out, h2) = cappedPairsOfWith(shDf, lit(maxDf), threshold)
-    (out, h ++ h2)
-  }
+  def ngramJaccardCapped(documents: DataFrame, threshold: Double, maxDf: Int): DataFrame =
+    cappedNgramWith(documents, threshold, DfCap.Absolute(maxDf))._1
 
   /** Corpus-RELATIVE df cap — the one-decade-up gate's finding made
     * operational: an ABSOLUTE cap silently collapses to zero recall when
@@ -460,39 +450,8 @@ object Dedup {
     * is [[ngramJaccardBudget]], whose cap derives from predicted join WORK
     * and bounds candidates at O(budget·n) for any corpus shape. */
   def ngramJaccardCappedAdaptive(documents: DataFrame, threshold: Double,
-                                 keepPct: Int = 99,
-                                 skewSafe: Boolean = true): DataFrame =
-    ngramJaccardCappedAdaptiveWith(documents, threshold, keepPct, skewSafe)._1
-
-  /** [[ngramJaccardCappedAdaptive]] with cache handles — the
-    * [[ngramJaccardCappedWith]] lifecycle. */
-  def ngramJaccardCappedAdaptiveWith(documents: DataFrame, threshold: Double,
-                                     keepPct: Int = 99,
-                                     skewSafe: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    val (shDf0, h) = dfShinglesWith(documents, skewSafe)
-    // eager checkpoint: hist is a bounded (≤ max-df rows) relation read
-    // TWICE (cum + tot) — un-checkpointed, each reader re-derives the
-    // distinct+groupBy over the corpus-scale shingle cache (the iterative-
-    // state rule applied to a two-reader scalar derivation, round-13).
-    // NOTE (round-13 ADVICE, documented trade): the eager checkpoint runs
-    // a corpus-scale job at CONSTRUCTION time (building the DataFrame
-    // scans and distincts the shingle cache even if never executed), and
-    // its RDD blocks are not released by cacheManager.clearCache() — a
-    // bounded (≤ max-df rows) per-construction drip a long-lived library
-    // session should know about. Bench/Verify construct inside the timed
-    // rep and exit, so both are unaffected.
-    val hist = shDf0.select(col("s"), col("df")).distinct()
-      .groupBy("df").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val wH = graft.functions.BoundedWindow.boundedGlobal(col("df"), asc("df"))
-    val cum = hist.withColumn("cum", sum("n").over(wH))
-    val tot = hist.agg(sum("n").as("t"))
-    val cap = cum.crossJoin(broadcast(tot))
-      .filter(col("cum") * 100 >= lit(keepPct) * col("t"))
-      .agg(min("df").as("cap"))
-    val (out, h2) = cappedPairsOfWith(shDf0.crossJoin(broadcast(cap)), col("cap"), threshold)
-    (out, h ++ h2)
-  }
+                                 keepPct: Int = 99): DataFrame =
+    cappedNgramWith(documents, threshold, DfCap.KeepPct(keepPct))._1
 
   /** Candidate-BUDGET df cap — the third cap derivation, for the corpus
     * class where the percentile form structurally fails. The sf10
@@ -533,30 +492,8 @@ object Dedup {
     * EXISTENCE is the fix: percentile caps had no setting that bounded
     * this corpus' volume at all. */
   def ngramJaccardBudget(documents: DataFrame, threshold: Double,
-                         candidateBudget: Int = 256,
-                         skewSafe: Boolean = true): DataFrame =
-    ngramJaccardBudgetWith(documents, threshold, candidateBudget, skewSafe)._1
-
-  /** [[ngramJaccardBudget]] with cache handles — the
-    * [[ngramJaccardCappedWith]] lifecycle. */
-  def ngramJaccardBudgetWith(documents: DataFrame, threshold: Double,
-                             candidateBudget: Int = 256,
-                             skewSafe: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    val (shDf0, h) = dfShinglesWith(documents, skewSafe)
-    val hist = shDf0.select(col("s"), col("df")).distinct()
-      .groupBy("df").agg(count(lit(1)).as("n"))
-    val wH = graft.functions.BoundedWindow.boundedGlobal(col("df"), asc("df"))
-    val cum = hist.withColumn("cc",
-      sum(expr("n * (df * (df - 1) DIV 2)")).over(wH))
-    val nd = documents.agg(count(lit(1)).as("ndocs"))
-    // largest df whose cumulative candidate volume fits the budget;
-    // df = 1 (zero candidates) if even the rarest rung exceeds it
-    val cap = cum.crossJoin(broadcast(nd))
-      .filter(col("cc") <= col("ndocs") * candidateBudget)
-      .agg(coalesce(max("df"), lit(1L)).as("cap"))
-    val (out, h2) = cappedPairsOfWith(shDf0.crossJoin(broadcast(cap)), col("cap"), threshold)
-    (out, h ++ h2)
-  }
+                         candidateBudget: Int = 256): DataFrame =
+    cappedNgramWith(documents, threshold, DfCap.Budget(candidateBudget))._1
 
   /** Scratch-row envelope per node for [[ngramJaccardBudgetAuto]]'s
     * derivation — overridable via SPARK_GRAFT_SCRATCH_ROWS for a
@@ -597,37 +534,8 @@ object Dedup {
     * scales the envelope for a real cluster (per-node mass divides). */
   def ngramJaccardBudgetAuto(documents: DataFrame, threshold: Double,
                              scratchRows: Long = AutoScratchRows,
-                             executors: Int = 1,
-                             skewSafe: Boolean = true): DataFrame =
-    ngramJaccardBudgetAutoWith(documents, threshold, scratchRows, executors,
-      skewSafe)._1
-
-  /** [[ngramJaccardBudgetAuto]] with cache handles — the
-    * [[ngramJaccardCappedWith]] lifecycle for library callers who manage
-    * their own cache lifetimes (round-12 ADVICE: the non-With form
-    * dropped the handles on the floor, leaking the cached shingle
-    * relations outside the per-query cache-clearing harness). */
-  def ngramJaccardBudgetAutoWith(documents: DataFrame, threshold: Double,
-                                 scratchRows: Long = AutoScratchRows,
-                                 executors: Int = 1,
-                                 skewSafe: Boolean = true)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (shDf0, h) = dfShinglesWith(documents, skewSafe)
-    val shRows = math.max(1L, shDf0.count())
-    val budget = math.max(1L,
-      math.min(MaxAutoBudget, scratchRows * executors / (2L * shRows)))
-    val hist = shDf0.select(col("s"), col("df")).distinct()
-      .groupBy("df").agg(count(lit(1)).as("n"))
-    val wH = graft.functions.BoundedWindow.boundedGlobal(col("df"), asc("df"))
-    val cum = hist.withColumn("cc",
-      sum(expr("n * (df * (df - 1) DIV 2)")).over(wH))
-    val nd = documents.agg(count(lit(1)).as("ndocs"))
-    val cap = cum.crossJoin(broadcast(nd))
-      .filter(col("cc") <= col("ndocs") * budget)
-      .agg(coalesce(max("df"), lit(1L)).as("cap"))
-    val (out, h2) = cappedPairsOfWith(shDf0.crossJoin(broadcast(cap)), col("cap"), threshold)
-    (out, h ++ h2)
-  }
+                             executors: Int = 1): DataFrame =
+    cappedNgramWith(documents, threshold, DfCap.AutoBudget(scratchRows, executors))._1
 
   /** DuckDB mirror of [[ngramJaccardBudgetAuto]] — the budget derives in
     * SQL from the same shingle-row count and the same integer floor
@@ -656,162 +564,6 @@ object Dedup {
        |${duckJaccard("cand", s"jac >= $threshold", "d1, d2, round(jac, 6) AS jaccard")}""".stripMargin
   }
 
-  /** Shared (doc_id, s, df) relation of the capped variants, cached (read
-    * by rare/freq filters and the size aggregate — 5 consumers).
-    *
-    * Two forms, selected by `skewSafe` (round-7 verdict #3):
-    *
-    *   - skewSafe = true (DEFAULT): df by partial-agged `groupBy(s)` +
-    *     join-back on s. Head-shingle mass is partial-agged on the map
-    *     side, and the join-back — itself s-keyed — is SMJ under AQE's
-    *     skew-join splitting, so NO corpus-cardinality key ever funnels
-    *     through one task. This is the form the operator exists for: a
-    *     boilerplate-heavy 100 TB corpus has shingles with billions of
-    *     occurrences. The df aggregate is a cached-relation-derived build
-    *     side → merge-pinned (the CLAUDE.md group-aggregate rule); the
-    *     shingle rows are cached because the one join plan reads them on
-    *     both sides.
-    *
-    *   - skewSafe = false: df via `count OVER (PARTITION BY s)` — one
-    *     shuffle, no join, no second cache, but every occurrence of a head
-    *     shingle lands in ONE window task (windows get no partial agg and
-    *     no AQE skew handling — the round-4 hapax lesson). Retained for
-    *     low-skew corpora where the single-shuffle form measures faster.
-    *
-    *   Measured A/B at sf0.1 (TimeQ warm reps, same session, host load
-    *   1.8-9.5 — treat as ±1 s): q_dedup_ngram_capped window 5.7-7.8 s →
-    *   grouped 8.5-9.3 s (~+2.8 s: the second cache materialization + the
-    *   join-back); q_dedup_ngram_adaptive window 9.7-10.9 s → grouped
-    *   9.4-10.7 s (a wash — the cap-derivation passes dominate). The
-    *   capped form's ~3 s at test scale is the accepted insurance price;
-    *   it buys the only version of this operator that survives the corpus
-    *   it exists for. */
-  private def dfShinglesWith(documents: DataFrame,
-                             skewSafe: Boolean = true): (DataFrame, Seq[DataFrame]) =
-    if (skewSafe) {
-      val rows = graft.functions.TextFns.shingleRowsOf(documents, 3)
-        .distinct().cache()
-      val dfr = rows.groupBy("s").agg(count(lit(1)).as("df"))
-      val joined = rows.join(dfr.hint("merge"), "s").cache()
-      (joined, Seq(rows, joined))
-    } else {
-      val wS = org.apache.spark.sql.expressions.Window.partitionBy("s")
-      val j = graft.functions.TextFns.shingleRowsOf(documents, 3).distinct()
-        .withColumn("df", count(lit(1)).over(wS))
-        .cache()
-      (j, Seq(j))
-    }
-
-  private def cappedPairsOfWith(shDf: DataFrame, cap: Column,
-                                threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val (v, h) = cappedVerifiedWith(shDf, cap,
-      (i, n1, n2) => i.cast("double") / (n1 + n2 - i) >= threshold)
-    val out = v
-      .withColumn("jaccard", col("i").cast("double") / (col("n1") + col("n2") - col("i")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(asc("d1"), asc("d2"))
-    (out, h)
-  }
-
-  /** The capped two-pass candidate + EXACT intersection seam shared by
-    * the Jaccard tail ([[cappedPairsOfWith]]) and the containment tail
-    * ([[ngramContainmentWith]]): verified rows (d1, d2, i, n1, n2) with
-    * `i` the exact UNCAPPED intersection, plus cache handles. Pairs are
-    * found via rare shingles only.
-    *
-    * `keepBound(i_ub, n1, n2)` is the caller's similarity predicate
-    * evaluated at the UPPER BOUND `i_ub = i_r + min(f1, f2)` on the
-    * intersection (f = per-doc frequent-shingle count): i ≤ i_ub always,
-    * the caller's metric is monotone increasing in i, and IEEE-754
-    * division is monotone (a1 ≤ a2, b1 ≥ b2 > 0 ⇒ fl(a1/b1) ≤ fl(a2/b2)),
-    * so a pair passing the EXACT threshold always passes the bound — the
-    * prune drops only pairs the final filter would drop anyway (round-13
-    * optimization: the rare self-join emits ~1.1M candidate pairs at
-    * sf0.1 of which 256 survive; pruning before the frequent-completion
-    * joins removes 5 shuffles of the megarow pair relation). The bound
-    * must be the SAME expression tree as the exact metric with i_ub
-    * substituted for i — that is what makes float monotonicity apply. */
-  /** Rare-shingle candidate pairs (d1 < d2, distinct) at df ≤ `cap` over
-    * the shared (doc_id, s, df) relation — the candidate half of
-    * [[cappedVerifiedWith]]'s pass 1, shared with [[dedupRecall]] (which
-    * intersects it with the exact baseline instead of re-verifying). The
-    * join condition (rare filter, s-equijoin, d1 < d2, merge pins) is
-    * kept textually identical to pass 1 below: a capped pipeline edit
-    * that forgets this twin drifts the recall measurement off the
-    * pipeline it measures (DedupSpec pins found ≡ candidates ∩ exact). */
-  private def rareCandidatesOf(shDf: DataFrame, cap: Column): DataFrame = {
-    val rare = shDf.filter(col("df") <= cap)
-    rare.select(col("doc_id").as("d1"), col("s")).hint("merge")
-      .join(rare.select(col("doc_id").as("d2"), col("s")).hint("merge"), "s")
-      .filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"))
-      .distinct()
-  }
-
-  private def cappedVerifiedWith(shDf: DataFrame, cap: Column,
-      keepBound: (Column, Column, Column) => Column): (DataFrame, Seq[DataFrame]) = {
-    val rare = shDf.filter(col("df") <= cap)
-    val freq = shDf.filter(col("df") > cap)
-    // Per-doc set size n AND frequent-shingle count f in ONE pass over the
-    // cached shingle relation (f feeds the intersection upper bound).
-    // Cached: doc-cardinality, read by both sides of the attach join.
-    val sizes = shDf.groupBy("doc_id").agg(
-      count(lit(1)).as("n"),
-      sum(when(col("df") > cap, 1L).otherwise(0L)).as("f"))
-      .cache()
-    // Attach (n, f) to the rare ROWS before the self-join: the bound
-    // filter then runs straight off the pair aggregate — joining sizes at
-    // pair level instead would sort the ~1.1M-pair relation twice where
-    // this sorts the ~256k-row rare relation once per side (measured
-    // round-13). merge pin: sizes is a cached-relation-derived aggregate
-    // (the locked-broadcast hazard — doc-cardinality, corpus-scale at
-    // 100 TB).
-    val rareS = rare.select(col("doc_id"), col("s"))
-      .join(sizes.hint("merge"), "doc_id")
-    // Pass 1 — the bounded quadratic: self-join the RARE partition on s and
-    // count shared-rare-shingles in the SAME pass (the single-pass trick of
-    // [[ngramJaccard]]; a separate candidate-distinct + full re-expansion
-    // verify measured 10× slower at sf0.1). Fan-out per shingle ≤ maxDf².
-    // hint("merge"): the df-filter's selectivity estimate makes either side
-    // look broadcastable while rare is nearly the whole shingle relation.
-    // The per-doc (n, f) ride the grouping key — functionally determined
-    // by d1/d2, so the groups are unchanged. Uncached: the bound prune
-    // makes this single-referenced (the cached survivors below are what
-    // both downstream passes read).
-    val iRare = rareS.select(col("doc_id").as("d1"), col("s"),
-        col("n").as("n1"), col("f").as("f1")).hint("merge")
-      .join(rareS.select(col("doc_id").as("d2"), col("s"),
-        col("n").as("n2"), col("f").as("f2")).hint("merge"), "s")
-      .filter(col("d1") < col("d2"))
-      .groupBy("d1", "d2", "n1", "f1", "n2", "f2")
-      .agg(count(lit(1)).as("i_r"))
-    // Upper-bound prune: keep only pairs whose BEST-CASE intersection
-    // passes the metric.
-    val bounded = iRare
-      .withColumn("i_ub", col("i_r") + least(col("f1"), col("f2")))
-      .filter(keepBound(col("i_ub"), col("n1"), col("n2")))
-      .select(col("d1"), col("d2"), col("i_r"), col("n1"), col("n2"))
-      .cache() // survivors: referenced twice (frequent probe + final sum)
-    // Pass 2 — exact completion over the SURVIVORS only: their FREQUENT
-    // shared shingles counted candidate-first against the freq partition,
-    // whose total row count is small by construction (few distinct
-    // shingles exceed the cap). Emitted pairs therefore carry the exact
-    // UNCAPPED intersection; the cap only limits which pairs are found
-    // (pairs sharing exclusively frequent shingles — the declared recall
-    // trade, and at 100 TB exactly the pairs one WANTS dropped: boilerplate
-    // co-occurrence, not near-duplication).
-    val iFreq = bounded.select(col("d1"), col("d2"))
-      .join(freq.select(col("doc_id").as("d1"), col("s")).hint("merge"), "d1")
-      .join(freq.select(col("doc_id").as("d2"), col("s")).hint("merge"), Seq("d2", "s"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("i_f"))
-    val verified = bounded.join(iFreq, Seq("d1", "d2"), "left")
-      .select(col("d1"), col("d2"),
-        (col("i_r") + coalesce(col("i_f"), lit(0L))).as("i"),
-        col("n1"), col("n2"))
-    (verified, Seq(sizes, bounded))
-  }
-
   /** Asymmetric near-dup: shingle CONTAINMENT (overlap coefficient)
     * `i / min(n1, n2)` ≥ threshold — the partial-copy detector symmetric
     * Jaccard structurally misses. A 40-shingle quote embedded in a
@@ -824,7 +576,7 @@ object Dedup {
     * candidate-budget df cap bounds candidate generation at O(budget·n)
     * on any corpus shape, pairs are found via rare shared shingles, and
     * the intersection is completed EXACTLY over the frequent partition
-    * ([[cappedInterWith]] — the shared seam), so containment values are
+    * ([[cappedNgramWith]] — the shared core), so containment values are
     * never approximate; the cap only bounds which pairs can be FOUND
     * (a pair sharing exclusively head shingles is boilerplate
     * co-occurrence, the wanted drop — and for containment specifically,
@@ -834,35 +586,197 @@ object Dedup {
     * so the consumer can orient the containment (the smaller side is
     * the contained one). */
   def ngramContainment(documents: DataFrame, threshold: Double = 0.8,
-                       candidateBudget: Int = 256,
-                       skewSafe: Boolean = true): DataFrame =
-    ngramContainmentWith(documents, threshold, candidateBudget, skewSafe)._1
+                       candidateBudget: Int = 256): DataFrame =
+    cappedNgramWith(documents, threshold, DfCap.Budget(candidateBudget),
+      NgramMetric.Containment)._1
 
-  /** [[ngramContainment]] with cache handles — the
-    * [[ngramJaccardCappedWith]] lifecycle. */
-  def ngramContainmentWith(documents: DataFrame, threshold: Double,
-                           candidateBudget: Int = 256,
-                           skewSafe: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    val (shDf0, h) = dfShinglesWith(documents, skewSafe)
-    val hist = shDf0.select(col("s"), col("df")).distinct()
+  /** How [[cappedNgramWith]] derives its df cap. Shingles above the cap
+    * leave candidate generation only; the verify still counts them. */
+  sealed trait DfCap
+  object DfCap {
+    /** A fixed cap ([[ngramJaccardCapped]]). */
+    final case class Absolute(maxDf: Int) extends DfCap
+    /** The smallest df keeping ≥ `keepPct`% of distinct shingles
+      * ([[ngramJaccardCappedAdaptive]]). */
+    final case class KeepPct(keepPct: Int) extends DfCap
+    /** The largest df whose cumulative predicted self-join volume
+      * Σ n·df·(df−1)/2 fits `rowsPerDoc` rows per doc
+      * ([[ngramJaccardBudget]]; df = 1 if even the rarest rung exceeds it). */
+    final case class Budget(rowsPerDoc: Long) extends DfCap
+    /** [[Budget]] with `rowsPerDoc` derived from the scratch envelope
+      * ([[ngramJaccardBudgetAuto]]). */
+    final case class AutoBudget(scratchRows: Long, executors: Int) extends DfCap
+  }
+
+  /** Pair metric of [[cappedNgramWith]]: monotone increasing in the
+    * intersection `i`; `sizeCols` ride into the output before the metric. */
+  sealed abstract class NgramMetric(val name: String, val sizeCols: Seq[String]) {
+    def of(i: Column, n1: Column, n2: Column): Column
+  }
+  object NgramMetric {
+    /** i / (n1 + n2 − i): output (d1, d2, jaccard). */
+    case object Jaccard extends NgramMetric("jaccard", Nil) {
+      def of(i: Column, n1: Column, n2: Column): Column = i.cast("double") / (n1 + n2 - i)
+    }
+    /** i / min(n1, n2): output (d1, d2, n1, n2, containment). */
+    case object Containment extends NgramMetric("containment", Seq("n1", "n2")) {
+      def of(i: Column, n1: Column, n2: Column): Column = i.cast("double") / least(n1, n2)
+    }
+  }
+
+  /** The capped n-gram core behind [[ngramJaccardCapped]],
+    * [[ngramJaccardCappedAdaptive]], [[ngramJaccardBudget]],
+    * [[ngramJaccardBudgetAuto]] and [[ngramContainment]]: (doc_id, s, df)
+    * relation → df cap (`rule`) → rare-shingle self-join counting the
+    * shared rare shingles → `i_ub` bound prune → exact frequent
+    * completion → `metric` ≥ threshold, ordered by (d1, d2). Returns the
+    * result plus a handle on every cache it creates — two corpus-scale
+    * shingle caches, the per-doc sizes and the bound survivors. The
+    * harness clears caches per query; a library caller unpersists the
+    * handles once the result is materialized.
+    *
+    * Pairs are found via rare shingles only; every emitted pair carries
+    * the exact UNCAPPED intersection. The bound prune evaluates the metric
+    * at the UPPER BOUND `i_ub = i_r + min(f1, f2)` on the intersection
+    * (f = per-doc frequent-shingle count): i ≤ i_ub always, the metric is
+    * monotone increasing in i, and IEEE-754 division is monotone
+    * (a1 ≤ a2, b1 ≥ b2 > 0 ⇒ fl(a1/b1) ≤ fl(a2/b2)), so a pair passing
+    * the EXACT threshold always passes the bound — the prune drops only
+    * pairs the final filter would drop anyway (round-13 optimization: the
+    * rare self-join emits ~1.1M candidate pairs at sf0.1 of which 256
+    * survive; pruning before the frequent-completion joins removes 5
+    * shuffles of the megarow pair relation). The bound is the SAME
+    * expression tree as the exact metric with i_ub substituted for i —
+    * that is what makes float monotonicity apply. */
+  def cappedNgramWith(documents: DataFrame, threshold: Double, rule: DfCap,
+                      metric: NgramMetric = NgramMetric.Jaccard): (DataFrame, Seq[DataFrame]) = {
+    val (shDf0, h) = dfShinglesWith(documents)
+    def capped(cap: DataFrame) = (shDf0.crossJoin(broadcast(cap)), col("cap"))
+    val (shDf, cap) = rule match {
+      case DfCap.Absolute(maxDf) => (shDf0, lit(maxDf))
+      case DfCap.KeepPct(keepPct) => capped(keepPctCap(shDf0, keepPct))
+      case DfCap.Budget(rowsPerDoc) => capped(budgetCap(shDf0, documents, rowsPerDoc))
+      case DfCap.AutoBudget(scratchRows, executors) =>
+        // eager: prices the derivation and warms the shingle cache
+        val shRows = math.max(1L, shDf0.count())
+        capped(budgetCap(shDf0, documents, math.max(1L,
+          math.min(MaxAutoBudget, scratchRows * executors / (2L * shRows)))))
+    }
+    // Per-doc set size n AND frequent-shingle count f in ONE pass over the
+    // cached shingle relation (f feeds the intersection upper bound).
+    // Cached: doc-cardinality, read by both sides of the rare self-join.
+    val sizes = shDf.groupBy("doc_id").agg(
+      count(lit(1)).as("n"),
+      sum(when(col("df") > cap, 1L).otherwise(0L)).as("f"))
+      .cache()
+    // Pass 1 — the bounded quadratic: count shared-rare-shingles in the
+    // self-join itself (the single-pass trick of [[ngramJaccard]]; a
+    // separate candidate-distinct + full re-expansion verify measured 10×
+    // slower at sf0.1). Fan-out per shingle ≤ cap². The per-doc (n, f)
+    // ride the grouping key — functionally determined by d1/d2, so the
+    // groups are unchanged. Uncached: the bound prune makes this
+    // single-referenced.
+    val iRare = rareSelfJoin(shDf, cap, Some(sizes))
+      .groupBy("d1", "d2", "n1", "f1", "n2", "f2")
+      .agg(count(lit(1)).as("i_r"))
+    val bounded = iRare
+      .withColumn("i_ub", col("i_r") + least(col("f1"), col("f2")))
+      .filter(metric.of(col("i_ub"), col("n1"), col("n2")) >= threshold)
+      .select(col("d1"), col("d2"), col("i_r"), col("n1"), col("n2"))
+      .cache() // survivors: referenced twice (frequent probe + final sum)
+    // Pass 2 — exact completion over the SURVIVORS only: their FREQUENT
+    // shared shingles counted candidate-first against the freq partition,
+    // whose total row count is small by construction (few distinct
+    // shingles exceed the cap). The cap therefore only limits which pairs
+    // are found (pairs sharing exclusively frequent shingles — the
+    // declared recall trade, and at 100 TB exactly the pairs one WANTS
+    // dropped: boilerplate co-occurrence, not near-duplication).
+    val freq = shDf.filter(col("df") > cap)
+    val iFreq = bounded.select(col("d1"), col("d2"))
+      .join(freq.select(col("doc_id").as("d1"), col("s")).hint("merge"), "d1")
+      .join(freq.select(col("doc_id").as("d2"), col("s")).hint("merge"), Seq("d2", "s"))
+      .groupBy("d1", "d2").agg(count(lit(1)).as("i_f"))
+    val out = bounded.join(iFreq, Seq("d1", "d2"), "left")
+      .select(col("d1"), col("d2"),
+        (col("i_r") + coalesce(col("i_f"), lit(0L))).as("i"),
+        col("n1"), col("n2"))
+      .withColumn(metric.name, metric.of(col("i"), col("n1"), col("n2")))
+      .filter(col(metric.name) >= threshold)
+      .select(Seq(col("d1"), col("d2")) ++ metric.sizeCols.map(col) :+
+        round(col(metric.name), 6).as(metric.name): _*)
+      .orderBy(asc("d1"), asc("d2"))
+    (out, h ++ Seq(sizes, bounded))
+  }
+
+  /** (df, n): how many distinct shingles have each df. Bounded by max df. */
+  private def dfHistogram(shDf: DataFrame): DataFrame =
+    shDf.select(col("s"), col("df")).distinct()
       .groupBy("df").agg(count(lit(1)).as("n"))
+
+  /** One-row (cap) relation of [[DfCap.KeepPct]]: all-integer
+    * cum·100 ≥ keepPct·total over a two-phase prefix sum. */
+  private def keepPctCap(shDf: DataFrame, keepPct: Int): DataFrame = {
+    // eager checkpoint: hist is read TWICE (cum + tot) — un-checkpointed,
+    // each reader re-derives the distinct+groupBy over the corpus-scale
+    // shingle cache. Trade: the checkpoint runs a corpus-scale job at
+    // CONSTRUCTION time, and its (≤ max-df rows) RDD blocks are not
+    // released by cacheManager.clearCache() — a bounded per-construction
+    // drip a long-lived library session should know about.
+    val hist = dfHistogram(shDf).localCheckpoint(true)
     val wH = graft.functions.BoundedWindow.boundedGlobal(col("df"), asc("df"))
-    val cum = hist.withColumn("cc",
+    val cum = hist.withColumn("cum", sum("n").over(wH))
+    val tot = hist.agg(sum("n").as("t"))
+    cum.crossJoin(broadcast(tot))
+      .filter(col("cum") * 100 >= lit(keepPct) * col("t"))
+      .agg(min("df").as("cap"))
+  }
+
+  /** One-row (cap) relation of [[DfCap.Budget]]: the largest df whose
+    * cumulative predicted candidate volume fits `rowsPerDoc`·ndocs; df = 1
+    * (zero candidates) if even the rarest rung exceeds it. */
+  private def budgetCap(shDf: DataFrame, documents: DataFrame, rowsPerDoc: Long): DataFrame = {
+    val wH = graft.functions.BoundedWindow.boundedGlobal(col("df"), asc("df"))
+    val cum = dfHistogram(shDf).withColumn("cc",
       sum(expr("n * (df * (df - 1) DIV 2)")).over(wH))
     val nd = documents.agg(count(lit(1)).as("ndocs"))
-    val cap = cum.crossJoin(broadcast(nd))
-      .filter(col("cc") <= col("ndocs") * candidateBudget)
+    cum.crossJoin(broadcast(nd))
+      .filter(col("cc") <= col("ndocs") * rowsPerDoc)
       .agg(coalesce(max("df"), lit(1L)).as("cap"))
-    val (v, h2) = cappedVerifiedWith(shDf0.crossJoin(broadcast(cap)), col("cap"),
-      (i, n1, n2) => i.cast("double") / least(n1, n2) >= threshold)
-    val out = v
-      .withColumn("containment",
-        col("i").cast("double") / least(col("n1"), col("n2")))
-      .filter(col("containment") >= threshold)
-      .select(col("d1"), col("d2"), col("n1"), col("n2"),
-        round(col("containment"), 6).as("containment"))
-      .orderBy(asc("d1"), asc("d2"))
-    (out, h ++ h2)
+  }
+
+  /** Shared (doc_id, s, df) relation of the capped core, cached (read by
+    * the rare/freq filters, the size aggregate and the histogram). df is a
+    * partial-agged `groupBy(s)` + s-keyed join-back, never a
+    * `count OVER (PARTITION BY s)` window: the window sends every
+    * occurrence of a head shingle to one task. The df aggregate derives
+    * from a cached relation, so it is merge-pinned (the CLAUDE.md
+    * group-aggregate rule). */
+  private def dfShinglesWith(documents: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val rows = shingleRows(documents, 3)
+    val dfr = rows.groupBy("s").agg(count(lit(1)).as("df"))
+    val joined = rows.join(dfr.hint("merge"), "s").cache()
+    (joined, Seq(rows, joined))
+  }
+
+  /** Rare-shingle self-join over the (doc_id, s, df) relation: rows at
+    * df ≤ `cap`, equijoined on s, d1 < d2. Both sides merge-pinned: the
+    * df filter's selectivity estimate makes either side look
+    * broadcastable while rare is nearly the whole shingle relation. With
+    * `sizes` (doc_id, n, f, merge-pinned: a cached doc-cardinality
+    * aggregate) attached to the rare ROWS, the per-doc counts ride along
+    * as n1/f1/n2/f2 — attaching at pair level instead would sort the pair
+    * relation twice (measured round-13). The one definition behind
+    * [[cappedNgramWith]]'s pass 1 and [[dedupRecall]]'s ngram_capped
+    * candidates, so the recall report measures the join the pipeline
+    * runs. */
+  private def rareSelfJoin(shDf: DataFrame, cap: Column,
+                           sizes: Option[DataFrame] = None): DataFrame = {
+    val rare0 = shDf.filter(col("df") <= cap).select(col("doc_id"), col("s"))
+    val rare = sizes.fold(rare0)(z => rare0.join(z.hint("merge"), "doc_id"))
+    val carry = if (sizes.isDefined) Seq("n", "f") else Nil
+    def side(k: String) = rare.select(col("doc_id").as(s"d$k") +: col("s") +:
+      carry.map(c => col(c).as(c + k)): _*).hint("merge")
+    side("1").join(side("2"), "s").filter(col("d1") < col("d2"))
   }
 
   /** DuckDB mirror of [[ngramContainment]] — budget cap + rare-shingle
@@ -1406,47 +1320,24 @@ object Dedup {
        |       (count(*) OVER (PARTITION BY cluster))::BIGINT AS cluster_size
        |FROM cc ORDER BY cluster, doc_id""".stripMargin
 
-  /** Near-dup graph health report: the degree histogram of the MinHash
+  /** Near-dup graph health report: the degree histogram of a (d1, d2)
     * pair graph — (degree, n_docs) for every doc that appears in at least
-    * one verified pair. This is the report a production pipeline reads
+    * one pair. This is the report a production pipeline reads
     * BEFORE pruning at scale: a fat high-degree tail means a boilerplate
     * attractor (one template near-dup to thousands of docs — prune by
     * cluster, or raise maxDf upstream), while an all-degree-1 histogram
     * means clean A↔B duplicates where pairwise dropping is safe. Same
     * diagnostic family as [[Curation]]'s funnel accounting: cheap relative
-    * to the pipeline it tunes, because it reuses the materialize-once
-    * [[nearDupPairs]] artifact.
+    * to the pipeline it tunes, because it reads the materialize-once
+    * [[nearDupPairs]] artifact ([[graft.sources.PairsLayout]]).
     *
     * Scale shape: the pair relation is ≪ corpus by construction; the
     * endpoint union is column projections (no shuffle), the degree count
     * and the histogram are two partial-agged aggregations whose output is
     * bounded by max-degree — nothing here touches corpus cardinality
-    * beyond the pair pipeline itself. */
-  def dupDegree(documents: DataFrame, threshold: Double = 0.8): DataFrame =
-    dupDegreeWith(documents, threshold)._1
-
-  /** [[dupDegree]] with its cache handles (pairs + shingle scratch) — the
-    * `-With` library convention; the plain form relies on the harness's
-    * per-query cache clear (Dedup header contract). */
-  def dupDegreeWith(documents: DataFrame, threshold: Double = 0.8)
-      : (DataFrame, Seq[DataFrame]) = {
-    // cached: the endpoint union reads the pair relation TWICE, and an
-    // uncached plan re-runs the full minhash+verify pipeline per branch
-    // (the clustersOfPairs lesson; measured A/B same-load at sf0.1: warm
-    // 4.0-4.3 s cached vs 4.9-5.4 s uncached — ReuseExchange shares the
-    // lower exchanges but not the verify tail). A production run skips
-    // this facade entirely and calls [[degreeOfPairs]] over the persisted
-    // [[graft.sources.PairsLayout]] artifact.
-    val (pairs0, handles) = nearDupPairsWith(documents, threshold)
-    val pairs = pairs0.cache()
-    (degreeOfPairs(pairs), handles :+ pairs)
-  }
-
-  /** Degree-histogram core over an arbitrary (d1, d2) pair relation — the
-    * report half of the pairs seam. Reads `pairs` twice; deliberately does
-    * NOT cache (a [[graft.sources.PairsLayout]] read is a tiny parquet
-    * scan with honest stats; a recompute caller caches via the `-With`
-    * facade). */
+    * beyond the pair pipeline itself. Reads `pairs` twice and deliberately
+    * does NOT cache: a PairsLayout read is a tiny parquet scan with honest
+    * stats; a caller passing a recomputed pipeline caches it first. */
   def degreeOfPairs(pairs: DataFrame): DataFrame =
     pairs.select(col("d1").as("doc_id"))
       .unionAll(pairs.select(col("d2").as("doc_id")))
@@ -1454,7 +1345,7 @@ object Dedup {
       .groupBy("degree").agg(count(lit(1)).as("n_docs"))
       .orderBy(asc("degree"))
 
-  /** DuckDB mirror of [[dupDegree]] — the same shared MinHash candidate
+  /** DuckDB mirror of [[degreeOfPairs]] over [[nearDupPairs]] — the same shared MinHash candidate
     * CTEs and Jaccard tail as [[duckMinhashSql]], then the two-level
     * degree aggregation. */
   def duckDupDegreeSql(table: String, threshold: Double,
@@ -1468,13 +1359,14 @@ object Dedup {
        |SELECT degree, count(*)::BIGINT AS n_docs
        |FROM deg GROUP BY degree ORDER BY degree""".stripMargin
 
-  /** Triangle census of the near-dup graph — global clustering coefficient
-    * as a ONE-row report: how clique-like is the duplicate structure?
+  /** Triangle census of a (d1, d2) near-dup pair graph — global
+    * clustering coefficient as a ONE-row report: how clique-like is the
+    * duplicate structure?
     * High closure = LSH pairs agree transitively (true duplicate groups —
     * [[clustersOfPairs]] components are dense); low closure = chains and
     * stars (threshold-boundary bridges or a boilerplate attractor linking
     * unrelated docs — inspect before a 100 TB prune, alongside
-    * [[dupDegree]]'s tail and [[dupPagerank]]'s hubs).
+    * [[degreeOfPairs]]'s tail and [[pagerankOfPairs]]'s hubs).
     *
     * Counting contract: edges are canonical (d1 < d2), triangles are
     * enumerated once from their LOWEST vertex (edges (a,b), (a,c), b < c,
@@ -1484,32 +1376,15 @@ object Dedup {
     *
     * Scale shape: the wedge join is an equijoin on the LOW endpoint of
     * the pair graph (≪ corpus); its fan-out is C(deg_low(v), 2) — the
-    * [[dupDegree]] histogram is the input that predicts this cost, and a
+    * [[degreeOfPairs]] histogram is the input that predicts this cost, and a
     * deployment with a fat tail prunes the attractor first (the report's
     * own advice). The closure test is candidate-first (wedges probe the
-    * edge relation) with the cached-derived build side merge-pinned — the
+    * edge relation) with the build side merge-pinned — the
     * minhash verify-join precedent: a pair-graph relation must not become
     * a broadcast build side off a stale pre-materialization estimate.
-    * Pairs cached once, read three times (two wedge legs + closure probe;
-    * the [[dupDegree]] A/B measured the cache worthwhile at two reads). */
-  def dupTriangles(documents: DataFrame, threshold: Double = 0.8): DataFrame =
-    dupTrianglesWith(documents, threshold)._1
-
-  /** [[dupTriangles]] with its cache handles — the `-With` convention
-    * (round-6 advice #2: the plain form's cached pairs leaked for library
-    * callers outside the harness's per-query cache clear). */
-  def dupTrianglesWith(documents: DataFrame, threshold: Double = 0.8)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (pairs0, handles) = nearDupPairsWith(documents, threshold)
-    // cached: read three times (two wedge legs + closure probe); the
-    // dupDegree A/B measured the cache worthwhile at two reads already
-    val pairs = pairs0.cache()
-    (trianglesOfPairs(pairs), handles :+ pairs)
-  }
-
-  /** Triangle-census core over an arbitrary (d1, d2) pair relation —
-    * uncached like [[degreeOfPairs]] (the artifact-read path's stats stay
-    * honest; recompute callers cache via the facade). */
+    * `pairs` is read three times (two wedge legs + closure probe) and
+    * uncached like [[degreeOfPairs]]: the artifact-read path's stats stay
+    * honest. */
   def trianglesOfPairs(pairs: DataFrame): DataFrame = {
     val e = pairs.select(col("d1"), col("d2"))
     val wedgeLow = e.as("x").join(e.as("y"),
@@ -1531,7 +1406,7 @@ object Dedup {
           .otherwise(lit(0.0)).as("clustering"))
   }
 
-  /** DuckDB mirror of [[dupTriangles]] — the shared pair CTEs, then the
+  /** DuckDB mirror of [[trianglesOfPairs]] over [[nearDupPairs]] — the shared pair CTEs, then the
     * same lowest-vertex triangle enumeration and degree-wedge count. */
   def duckDupTrianglesSql(table: String, threshold: Double,
                           seeds: Int = MinhashSeeds,
@@ -1555,10 +1430,10 @@ object Dedup {
        |            ELSE 0.0 END AS clustering
        |FROM ed CROSS JOIN tri CROSS JOIN wd""".stripMargin
 
-  /** Duplicate centrality — integer-exact PageRank over the near-dup pair
-    * graph, `iters` fixed power iterations: which docs sit at the CENTER
+  /** Duplicate centrality — integer-exact PageRank over a (d1, d2)
+    * near-dup pair graph, `iters` fixed power iterations: which docs sit at the CENTER
     * of near-dup mass (templates radiating variants) vs its periphery?
-    * Degree alone ([[dupDegree]]) can't tell a hub from a member of one
+    * Degree alone ([[degreeOfPairs]]) can't tell a hub from a member of one
     * big clique; centrality concentrates on the former, which is the
     * prune-priority / inspection queue a production pass wants.
     *
@@ -1578,23 +1453,8 @@ object Dedup {
     * receives each round (no dangling-rank bookkeeping). Fixed iteration
     * count, not convergence-probed: centrality ordering stabilizes in a
     * few rounds on short-diameter dup components, and a FIXED count is
-    * what the unrolled oracle can mirror. */
-  def dupPagerank(documents: DataFrame, threshold: Double = 0.8,
-                  iters: Int = 3, topN: Int = 20): DataFrame =
-    dupPagerankWith(documents, threshold, iters, topN)._1
-
-  /** [[dupPagerank]] with every cache handle (shingle scratch + the
-    * power-iteration core's edge caches) — the `-With` convention. */
-  def dupPagerankWith(documents: DataFrame, threshold: Double = 0.8,
-                      iters: Int = 3, topN: Int = 20): (DataFrame, Seq[DataFrame]) = {
-    val (pairs, handles) = nearDupPairsWith(documents, threshold)
-    val (out, prHandles) = pagerankOfPairsWith(pairs, iters, topN)
-    (out, handles ++ prHandles)
-  }
-
-  /** Power-iteration core over an arbitrary (d1, d2) pair relation — the
-    * centrality half of the pairs seam ([[nearDupPairs]]), testable on
-    * synthetic graphs (a star must rank its hub first). */
+    * what the unrolled oracle can mirror. Testable on synthetic graphs (a
+    * star must rank its hub first). */
   def pagerankOfPairs(pairs: DataFrame, iters: Int = 3, topN: Int = 20): DataFrame =
     pagerankOfPairsWith(pairs, iters, topN)._1
 
@@ -1629,7 +1489,7 @@ object Dedup {
     (out, Seq(p, edges))
   }
 
-  /** DuckDB mirror of [[dupPagerank]] — same pair CTEs, the power
+  /** DuckDB mirror of [[pagerankOfPairs]] over [[nearDupPairs]] — same pair CTEs, the power
     * iteration UNROLLED (fixed count is the contract), same integer floor
     * arithmetic (`//` truncates positive BIGINTs exactly like Spark DIV;
     * DuckDB's HUGEINT sum is cast back to BIGINT inside the bound). */
@@ -1659,48 +1519,6 @@ object Dedup {
        |ORDER BY rf.r DESC, doc_id LIMIT $topN""".stripMargin
   }
 
-  /** Leakage-safe train/validation split: assign splits by NEAR-DUP
-    * CLUSTER, not by document, so no near-duplicate pair can straddle the
-    * boundary — the held-out set stays honest. A per-doc hash split (the
-    * naive `md5(doc_id) % 100` everyone starts with) leaks: a val doc's
-    * near-duplicate lands in train with probability `1 − valPct/100`, and
-    * the val loss silently measures memorization. Here the hash is taken
-    * of the doc's GROUP id — its near-dup cluster label, or its own id if
-    * unclustered — so a whole component moves together by construction.
-    *
-    * The straddle count is still MEASURED, not asserted: `n_straddle`
-    * joins the pair relation against both endpoints' split assignments and
-    * counts disagreements (0 by construction; a nonzero value means the
-    * pair/cluster plumbing broke, and the oracle would catch it the same
-    * run). Output: one row per split — (split, n_groups, n_docs,
-    * n_tokens, n_straddle).
-    *
-    * Scale shape: clustering is the [[clustersOfPairs]] O(log n) loop over
-    * the materialize-once [[nearDupPairs]] seam (cached here because the
-    * straddle probe reads it again — pair-cardinality, ≪ corpus). The
-    * assignment relation `a` is deliberately NOT cached: it is
-    * doc-cardinality, recomputing it is one checkpointed-labels join, and
-    * an uncached plan keeps natural parquet-stat estimates — small now,
-    * big at scale → SMJ — instead of a post-materialization actual-size
-    * estimate that would plan a locked-in doc-cardinality broadcast
-    * (the round-4 curation lesson). The straddle probe's build side is
-    * the cached pair relation (candidate-first, broadcast-safe).
-    *
-    * Cache lifecycle: the pair relation (and [[minhash]]'s shingle
-    * scratch beneath it) stays cached for the lazy straddle probe —
-    * harness-cleared per query. A LIBRARY caller composing the split
-    * into a pipeline uses [[splitAssignment]] with its own
-    * [[nearDupPairsWith]] handles instead (the
-    * [[graft.Graft.prepareTrainingSet]] shape), which leaks nothing. */
-  /** The per-doc half of [[leakageSplit]]: (doc_id, ntok, grp, split) for
-    * every doc, group-keyed hash assignment over an EXTERNALLY-owned pair
-    * relation — the composition seam [[graft.Graft.prepareTrainingSet]]
-    * uses, where the same materialized [[nearDupPairs]] feeds curation,
-    * the split, and the straddle probe. `pairs` should be cached by the
-    * caller (it is read by clustering here and usually again by the
-    * caller's own probes); pair membership is per-pair, so a caller on a
-    * FILTERED corpus passes the full-corpus pairs semi-joined to its
-    * subset (the [[nearDupPairs]] restriction contract). */
   /** (doc_id, grp, split) — the TOKENIZATION-FREE core of the split:
     * split depends only on the cluster label, so the straddle probe's two
     * assignment reads skip the corpus regex tokenization entirely (a
@@ -1718,6 +1536,15 @@ object Dedup {
           .cast("bigint") % 100 < valPct, "val").otherwise("train"))
       .select(col("doc_id"), col("grp"), col("split"))
 
+  /** The per-doc half of [[leakageSplitOfPairs]]: (doc_id, ntok, grp, split) for
+    * every doc, group-keyed hash assignment over an EXTERNALLY-owned pair
+    * relation — the composition seam [[graft.Graft.prepareTrainingSet]]
+    * uses, where the same materialized [[nearDupPairs]] feeds curation,
+    * the split, and the straddle probe. `pairs` should be cached by the
+    * caller (it is read by clustering here and usually again by the
+    * caller's own probes); pair membership is per-pair, so a caller on a
+    * FILTERED corpus passes the full-corpus pairs semi-joined to its
+    * subset (the [[nearDupPairs]] restriction contract). */
   def splitAssignment(documents: DataFrame, pairs: DataFrame,
                       valPct: Int = 10, maxIter: Int = 20): DataFrame = {
     val cl = clustersOfPairs(pairs, maxIter).select(col("doc_id"), col("cluster"))
@@ -1726,23 +1553,36 @@ object Dedup {
       .join(liteAssignOf(documents.select("doc_id"), cl, valPct), "doc_id")
   }
 
-  def leakageSplit(documents: DataFrame, threshold: Double, valPct: Int = 10,
-                   maxIter: Int = 20): DataFrame =
-    leakageSplitWith(documents, threshold, valPct, maxIter)._1
-
-  /** [[leakageSplit]] with its cache handles — the `-With` convention. */
-  def leakageSplitWith(documents: DataFrame, threshold: Double, valPct: Int = 10,
-                       maxIter: Int = 20): (DataFrame, Seq[DataFrame]) = {
-    val (pairs0, handles) = nearDupPairsWith(documents, threshold)
-    val pairs = pairs0.cache()
-    (leakageSplitOfPairs(documents, pairs, valPct, maxIter), handles :+ pairs)
-  }
-
-  /** Split-report core over an arbitrary (d1, d2) pair relation —
-    * clustering + group-keyed split + straddle probe, with `pairs` read
-    * by both the CC loop and the probe. Uncached like the other OfPairs
-    * cores: over a [[graft.sources.PairsLayout]] artifact every read is a
-    * tiny parquet scan and the relation keeps honest stats. */
+  /** Leakage-safe train/validation split over a (d1, d2) near-dup pair
+    * relation: assign splits by NEAR-DUP
+    * CLUSTER, not by document, so no near-duplicate pair can straddle the
+    * boundary — the held-out set stays honest. A per-doc hash split (the
+    * naive `md5(doc_id) % 100` everyone starts with) leaks: a val doc's
+    * near-duplicate lands in train with probability `1 − valPct/100`, and
+    * the val loss silently measures memorization. Here the hash is taken
+    * of the doc's GROUP id — its near-dup cluster label, or its own id if
+    * unclustered — so a whole component moves together by construction.
+    *
+    * The straddle count is still MEASURED, not asserted: `n_straddle`
+    * joins the pair relation against both endpoints' split assignments and
+    * counts disagreements (0 by construction; a nonzero value means the
+    * pair/cluster plumbing broke, and the oracle would catch it the same
+    * run). Output: one row per split — (split, n_groups, n_docs,
+    * n_tokens, n_straddle).
+    *
+    * Scale shape: clustering is the [[clustersOfPairs]] O(log n) loop over
+    * the materialize-once [[nearDupPairs]] seam; `pairs` is read by both
+    * the CC loop and the straddle probe and is left uncached — over a
+    * [[graft.sources.PairsLayout]] artifact every read is a tiny parquet
+    * scan with honest stats. The assignment relation is deliberately NOT
+    * cached either: it is doc-cardinality, recomputing it is one
+    * checkpointed-labels join, and an uncached plan keeps natural
+    * parquet-stat estimates — small now, big at scale → SMJ — instead of
+    * a post-materialization actual-size estimate that would plan a
+    * locked-in doc-cardinality broadcast (the round-4 curation lesson).
+    * A LIBRARY caller composing the split into a pipeline uses
+    * [[splitAssignment]] with its own [[nearDupPairsWith]] handles (the
+    * [[graft.Graft.prepareTrainingSet]] shape). */
   def leakageSplitOfPairs(documents: DataFrame, pairs: DataFrame,
                           valPct: Int = 10, maxIter: Int = 20): DataFrame = {
     val cl = clustersOfPairs(pairs, maxIter).select(col("doc_id"), col("cluster"))
@@ -1764,7 +1604,7 @@ object Dedup {
       .orderBy("split")
   }
 
-  /** DuckDB mirror of [[leakageSplit]] — same pair CTEs as
+  /** DuckDB mirror of [[leakageSplitOfPairs]] over [[nearDupPairs]] — same pair CTEs as
     * [[duckClustersSql]], then group-keyed hash split + straddle recount. */
   def duckLeakageSplit(table: String, threshold: Double,
                        valPct: Int = 10,
@@ -2016,16 +1856,17 @@ object Dedup {
     // ≥-threshold survivors the cached `exact` already holds (TimeQ warm:
     // 14.1 s → 8.1 s at sf0.1). Candidate sets come from the exact
     // generators the standalone entries execute (minhashCandidatesOf /
-    // rareCandidatesOf / simhashCandPairs — single source of truth), and
+    // rareSelfJoin / simhashCandPairs — single source of truth), and
     // DedupSpec pins found ≡ candidates ∩ exact against the full
     // pipelines' outputs.
-    val (shDf, _) = dfShinglesWith(documents)
+    val (shDf, shHandles) = dfShinglesWith(documents)
+    val (simCand, simHandles) = simhashCandPairs(documents, SimhashMaxHamming)
     val found =
       minhashCandidatesOf(bandRowsOf(sh, MinhashSeeds, MinhashRowsPerBand))
         .withColumn("variant", lit("minhash"))
-      .unionByName(rareCandidatesOf(shDf, lit(maxDf))
+      .unionByName(rareSelfJoin(shDf, lit(maxDf)).select(col("d1"), col("d2")).distinct()
         .withColumn("variant", lit("ngram_capped")))
-      .unionByName(simhashCandPairs(documents, SimhashMaxHamming).select(col("d1"), col("d2"))
+      .unionByName(simCand.select(col("d1"), col("d2"))
         .withColumn("variant", lit("simhash")))
     val nExp = exact.agg(count(lit(1)).as("n_expected"))
     // hint("merge") on the probe side: `exact` is a cached pair relation
@@ -2039,7 +1880,7 @@ object Dedup {
     // static variant list: a variant whose candidate generation finds ZERO
     // pairs must still report (n_found = 0, recall = 0) — a silently
     // missing row is exactly the failure a measurement query must expose
-    Seq("minhash", "ngram_capped", "simhash").toDF("variant")
+    val report = Seq("minhash", "ngram_capped", "simhash").toDF("variant")
       .join(counts, Seq("variant"), "left")
       .crossJoin(broadcast(nExp))
       .select(col("variant"),
@@ -2054,6 +1895,11 @@ object Dedup {
           .otherwise(round(coalesce(col("n_found"), lit(0L)).cast("double")
             / col("n_expected").cast("double"), 6)).as("recall"))
       .orderBy("variant")
+    // the report is 3 rows: materialize it and release every cache built
+    // above, so a library caller leaks nothing (dependents first)
+    val rows = report.collect()
+    (Seq(exact) ++ simHandles ++ shHandles.reverse :+ sh).foreach(_.unpersist())
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), report.schema)
   }
 
   /** DuckDB mirror of [[dedupRecall]] — the variant queries nest as derived
@@ -2421,9 +2267,11 @@ object Dedup {
   /** Banded-SimHash candidate pairs (d1 < d2, hamming ≤ maxHamming,
     * distinct) — the candidate half shared by [[simhash]] (which verifies
     * them) and [[dedupRecall]] (which intersects them with the exact
-    * baseline — see its scaladoc). Same single-source-of-truth contract
-    * as [[minhashCandidatesOf]]. */
-  private def simhashCandPairs(documents: DataFrame, maxHamming: Int): DataFrame = {
+    * baseline — see its scaladoc), plus the handle on its cached
+    * signature relation. Same single-source-of-truth contract as
+    * [[minhashCandidatesOf]]. */
+  private def simhashCandPairs(documents: DataFrame,
+                               maxHamming: Int): (DataFrame, Seq[DataFrame]) = {
     // chunks projected once per token (md5 CSE'd within the project); the
     // 64 signed-bit sums are then integer shift/mask arithmetic — measured
     // ~13% end-to-end vs the substring+IN string test (see TextFns)
@@ -2451,7 +2299,7 @@ object Dedup {
     // hamming is computed and filtered BEFORE the distinct: collisions drop
     // early and the dedup Exchange carries (d1, d2, hamming) instead of two
     // 64-char signatures.
-    bands.as("x").join(bands.as("y"),
+    val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
@@ -2459,11 +2307,12 @@ object Dedup {
           bit_count(col("x.h2").bitwiseXOR(col("y.h2")))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
+    (cand, Seq(sig))
   }
 
   def simhash(documents: DataFrame, threshold: Double,
               maxHamming: Int = SimhashMaxHamming): DataFrame = {
-    val cand = simhashCandPairs(documents, maxHamming)
+    val (cand, _) = simhashCandPairs(documents, maxHamming)
     // candidate-first exact-Jaccard verify (hamming rides the groupBy key);
     // hint("merge") on the inverted-index sides — see jaccardOf for why a
     // broadcast there is catastrophic (measured 680 s → 9 s at sf0.1)

@@ -324,7 +324,7 @@ object Knn {
     * skew (one fat cell = probe cost ceiling and a candidate-count hot
     * spot; re-train or split), and cell coherence (low mean member→centroid
     * cosine = the cell is a grab-bag and probing it buys little recall).
-    * Completes the ANN family's ops side the way [[Dedup.dupDegree]] does
+    * Completes the ANN family's ops side the way [[Dedup.degreeOfPairs]] does
     * for the near-dup graph: both read the cheap layout artifact, not the
     * corpus.
     *

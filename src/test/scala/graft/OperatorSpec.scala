@@ -511,7 +511,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("leakage split: clusters move whole, zero straddling pairs, doc conservation") {
-    val out = Dedup.leakageSplit(docs, threshold = 0.8).collect()
+    val out = Dedup.leakageSplitOfPairs(docs, Dedup.nearDupPairs(docs, 0.8)).collect()
     spark.sharedState.cacheManager.clearCache()
     assert(out.map(_.getAs[String]("split")).sorted.sameElements(Array("train", "val")))
     // every row carries the measured straddle count, and it is zero
@@ -571,7 +571,7 @@ class OperatorSpec extends AnyFunSuite {
     // of re-running each variant's verify — assert per-variant n_found
     // equals |full-pipeline output ∩ exact| computed from the REAL
     // standalone pipelines, so the candidate twins (minhashCandidatesOf /
-    // rareCandidatesOf / simhashCandPairs) can never drift from the
+    // rareSelfJoin / simhashCandPairs) can never drift from the
     // verify pipelines they stand in for
     val exact = Dedup.ngramJaccard(docs, 0.5)
       .select("d1", "d2").collect().map(_.toString).toSet
@@ -584,6 +584,13 @@ class OperatorSpec extends AnyFunSuite {
     assert(rows("minhash")._1 == hitsOf(Dedup.minhash(docs, 0.5)))
     assert(rows("ngram_capped")._1 == hitsOf(Dedup.ngramJaccardCapped(docs, 0.5, 20)))
     assert(rows("simhash")._1 == hitsOf(Dedup.simhash(docs, 0.5)))
+  }
+
+  test("dedupRecall releases every cache it creates (library lifecycle)") {
+    spark.sharedState.cacheManager.clearCache()
+    Dedup.dedupRecall(docs).collect()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "dedupRecall left a cache entry behind")
   }
 
   test("ngram budget cap: equals the full-recall baseline when the volume fits the budget") {
@@ -1068,7 +1075,7 @@ class OperatorSpec extends AnyFunSuite {
     val pairs = Dedup.nearDupPairs(docs, 0.8).collect()
       .map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2")))
     spark.catalog.clearCache()
-    val hist = Dedup.dupDegree(docs, 0.8).collect()
+    val hist = Dedup.degreeOfPairs(Dedup.nearDupPairs(docs, 0.8)).collect()
       .map(r => (r.getAs[Long]("degree"), r.getAs[Long]("n_docs")))
     val nDocsInGraph = (pairs.map(_._1) ++ pairs.map(_._2)).distinct.length
     assert(hist.map(_._2).sum == nDocsInGraph, "histogram mass = docs with >=1 pair")

@@ -6,8 +6,8 @@ import graft.sources.PairsLayout
 
 /** The persisted near-dup pair artifact must be indistinguishable from the
   * recompute pipeline: identical pair set, and every OfPairs report over
-  * the artifact identical to its recompute facade (round-6 verdict #1's
-  * equivalence requirement). */
+  * the artifact identical to the same report over freshly recomputed
+  * [[Dedup.nearDupPairs]] (round-6 verdict #1's equivalence requirement). */
 class PairsLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def docs = Tables.documents(spark, TestSpark.sf)
@@ -32,21 +32,21 @@ class PairsLayoutSpec extends AnyFunSuite {
 
   test("degree report over the artifact == recompute facade") {
     val a = rows(Dedup.degreeOfPairs(artifact))
-    val b = rows(Dedup.dupDegree(docs, threshold))
+    val b = rows(Dedup.degreeOfPairs(Dedup.nearDupPairs(docs, threshold)))
     spark.sharedState.cacheManager.clearCache()
     assert(a == b)
   }
 
   test("triangle census over the artifact == recompute facade") {
     val a = rows(Dedup.trianglesOfPairs(artifact))
-    val b = rows(Dedup.dupTriangles(docs, threshold))
+    val b = rows(Dedup.trianglesOfPairs(Dedup.nearDupPairs(docs, threshold)))
     spark.sharedState.cacheManager.clearCache()
     assert(a == b)
   }
 
   test("pagerank over the artifact == recompute facade") {
     val a = rows(Dedup.pagerankOfPairs(artifact))
-    val b = rows(Dedup.dupPagerank(docs, threshold))
+    val b = rows(Dedup.pagerankOfPairs(Dedup.nearDupPairs(docs, threshold)))
     spark.sharedState.cacheManager.clearCache()
     assert(a == b)
   }
@@ -60,7 +60,7 @@ class PairsLayoutSpec extends AnyFunSuite {
 
   test("leakage split over the artifact == recompute facade") {
     val a = rows(Dedup.leakageSplitOfPairs(docs, artifact))
-    val b = rows(Dedup.leakageSplit(docs, threshold))
+    val b = rows(Dedup.leakageSplitOfPairs(docs, Dedup.nearDupPairs(docs, threshold)))
     spark.sharedState.cacheManager.clearCache()
     assert(a == b)
   }
@@ -285,19 +285,20 @@ class PairsLayoutSpec extends AnyFunSuite {
   }
 
   test("-With facades return every cache they create (library lifecycle)") {
-    for ((label, mk) <- Seq[(String, () => (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame]))](
-        ("dupDegreeWith", () => Dedup.dupDegreeWith(docs, threshold)),
-        ("dupTrianglesWith", () => Dedup.dupTrianglesWith(docs, threshold)),
-        ("dupPagerankWith", () => Dedup.dupPagerankWith(docs, threshold)),
-        ("leakageSplitWith", () => Dedup.leakageSplitWith(docs, threshold)),
-        ("ngramJaccardCappedWith", () => Dedup.ngramJaccardCappedWith(docs, threshold, 20)),
-        ("ngramJaccardCappedAdaptiveWith", () => Dedup.ngramJaccardCappedAdaptiveWith(docs, threshold)))) {
+    // every cap rule and both metrics of the one capped n-gram core
+    import Dedup.{DfCap, NgramMetric}
+    for ((label, rule, metric) <- Seq[(String, DfCap, NgramMetric)](
+        ("absolute", DfCap.Absolute(20), NgramMetric.Jaccard),
+        ("keep-percentile", DfCap.KeepPct(99), NgramMetric.Jaccard),
+        ("budget", DfCap.Budget(256), NgramMetric.Jaccard),
+        ("auto-budget", DfCap.AutoBudget(Dedup.AutoScratchRows, 1), NgramMetric.Jaccard),
+        ("containment", DfCap.Budget(256), NgramMetric.Containment))) {
       spark.sharedState.cacheManager.clearCache()
-      val (out, handles) = mk()
+      val (out, handles) = Dedup.cappedNgramWith(docs, threshold, rule, metric)
       out.collect()
       handles.foreach(_.unpersist(blocking = true))
       assert(spark.sharedState.cacheManager.isEmpty,
-        s"$label leaked a cache entry after releasing its handles")
+        s"cappedNgramWith($label) leaked a cache entry after releasing its handles")
     }
   }
 }

@@ -43,7 +43,7 @@ class ReportsSpec extends AnyFunSuite {
   }
 
   test("triangle census bounds: 3T <= W and clustering in [0, 1]") {
-    val r = Dedup.dupTriangles(docs, threshold = 0.8).collect()(0)
+    val r = Dedup.trianglesOfPairs(Dedup.nearDupPairs(docs, threshold = 0.8)).collect()(0)
     val (t, w) = (r.getAs[Long]("n_triangles"), r.getAs[Long]("n_wedges"))
     assert(3 * t <= w, s"3*$t triangles exceed $w wedges — enumeration is broken")
     val c = r.getAs[Double]("clustering")
