@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.{Diagnostics, SymbolNav}
 import graft.sources.{IndexBuild, Sandbox}
 
@@ -26,21 +33,51 @@ object Graft {
     * raising — mirror that with an empty, correctly-typed result rather
     * than an AnalysisException from the parquet reader.
     *
-    * Filesystem-agnostic (round-4 review): existence is probed by the
-    * parquet reader itself — a java.nio check on the raw string returned
+    * Job-free open: `spark.read.parquet` runs a schema-inference job on
+    * every call, which on the search path costs more than the search's own
+    * scan. Without schema merging, Spark's inference reads exactly one
+    * data file's footer anyway; this reads that footer on the driver
+    * ([[footerSchema]]) and hands the schema to the reader. A directory
+    * with no data file directly under it (emptied, only `_SUCCESS`) is no
+    * index: every index writer leaves a flat table.
+    *
+    * Filesystem-agnostic (round-4 review): existence is probed through the
+    * path's Hadoop FileSystem — a java.nio check on the raw string returned
     * false for every hdfs://'/s3a:// index IndexBuild happily writes,
     * silently reporting 0 hits. Read paths also run swap recovery first:
     * a crash parked between swapInto's renames must read as "index
     * present (recovered)", not "never indexed". */
-  private def tableOrEmpty(spark: SparkSession, path: String): Option[DataFrame] = {
+  private[graft] def tableOrEmpty(spark: SparkSession, path: String): Option[DataFrame] = {
     IndexBuild.recoverSwap(spark, path)
-    try Some(spark.read.parquet(path))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else footerSchema(spark, fs, p).map(s => spark.read.schema(s).parquet(path))
   }
 
+  /** The schema `spark.read.parquet` infers for a flat table directory,
+    * read from the footer of its first data file (hidden `_`/`.` names
+    * skipped, as Spark's file index does) — the one file non-merging
+    * inference touches. Spark-written footers carry the Spark schema,
+    * which `readSchemaFromFooter` prefers over converting the parquet
+    * schema. None when the directory holds no data file directly. */
+  private def footerSchema(spark: SparkSession, fs: FileSystem, dir: Path): Option[StructType] =
+    fs.listStatus(dir).iterator
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath).minByOption(_.getName)
+      .map { file =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, fs.getConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+
+  /** A local relation: collecting it runs no job (an empty RDD's collect
+    * still posts one). */
   private def emptyResult(spark: SparkSession, schemaDDL: String): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDDL))
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      StructType.fromDDL(schemaDDL))
 
   private val SearchSchema =
     "id STRING, name STRING, element_type STRING, file_path STRING, similarity DOUBLE"
@@ -86,7 +123,7 @@ object Graft {
   def searchFiles(spark: SparkSession, indexDir: String, query: String,
                   maxResults: Int = 5): DataFrame =
     tableOrEmpty(spark, s"$indexDir/file_summaries") match {
-      case Some(_) => IndexBuild.searchSummaries(spark, indexDir, query, maxResults)
+      case Some(summaries) => IndexBuild.searchSummaries(summaries, query, maxResults)
       case None => emptyResult(spark,
         "file_path STRING, file_type STRING, element_count BIGINT, similarity DOUBLE")
     }

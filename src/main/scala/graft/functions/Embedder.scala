@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFns.{duckTokens, tokens}
+import graft.functions.TextFns.{duckTokens, tokenizable, tokens}
 
 /** Deterministic hashing embedder — the engine's substitute for the
   * reference's neural encoder (E1-E3,
@@ -21,6 +21,10 @@ import graft.functions.TextFns.{duckTokens, tokens}
   *
   * At scale the whole pipeline is map-side (tokenize+hash) plus one
   * (doc_id, bucket) aggregation; no shuffle wider than the output.
+  *
+  * The query side is driver-local ([[queryVector]]): the same tokenize +
+  * bucket expressions over a one-row local relation, counted into a dense
+  * array that search plans carry as a literal — no job of its own.
   */
 object Embedder {
 
@@ -96,4 +100,25 @@ object Embedder {
       .agg(collect_list(struct(col("bucket"), col("cnt"))).as("bc"))
       .select(col("doc_id"),
         graft.functions.VecExprs.sparseToDense(col("bc"), Dim).as("embedding"))
+
+  /** The query-side twin of [[embed]]: `text`'s dense embedding, computed
+    * on the driver. The SAME [[TextFns.tokens]] + [[bucket]] expressions run
+    * over a one-row local relation — `ConvertToLocalRelation` folds that
+    * projection at optimization time, so the collect launches no job — and
+    * the buckets are counted here into the `Dim`-length array. Element for
+    * element equal to the `embed` row of the same text (spec-pinned), so
+    * search plans take it as a literal (`typedLit`) instead of a one-row
+    * embed subplan (a shuffle job) joined in by broadcast (a second job).
+    * An untokenizable text has no ranking and fails the `require`. */
+  def queryVector(spark: SparkSession, text: String): Array[Double] = {
+    require(tokenizable(text),
+      s"query text tokenizes to nothing: '$text' — empty query vector has no ranking")
+    import spark.implicits._
+    val buckets = Seq(text).toDF("text")
+      .select(transform(tokens(col("text")), bucket(_)))
+      .head().getSeq[Int](0)
+    val v = new Array[Double](Dim)
+    buckets.foreach(b => v(b) += 1.0)
+    v
+  }
 }

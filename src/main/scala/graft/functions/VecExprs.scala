@@ -386,6 +386,14 @@ object VecExprs {
       Bridge.expression(a.cast("array<double>")),
       Bridge.expression(b.cast("array<double>"))))
 
+  /** Cosine of `vec` (L2 norm `norm`) against a driver-side query vector
+    * carried as a literal ([[Embedder.queryVector]]): the query norm
+    * constant-folds at optimization, so no query-side subplan exists. */
+  def cosineTo(query: Array[Double], vec: Column, norm: Column): Column = {
+    val q = org.apache.spark.sql.functions.typedLit(query)
+    dotc(vec, q) / (norm * org.apache.spark.sql.functions.sqrt(dotc(q, q)))
+  }
+
   /** Column wrapper for [[BestCentroid]]. `cents` must be
     * array<struct<cid:long, ce:array<double>, cn:double>> (positional). */
   def bestCentroid(cents: Column, vec: Column, norm: Column): Column =

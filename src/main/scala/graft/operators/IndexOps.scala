@@ -61,25 +61,18 @@ object IndexOps {
     * (vector_search_tool.py:81-147): each file's searchable doc is its
     * summary text, the query string is embedded with the same (hashing)
     * embedder, ranking is cosine with doc_id tiebreak. The query side is a
-    * one-row broadcast; the index side is the map-side histogram + one
-    * (doc_id,bucket) agg — no shuffle wider than the summaries. */
+    * driver-local literal ([[graft.functions.Embedder.queryVector]]); the
+    * index side is the map-side histogram + one (doc_id,bucket) agg — no
+    * shuffle wider than the summaries. */
   def knnSummaries(documents: DataFrame, queryText: String, k: Int): DataFrame = {
-    require(graft.functions.TextFns.tokenizable(queryText),
-      s"query text tokenizes to nothing: '$queryText' — empty query vector has no ranking")
-    val spark = documents.sparkSession
-    import spark.implicits._
     import graft.functions.{Embedder, VecExprs}
+    val q = Embedder.queryVector(documents.sparkSession, queryText)
     val sums = fileSummaries(documents)
       .select(col("doc_id"),
         concat_ws(" ", col("summary"), col("elements_by_type_str")).as("text"))
-    val emb = Embedder.embed(sums)
-    val q = Embedder.embed(Seq((-1L, queryText)).toDF("doc_id", "text"))
-      .select(col("embedding").as("qe"))
-      .withColumn("qn", sqrt(VecExprs.dotc(col("qe"), col("qe"))))
-    emb
+    Embedder.embed(sums)
       .withColumn("nrm", sqrt(VecExprs.dotc(col("embedding"), col("embedding"))))
-      .crossJoin(broadcast(q))
-      .withColumn("sim_raw", VecExprs.dotc(col("embedding"), col("qe")) / (col("nrm") * col("qn")))
+      .withColumn("sim_raw", VecExprs.cosineTo(q, col("embedding"), col("nrm")))
       .orderBy(desc("sim_raw"), asc("doc_id"))
       .limit(k)
       .select(col("doc_id"), round(col("sim_raw"), 6).as("sim"))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Embedder
+import graft.functions.VecExprs.cosineTo
 import graft.operators.{CodeChunker, CodeElement}
 
 /** End-to-end index build pipeline — the reference's `index_codebase` flow
@@ -138,10 +139,10 @@ object IndexBuild {
   }
 
   /** Schema reconcile for legacy index tables built before norms were
-    * stored: the search paths already derive `nrm` on demand for such
-    * relations; the MERGE paths must too, or re-running a build over a
-    * pre-nrm index dir aborts with an unresolved column instead of
-    * upgrading it (round-4 review). */
+    * stored: the search paths derive `nrm` on demand for such relations,
+    * and so must the MERGE paths, or re-running a build over a pre-nrm
+    * index dir aborts with an unresolved column instead of upgrading it
+    * (round-4 review). */
   private def ensureNrm(df: DataFrame): DataFrame =
     // derive only when the table carries embeddings at all: upsertIndex
     // also merges embedding-free element tables (q_reindex_delta's
@@ -387,47 +388,39 @@ object IndexBuild {
   /** Q1 search core over any `code_elements`-shaped relation (columns id,
     * name, element_type, file_path, file_type, embedding): metadata
     * pre-filters (pushed to the scan when the relation is a parquet read)
-    * then broadcast-query cosine top-k — `TakeOrderedAndProject`, the same
-    * partial top-k kernel as [[graft.operators.Knn.topK]]. Shared by
-    * [[searchIndex]] (stored index) and the oracle analog
-    * `IndexOps.searchElements` (freshly built corpus elements), so the
-    * oracle gate exercises the flagship path itself, not a twin.
-    * `rankedElements` keeps every index column plus `sim_raw`;
+    * then cosine top-k against the query vector — `TakeOrderedAndProject`,
+    * the same partial top-k kernel as [[graft.operators.Knn.topK]]. The
+    * query side is driver-local: [[Embedder.queryVector]] (the embedder's
+    * own expressions) enters the plan as a literal and its norm
+    * constant-folds, so a search over a stored index is ONE job — a scan
+    * stage ending in the top-k. Shared by [[searchIndex]] (stored index)
+    * and the oracle analog `IndexOps.searchElements` (freshly built corpus
+    * elements), so the oracle gate exercises the flagship path itself, not
+    * a twin. `rankedElements` keeps every index column plus `sim_raw`;
     * [[searchElementsTable]] projects the tabular shape,
     * [[searchElementsText]] renders the reference's string blocks. */
-  private def rankedElements(index: DataFrame, queryText: String, k: Int,
-                             elementType: Option[String] = None,
-                             fileType: Option[String] = None): DataFrame = {
-    import graft.functions.VecExprs.dotc
-    require(graft.functions.TextFns.tokenizable(queryText),
-      s"query text tokenizes to nothing: '$queryText' — empty query vector has no ranking")
-    val spark = index.sparkSession
-    val qdf = {
-      import spark.implicits._
-      Embedder.embed(Seq((0L, queryText)).toDF("doc_id", "text"))
-        .select(col("embedding").as("qe"))
-        .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    }
+  private def rankedElements(index: DataFrame, queryVec: Array[Double], k: Int,
+                             elementType: Option[String],
+                             fileType: Option[String]): DataFrame = {
     val pre0 = elementType.map(t => index.filter(col("element_type") === t)).getOrElse(index)
     val pre1 = fileType.map(t => pre0.filter(col("file_type") === t)).getOrElse(pre0)
-    // use the norm stored at build time when the index carries one
-    // (embedElements); derive it only for relations that don't
-    val pre =
-      if (index.columns.contains("nrm")) pre1
-      else pre1.withColumn("nrm", sqrt(dotc(col("embedding"), col("embedding"))))
-    pre
-      .crossJoin(broadcast(qdf))
-      .withColumn("sim_raw", dotc(col("embedding"), col("qe")) / (col("nrm") * col("qn")))
+    // the norm stored at build time (embedElements), derived only for
+    // relations that don't carry one
+    ensureNrm(pre1)
+      .withColumn("sim_raw", cosineTo(queryVec, col("embedding"), col("nrm")))
       .orderBy(desc("sim_raw"), asc("id"))
       .limit(k)
   }
 
+  private def hitsTable(ranked: DataFrame): DataFrame =
+    ranked.select(col("id"), col("name"), col("element_type"), col("file_path"),
+      round(col("sim_raw"), 6).as("similarity"))
+
   def searchElementsTable(index: DataFrame, queryText: String, k: Int,
                           elementType: Option[String] = None,
                           fileType: Option[String] = None): DataFrame =
-    rankedElements(index, queryText, k, elementType, fileType)
-      .select(col("id"), col("name"), col("element_type"), col("file_path"),
-        round(col("sim_raw"), 6).as("similarity"))
+    hitsTable(rankedElements(index, Embedder.queryVector(index.sparkSession, queryText),
+      k, elementType, fileType))
 
   /** The reference's ACTUAL tool output: ranked hits rendered as
     * "Result N (similarity: X.XXX):" blocks (vector_search_tool.py:60-78)
@@ -439,7 +432,8 @@ object IndexBuild {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(desc("sim_raw"), asc("id"))
     graft.operators.IndexOps.formatHits(
-      rankedElements(index, queryText, k, elementType, fileType)
+      rankedElements(index, Embedder.queryVector(index.sparkSession, queryText),
+          k, elementType, fileType)
         .withColumn("rank", row_number().over(w).cast("long"))
         .withColumn("sim", round(col("sim_raw"), 6)))
   }
@@ -575,25 +569,17 @@ object IndexBuild {
                      k: Int, nprobe: Int = 4,
                      elementType: Option[String] = None,
                      fileType: Option[String] = None): DataFrame = {
-    import graft.functions.VecExprs.dotc
-    require(graft.functions.TextFns.tokenizable(queryText),
-      s"query text tokenizes to nothing: '$queryText' — empty query vector has no ranking")
-    val cent = spark.read.parquet(s"$indexDir/vector_layout/centroids")
-    val qdf = {
-      import spark.implicits._
-      Embedder.embed(Seq((0L, queryText)).toDF("doc_id", "text"))
-        .select(col("embedding").as("qe"))
-        .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    }
-    val probeIds = cent.crossJoin(broadcast(qdf))
-      .withColumn("qsim", dotc(col("ce"), col("qe")) / (col("cn") * col("qn")))
+    // embedded ONCE: the same vector probes the centroids and ranks the cells
+    val queryVec = Embedder.queryVector(spark, queryText)
+    val probeIds = spark.read.parquet(s"$indexDir/vector_layout/centroids")
+      .withColumn("qsim", cosineTo(queryVec, col("ce"), col("cn")))
       .orderBy(desc("qsim"), asc("cid"))
       .limit(nprobe)
       .select("cid").collect().map(_.getLong(0)).toSeq
     val cells = spark.read.parquet(s"$indexDir/vector_layout/cells")
       .filter(col("cluster").isin(probeIds: _*))
       .drop("cluster") // partition col (int-inferred) — not part of the contract
-    searchElementsTable(cells, queryText, k, elementType, fileType)
+    hitsTable(rankedElements(cells, queryVec, k, elementType, fileType))
   }
 
   /** Write both index tables BUCKETED by file_path (same bucket count), so
@@ -616,32 +602,18 @@ object IndexBuild {
     one("file_summaries")
   }
 
-  /** Q2 over a built index: kNN against the file_summaries embeddings (the
-    * reference's `find_files_by_content`, vector_search_tool.py:81-147) —
-    * same top-k kernel as [[searchIndex]], file granularity. */
-  def searchSummaries(spark: SparkSession, indexDir: String, queryText: String,
-                      k: Int): DataFrame = {
-    import graft.functions.VecExprs.dotc
-    require(graft.functions.TextFns.tokenizable(queryText),
-      s"query text tokenizes to nothing: '$queryText' — empty query vector has no ranking")
-    val summaries = spark.read.parquet(s"$indexDir/file_summaries")
-    val qdf = {
-      import spark.implicits._
-      Embedder.embed(Seq((0L, queryText)).toDF("doc_id", "text"))
-        .select(col("embedding").as("qe"))
-        .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    }
-    // summaries store their norm at build time (buildSummaries); derive it
+  /** Q2 over a built index: kNN against an opened `file_summaries` table
+    * (the reference's `find_files_by_content`, vector_search_tool.py:81-147)
+    * — same driver-local query vector and top-k kernel as [[searchIndex]],
+    * file granularity. */
+  def searchSummaries(summaries: DataFrame, queryText: String, k: Int): DataFrame =
+    // summaries store their norm at build time (buildSummaries); derived
     // only for pre-nrm tables
-    val withNrm =
-      if (summaries.columns.contains("nrm")) summaries
-      else summaries.withColumn("nrm", sqrt(dotc(col("embedding"), col("embedding"))))
-    withNrm
-      .crossJoin(broadcast(qdf))
-      .withColumn("sim_raw", dotc(col("embedding"), col("qe")) / (col("nrm") * col("qn")))
+    ensureNrm(summaries)
+      .withColumn("sim_raw", cosineTo(Embedder.queryVector(summaries.sparkSession, queryText),
+        col("embedding"), col("nrm")))
       .orderBy(desc("sim_raw"), asc("file_path"))
       .limit(k)
       .select(col("file_path"), col("file_type"), col("element_count"),
         round(col("sim_raw"), 6).as("similarity"))
-  }
 }

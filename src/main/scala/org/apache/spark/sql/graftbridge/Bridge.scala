@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.SparkStrategy
   * re-export those conversions — plus the two classic-session hooks a
   * custom-operator library needs (Dataset.ofRows to wrap a hand-built
   * LogicalPlan, experimental.extraStrategies to register its planner
-  * strategy) — to the graft package.
+  * strategy) and the listener-bus drain a job-counting check needs — to the
+  * graft package.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -41,4 +42,9 @@ object Bridge {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     cs.experimental.extraOptimizations = cs.experimental.extraOptimizations.filterNot(_ == r)
   }
+
+  /** Block until every event posted so far reached every listener, so a
+    * listener's counts are complete when the call returns. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -255,7 +255,8 @@ class IndexBuildSpec extends AnyFunSuite {
   }
 
   test("summary search (Q2) ranks files by query similarity") {
-    val hits = IndexBuild.searchSummaries(spark, indexDir, "file contains code elements", 2).collect()
+    val hits = IndexBuild.searchSummaries(spark.read.parquet(s"$indexDir/file_summaries"),
+      "file contains code elements", 2).collect()
     assert(hits.length == 2)
     val sims = hits.map(_.getAs[Double]("similarity"))
     assert(sims.sameElements(sims.sorted.reverse))
