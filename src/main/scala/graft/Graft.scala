@@ -1,12 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.operators.{Diagnostics, SymbolNav}
@@ -28,51 +22,6 @@ object Graft {
   def indexCodebase(spark: SparkSession, rootDir: String, indexDir: String): DataFrame =
     IndexBuild.run(spark, rootDir, indexDir)
 
-  /** Missing-index behavior: the reference's tools degrade gracefully
-    * ("No code index found…", vector_search_tool.py:34-35) instead of
-    * raising — mirror that with an empty, correctly-typed result rather
-    * than an AnalysisException from the parquet reader.
-    *
-    * Job-free open: `spark.read.parquet` runs a schema-inference job on
-    * every call, which on the search path costs more than the search's own
-    * scan. Without schema merging, Spark's inference reads exactly one
-    * data file's footer anyway; this reads that footer on the driver
-    * ([[footerSchema]]) and hands the schema to the reader. A directory
-    * with no data file directly under it (emptied, only `_SUCCESS`) is no
-    * index: every index writer leaves a flat table.
-    *
-    * Filesystem-agnostic (round-4 review): existence is probed through the
-    * path's Hadoop FileSystem — a java.nio check on the raw string returned
-    * false for every hdfs://'/s3a:// index IndexBuild happily writes,
-    * silently reporting 0 hits. Read paths also run swap recovery first:
-    * a crash parked between swapInto's renames must read as "index
-    * present (recovered)", not "never indexed". */
-  private[graft] def tableOrEmpty(spark: SparkSession, path: String): Option[DataFrame] = {
-    IndexBuild.recoverSwap(spark, path)
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else footerSchema(spark, fs, p).map(s => spark.read.schema(s).parquet(path))
-  }
-
-  /** The schema `spark.read.parquet` infers for a flat table directory,
-    * read from the footer of its first data file (hidden `_`/`.` names
-    * skipped, as Spark's file index does) — the one file non-merging
-    * inference touches. Spark-written footers carry the Spark schema,
-    * which `readSchemaFromFooter` prefers over converting the parquet
-    * schema. None when the directory holds no data file directly. */
-  private def footerSchema(spark: SparkSession, fs: FileSystem, dir: Path): Option[StructType] =
-    fs.listStatus(dir).iterator
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath).minByOption(_.getName)
-      .map { file =>
-        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, fs.getConf),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      }
-
   /** A local relation: collecting it runs no job (an empty RDD's collect
     * still posts one). */
   private def emptyResult(spark: SparkSession, schemaDDL: String): DataFrame =
@@ -91,7 +40,7 @@ object Graft {
                  maxResults: Int = 10,
                  elementTypes: Seq[String] = Nil,
                  fileType: Option[String] = None): DataFrame =
-    tableOrEmpty(spark, s"$indexDir/code_elements") match {
+    IndexBuild.tableOrEmpty(spark, s"$indexDir/code_elements") match {
       case Some(idx) => IndexBuild.searchElementsTable(idx, query, maxResults,
         elementType = elementTypes.headOption, fileType = fileType)
       case None => emptyResult(spark, SearchSchema)
@@ -104,7 +53,7 @@ object Graft {
                      maxResults: Int = 10,
                      elementTypes: Seq[String] = Nil,
                      fileType: Option[String] = None): String =
-    tableOrEmpty(spark, s"$indexDir/code_elements") match {
+    IndexBuild.tableOrEmpty(spark, s"$indexDir/code_elements") match {
       case Some(idx) =>
         val blocks = IndexBuild.searchElementsText(idx, query, maxResults,
             elementTypes.headOption, fileType)
@@ -122,7 +71,7 @@ object Graft {
     * kNN over `file_summaries`. */
   def searchFiles(spark: SparkSession, indexDir: String, query: String,
                   maxResults: Int = 5): DataFrame =
-    tableOrEmpty(spark, s"$indexDir/file_summaries") match {
+    IndexBuild.tableOrEmpty(spark, s"$indexDir/file_summaries") match {
       case Some(summaries) => IndexBuild.searchSummaries(summaries, query, maxResults)
       case None => emptyResult(spark,
         "file_path STRING, file_type STRING, element_count BIGINT, similarity DOUBLE")
@@ -132,7 +81,7 @@ object Graft {
     * vector_search_tool.py:297; a file's elements in source order. */
   def getFileContext(spark: SparkSession, indexDir: String, filePath: String,
                      maxElements: Int = 20): DataFrame =
-    tableOrEmpty(spark, s"$indexDir/code_elements") match {
+    IndexBuild.tableOrEmpty(spark, s"$indexDir/code_elements") match {
       case Some(idx) => idx
         .filter(col("file_path") === filePath)
         .orderBy(asc("start_line"), asc("id"))
@@ -271,7 +220,7 @@ object Graft {
     import graft.operators.{CorpusOps, Dedup}
     val fresh = IndexBuild.buildElements(newFiles).cache()
     val batchDocs = fresh.select(col("id").as("doc_id"), col("content").as("text"))
-    val existing = tableOrEmpty(spark, s"$indexDir/code_elements")
+    val existing = IndexBuild.tableOrEmpty(spark, s"$indexDir/code_elements")
     val corpusDocs = existing.map(
       _.join(fresh.select("file_path").distinct(), Seq("file_path"), "left_anti")
         .select(col("id").as("doc_id"), col("content").as("text")))

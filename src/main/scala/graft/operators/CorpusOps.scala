@@ -61,7 +61,7 @@ object CorpusOps {
     val hits = tsh.join(broadcast(bsh), "s")
       .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
     // hint("merge"): sizes and hits are doc-cardinality aggregates over
-    // the (caller-cached) training shingle relation — the jaccardTail
+    // the (caller-cached) training shingle relation — the ShingleSide
     // hazard class: a cached aggregate's pre-materialization estimate can
     // plan a locked-in broadcast of a corpus-sized relation. Measured ~0
     // on q_decontam at sf0.1 (doc-keyed SMJ; the high-cardinality-key

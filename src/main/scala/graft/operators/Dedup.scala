@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.Embedder
 import graft.functions.TextFns._
 import graft.functions.VecExprs.dotc
@@ -30,11 +31,15 @@ import graft.functions.VectorFns.signBucket
   * `.cache()`d because their plans are referenced more than once per query.
   * The harness entry points (Verify / Bench / TimeQ) clear the session
   * cache after every query. A LIBRARY caller uses the handle-returning
-  * entries — [[minhashWith]], [[minhashArtifactsWith]],
-  * [[nearDupPairsWith]], [[cappedNgramWith]], [[pagerankOfPairsWith]],
-  * [[minhashAgainstWith]], [[minhashProbeIndexWith]] — and unpersists the
-  * returned handles once results are materialized; [[dedupRecall]]
-  * releases its own caches before returning.
+  * entries — [[minhashArtifactsWith]], [[nearDupPairsWith]],
+  * [[cappedNgramWith]], [[pagerankOfPairsWith]], [[minhashAgainstWith]],
+  * [[minhashProbeIndexWith]] — and unpersists the returned handles once
+  * results are materialized; [[dedupRecall]] releases its own caches
+  * before returning.
+  *
+  * Every banded variant shares two steps: the band-collision join
+  * ([[bandCollisions]]) and, for the shingle-Jaccard variants, the exact
+  * candidate-first verify ([[jaccardVerify]]).
   */
 object Dedup {
 
@@ -67,55 +72,74 @@ object Dedup {
         sum(when(col("n") > 1, 1).otherwise(0)).as("n_dup_groups"),
         max("n").as("max_group"))
 
-  /** Exact Jaccard over 3-gram shingles for the given candidate pairs
-    * (d1 < d2), keeping pairs ≥ threshold.
-    *
-    * Candidate-first: both sides of the shingle-intersection join are
-    * semi-joined down to docs that appear in a candidate pair BEFORE the
-    * (potentially quadratic) shingle equijoin — the candidate set is the
-    * whole point of LSH, so the expensive verify only ever touches it. */
-  private def jaccardOf(sh: DataFrame, cand0: DataFrame, threshold: Double): DataFrame = {
-    // Candidate-FIRST intersection: the pair set is tiny (that is the whole
-    // point of LSH), so expand it by d1's shingles and probe (d2, s) —
-    // intermediate cardinality |cand| × shingles/doc. The alternative
-    // (self-equijoin of sh on s, then prune to cand) explodes on frequent
-    // shingles: a shingle present in f docs emits f² rows BEFORE the prune,
-    // which is exactly the skew that kills an inverted-index join at 100 TB.
-    val cand = cand0
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // hint("merge"): NEVER let the inverted index become a broadcast build
-    // side. Before materialization the cached sh's size estimate can sneak
-    // under autoBroadcastJoinThreshold while the LSH candidate side's
-    // join-product estimate looks huge — Spark then broadcasts the 2.5M-row
-    // shingle relation (measured: 680 s vs 9 s at sf0.1, GC thrash), and a
-    // planned broadcast is locked in (AQE cannot demote it). A shuffle SMJ
-    // on d1/(d2,s) is the shape that survives 100 TB on both sides.
-    val inter = cand
-      .join(sh.select(col("doc_id").as("d1"), col("s")).hint("merge"), "d1")
-      .join(sh.select(col("doc_id").as("d2"), col("s")).hint("merge"), Seq("d2", "s"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("i"))
-    jaccardTail(inter, sizes, threshold)
+  /** One side of the exact shingle-Jaccard verify: distinct (doc_id, s)
+    * rows and per-doc set sizes (doc_id, n), both merge-pinned when the
+    * rows are CACHED. A cached relation's pre-materialization size
+    * estimate can plan a locked-in broadcast (AQE never demotes one) of
+    * the 2.5M-row shingle relation (measured 680 s vs 9 s at sf0.1) or of
+    * its doc-cardinality sizes aggregate (an executor OOM at corpus scale;
+    * pin cost ~0.3-0.5 s on q_dedup_minhash at sf0.1, round 4). A stored
+    * parquet side keeps honest scan stats and stays unpinned. */
+  private final case class ShingleSide(rows: DataFrame, sizes: DataFrame) {
+    private val pinned = rows.storageLevel != StorageLevel.NONE
+    private def pin(df: DataFrame) = if (pinned) df.hint("merge") else df
+    def rowsAs(d: String): DataFrame = pin(rows.select(col("doc_id").as(d), col("s")))
+    def sizesAs(d: String, n: String): DataFrame =
+      pin(sizes.select(col("doc_id").as(d), col("n").as(n)))
   }
 
-  /** Shared tail: attach set sizes, compute Jaccard, filter ≥ threshold.
-    *
-    * hint("merge") on the sizes sides: `sizes` is a DOC-CARDINALITY
-    * aggregate derived from the cached shingle relation, so its
-    * pre-materialization estimate plans a locked-in broadcast — harmless
-    * at sf0.1 (5k docs), an executor OOM at corpus scale. Same hazard
-    * class as the round-2 inverted-index broadcast. Unlike the curation
-    * funnel (where NOT caching restored natural estimates), sh must stay
-    * cached (3-4 readers), so the hazard is intrinsic and the pin is the
-    * only fix; measured cost ~0.3-0.5 s on q_dedup_minhash at sf0.1, ~0
-    * on the other dedup queries (round 4 A/B). */
-  private def jaccardTail(inter: DataFrame, sizes: DataFrame, threshold: Double): DataFrame =
+  private def sizesOf(sh: DataFrame): DataFrame =
+    sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+
+  private def sideOf(sh: DataFrame): ShingleSide = ShingleSide(sh, sizesOf(sh))
+
+  /** The exact shingle-Jaccard verify of every LSH variant: candidate pairs
+    * (d1 from `l`, d2 from `r`, plus `carry` columns) → shared-shingle
+    * count `i` → Jaccard ≥ threshold, as (d1, d2, carry…, jaccard rounded
+    * to 6) ordered by (d1, d2). Candidate-FIRST: expand the tiny pair set
+    * by d1's shingles and probe (d2, s) — |cand| × shingles/doc rows,
+    * where a shingle self-join pruned afterwards emits f² rows per
+    * shingle of df f. `carry` (a pair property, e.g. simhash's `hamming`)
+    * rides the grouping key, so the candidate subtree is read once. */
+  private def jaccardVerify(cand: DataFrame, l: ShingleSide, r: ShingleSide,
+                            threshold: Double, carry: Seq[String] = Nil): DataFrame =
+    jaccardOfCounts(
+      cand.join(l.rowsAs("d1"), "d1").join(r.rowsAs("d2"), Seq("d2", "s"))
+        .groupBy("d1", "d2" +: carry: _*).agg(count(lit(1)).as("i")),
+      l, r, threshold, carry)
+
+  /** Tail of [[jaccardVerify]] over (d1, d2, carry…, i) counts — also the
+    * tail of the full-recall self-join [[ngramJaccard]], which counts `i`
+    * in the join itself. */
+  private def jaccardOfCounts(inter: DataFrame, l: ShingleSide, r: ShingleSide,
+                              threshold: Double, carry: Seq[String] = Nil): DataFrame =
     inter
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")).hint("merge"), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")).hint("merge"), "d2")
-      .withColumn("jaccard", col("i").cast("double") / (col("n1") + col("n2") - col("i")))
+      .join(l.sizesAs("d1", "n1"), "d1")
+      .join(r.sizesAs("d2", "n2"), "d2")
+      .withColumn("jaccard", NgramMetric.Jaccard.of(col("i"), col("n1"), col("n2")))
       .filter(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), round(col("jaccard"), 6).as("jaccard"))
+      .select(Seq(col("d1"), col("d2")) ++ carry.map(col) :+
+        round(col("jaccard"), 6).as("jaccard"): _*)
       .orderBy(asc("d1"), asc("d2"))
+
+  /** The LSH band-collision join of every banded variant: band rows `x` ⋈
+    * `y` on (`band`, bkey) under `docPred(x.doc_id, y.doc_id)`, projected
+    * to (d1 = x's doc, d2 = y's doc) plus `carry` (columns over the "x" /
+    * "y" aliases). Not distinct — a pair collides once per shared band —
+    * so callers `.distinct()` after any filter of their own. */
+  private def bandCollisions(x: DataFrame, y: DataFrame,
+                             docPred: Option[(Column, Column) => Column],
+                             band: String = "band", carry: Seq[Column] = Nil): DataFrame = {
+    val on = col(s"x.$band") === col(s"y.$band") && col("x.bkey") === col("y.bkey")
+    x.as("x").join(y.as("y"), docPred.fold(on)(p => on && p(col("x.doc_id"), col("y.doc_id"))))
+      .select(Seq(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")) ++ carry: _*)
+  }
+
+  /** Doc-id predicates of [[bandCollisions]]: one unordered pair per
+    * collision (self-joins), or any two different docs (batch × corpus,
+    * whose id spaces may overlap). */
+  private val Below: Option[(Column, Column) => Column] = Some(_ < _)
+  private val Differ: Option[(Column, Column) => Column] = Some(_ =!= _)
 
   /** MinHash signature → LSH band rows (doc_id, band, bkey) — the single
     * source of truth for the banding scheme, shared by [[minhash]] and
@@ -135,21 +159,11 @@ object Dedup {
 
   /** MinHash + LSH banding: `seeds` hash functions, bands of `rowsPerBand`;
     * docs sharing any band bucket become candidates, then exact Jaccard
-    * filters ≥ threshold. */
+    * filters ≥ threshold. Its shingle cache stays (the harness clears per
+    * query); a library caller uses [[minhashArtifactsWith]]. */
   def minhash(documents: DataFrame, threshold: Double,
               seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): DataFrame =
-    minhashWith(documents, threshold, seeds, rowsPerBand)._1
-
-  /** [[minhash]] plus its cached shingle relation as an explicit handle
-    * (the `-With` convention): the harness clears caches per query, but a
-    * LIBRARY caller must release the scratch itself — by handle, never by
-    * plan-equality rebuild (round-5 advice #1). */
-  def minhashWith(documents: DataFrame, threshold: Double,
-                  seeds: Int = MinhashSeeds,
-                  rowsPerBand: Int = MinhashRowsPerBand): (DataFrame, Seq[DataFrame]) = {
-    val a = minhashArtifactsWith(documents, threshold, seeds, rowsPerBand)
-    (a.pairs, a.handles)
-  }
+    minhashArtifactsWith(documents, threshold, seeds, rowsPerBand).pairs
 
   /** Everything one MinHash build pass produces, exposed so a persisting
     * caller ([[graft.sources.PairsLayout.writeIndexed]]) can land the
@@ -166,21 +180,21 @@ object Dedup {
     * One definition, so the recall measurement can never drift from the
     * candidate set the production pipeline actually generates. */
   private def minhashCandidatesOf(bands: DataFrame): DataFrame =
-    bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
+    bandCollisions(bands, bands, Below).distinct()
 
-  /** One shingle pass → pairs + the persistable signature relations.
-    * [[minhashWith]] is the pairs-only view of this. */
+  /** One shingle pass → pairs + the persistable signature relations, plus
+    * the handle on the cached shingle relation (the `-With` convention):
+    * the harness clears caches per query, but a LIBRARY caller must
+    * release the scratch itself — by handle, never by plan-equality
+    * rebuild (round-5 advice #1). */
   def minhashArtifactsWith(documents: DataFrame, threshold: Double,
                            seeds: Int = MinhashSeeds,
                            rowsPerBand: Int = MinhashRowsPerBand): MinhashArtifacts = {
     val sh = shingleRows(documents, 3)
     val bands = bandRowsOf(sh, seeds, rowsPerBand)
-    val cand = minhashCandidatesOf(bands)
-    MinhashArtifacts(jaccardOf(sh, cand, threshold), bands, sh, Seq(sh))
+    val side = sideOf(sh)
+    MinhashArtifacts(jaccardVerify(minhashCandidatesOf(bands), side, side, threshold),
+      bands, sh, Seq(sh))
   }
 
   /** Duplicate-cluster canonicalization: connected components over the
@@ -189,18 +203,17 @@ object Dedup {
     * is not transitive pairwise (A~B, B~C does not list A~C) and dropping
     * one side of every pair independently over-deletes chains.
     *
-    * Algorithm: iterative min-label propagation. Every node starts labeled
-    * with itself; each round takes `min(own label, min of neighbors'
-    * labels)` until a fixpoint — the label is then the smallest doc_id in
-    * the component (deterministic canonical pick). Each round is ONE
+    * Algorithm: iterative min-label propagation with pointer jumping
+    * ([[ccLabelProp]]). Every node starts labeled with itself; each round
+    * takes `min(own label, min of neighbors' labels)`, then the label of
+    * that label, until a fixpoint — the label is then the smallest doc_id
+    * in the component (deterministic canonical pick). Each round is ONE
     * shuffle of the edge relation joined to the (node,label) relation —
     * both tiny relative to the corpus, since only docs that appear in a
-    * near-dup pair participate. Rounds needed = graph diameter; near-dup
-    * components are short chains in practice. At 1000-executor scale the
-    * same loop holds (edges ≪ corpus); if components grew adversarially
-    * deep, the standard fix is alternating large-star/small-star rounds
-    * (O(log n) convergence) — same join shape, different grouping — which
-    * this loop structure accommodates without changing the contract.
+    * near-dup pair participate. The label-of-label hop makes the round
+    * count O(log n) on any component shape (measured 9/13/16 rounds on
+    * 256/4,096/32,768-node chains, SCALE.md §5 — the same counts as the
+    * large-star/small-star algorithm, which was deleted for that reason).
     * `localCheckpoint` truncates the per-iteration lineage so the plan does
     * not grow with the iteration count.
     *
@@ -225,25 +238,19 @@ object Dedup {
   def nearDupPairs(documents: DataFrame, threshold: Double): DataFrame =
     minhash(documents, threshold).select(col("d1"), col("d2"))
 
-  /** [[nearDupPairs]] with the shingle-cache handle ([[minhashWith]]). */
+  /** [[nearDupPairs]] with the shingle-cache handle ([[minhashArtifactsWith]]). */
   def nearDupPairsWith(documents: DataFrame, threshold: Double)
       : (DataFrame, Seq[DataFrame]) = {
-    val (m, handles) = minhashWith(documents, threshold)
-    (m.select(col("d1"), col("d2")), handles)
+    val a = minhashArtifactsWith(documents, threshold)
+    (a.pairs.select(col("d1"), col("d2")), a.handles)
   }
 
   /** Label-propagation core over an arbitrary (d1, d2) pair relation —
     * public as the cluster half of the pairs seam ([[nearDupPairs]]), and
     * testable on synthetic graphs (long chains stress diameter; the
     * corpus' near-dup components are shallow). */
-  def clustersOfPairs(pairs: DataFrame, maxIter: Int = 20,
-                      algo: String = "label"): DataFrame = {
-    val labels = algo match {
-      case "label" => ccLabelProp(pairs, maxIter)._1
-      case "star"  => ccStar(pairs, maxIter)._1
-      case other => throw new IllegalArgumentException(
-        s"clustersOfPairs: unknown algo '$other' (label | star)")
-    }
+  def clustersOfPairs(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    val labels = ccLabelProp(pairs, maxIter)._1
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select(col("node").as("doc_id"), col("label").as("cluster"),
@@ -318,80 +325,6 @@ object Dedup {
     (labels, iter)
   }
 
-  /** Alternating large-star/small-star connected components (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond") — the
-    * adversarial-depth-safe alternative behind [[clustersOfPairs]]'s
-    * `algo = "star"` (round-6 verdict #5): provably O(log² n) rounds on
-    * ANY component shape with no per-node state relation — each round
-    * rewrites the EDGE relation itself toward a star rooted at the
-    * component minimum.
-    *
-    * Round shape: large-star connects every strictly-larger neighbor of
-    * u to min(Γ(u) ∪ {u}); small-star connects every smaller neighbor
-    * (and u itself) to the minimum of that smaller neighborhood. Both are
-    * one groupBy + one equijoin over the edge relation — the same
-    * partial-agged, AQE-skew-eligible shapes as the label loop, but the
-    * state that shrinks is the edges, so a boilerplate mega-component
-    * contracts instead of funneling through a single label chain.
-    * Edges stay canonically (min, max)-oriented so the convergence test
-    * is plain set equality (|next| == |cur| == |next ∪ cur|, two counts
-    * per round on checkpointed relations).
-    *
-    * At the fixpoint the relation is a star per component: (root,
-    * member) with root the component minimum — the same canonical label
-    * [[ccLabelProp]] converges to, so the two algorithms are output-
-    * interchangeable (spec-pinned on chain/star/clique/fixture graphs). */
-  private[graft] def ccStar(pairs: DataFrame, maxIter: Int = 20)
-      : (DataFrame, Int) = {
-    var edges = pairs
-      .filter(col("d1") =!= col("d2"))
-      .select(least(col("d1"), col("d2")).as("u"),
-        greatest(col("d1"), col("d2")).as("v"))
-      .distinct().localCheckpoint(true)
-    var cnt = edges.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // large-star: strictly-larger neighbors hook onto the local minimum
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("mu"))
-      val ls = sym.join(mins, "u").filter(col("v") > col("u"))
-        .select(least(col("v"), col("mu")).as("u"),
-          greatest(col("v"), col("mu")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct().localCheckpoint(true)
-      // small-star: smaller-or-self neighborhood hooks onto its minimum
-      val sym2 = ls.union(ls.select(col("v").as("u"), col("u").as("v")))
-      val small = sym2.filter(col("v") < col("u"))
-      val mins2 = small.groupBy("u").agg(min("v").as("mn"))
-      val ss = small.join(mins2, "u")
-        .select(col("v").as("a"), col("mn").as("b"))
-        .union(mins2.select(col("u").as("a"), col("mn").as("b")))
-        .filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("u"),
-          greatest(col("a"), col("b")).as("v"))
-        .distinct().localCheckpoint(eager = false)
-      // lazy checkpoint + the two convergence counts materialize it —
-      // the ccLabelProp one-action discipline
-      val nextCnt = ss.count()
-      val unionCnt = ss.union(edges).distinct().count()
-      converged = nextCnt == cnt && unionCnt == cnt
-      edges = ss
-      cnt = nextCnt
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"ccStar: no fixpoint after $maxIter alternating rounds")
-    val nodes = pairs.select(col("d1").as("node"))
-      .union(pairs.select(col("d2").as("node"))).distinct()
-    val labels = nodes
-      .join(edges.select(col("v").as("node"), col("u").as("lbl")), Seq("node"), "left")
-      .groupBy("node").agg(min(coalesce(col("lbl"), col("node"))).as("label"))
-    (labels, iter)
-  }
-
   /** Exact n-gram Jaccard via inverted-index self-join (full recall).
     *
     * Single pass: the s-equijoin that enumerates co-shingled pairs ALSO
@@ -400,12 +333,12 @@ object Dedup {
     */
   def ngramJaccard(documents: DataFrame, threshold: Double): DataFrame = {
     val sh = shingleRows(documents, 3)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val side = sideOf(sh)
     val inter = sh.select(col("doc_id").as("d1"), col("s"))
       .join(sh.select(col("doc_id").as("d2"), col("s")), "s")
       .filter(col("d1") < col("d2"))
       .groupBy("d1", "d2").agg(count(lit(1)).as("i"))
-    jaccardTail(inter, sizes, threshold)
+    jaccardOfCounts(inter, side, side, threshold)
   }
 
   /** Df-capped n-gram Jaccard — [[ngramJaccard]] with the quadratic edge
@@ -987,42 +920,6 @@ object Dedup {
       .drop("proj", "th")
   }
 
-  /** Band equijoin over the patf relation `e` + candidate-first exact
-    * verify against the RAW (doc_id, embedding, nrm) relation `v`.
-    *
-    * `v` must be the PLAIN relation, not the patf-attached one: the patf
-    * lineage (threshold crossJoins + the bit-string projection) destroys
-    * the size estimate, planning the verify joins as SMJ — which
-    * shuffles and sorts one 3 KB embedding row per candidate per side
-    * (~50 GB of sort I/O at sf1's 18M candidates). The plain relation
-    * keeps honest parquet stats: broadcast verify at test scales
-    * (plan-verified), a doc-id shuffle join at corpus scale — the
-    * correct shape at each. (The first cut's 255 s at sf1 had a second,
-    * larger cause — the patf inlining blowup fixed in
-    * [[withBalancedPatf]]; with both fixes the full adaptive query runs
-    * 7.5 s warm at sf1.) */
-  private def embedBandsTail(e: DataFrame, v: DataFrame, tables: Int,
-                             threshold: Double): DataFrame = {
-    val bands = e.select(col("doc_id"), col("patf"), col("bits"),
-        explode(expr(s"sequence(0, ${tables - 1})")).as("t"))
-      .select(col("doc_id"), col("t"),
-        expr(s"substring(patf, t * $EmbedBandBlock + 1, bits)").as("bkey"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.t") === col("y.t") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    val rawSim = dotc(col("e1"), col("e2")) / (col("n1") * col("n2"))
-    cand
-      .join(v.select(col("doc_id").as("d1"), col("embedding").as("e1"),
-        col("nrm").as("n1")), "d1")
-      .join(v.select(col("doc_id").as("d2"), col("embedding").as("e2"),
-        col("nrm").as("n2")), "d2")
-      .filter(rawSim >= threshold)
-      .select(col("d1"), col("d2"), round(rawSim, 6).as("sim"))
-      .orderBy(asc("d1"), asc("d2"))
-  }
-
   /** [[embedCosine]] core over a prebuilt (doc_id, embedding) relation —
     * the pure-read path over the persisted [[graft.sources.EmbedLayout]]
     * artifact. Default UNcached: a parquet-backed embedding relation keeps
@@ -1033,41 +930,34 @@ object Dedup {
     * path), where recomputing means re-tokenizing the corpus.
     *
     * `bits` is a FLOOR, not an absolute width (round-9 verdict #2): the
-    * effective band width is `clamp(bits, 16, floor(log2(n / targetOcc)))`,
-    * derived IN-PLAN with the exact `length(bin(x)) - 1` integer log —
-    * at a truly fixed width, bucket occupancy grows linearly with corpus
-    * size and within-bucket candidate pairs quadratically (measured: the
-    * 10-bit-band verify shuffle exceeded ~70 GB of spill disk at 500k
-    * docs, twice, while the occupancy-derived sibling completed). Below
-    * n = targetOcc·2^bits docs the derivation is inert and `bits` behaves
-    * exactly as before; past it the width grows ~log2(10) bits per decade
-    * and occupancy stays ~targetOcc. [[embedCosineAdaptiveOf]] remains
-    * the fully-adaptive variant (floor 1 — narrower bands on SMALL
-    * corpora, where 8 fixed bits over-prune recall). */
+    * effective band width is `clamp(bits, 16, floor(log2(n / targetOcc)))`
+    * ([[embedCosineBanded]]) — at a truly fixed width, bucket occupancy
+    * grows linearly with corpus size and within-bucket candidate pairs
+    * quadratically (measured: the 10-bit-band verify shuffle exceeded
+    * ~70 GB of spill disk at 500k docs, twice, while the occupancy-derived
+    * sibling completed). Below n = targetOcc·2^bits docs the derivation is
+    * inert and `bits` behaves exactly as before; past it the width grows
+    * ~log2(10) bits per decade and occupancy stays ~targetOcc.
+    * [[embedCosineAdaptiveOf]] remains the fully-adaptive variant (floor
+    * 1 — narrower bands on SMALL corpora, where 8 fixed bits over-prune
+    * recall). */
   def embedCosineOf(emb: DataFrame, threshold: Double, bits: Int = 8,
                     tables: Int = 8, cache: Boolean = false,
                     thresholds: Option[DataFrame] = None,
-                    targetOccupancy: Int = 32): DataFrame = {
-    require(bits <= EmbedBandBlock, s"bits $bits exceeds band block $EmbedBandBlock")
-    val e0 = emb.withColumn("nrm", sqrt(dotc(col("embedding"), col("embedding"))))
-    val e0c = if (cache) e0.cache() else e0
-    val e = withBalancedPatf(e0c, tables, thresholds)
-    val nb = e0c.agg(count(lit(1)).as("n"))
-      .select(greatest(lit(bits), least(lit(EmbedBandBlock),
-        length(bin(expr(s"n DIV $targetOccupancy"))) - 1)).as("bits"))
-    embedBandsTail(e.crossJoin(broadcast(nb)), e0c, tables, threshold)
-  }
+                    targetOccupancy: Int = 32): DataFrame =
+    embedCosineBanded(emb, threshold, bits, EmbedBandBlock, tables, cache, thresholds,
+      targetOccupancy)
 
   /** Corpus-relative band width for [[embedCosine]]: derive
     * `bits = clamp(1, maxBits, floor(log2(n / targetOccupancy)))` IN-PLAN
-    * with the exact `length(bin(x)) - 1` integer-log trick, so expected
-    * band-bucket occupancy stays ~targetOccupancy as the corpus grows and
-    * the within-bucket quadratic stays bounded — meaningful now that the
-    * hyperplane buckets are balanced (under the old presence key the
-    * derived width was provably useless on a degenerate corpus; see the
-    * [[embedCosine]] scaladoc). The recall trade is the standard sign-LSH
-    * one — wider bands lose more boundary pairs, `tables` is the recall
-    * lever, `maxBits` the deployment's floor. */
+    * ([[embedCosineBanded]]), so expected band-bucket occupancy stays
+    * ~targetOccupancy as the corpus grows and the within-bucket quadratic
+    * stays bounded — meaningful now that the hyperplane buckets are
+    * balanced (under the old presence key the derived width was provably
+    * useless on a degenerate corpus; see the [[embedCosine]] scaladoc).
+    * The recall trade is the standard sign-LSH one — wider bands lose more
+    * boundary pairs, `tables` is the recall lever, `maxBits` the
+    * deployment's floor. */
   def embedCosineAdaptive(documents: DataFrame, threshold: Double,
                           targetOccupancy: Int = 32, maxBits: Int = 16,
                           tables: Int = 8): DataFrame =
@@ -1079,15 +969,47 @@ object Dedup {
   def embedCosineAdaptiveOf(emb: DataFrame, threshold: Double,
                             targetOccupancy: Int = 32, maxBits: Int = 16,
                             tables: Int = 8, cache: Boolean = false,
-                            thresholds: Option[DataFrame] = None): DataFrame = {
-    require(maxBits <= EmbedBandBlock, s"maxBits $maxBits exceeds band block $EmbedBandBlock")
+                            thresholds: Option[DataFrame] = None): DataFrame =
+    embedCosineBanded(emb, threshold, 1, maxBits, tables, cache, thresholds, targetOccupancy)
+
+  /** The one body of [[embedCosineOf]] and [[embedCosineAdaptiveOf]]:
+    * balanced patf bits ([[withBalancedPatf]]) → band width
+    * `clamp(lo, hi, floor(log2(n / targetOccupancy)))`, derived IN-PLAN
+    * with the exact `length(bin(x)) - 1` integer log → band equijoin →
+    * candidate-first exact verify against the PLAIN (doc_id, embedding,
+    * nrm) relation. Not the patf-attached one: its lineage destroys the
+    * size estimate, planning the verify joins as SMJ that shuffle and sort
+    * a 3 KB embedding row per candidate per side (~50 GB of sort I/O at
+    * sf1's 18M candidates); the plain relation keeps honest stats —
+    * broadcast verify at test scales, a doc-id shuffle join at corpus
+    * scale. (With this and the [[withBalancedPatf]] inlining fix the full
+    * adaptive query runs 7.5 s warm at sf1, from 255 s.) */
+  private def embedCosineBanded(emb: DataFrame, threshold: Double, lo: Int, hi: Int,
+                                tables: Int, cache: Boolean,
+                                thresholds: Option[DataFrame],
+                                targetOccupancy: Int): DataFrame = {
+    require(lo <= EmbedBandBlock && hi <= EmbedBandBlock,
+      s"band width clamp [$lo, $hi] exceeds band block $EmbedBandBlock")
     val e0 = emb.withColumn("nrm", sqrt(dotc(col("embedding"), col("embedding"))))
-    val e0c = if (cache) e0.cache() else e0
-    val e = withBalancedPatf(e0c, tables, thresholds)
-    val nb = e0c.agg(count(lit(1)).as("n"))
-      .select(greatest(lit(1), least(lit(maxBits),
+    val v = if (cache) e0.cache() else e0
+    val e = withBalancedPatf(v, tables, thresholds)
+    val nb = v.agg(count(lit(1)).as("n"))
+      .select(greatest(lit(lo), least(lit(hi),
         length(bin(expr(s"n DIV $targetOccupancy"))) - 1)).as("bits"))
-    embedBandsTail(e.crossJoin(broadcast(nb)), e0c, tables, threshold)
+    val bands = e.crossJoin(broadcast(nb))
+      .select(col("doc_id"), col("patf"), col("bits"),
+        explode(expr(s"sequence(0, ${tables - 1})")).as("t"))
+      .select(col("doc_id"), col("t"),
+        expr(s"substring(patf, t * $EmbedBandBlock + 1, bits)").as("bkey"))
+    val rawSim = dotc(col("e1"), col("e2")) / (col("n1") * col("n2"))
+    bandCollisions(bands, bands, Below, band = "t").distinct()
+      .join(v.select(col("doc_id").as("d1"), col("embedding").as("e1"),
+        col("nrm").as("n1")), "d1")
+      .join(v.select(col("doc_id").as("d2"), col("embedding").as("e2"),
+        col("nrm").as("n2")), "d2")
+      .filter(rawSim >= threshold)
+      .select(col("d1"), col("d2"), round(rawSim, 6).as("sim"))
+      .orderBy(asc("d1"), asc("d2"))
   }
 
   /** Per-candidate dot product over [[Embedder.duckDenseEmbCtes]]'s dense
@@ -1139,24 +1061,19 @@ object Dedup {
   def duckEmbedCosineAdaptive(table: String, threshold: Double,
                               targetOccupancy: Int = 32, maxBits: Int = 16,
                               tables: Int = 8): String =
-    s"""WITH ${Embedder.duckDenseEmbCtes(table)},
-       |${duckBandCtes(tables)},
-       |nb AS (SELECT greatest(1, least($maxBits,
-       |               length(bin(count(*) // $targetOccupancy)) - 1)) AS bits
-       |       FROM patf),
-       |bands AS (SELECT doc_id, t, substr(patf, (t * $EmbedBandBlock + 1)::INT, nb.bits::INT) AS bkey
-       |          FROM patf, tt, nb),
-       |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-       |         FROM bands x JOIN bands y
-       |         ON x.t = y.t AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-       |${duckCosineTail(threshold)}""".stripMargin
+    duckEmbedCosineBanded(table, threshold, 1, maxBits, tables, targetOccupancy)
 
   /** DuckDB mirror of [[embedCosineOf]] — same floor-width derivation. */
   def duckEmbedCosine(table: String, threshold: Double, bits: Int = 8,
                       tables: Int = 8, targetOccupancy: Int = 32): String =
+    duckEmbedCosineBanded(table, threshold, bits, EmbedBandBlock, tables, targetOccupancy)
+
+  /** DuckDB mirror of [[embedCosineBanded]]: band width clamped to [lo, hi]. */
+  private def duckEmbedCosineBanded(table: String, threshold: Double, lo: Int, hi: Int,
+                                    tables: Int, targetOccupancy: Int): String =
     s"""WITH ${Embedder.duckDenseEmbCtes(table)},
        |${duckBandCtes(tables)},
-       |nb AS (SELECT greatest($bits, least($EmbedBandBlock,
+       |nb AS (SELECT greatest($lo, least($hi,
        |               length(bin(count(*) // $targetOccupancy)) - 1)) AS bits
        |       FROM patf),
        |bands AS (SELECT doc_id, t, substr(patf, (t * $EmbedBandBlock + 1)::INT, nb.bits::INT) AS bkey
@@ -1666,14 +1583,16 @@ object Dedup {
     val bands = bandRowsOf(sh, seeds, rowsPerBand)
     val newB = bands.filter(col("doc_id") % batchMod === batchRem)
     val oldB = bands.filter(col("doc_id") % batchMod =!= batchRem)
-    val cand = newB.as("x").join(oldB.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    jaccardOf(sh, cand, threshold)
-      .select(col("d1").as("batch_doc"), col("d2").as("corpus_doc"), col("jaccard"))
-      .orderBy(asc("batch_doc"), asc("corpus_doc"))
+    val side = sideOf(sh)
+    asBatchCorpus(jaccardVerify(bandCollisions(newB, oldB, None).distinct(), side, side,
+      threshold))
   }
+
+  /** (d1, d2, jaccard) → the one-sided (batch_doc, corpus_doc, jaccard)
+    * roles of the incremental variants, role-ordered. */
+  private def asBatchCorpus(pairs: DataFrame): DataFrame =
+    pairs.select(col("d1").as("batch_doc"), col("d2").as("corpus_doc"), col("jaccard"))
+      .orderBy(asc("batch_doc"), asc("corpus_doc"))
 
   /** Two-RELATION form of [[minhashIncremental]] (whose `doc_id % mod`
     * split of one table is the oracle-testable stand-in): the batch and
@@ -1693,10 +1612,11 @@ object Dedup {
     * [[minhashIncremental]]'s: candidates are
     * the batch-bands × corpus-band-index equijoin (new × old only), the
     * corpus side being the persisted artifact (bucketed by band key →
-    * co-located probe); verify is candidate-first. Both shingle relations
-    * cached (bands + verify + sizes read each); their doc-cardinality
-    * aggregates and the verify probes carry the jaccardTail merge pins —
-    * cached-aggregate build sides must never broadcast (round-2 lesson).
+    * co-located probe); verify is candidate-first ([[probeIndex]] over
+    * the batch's and the corpus's own shingle relations). Both shingle
+    * relations are cached (bands + verify + sizes read each), so both
+    * verify sides carry the merge pins — cached-aggregate build sides must
+    * never broadcast (round-2 lesson).
     */
   def minhashAgainst(batch: DataFrame, corpus: DataFrame, threshold: Double,
                      seeds: Int = MinhashSeeds, rowsPerBand: Int = MinhashRowsPerBand): DataFrame =
@@ -1714,27 +1634,8 @@ object Dedup {
                          rowsPerBand: Int = MinhashRowsPerBand): (DataFrame, Seq[DataFrame]) = {
     val shB = shingleRows(batch, 3)
     val shC = shingleRows(corpus, 3)
-    val cand = bandRowsOf(shB, seeds, rowsPerBand).as("x")
-      .join(bandRowsOf(shC, seeds, rowsPerBand).as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") =!= col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    val inter = cand
-      .join(shB.select(col("doc_id").as("d1"), col("s")).hint("merge"), "d1")
-      .join(shC.select(col("doc_id").as("d2"), col("s")).hint("merge"), Seq("d2", "s"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("i"))
-    val sizesB = shB.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val sizesC = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val out = inter
-      .join(sizesB.select(col("doc_id").as("d1"), col("n").as("n1")).hint("merge"), "d1")
-      .join(sizesC.select(col("doc_id").as("d2"), col("n").as("n2")).hint("merge"), "d2")
-      .withColumn("jaccard", col("i").cast("double") / (col("n1") + col("n2") - col("i")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1").as("batch_doc"), col("d2").as("corpus_doc"),
-        round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(asc("batch_doc"), asc("corpus_doc"))
-    (out, Seq(shB, shC))
+    (probeIndex(shB, bandRowsOf(shB, seeds, rowsPerBand), bandRowsOf(shC, seeds, rowsPerBand),
+      shC, sizesOf(shC), threshold), Seq(shB, shC))
   }
 
   /** The PERSISTED-INDEX form of [[minhashAgainst]] (round-8 verdict #2):
@@ -1748,7 +1649,7 @@ object Dedup {
     * corpus signature pipeline per ingest batch — a daily full-corpus
     * pass at 100 TB).
     *
-    * Broadcast discipline differs from [[minhashAgainstWith]] on purpose:
+    * Broadcast discipline differs from [[minhashAgainst]] on purpose:
     * the corpus relations here are UNCACHED parquet reads, so their size
     * estimates are actual file stats — small index → broadcast is correct,
     * 100 TB index → shuffle join, no lock-in hazard (the round-4 curation
@@ -1771,33 +1672,19 @@ object Dedup {
     (probeIndex(shB, bandsB, corpusBands, corpusShingles, corpusSizes, threshold), Seq(shB))
   }
 
-  /** Probe core over PRECOMPUTED batch relations — shared by
-    * [[minhashProbeIndexWith]] and [[graft.sources.PairsLayout.upsert]]
-    * (which reuses the batch shingles/bands it is about to append, one
-    * shingle pass per ingest). */
+  /** Probe core over PRECOMPUTED batch relations — the one MinHash probe
+    * body, shared by [[minhashProbeIndexWith]], [[minhashAgainstWith]] and
+    * [[graft.sources.PairsLayout.upsert]] (which reuses the batch
+    * shingles/bands it is about to append, one shingle pass per ingest).
+    * Each verify side is merge-pinned iff its shingles are cached
+    * ([[ShingleSide]]): the batch side always, the corpus side only for
+    * [[minhashAgainstWith]]'s cached relations, never for stored
+    * parquet. */
   private[graft] def probeIndex(shB: DataFrame, bandsB: DataFrame,
                                 corpusBands: DataFrame, corpusShingles: DataFrame,
-                                corpusSizes: DataFrame, threshold: Double): DataFrame = {
-    val cand = bandsB.as("x")
-      .join(corpusBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") =!= col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    val inter = cand
-      .join(shB.select(col("doc_id").as("d1"), col("s")).hint("merge"), "d1")
-      .join(corpusShingles.select(col("doc_id").as("d2"), col("s")), Seq("d2", "s"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("i"))
-    val sizesB = shB.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    inter
-      .join(sizesB.select(col("doc_id").as("d1"), col("n").as("n1")).hint("merge"), "d1")
-      .join(corpusSizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
-      .withColumn("jaccard", col("i").cast("double") / (col("n1") + col("n2") - col("i")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1").as("batch_doc"), col("d2").as("corpus_doc"),
-        round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(asc("batch_doc"), asc("corpus_doc"))
-  }
+                                corpusSizes: DataFrame, threshold: Double): DataFrame =
+    asBatchCorpus(jaccardVerify(bandCollisions(bandsB, corpusBands, Differ).distinct(),
+      sideOf(shB), ShingleSide(corpusShingles, corpusSizes), threshold))
 
   /** DuckDB mirror of [[minhashIncremental]]. The verify CTEs are the
     * role-ordered variant of [[duckJaccardCtes]]: (batch, corpus) pairs are
@@ -1872,7 +1759,7 @@ object Dedup {
     // hint("merge") on the probe side: `exact` is a cached pair relation
     // whose pre-materialization estimate would plan a locked-in broadcast —
     // on a large tuning sample the all-pairs baseline is the BIGGEST
-    // relation in this query (same hazard class as jaccardTail's pins)
+    // relation in this query (same hazard class as ShingleSide's pins)
     val counts = found
       .join(exact.hint("merge"), Seq("d1", "d2"), "left_semi")
       .groupBy("variant")
@@ -2208,34 +2095,26 @@ object Dedup {
        |sig AS (SELECT doc_id, ${duckSimhashFromSums(sums)} AS simhash
        |        FROM tok GROUP BY doc_id),
        |bands AS ($bandRows),
-       |cand0 AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2,
+       |${duckSimhashTail("bands", 64, maxHamming, threshold)}""".stripMargin
+  }
+
+  /** Band self-join → hamming cut → exact-Jaccard tail shared by
+    * [[duckSimhashSql]] and [[duckSimhashWideSql]] over their band CTE
+    * (doc_id, simhash, band, bkey). */
+  private def duckSimhashTail(bandsCte: String, width: Int, maxHamming: Int,
+                              threshold: Double): String =
+    s"""cand0 AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2,
        |                 x.simhash AS s1, y.simhash AS s2
-       |          FROM bands x JOIN bands y
+       |          FROM $bandsCte x JOIN $bandsCte y
        |          ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
        |cand AS (SELECT d1, d2, hamming FROM
-       |           (SELECT d1, d2, CAST(${duckHamming("s1", "s2", 64)} AS BIGINT) AS hamming
+       |           (SELECT d1, d2, CAST(${duckHamming("s1", "s2", width)} AS BIGINT) AS hamming
        |            FROM cand0) h
        |         WHERE hamming <= $maxHamming),
        |${duckJaccard("cand", s"jac >= $threshold",
                       "d1, d2, c2.hamming, round(jac, 6) AS jaccard",
                       "JOIN cand c2 USING (d1, d2)")}""".stripMargin
-  }
 
-  /** Banded SimHash near-dup: 64-bit signature per doc — bit i set iff the
-    * signed sum over tokens of md5-bit i is positive — split into 4×16-bit
-    * bands; docs sharing ANY band bucket become candidates (near-identical
-    * signatures differ in few bits, so at least one band usually matches).
-    * Candidates are verified on the FULL signature (hamming ≤ maxHamming),
-    * then by exact shingle Jaccard ≥ threshold.
-    *
-    * Scale shape: each band key ranges over 2^16 near-uniform md5-derived
-    * values, so buckets stay small and the per-band equijoin is the linear
-    * LSH shape — unlike whole-signature equality on a saturated 16-bit
-    * space (round-1 design), which paired quadratically inside each of at
-    * most 65,536 signatures. The hamming verify is a 64-term compare on
-    * candidate pairs only; the Jaccard verify is candidate-first
-    * ([[jaccardOf]] semantics), carrying `hamming` through the agg key so
-    * the candidate subtree is referenced exactly once — no caches. */
   /** Lane-packed signed-bit signature aggregation (round-13): the naive
     * form aggregates one ±1 sum COLUMN per signature bit (64/128 hash-agg
     * buffer slots, 64/128 codegen'd buffer updates per token row, and an
@@ -2299,38 +2178,34 @@ object Dedup {
     // hamming is computed and filtered BEFORE the distinct: collisions drop
     // early and the dedup Exchange carries (d1, d2, hamming) instead of two
     // 64-char signatures.
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+    val cand = bandCollisions(bands, bands, Below, carry = Seq(
         (bit_count(col("x.h1").bitwiseXOR(col("y.h1"))) +
-          bit_count(col("x.h2").bitwiseXOR(col("y.h2")))).cast("long").as("hamming"))
+          bit_count(col("x.h2").bitwiseXOR(col("y.h2")))).cast("long").as("hamming")))
       .filter(col("hamming") <= maxHamming)
       .distinct()
     (cand, Seq(sig))
   }
 
+  /** Banded SimHash near-dup: 64-bit signature per doc — bit i set iff the
+    * signed sum over tokens of md5-bit i is positive — split into 4×16-bit
+    * bands; docs sharing ANY band bucket become candidates (near-identical
+    * signatures differ in few bits, so at least one band usually matches).
+    * Candidates are verified on the FULL signature (hamming ≤ maxHamming),
+    * then by exact shingle Jaccard ≥ threshold.
+    *
+    * Scale shape: each band key ranges over 2^16 near-uniform md5-derived
+    * values, so buckets stay small and the per-band equijoin is the linear
+    * LSH shape — unlike whole-signature equality on a saturated 16-bit
+    * space (round-1 design), which paired quadratically inside each of at
+    * most 65,536 signatures. The hamming verify is a 64-term compare on
+    * candidate pairs only; the Jaccard verify is [[jaccardVerify]],
+    * carrying `hamming` through the agg key so the candidate subtree is
+    * referenced exactly once. */
   def simhash(documents: DataFrame, threshold: Double,
               maxHamming: Int = SimhashMaxHamming): DataFrame = {
     val (cand, _) = simhashCandPairs(documents, maxHamming)
-    // candidate-first exact-Jaccard verify (hamming rides the groupBy key);
-    // hint("merge") on the inverted-index sides — see jaccardOf for why a
-    // broadcast there is catastrophic (measured 680 s → 9 s at sf0.1)
-    val sh = shingleRows(documents, 3)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("d1"), col("s")).hint("merge"), "d1")
-      .join(sh.select(col("doc_id").as("d2"), col("s")).hint("merge"), Seq("d2", "s"))
-      .groupBy("d1", "d2", "hamming").agg(count(lit(1)).as("i"))
-    inter
-      // merge-pinned for the same doc-cardinality-broadcast hazard as
-      // jaccardTail (sizes derives from the cached sh)
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")).hint("merge"), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")).hint("merge"), "d2")
-      .withColumn("jaccard", col("i").cast("double") / (col("n1") + col("n2") - col("i")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), col("hamming"), round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(asc("d1"), asc("d2"))
+    val side = sideOf(shingleRows(documents, 3))
+    jaccardVerify(cand, side, side, threshold, carry = Seq("hamming"))
   }
 
   /** Corpus-size-dispatching simhash facade — the round-10 verdict's
@@ -2426,7 +2301,7 @@ object Dedup {
     * phash candidate-first lesson), hamming runs word-wise (xor +
     * popcount over width/32 conv'd 32-bit halves of the cached
     * signature), and the exact shingle-Jaccard verify is candidate-first
-    * with merge-pinned inverted-index sides ([[jaccardOf]] semantics —
+    * with merge-pinned inverted-index sides ([[jaccardVerify]] —
     * broadcast there is the measured 680 s → 9 s hazard). `maxHamming`
     * scales with width: the 64-bit entry's 8-of-64 fraction is
     * 16-of-128. False positives cannot occur (hamming and Jaccard are
@@ -2470,11 +2345,7 @@ object Dedup {
         explode(expr(s"sequence(0, $width DIV bits - 1)")).as("band"))
       .select(col("doc_id"), col("band"),
         expr("substring(simhash, band * bits + 1, bits)").as("bkey"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
+    val cand = bandCollisions(bands, bands, Below).distinct()
     val words = width / 32
     val sw = sig.select(col("doc_id") +: (0 until words).map(i =>
       conv(substring(col("simhash"), i * 32 + 1, 32), 2, 10).cast("long").as(s"h$i")): _*)
@@ -2488,19 +2359,8 @@ object Dedup {
         (0 until words).map(i => col(s"h$i").as(s"b$i")): _*), "d2")
       .select(col("d1"), col("d2"), ham.as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    val sh = shingleRows(documents, 3)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = candH
-      .join(sh.select(col("doc_id").as("d1"), col("s")).hint("merge"), "d1")
-      .join(sh.select(col("doc_id").as("d2"), col("s")).hint("merge"), Seq("d2", "s"))
-      .groupBy("d1", "d2", "hamming").agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")).hint("merge"), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")).hint("merge"), "d2")
-      .withColumn("jaccard", col("i").cast("double") / (col("n1") + col("n2") - col("i")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), col("hamming"), round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(asc("d1"), asc("d2"))
+    val side = sideOf(shingleRows(documents, 3))
+    jaccardVerify(candH, side, side, threshold, carry = Seq("hamming"))
   }
 
   /** DuckDB mirror of [[simhashWide]] — same salted md5 blocks, integer
@@ -2548,16 +2408,6 @@ object Dedup {
        |bk AS (SELECT doc_id, simhash, band,
        |              substr(simhash, (band * bits + 1)::INT, bits) AS bkey
        |       FROM br),
-       |cand0 AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2,
-       |                 x.simhash AS s1, y.simhash AS s2
-       |          FROM bk x JOIN bk y
-       |          ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-       |cand AS (SELECT d1, d2, hamming FROM
-       |           (SELECT d1, d2, CAST(${duckHamming("s1", "s2", width)} AS BIGINT) AS hamming
-       |            FROM cand0) h
-       |         WHERE hamming <= $maxHamming),
-       |${duckJaccard("cand", s"jac >= $threshold",
-                      "d1, d2, c2.hamming, round(jac, 6) AS jaccard",
-                      "JOIN cand c2 USING (d1, d2)")}""".stripMargin
+       |${duckSimhashTail("bk", width, maxHamming, threshold)}""".stripMargin
   }
 }

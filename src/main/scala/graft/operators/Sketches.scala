@@ -160,7 +160,7 @@ object Sketches {
       .groupBy("doc_id").agg(count(lit(1)).as("exact_hits"))
     val sizes = tsh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     // hint("merge"): all three are cached-tsh-derived doc-cardinality
-    // aggregates - the jaccardTail pin rule (doc-keyed, the cheap
+    // aggregates - the ShingleSide pin rule (doc-keyed, the cheap
     // high-cardinality case, not the embedCosine bucket-join exception)
     bloomHits
       .join(sizes.hint("merge"), "doc_id")

@@ -257,7 +257,7 @@ object TextAnalysis {
       .join(broadcast(df), "t")
       .crossJoin(broadcast(stats))
       // hint("merge"): dl is a cached-derived doc-cardinality aggregate —
-      // the jaccardTail pin rule (doc-keyed join, so the pin is the cheap
+      // the ShingleSide pin rule (doc-keyed join, so the pin is the cheap
       // high-cardinality case, not the embedCosine bucket-join exception)
       .join(dl.hint("merge"), "doc_id")
       .withColumn("idf",
@@ -363,7 +363,7 @@ object TextAnalysis {
         sum("cnt").as("n3"),
         sum(when(col("cnt") > 1, col("cnt")).otherwise(0L)).as("dup3"))
     // hint("merge"): ta/g2/g3 are cached-derived doc-cardinality
-    // aggregates — the jaccardTail pin rule for mandatory caches; doc-keyed
+    // aggregates — the ShingleSide pin rule for mandatory caches; doc-keyed
     // joins, so the pin is the cheap high-cardinality case
     ta.join(g2.hint("merge"), Seq("doc_id"), "left")
       .join(g3.hint("merge"), Seq("doc_id"), "left")

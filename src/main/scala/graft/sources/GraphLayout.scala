@@ -96,23 +96,25 @@ object GraphLayout {
     try out.write(specString(buckets).getBytes("UTF-8")) finally out.close()
   }
 
-  /** Bucket count of an existing artifact from its sidecar; 0 for a
-    * pre-bucketing (plain-parquet) artifact. Loudly rejects a sidecar
-    * whose COLUMN spec differs from this build's. (private[graft]: the
-    * profilers report the derived grain.) */
+  /** Bucket count of an existing artifact from its sidecar. Every writer
+    * ([[writeArt]], [[writeBase]]) writes the sidecar last, so a
+    * directory without one is an old pre-bucketing artifact or a crashed,
+    * partial build — loudly rejected, as is a sidecar whose COLUMN spec
+    * differs from this build's. (private[graft]: the profilers report the
+    * derived grain.) */
   private[graft] def storedBuckets(spark: SparkSession, dir: String): Int = {
     val p = new org.apache.hadoop.fs.Path(absPath(s"$dir/_graft_buckets"))
     val f = fs(spark, p)
-    if (!f.exists(p)) 0
-    else {
-      val in = f.open(p)
-      val raw = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      val b = raw.takeWhile(_ != ';').toInt
-      require(raw == specString(b),
-        s"graph layout at $dir was bucketed as '$raw', this build expects " +
-          s"'${specString(b)}' — rewrite the artifact")
-      b
-    }
+    require(f.exists(p),
+      s"graph layout at $dir has no _graft_buckets sidecar (a pre-bucketing or " +
+        "partially written artifact) — rewrite it with writeBase")
+    val in = f.open(p)
+    val raw = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    val b = raw.takeWhile(_ != ';').toInt
+    require(raw == specString(b),
+      s"graph layout at $dir was bucketed as '$raw', this build expects " +
+        s"'${specString(b)}' — rewrite the artifact")
+    b
   }
 
   // ------------------------------------------- frozen band-key relation
@@ -277,32 +279,28 @@ object GraphLayout {
     }
   }
 
-  /** Register (if needed) and read the bucketed external table at `path`;
-    * plain-parquet fallback when the artifact predates the bucketed
-    * layout (no sidecar in `specDir`). */
+  /** Register (if needed) and read the bucketed external table at `path`
+    * (bucket count from the sidecar in `specDir`). */
   private def readBucketed(spark: SparkSession, specDir: String, path: String,
                            sortCols: Seq[String]): DataFrame = {
     SignatureLayout.recoverPath(spark, absPath(path))
     val b = storedBuckets(spark, specDir)
-    if (b == 0) spark.read.parquet(path)
-    else {
-      val t = tableName(path)
-      if (!spark.catalog.tableExists(t)) {
-        val schema = spark.read.parquet(path).schema.toDDL
-        // two queries first-reading the same artifact can both pass the
-        // exists check (round-11 ADVICE #1): the loser's CREATE throws —
-        // fall through to the winner's registration, same table either way
-        try spark.sql(
-          s"""CREATE TABLE $t ($schema) USING parquet
-             |CLUSTERED BY (vec_id) SORTED BY (${sortCols.mkString(", ")})
-             |INTO $b BUCKETS
-             |LOCATION '${absPath(path)}'""".stripMargin)
-        catch {
-          case _: org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException => ()
-        }
+    val t = tableName(path)
+    if (!spark.catalog.tableExists(t)) {
+      val schema = spark.read.parquet(path).schema.toDDL
+      // two queries first-reading the same artifact can both pass the
+      // exists check (round-11 ADVICE #1): the loser's CREATE throws —
+      // fall through to the winner's registration, same table either way
+      try spark.sql(
+        s"""CREATE TABLE $t ($schema) USING parquet
+           |CLUSTERED BY (vec_id) SORTED BY (${sortCols.mkString(", ")})
+           |INTO $b BUCKETS
+           |LOCATION '${absPath(path)}'""".stripMargin)
+      catch {
+        case _: org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException => ()
       }
-      spark.table(t)
     }
+    spark.table(t)
   }
 
   private def refresh(spark: SparkSession, path: String): Unit = {
@@ -445,13 +443,14 @@ object GraphLayout {
     * plus [[replaceBuckets]]'s generation protocol: a batch re-applied
     * after a crash anywhere between the graph commit and the checkpoint
     * commit REPLACES its own delta (prefix-keyed files) and reduces to a
-    * valid upsert, never duplicate lists. Pre-bucketed artifacts (no
-    * sidecar — plain file names carry no bucket id) fall back to the
-    * full stage + dir swap. */
+    * valid upsert, never duplicate lists. An artifact without the bucket
+    * sidecar is rejected ([[storedBuckets]]): its file names carry no
+    * bucket id to confine by. */
   def upsertStored(spark: SparkSession, dir: String, batch: DataFrame,
                    batchId: String, k: Int = 8, tables: Int = 4,
                    targetOcc: Int = 16): Unit = {
     recoverReplace(spark, s"$dir/graph")
+    val buckets = storedBuckets(spark, dir)
     // a foreachBatch source relation re-plans per ACTION, and this method
     // references it from ~six subtrees (ids, signs, both score sides, the
     // two appends) — one eager checkpoint makes every later reference a
@@ -460,145 +459,120 @@ object GraphLayout {
     val oldVecs = readBucketed(spark, dir, s"$dir/vectors", Seq("vec_id"))
     val gFull = readBucketed(spark, dir, s"$dir/graph", Seq("vec_id", "rn"))
     val g = gFull.select(col("vec_id").as("a"), col("nbr").as("b"))
-    val buckets = storedBuckets(spark, dir)
-    if (buckets == 0) {
-      // legacy plain-parquet artifact: no bucket ids in file names to
-      // confine by — the pre-r12 full rewrite remains the honest path
-      stageBucketed(spark,
-        graft.operators.NnDescent
-          .graphUpsertWith(oldVecs, g, batch0.select("vec_id", "embedding"),
+    // touched lists only, MATERIALIZED before any live file moves (the
+    // plan reads the files the commit below replaces). Band keys come
+    // from the FROZEN-width persisted band relation when the artifact
+    // carries one (round-13, the r12 verdict #1): the batch's own keys
+    // are cut at the sidecar's width — no count — and the corpus side
+    // is a directory-PRUNED read of only the batch's band-key
+    // partitions, so the per-batch banding probe does O(batch)
+    // compute + O(touched partitions) IO where the in-plan form
+    // scanned, counted and re-keyed the whole sign relation every
+    // micro-batch (37 s of the ~38 s sf10 per-batch wall). Pre-frozen
+    // artifacts (no `_graft_bands`) keep the in-plan path.
+    val bandSpec = storedBandSpec(spark, dir, tables, targetOcc)
+    val (batchBands, deltaDf) = bandSpec match {
+      case Some((bits, pparts)) =>
+        // no checkpoint: batch0 already is one, and bb is a local
+        // projection of it — its two actions (pb collect, band append)
+        // each recompute cheaper than an extra eager job costs
+        val bb = graft.operators.NnDescent
+          .bandKeysAt(graft.operators.NnDescent
+            .signsOf(batch0.select("vec_id", "embedding"), tables), bits)
+          .withColumn("pb", pbCol(pparts))
+        // bounded driver-side list: ≤ min(pparts, batch·tables) ints
+        val pbs = bb.select("pb").distinct().collect().map(_.getInt(0)).toIndexedSeq
+        val stored = readBands(spark, dir, Some(pbs))
+        (Some(bb), graft.operators.NnDescent
+          .graphUpsertDeltaWith(oldVecs, g, batch0.select("vec_id", "embedding"),
             k, tables, targetOcc,
-            oldSigns = Some(spark.read.parquet(s"$dir/signs"))),
-        s"$dir/graph_stage", Seq("vec_id", "rn"), DefaultBuckets)
-      SignatureLayout.swapIn(spark, s"$dir/graph", s"$dir/graph_stage")
-    } else {
-      // touched lists only, MATERIALIZED before any live file moves (the
-      // plan reads the files the commit below replaces). Band keys come
-      // from the FROZEN-width persisted band relation when the artifact
-      // carries one (round-13, the r12 verdict #1): the batch's own keys
-      // are cut at the sidecar's width — no count — and the corpus side
-      // is a directory-PRUNED read of only the batch's band-key
-      // partitions, so the per-batch banding probe does O(batch)
-      // compute + O(touched partitions) IO where the in-plan form
-      // scanned, counted and re-keyed the whole sign relation every
-      // micro-batch (37 s of the ~38 s sf10 per-batch wall). Pre-frozen
-      // artifacts (no `_graft_bands`) keep the in-plan path.
-      val bandSpec = storedBandSpec(spark, dir, tables, targetOcc)
-      val (batchBands, deltaDf) = bandSpec match {
-        case Some((bits, pparts)) =>
-          // no checkpoint: batch0 already is one, and bb is a local
-          // projection of it — its two actions (pb collect, band append)
-          // each recompute cheaper than an extra eager job costs
-          val bb = graft.operators.NnDescent
-            .bandKeysAt(graft.operators.NnDescent
-              .signsOf(batch0.select("vec_id", "embedding"), tables), bits)
-            .withColumn("pb", pbCol(pparts))
-          // bounded driver-side list: ≤ min(pparts, batch·tables) ints
-          val pbs = bb.select("pb").distinct().collect().map(_.getInt(0)).toIndexedSeq
-          val stored = readBands(spark, dir, Some(pbs))
-          (Some(bb), graft.operators.NnDescent
-            .graphUpsertDeltaWith(oldVecs, g, batch0.select("vec_id", "embedding"),
-              k, tables, targetOcc,
-              frozenBits = Some(bits), storedBands = Some(stored)))
-        case None =>
-          (None, graft.operators.NnDescent
-            .graphUpsertDeltaWith(oldVecs, g, batch0.select("vec_id", "embedding"),
-              k, tables, targetOcc,
-              oldSigns = Some(spark.read.parquet(s"$dir/signs"))))
-      }
-      // bucketed-scan OFF around the delta materialization (round-13):
-      // every join in the micro-batch delta broadcasts the O(batch) side,
-      // so a bucketed scan's one-partition-per-bucket shape is pure task
-      // scheduling — at sf10's auto grain (3199 buckets) the ~4 stored-
-      // relation scans cost ~20 s of launches for the same bytes; the
-      // coalesced plain scans read identically. Scoped to this EAGER
-      // checkpoint only (the commits below WRITE bucketed tables, which
-      // requires the conf on), and only for micro-batch-sized batches —
-      // a corpus-scale batch's delta wants the co-partitioned joins.
-      val delta =
-        if (batch0.count() <= 10000L)
-          withSqlConf(spark, "spark.sql.sources.bucketing.enabled", "false") {
-            deltaDf.localCheckpoint(true)
-          }
-        else deltaDf.localCheckpoint(true)
-      val touchedBk = delta
-        .select(org.apache.spark.sql.functions
-          .pmod(org.apache.spark.sql.functions.hash(col("vec_id")),
-            org.apache.spark.sql.functions.lit(buckets)).as("bk"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      val livep = new org.apache.hadoop.fs.Path(absPath(s"$dir/graph"))
-      val touchedFiles = fs(spark, livep).listStatus(livep).map(_.getPath)
-        .filter(p => !p.getName.startsWith("_") &&
-          bucketOf(p.getName).exists(touchedBk.contains))
-        .map(_.toString)
-      // the touched buckets' untouched rows ride along into the staged
-      // files; the anti-join's touched-id side is O(batch·k) — broadcast
-      val keep =
-        if (touchedFiles.isEmpty) delta.limit(0) // empty base snapshot
-        else spark.read.parquet(touchedFiles.toIndexedSeq: _*)
-          .join(org.apache.spark.sql.functions.broadcast(
-            delta.select("vec_id").distinct()), Seq("vec_id"), "left_anti")
-      // the three per-batch commits — graph bucket replace, vector append,
-      // sign append — are independent relations on disjoint paths: submit
-      // CONCURRENTLY (the writeArt/compact precedent — sequential
-      // submission serialized ~10 small jobs' stage tails per micro-batch).
-      // A crash leaving ANY subset committed still replays to a valid
-      // upsert: graphUpsertDeltaWith anti-joins the batch ids out of every
-      // stored side, and each commit is prefix-keyed (replace, not append
-      // twice), so commit ORDER carries no correctness weight here.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val commits = Seq(
-        Future {
-          // per-batch stage: task count capped (the maxTasks note) — the
-          // staged rows are O(touched buckets), not O(corpus)
-          stageBucketed(spark, keep.unionByName(delta),
-            s"$dir/graph_stage", Seq("vec_id", "rn"), buckets, maxTasks = 64)
-          replaceBuckets(spark, s"$dir/graph", s"$dir/graph_stage", s"${batchId}g")
-          refresh(spark, s"$dir/graph")
-        },
-        Future {
-          // batch vectors: bucketed stage + suffix-preserving rename append
-          stageBucketed(spark, batch0.select("vec_id", "embedding"),
-            s"$dir/vec_stage", Seq("vec_id"), buckets, maxTasks = 64)
-          SignatureLayout.moveInto(spark, s"$dir/vec_stage", s"$dir/vectors", batchId)
-          refresh(spark, s"$dir/vectors")
-        },
-        Future {
-          // batch signs: plain append under the same idempotent prefix
-          // (signs stay the full-width source of truth the reband op
-          // re-derives band keys from)
-          graft.operators.NnDescent
-            .signsOf(batch0.select("vec_id", "embedding"), tables)
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/sign_stage")
-          SignatureLayout.moveInto(spark, s"$dir/sign_stage", s"$dir/signs",
-            s"$batchId-sg")
-        }) ++ batchBands.map(bb => Future {
-          // batch band keys: partitioned append under the batch prefix so
-          // the NEXT micro-batch's pruned probe sees this batch's rows;
-          // a replay stages the same partitions (keys are deterministic
-          // in batch content) and REPLACES its delta per partition
-          bb.repartition(col("pb"))
-            .write.mode(SaveMode.Overwrite).partitionBy("pb")
-            .parquet(s"$dir/band_stage")
-          moveIntoPartitioned(spark, s"$dir/band_stage", s"$dir/bands",
-            s"$batchId-bd")
-        })
-      SignatureLayout.drainAll(commits) // drain-before-propagate (r13 ADVICE)
-      return
+            frozenBits = Some(bits), storedBands = Some(stored)))
+      case None =>
+        (None, graft.operators.NnDescent
+          .graphUpsertDeltaWith(oldVecs, g, batch0.select("vec_id", "embedding"),
+            k, tables, targetOcc,
+            oldSigns = Some(spark.read.parquet(s"$dir/signs"))))
     }
-    refresh(spark, s"$dir/graph")
-    // legacy path: sequential commits, order graph -> vectors -> signs
-    stageBucketed(spark, batch0.select("vec_id", "embedding"),
-      s"$dir/vec_stage", Seq("vec_id"), DefaultBuckets)
-    SignatureLayout.moveInto(spark, s"$dir/vec_stage", s"$dir/vectors", batchId)
-    refresh(spark, s"$dir/vectors")
-    graft.operators.NnDescent
-      .signsOf(batch0.select("vec_id", "embedding"), tables)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/sign_stage")
-    SignatureLayout.moveInto(spark, s"$dir/sign_stage", s"$dir/signs",
-      s"$batchId-sg")
+    // bucketed-scan OFF around the delta materialization (round-13):
+    // every join in the micro-batch delta broadcasts the O(batch) side,
+    // so a bucketed scan's one-partition-per-bucket shape is pure task
+    // scheduling — at sf10's auto grain (3199 buckets) the ~4 stored-
+    // relation scans cost ~20 s of launches for the same bytes; the
+    // coalesced plain scans read identically. Scoped to this EAGER
+    // checkpoint only (the commits below WRITE bucketed tables, which
+    // requires the conf on), and only for micro-batch-sized batches —
+    // a corpus-scale batch's delta wants the co-partitioned joins.
+    val delta =
+      if (batch0.count() <= 10000L)
+        withSqlConf(spark, "spark.sql.sources.bucketing.enabled", "false") {
+          deltaDf.localCheckpoint(true)
+        }
+      else deltaDf.localCheckpoint(true)
+    val touchedBk = delta
+      .select(org.apache.spark.sql.functions
+        .pmod(org.apache.spark.sql.functions.hash(col("vec_id")),
+          org.apache.spark.sql.functions.lit(buckets)).as("bk"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    val livep = new org.apache.hadoop.fs.Path(absPath(s"$dir/graph"))
+    val touchedFiles = fs(spark, livep).listStatus(livep).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") &&
+        bucketOf(p.getName).exists(touchedBk.contains))
+      .map(_.toString)
+    // the touched buckets' untouched rows ride along into the staged
+    // files; the anti-join's touched-id side is O(batch·k) — broadcast
+    val keep =
+      if (touchedFiles.isEmpty) delta.limit(0) // empty base snapshot
+      else spark.read.parquet(touchedFiles.toIndexedSeq: _*)
+        .join(org.apache.spark.sql.functions.broadcast(
+          delta.select("vec_id").distinct()), Seq("vec_id"), "left_anti")
+    // the three per-batch commits — graph bucket replace, vector append,
+    // sign append — are independent relations on disjoint paths: submit
+    // CONCURRENTLY (the writeArt/compact precedent — sequential
+    // submission serialized ~10 small jobs' stage tails per micro-batch).
+    // A crash leaving ANY subset committed still replays to a valid
+    // upsert: graphUpsertDeltaWith anti-joins the batch ids out of every
+    // stored side, and each commit is prefix-keyed (replace, not append
+    // twice), so commit ORDER carries no correctness weight here.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val commits = Seq(
+      Future {
+        // per-batch stage: task count capped (the maxTasks note) — the
+        // staged rows are O(touched buckets), not O(corpus)
+        stageBucketed(spark, keep.unionByName(delta),
+          s"$dir/graph_stage", Seq("vec_id", "rn"), buckets, maxTasks = 64)
+        replaceBuckets(spark, s"$dir/graph", s"$dir/graph_stage", s"${batchId}g")
+        refresh(spark, s"$dir/graph")
+      },
+      Future {
+        // batch vectors: bucketed stage + suffix-preserving rename append
+        stageBucketed(spark, batch0.select("vec_id", "embedding"),
+          s"$dir/vec_stage", Seq("vec_id"), buckets, maxTasks = 64)
+        SignatureLayout.moveInto(spark, s"$dir/vec_stage", s"$dir/vectors", batchId)
+        refresh(spark, s"$dir/vectors")
+      },
+      Future {
+        // batch signs: plain append under the same idempotent prefix
+        // (signs stay the full-width source of truth the reband op
+        // re-derives band keys from)
+        graft.operators.NnDescent
+          .signsOf(batch0.select("vec_id", "embedding"), tables)
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/sign_stage")
+        SignatureLayout.moveInto(spark, s"$dir/sign_stage", s"$dir/signs",
+          s"$batchId-sg")
+      }) ++ batchBands.map(bb => Future {
+        // batch band keys: partitioned append under the batch prefix so
+        // the NEXT micro-batch's pruned probe sees this batch's rows;
+        // a replay stages the same partitions (keys are deterministic
+        // in batch content) and REPLACES its delta per partition
+        bb.repartition(col("pb"))
+          .write.mode(SaveMode.Overwrite).partitionBy("pb")
+          .parquet(s"$dir/band_stage")
+        moveIntoPartitioned(spark, s"$dir/band_stage", s"$dir/bands",
+          s"$batchId-bd")
+      })
+    SignatureLayout.drainAll(commits) // drain-before-propagate (r13 ADVICE)
   }
 
   /** Explicit re-band maintenance op (round-13): recompute the frozen

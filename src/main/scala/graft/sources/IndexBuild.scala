@@ -1,7 +1,14 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.Embedder
 import graft.functions.VecExprs.cosineTo
 import graft.operators.{CodeChunker, CodeElement}
@@ -112,18 +119,7 @@ object IndexBuild {
                   currentFiles: Option[DataFrame] = None,
                   refreshFiles: Option[DataFrame] = None): Unit = {
     val target = s"$indexDir/code_elements"
-    // crash recovery BEFORE reading `existing`: a crash between swapInto's
-    // two renames leaves the live table parked at target_old — without this
-    // the read below would find nothing and the merge would silently drop
-    // every previously indexed file
-    recoverSwap(spark, target)
-    // catch ONLY path-not-found (first build): a broad catch here turned
-    // any transient read failure into "no index", silently truncating the
-    // table to this call's fresh subset (round-4 review)
-    val existing =
-      try Some(spark.read.parquet(target))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val merged = existing match {
+    val merged = tableOrEmpty(spark, target) match {
       case None => fresh
       case Some(old) =>
         val refreshedFiles = refreshFiles.getOrElse(fresh).select("file_path").distinct()
@@ -183,8 +179,8 @@ object IndexBuild {
   /** Recover from a swap interrupted between its two renames: the live
     * table is parked at `<target>_old` and `target` is missing — rename it
     * back. A no-op in every healthy state (target present, or neither
-    * present on a first build). Runs at the entry of every table-swapping
-    * job ([[upsertIndex]], [[compact]]). */
+    * present on a first build). Runs before every open of a live table
+    * ([[tableOrEmpty]]) and at the entry of [[compact]]. */
   private[graft] def recoverSwap(spark: SparkSession, target: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -192,6 +188,58 @@ object IndexBuild {
     val old = new org.apache.hadoop.fs.Path(target + "_old")
     if (!fs.exists(t) && fs.exists(old)) { fs.rename(old, t); () }
   }
+
+  /** The one "open an index table or None" rule: the live table at `path`
+    * after swap recovery, or None when there is no index (missing
+    * directory, or no data file in it). Every reader of a table that may
+    * be absent opens it here — the Graft search tools (which degrade to an
+    * empty, correctly-typed result like the reference's "No code index
+    * found…", vector_search_tool.py:34-35), [[graft.Graft.ingestBatch]],
+    * [[upsertIndex]] and [[run]].
+    *
+    * Job-free open: `spark.read.parquet` runs a schema-inference job on
+    * every call, which on the search path costs more than the search's own
+    * scan. Without schema merging, Spark's inference reads exactly one
+    * data file's footer anyway; this reads that footer on the driver
+    * ([[footerSchema]]) and hands the schema to the reader. A directory
+    * with no data file directly under it (emptied, only `_SUCCESS`) is no
+    * index: every index writer leaves a flat table.
+    *
+    * Filesystem-agnostic (round-4 review): existence is probed through the
+    * path's Hadoop FileSystem — a java.nio check on the raw string returned
+    * false for every hdfs://'/s3a:// index IndexBuild happily writes,
+    * silently reporting 0 hits. Swap recovery runs first: a crash parked
+    * between swapInto's renames must read as "index present (recovered)",
+    * not "never indexed" — for a merge that would silently drop every
+    * previously indexed file, for [[run]] re-embed the whole tree. Any
+    * other read failure propagates (a broad catch here turned a transient
+    * failure into "no index", truncating the table to one call's fresh
+    * subset; round-4 review). */
+  private[graft] def tableOrEmpty(spark: SparkSession, path: String): Option[DataFrame] = {
+    recoverSwap(spark, path)
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else footerSchema(spark, fs, p).map(s => spark.read.schema(s).parquet(path))
+  }
+
+  /** The schema `spark.read.parquet` infers for a flat table directory,
+    * read from the footer of its first data file (hidden `_`/`.` names
+    * skipped, as Spark's file index does) — the one file non-merging
+    * inference touches. Spark-written footers carry the Spark schema,
+    * which `readSchemaFromFooter` prefers over converting the parquet
+    * schema. None when the directory holds no data file directly. */
+  private def footerSchema(spark: SparkSession, fs: FileSystem, dir: Path): Option[StructType] =
+    fs.listStatus(dir).iterator
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath).minByOption(_.getName)
+      .map { file =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, fs.getConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
 
   /** Small-file compaction for an index table: every incremental upsert /
     * streaming micro-batch appends its own parquet files, and at cluster
@@ -343,10 +391,7 @@ object IndexBuild {
     val files = scanFiles(spark, rootDir).cache()
     val chunked = chunkedElements(files).cache()
     try {
-    val existing =
-      try Some(spark.read.parquet(s"$indexDir/code_elements"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val (elements, nEmbedded) = existing match {
+    val (elements, nEmbedded) = tableOrEmpty(spark, s"$indexDir/code_elements") match {
       case None =>
         val all = embedElements(chunked)
         (all, chunked.count())

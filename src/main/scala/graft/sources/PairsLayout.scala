@@ -49,9 +49,9 @@ object PairsLayout {
   def write(spark: SparkSession, documents: DataFrame, dir: String,
             threshold: Double, seeds: Int = MinhashSeeds,
             rowsPerBand: Int = MinhashRowsPerBand): Unit = {
-    val (m, handles) = Dedup.minhashWith(documents, threshold, seeds, rowsPerBand)
-    try m.select("d1", "d2").write.mode(SaveMode.Overwrite).parquet(s"$dir/pairs")
-    finally handles.foreach(_.unpersist())
+    val a = Dedup.minhashArtifactsWith(documents, threshold, seeds, rowsPerBand)
+    try a.pairs.select("d1", "d2").write.mode(SaveMode.Overwrite).parquet(s"$dir/pairs")
+    finally a.handles.foreach(_.unpersist())
   }
 
   /** [[write]] + the persisted SIGNATURE index ([[SignatureLayout]]) from

@@ -234,6 +234,24 @@ class IndexBuildSpec extends AnyFunSuite {
       .orderBy("doc_id").collect().toSeq
     assert(after == before, "recovered table must carry the parked content")
     assert(!new java.io.File(s"$dir/code_elements_old").exists())
+    // a full build over the unchanged tree must also see the parked table:
+    // it embeds nothing and leaves the content as it was
+    val idx = Files.createTempDirectory("graft_swap_run").toString
+    IndexBuild.run(spark, projectDir, idx)
+    // by column name: a merging run writes file_path first (the USING join)
+    def content() = {
+      val t = spark.read.parquet(s"$idx/code_elements")
+      t.select(t.columns.sorted.map(t.col).toIndexedSeq: _*)
+        .collect().map(_.toString).sorted.toSeq
+    }
+    val built = content()
+    assert(new java.io.File(s"$idx/code_elements")
+      .renameTo(new java.io.File(s"$idx/code_elements_old")))
+    val report = IndexBuild.run(spark, projectDir, idx).collect()(0)
+    assert(report.getAs[Long]("elements_embedded") == 0,
+      "run treated a parked index as absent and re-embedded the tree")
+    assert(content() == built)
+    assert(!new java.io.File(s"$idx/code_elements_old").exists())
   }
 
   test("IVF layout: cluster-partitioned index prunes probes at the file level") {

@@ -295,6 +295,29 @@ class NnDescentSpec extends AnyFunSuite {
     } finally rm(new java.io.File(dir))
   }
 
+  test("upsertStored rejects a base without its _graft_buckets sidecar") {
+    import java.nio.file.{Files, Paths}
+    val base = emb.filter(col("vec_id") % 10 =!= 7)
+    val batch = emb.filter(col("vec_id") % 10 === 7).select("vec_id", "embedding")
+    val dir = Files.createTempDirectory("graft_graph_nospec").toString
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+    }
+    try {
+      graft.sources.GraphLayout.writeBase(spark, base, dir, k = 5)
+      def files() = new java.io.File(s"$dir/graph").listFiles().map(_.getName).sorted.toSeq
+      val before = files()
+      // the sidecar is written last: without it the directory is an old
+      // pre-bucketing artifact or a crashed, partial writeBase
+      Files.delete(Paths.get(s"$dir/_graft_buckets"))
+      val e = intercept[IllegalArgumentException] {
+        graft.sources.GraphLayout.upsertStored(spark, dir, batch, "mb-0", k = 5)
+      }
+      assert(e.getMessage.contains("writeBase"), e.getMessage)
+      assert(files() == before, "a rejected upsert must not touch the graph")
+    } finally rm(new java.io.File(dir))
+  }
+
   test("refinement is monotone: recall never regresses with more rounds") {
     val r0 = recallOf(0, 6)
     val r2 = recallOf(2, 6)

@@ -1443,15 +1443,32 @@ class OperatorSpec extends AnyFunSuite {
     assert(realAdaptive == realFull)
   }
 
-  test("large-star/small-star CC == label propagation on chain, star, cliques, and real pairs") {
+  test("clustersOfPairs == union-find on chain, star, cliques, flipped and real pairs") {
     import spark.implicits._
-    def viaBoth(pairs: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
-      val a = Dedup.clustersOfPairs(pairs, algo = "label").collect().map(_.toString).toSeq
-      val b = Dedup.clustersOfPairs(pairs, algo = "star").collect().map(_.toString).toSeq
-      (a, b)
+    // (doc_id, cluster, is_canonical, cluster_size) ordered by (cluster,
+    // doc_id): the engine's rows, and the same rows from a union-find over
+    // the collected edges (root = component minimum)
+    def engine(pairs: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Boolean, Long)] =
+      Dedup.clustersOfPairs(pairs).collect().toSeq.map(r => (r.getAs[Long]("doc_id"),
+        r.getAs[Long]("cluster"), r.getAs[Boolean]("is_canonical"), r.getAs[Long]("cluster_size")))
+    def unionFind(pairs: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Boolean, Long)] = {
+      val edges = pairs.select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1)))
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElse(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      val size = nodes.groupBy(find).map { case (root, ns) => root -> ns.length.toLong }
+      nodes.map(n => (n, find(n), n == find(n), size(find(n)))).toSeq
+        .sortBy { case (n, c, _, _) => (c, n) }
     }
-    // deep chain (the adversarial shape star-CC exists for), a star, two
-    // 4-cliques bridged by one edge, and an isolated pair
+    // deep chain (diameter 63), a star, two 4-cliques bridged by one
+    // edge, and an isolated pair
     val chain = (0L until 63L).map(i => (i, i + 1))
     val star = (1L to 5L).map(i => (100L, 100L + i))
     val cliques = (for {
@@ -1459,22 +1476,21 @@ class OperatorSpec extends AnyFunSuite {
     } yield (base + i, base + j)) :+ (203L, 210L)
     val pair = Seq((300L, 301L))
     val synth = (chain ++ star ++ cliques ++ pair).toDF("d1", "d2")
-    val (l1, s1) = viaBoth(synth)
-    assert(l1 == s1)
-    // shuffled-orientation edges (d1 > d2 sometimes) — both must canonize
+    val l1 = engine(synth)
+    assert(l1 == unionFind(synth))
+    assert(l1.map(_._2).distinct == Seq(0L, 100L, 200L, 300L))
+    // flipped orientation (d1 > d2 on every edge) — the same canonical rows
     val flipped = synth.select(col("d2").as("d1"), col("d1").as("d2"))
-    val (l2, s2) = viaBoth(flipped)
-    assert(l2 == s2 && l2 == l1)
+    val l2 = engine(flipped)
+    assert(l2 == unionFind(flipped) && l2 == l1)
     // the corpus' real minhash pair graph
-    val real = Dedup.nearDupPairs(docs, 0.5)
-    val (l3, s3) = viaBoth(real)
+    val real = Dedup.nearDupPairs(docs, 0.5).localCheckpoint()
     spark.sharedState.cacheManager.clearCache()
-    assert(l3 == s3 && l3.nonEmpty)
-    // round counts on the 64-chain: both cores are O(log n) here (label
-    // prop pointer-jumps); record the measured numbers in SCALE.md
-    val (_, lr) = Dedup.ccLabelProp(synth)
-    val (_, sr) = Dedup.ccStar(synth)
-    assert(lr <= 10 && sr <= 10, s"rounds label=$lr star=$sr")
+    val l3 = engine(real)
+    assert(l3 == unionFind(real) && l3.nonEmpty)
+    // pointer jumping keeps the 64-chain at O(log n) rounds, not 63
+    val (_, rounds) = Dedup.ccLabelProp(synth)
+    assert(rounds <= 10, s"rounds $rounds")
   }
 
   test("embed-cosine near-dup pairs all clear the threshold and match brute-force cosine") {

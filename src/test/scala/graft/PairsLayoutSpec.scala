@@ -300,5 +300,36 @@ class PairsLayoutSpec extends AnyFunSuite {
       assert(spark.sharedState.cacheManager.isEmpty,
         s"cappedNgramWith($label) leaked a cache entry after releasing its handles")
     }
+    // the handle-returning MinHash entries, over a 90/10 corpus/batch split
+    // and the signature index written from the corpus slice
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val corpus = docs.filter(col("doc_id") % 10 =!= 7)
+    val batch = docs.filter(col("doc_id") % 10 === 7)
+    val dir = java.nio.file.Files.createTempDirectory("graft_with_probe").toString
+    try {
+      PairsLayout.writeIndexed(spark, corpus, dir, threshold)
+      for ((label, run) <- Seq[(String, () => (DataFrame, Seq[DataFrame]))](
+          ("minhashArtifactsWith", () => {
+            val a = Dedup.minhashArtifactsWith(docs, threshold); (a.pairs, a.handles) }),
+          ("nearDupPairsWith", () => Dedup.nearDupPairsWith(docs, threshold)),
+          ("minhashAgainstWith", () => Dedup.minhashAgainstWith(batch, corpus, threshold)),
+          ("minhashProbeIndexWith", () => Dedup.minhashProbeIndexWith(batch,
+            graft.sources.SignatureLayout.readBands(spark, dir),
+            graft.sources.SignatureLayout.readShingles(spark, dir),
+            graft.sources.SignatureLayout.readSizes(spark, dir), threshold)))) {
+        spark.sharedState.cacheManager.clearCache()
+        val (out, handles) = run()
+        assert(out.collect().nonEmpty, s"$label: fixture vacuous, no pairs")
+        handles.foreach(_.unpersist(blocking = true))
+        assert(spark.sharedState.cacheManager.isEmpty,
+          s"$label leaked a cache entry after releasing its handles")
+      }
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+      }
+      rm(new java.io.File(dir))
+    }
   }
 }

@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Embedder
+import graft.sources.IndexBuild
 
 /** The search read path's fixed cost: the query vector is computed on the
   * driver ([[Embedder.queryVector]]) and the index schema comes from one
-  * parquet footer (`Graft.tableOrEmpty`), so each search tool call is ONE
-  * Spark job — pinned here by counting job starts — and neither shortcut
-  * changes an answer. */
+  * parquet footer ([[IndexBuild.tableOrEmpty]]), so each search tool call
+  * is ONE Spark job — pinned here by counting job starts — and neither
+  * shortcut changes an answer. */
 class SearchPathSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val projectDir =
@@ -100,7 +101,7 @@ class SearchPathSpec extends AnyFunSuite {
 
   test("the footer reader returns spark.read.parquet's schema") {
     Seq("code_elements", "file_summaries").foreach { t =>
-      val viaFooter = Graft.tableOrEmpty(spark, s"$indexDir/$t").get
+      val viaFooter = IndexBuild.tableOrEmpty(spark, s"$indexDir/$t").get
       assert(viaFooter.schema == spark.read.parquet(s"$indexDir/$t").schema, t)
       assert(viaFooter.count() == spark.read.parquet(s"$indexDir/$t").count(), t)
     }
@@ -137,7 +138,7 @@ class SearchPathSpec extends AnyFunSuite {
       Files.createFile(root.resolve(t).resolve("_SUCCESS"))
     }
     Seq(root.toString, root.resolve("missing").toString).foreach { dir =>
-      assert(Graft.tableOrEmpty(spark, s"$dir/code_elements").isEmpty, dir)
+      assert(IndexBuild.tableOrEmpty(spark, s"$dir/code_elements").isEmpty, dir)
       assert(Graft.searchCode(spark, dir, "q").collect().isEmpty, dir)
       assert(Graft.searchFiles(spark, dir, "q").collect().isEmpty, dir)
       assert(Graft.getFileContext(spark, dir, "a.py").collect().isEmpty, dir)
