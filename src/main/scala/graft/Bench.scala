@@ -70,7 +70,11 @@ object Bench {
       .mkString("{", ",", "}")
     val loads = results.map { case (k, _, l) => s"\"" + k + "\":" + l }
       .mkString("{", ",", "}")
-    val detailPath = java.nio.file.Paths.get("out/bench_detail.json")
+    // one detail file per run, named by its UTC end time, so a later run
+    // never overwrites the record an earlier headline cites
+    val stamp = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
+    val detailPath = java.nio.file.Paths.get(s"out/bench_$stamp.json")
     java.nio.file.Files.createDirectories(detailPath.getParent)
     java.nio.file.Files.write(detailPath,
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"sf":"$sfDir","reps":$Reps,"estimator":"min","loadavg_start":$loadStart,"loadavg_end":$loadEnd,"loadavg_per_query":$loads}"""
@@ -86,7 +90,7 @@ object Bench {
     // skip-and-continue let later short-named entries through, so the
     // printed map was not a strict slowest-first prefix and a reader
     // could miss a slow query with a long name. The full map is always
-    // in out/bench_detail.json.
+    // in the run's detail file.
     val sorted = results.sortBy(-_._2)
     val sb = new StringBuilder
     var kept = 0
@@ -98,7 +102,7 @@ object Bench {
     }
     val sfName = new java.io.File(sfDir).getName
     val line =
-      s"""{"metric":"total","value":${r2(total)},"unit":"sec","sf":"$sfName","n_queries":${results.size},"reps":$Reps,"estimator":"min","loadavg_start":$loadStart,"loadavg_end":$loadEnd,"detail":"out/bench_detail.json","queries":{${sb.toString}}}"""
+      s"""{"metric":"total","value":${r2(total)},"unit":"sec","sf":"$sfName","n_queries":${results.size},"reps":$Reps,"estimator":"min","loadavg_start":$loadStart,"loadavg_end":$loadEnd,"detail":"$detailPath","queries":{${sb.toString}}}"""
     // Stop Spark BEFORE printing so its stop-time WARN lines cannot land
     // after the JSON line in the captured tail.
     spark.stop()

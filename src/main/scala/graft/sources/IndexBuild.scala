@@ -182,11 +182,13 @@ object IndexBuild {
     * present on a first build). Runs before every open of a live table
     * ([[tableOrEmpty]]) and at the entry of [[compact]]. */
   private[graft] def recoverSwap(spark: SparkSession, target: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val t = new org.apache.hadoop.fs.Path(target)
-    val old = new org.apache.hadoop.fs.Path(target + "_old")
-    if (!fs.exists(t) && fs.exists(old)) { fs.rename(old, t); () }
+    val t = new Path(target)
+    val old = new Path(target + "_old")
+    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // rename reports failure by returning false: an unchecked one would
+    // leave the index parked and read as "no index" (tableOrEmpty)
+    if (!fs.exists(t) && fs.exists(old) && !fs.rename(old, t))
+      throw new java.io.IOException(s"swap recovery: rename $old -> $t failed")
   }
 
   /** The one "open an index table or None" rule: the live table at `path`

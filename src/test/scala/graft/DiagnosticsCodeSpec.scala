@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Diagnostics
 
@@ -36,16 +38,17 @@ class DiagnosticsCodeSpec extends AnyFunSuite {
   // balanced parens, net +1 brace -> delimiter rule alone fires
   private val brokenJs = "function f() {\n  return 1;\n"
 
+  private val fixtures = Seq(
+    ("check.py", pyFile),
+    ("app.js", jsFile),
+    ("broken.py", brokenPy),
+    ("broken.js", brokenJs),
+    ("notes.rst", txtFile),
+    ("empty.cfg", ""))
+
   private def reports = {
     import spark.implicits._
-    val files = Seq(
-      ("check.py", pyFile),
-      ("app.js", jsFile),
-      ("broken.py", brokenPy),
-      ("broken.js", brokenJs),
-      ("notes.rst", txtFile),
-      ("empty.cfg", "")).toDF("file_path", "content")
-    Diagnostics.codeDiagnostics(files).collect()
+    Diagnostics.codeDiagnostics(fixtures.toDF("file_path", "content")).collect()
       .map(r => r.getAs[String]("file_path") -> r).toMap
   }
 
@@ -101,5 +104,53 @@ class DiagnosticsCodeSpec extends AnyFunSuite {
       "0:error:Syntax error: unbalanced delimiters (paren=0, bracket=0, brace=1)"))
     assert(js.getAs[Long]("error_count") == 1L)
     assert(!js.getAs[Boolean]("valid"))
+  }
+
+  /** The relational composition `codeDiagnostics` replaced: files exploded
+    * into lines, the three finding relations unioned, one keyed report. */
+  private def composed(files: DataFrame): DataFrame = {
+    val withExt = files.withColumn("ext",
+      regexp_extract(col("file_path"), "\\.([^.]+)$", 1))
+    val lines = withExt
+      .select(col("file_path"), col("ext"),
+        posexplode(split(col("content"), "\n", -1)).as(Seq("idx", "line")))
+      .select(col("file_path"), col("ext"),
+        (col("idx") + 1).cast("long").as("line_no"), col("line"))
+    Diagnostics.codeReport(Diagnostics.codeLineDiagnostics(lines)
+      .unionByName(Diagnostics.codeFileDiagnostics(withExt))
+      .unionByName(Diagnostics.syntaxDiagnostics(lines)))
+  }
+
+  test("row-wise codeDiagnostics == the exploded union + keyed report, row for row") {
+    import spark.implicits._
+    val pieces = Seq("import *", "import numpy as np", "print(\"x\")", "# print(1)",
+      "console.log(1);", "// console.log(2)", "let a = 1; let b = 2;", "const x = 1",
+      "if (x) {", "}", "{", "[", "]", "(", ")", "\"\"\"", "s = \"\"\"a\"\"\" + \"\"\"",
+      "trailing   ", "x" * 130, "y" * 210, "", "ok")
+    val exts = Seq(".py", ".js", ".ts", ".tsx", ".jsx", ".txt", ".md", ".cfg", "")
+    val rnd = new scala.util.Random(11)
+    val generated = (0 until 60).map { i =>
+      val eol = if (rnd.nextInt(4) == 0) "\r\n" else "\n"
+      val body = Seq.fill(rnd.nextInt(8))(pieces(rnd.nextInt(pieces.size))).mkString(eol)
+      (f"gen/f$i%02d${exts(i % exts.size)}", body + (if (rnd.nextBoolean()) eol else ""))
+    }
+    val extra = Seq(
+      ("clean.py", "x = 1\n"), // no finding
+      ("empty.py", ""), // empty content, code file: no finding either
+      ("crlf.js", "let a = 1;\r\nconsole.log(a);\r\nif (a) {\r\n}\r\n"),
+      ("crlf.txt", "tail \r\nok  \r\nend"), // \r is not a space to rtrim
+      ("Makefile", "all:\n\tbuild   \n"), // no extension: generic rules
+      ("dir.d/README", "no newline"))
+    val files = (fixtures ++ extra ++ generated).toDF("file_path", "content").repartition(5)
+    assert(files.rdd.getNumPartitions == 5)
+    val got = Diagnostics.codeDiagnostics(files)
+    val want = composed(files)
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    assert(g == w)
+    val paths = g.map(_.getAs[String]("file_path"))
+    assert(!paths.contains("clean.py") && !paths.contains("empty.py"))
+    assert(Seq("crlf.js", "crlf.txt", "Makefile", "dir.d/README").forall(paths.contains))
+    assert(g.exists(!_.getAs[Boolean]("valid")))
   }
 }

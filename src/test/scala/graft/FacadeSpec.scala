@@ -69,6 +69,45 @@ class FacadeSpec extends AnyFunSuite {
     assert(nav.nonEmpty)
   }
 
+  test("symbol navigation == the window + distinct-count formulation") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    // the form defsAndRefs replaced: row_number for the def site,
+    // countDistinct for the spread, a global orderBy
+    def windowed(documents: DataFrame, symbols: Seq[String]): DataFrame = {
+      val w = Window.partitionBy("token").orderBy(asc("doc_id"), asc("pos"))
+      documents
+        .select(col("doc_id"),
+          posexplode(graft.functions.TextFns.tokens(col("text"))).as(Seq("pos", "token")))
+        .filter(col("token").isin(symbols: _*))
+        .withColumn("rn", row_number().over(w))
+        .groupBy("token")
+        .agg(
+          min(when(col("rn") === 1, col("doc_id"))).as("def_doc"),
+          min(when(col("rn") === 1, col("pos"))).cast("long").as("def_pos"),
+          (count(lit(1)) - 1).cast("long").as("n_refs"),
+          countDistinct(col("doc_id")).as("n_docs"))
+        .orderBy("token")
+    }
+    val docs = Tables.documents(spark, TestSpark.sf)
+    Seq(
+      Seq("spark", "table", "join", "vector"),
+      Seq("spark", "no_such_symbol_zz"), // one absent symbol
+      Seq("zzqx"), // nothing occurs
+      Seq.empty[String], // empty watchlist
+      Seq("it's", "o'brien", "table")) // quotes: never a token
+      .foreach { syms =>
+        val got = Graft.symbolNavigation(docs, syms)
+        val want = windowed(docs, syms)
+        assert(got.schema.map(f => (f.name, f.dataType)) ==
+          want.schema.map(f => (f.name, f.dataType)), syms)
+        assert(got.collect().toSeq == want.collect().toSeq, syms)
+      }
+    assert(Graft.symbolNavigation(docs, Seq("spark", "table", "join", "vector"))
+      .collect().length == 4)
+    assert(Graft.symbolNavigation(docs, Seq("zzqx")).collect().isEmpty)
+  }
+
   test("missing index degrades gracefully like the reference, never throws") {
     val nowhere = "/tmp/graft_facade_no_such_index"
     assert(Graft.searchCode(spark, nowhere, "q").isEmpty)

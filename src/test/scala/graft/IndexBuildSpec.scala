@@ -254,6 +254,23 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$idx/code_elements_old").exists())
   }
 
+  test("swap recovery fails loudly when its rename fails, on the path's own FileSystem") {
+    // the path's scheme picks a local FileSystem whose rename reports
+    // failure by returning false, as Hadoop's FileSystem.rename contract
+    // allows; the session's default FileSystem stays file:///
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.${NoRenameFs.Scheme}.impl", classOf[NoRenameFs].getName)
+    conf.setBoolean(s"fs.${NoRenameFs.Scheme}.impl.disable.cache", true)
+    val dir = Files.createTempDirectory("graft_swap_norename").toString
+    Files.createDirectories(Paths.get(s"$dir/code_elements_old"))
+    val target = s"${NoRenameFs.Scheme}://$dir/code_elements"
+    val e = intercept[java.io.IOException](IndexBuild.recoverSwap(spark, target))
+    assert(e.getMessage.contains(s"$dir/code_elements_old") &&
+      e.getMessage.contains(s"$dir/code_elements failed"), e.getMessage)
+    assert(Files.isDirectory(Paths.get(s"$dir/code_elements_old")))
+    assert(!Files.exists(Paths.get(s"$dir/code_elements")))
+  }
+
   test("IVF layout: cluster-partitioned index prunes probes at the file level") {
     import org.apache.spark.sql.functions._
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -280,4 +297,16 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(sims.sameElements(sims.sorted.reverse))
     assert(hits.forall(_.getAs[Double]("similarity") > 0.0))
   }
+}
+
+/** A local FileSystem under its own scheme whose `rename` always returns
+  * false: the failure mode swap recovery must surface. */
+class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${NoRenameFs.Scheme}:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    false
+}
+
+object NoRenameFs {
+  val Scheme = "graftnorename"
 }

@@ -14,7 +14,9 @@ import graft.sources.IndexBuild
   * driver ([[Embedder.queryVector]]) and the index schema comes from one
   * parquet footer ([[IndexBuild.tableOrEmpty]]), so each search tool call
   * is ONE Spark job — pinned here by counting job starts — and neither
-  * shortcut changes an answer. */
+  * shortcut changes an answer. The row-wise diagnostics plan folds to a
+  * local relation (no job) and symbol navigation is one token-keyed
+  * exchange (a map-stage job and a result job). */
 class SearchPathSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val projectDir =
@@ -97,6 +99,17 @@ class SearchPathSpec extends AnyFunSuite {
       Graft.getFileContext(spark, nowhere, "a.py").collect()
       ()
     } == 0)
+  }
+
+  test("getDiagnostics runs no Spark job; symbolNavigation runs two") {
+    val content = "import *\nprint(\"x\")\ndef f(:\n    return 1\n"
+    assert(Graft.getDiagnostics(spark, "a.py", content).collect().nonEmpty)
+    assert(jobsOf(Graft.getDiagnostics(spark, "a.py", content).collect()) == 0)
+    assert(jobsOf(Graft.getDiagnostics(spark, "clean.py", "x = 1\n").collect()) == 0)
+    assert(jobsOf(Graft.validateCode(spark, "a.py", content)) == 0)
+    val docs = Tables.documents(spark, TestSpark.sf)
+    assert(Graft.symbolNavigation(docs, Seq("spark", "table")).collect().nonEmpty)
+    assert(jobsOf(Graft.symbolNavigation(docs, Seq("spark", "table")).collect()) == 2)
   }
 
   test("the footer reader returns spark.read.parquet's schema") {
