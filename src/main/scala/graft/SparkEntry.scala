@@ -134,17 +134,19 @@ object SparkEntry {
     "q_stream_graph" -> ((s, dir) =>
       graft.streaming.StreamOps.streamedGraphMaintenance(s, dir)),
     // HNSW-analog query path: greedy beam walk over the persisted graph
-    // (ensure = amortized build; the walk itself is hops tiny jobs, and
-    // since r11 the seeding probes the artifact's stored sign relation —
-    // no per-search corpus rescan, ADVICE #4)
+    // (ensure = amortized build). The walk state lives on the driver: each
+    // step is one narrow job reading only its ids' vector and edge rows by
+    // literal IN lists, seeded from the stored sign relation, and the
+    // result is a local relation (eager, at most hops + 6 jobs)
     "q_graph_search" -> ((s, dir) => {
       val (g, sg) = graft.sources.GraphLayout.ensureArt(s, emb(s, dir), dir, k = 16)
       graft.operators.NnDescent.graphSearch(emb(s, dir), g,
         qvec(s, dir), beam = 16, signs = Some(sg))
     }),
     // the flagship Q1 filter on the GRAPH path: unfiltered walk (filtered
-    // walks sever connectivity), post-filter at selection, beam widened
-    // for selectivity (the HNSW post-filter/efSearch convention)
+    // walks sever connectivity), the predicate evaluated as a flag on the
+    // scored rows and applied at selection, beam widened for selectivity
+    // (the HNSW post-filter/efSearch convention); same driver-held walk
     "q_graph_search_filtered" -> ((s, dir) => {
       val (g, sg) = graft.sources.GraphLayout.ensureArt(s, emb(s, dir), dir, k = 16)
       graft.operators.NnDescent.graphSearch(emb(s, dir), g,

@@ -114,12 +114,17 @@ object Diagnostics {
   // the error channel they fed is kept live by a relational
   // syntax-plausibility check instead ([[syntaxDiagnostics]]: per-file
   // delimiter-balance + triple-quote-parity aggregates, error severity); and
-  // trim() strips spaces where Python's str.strip() strips all whitespace
-  // (identical on this corpus, and identical between Spark and DuckDB, which
-  // is what the oracle requires).
+  // stripping covers the ASCII whitespace set ([[Ws]]), where Python's
+  // str.strip() also strips the \x1c-\x1f separators and Unicode spaces
+  // (identical between Spark and DuckDB, which is what the oracle requires).
   // ---------------------------------------------------------------------------
 
   private val JsExts = Seq("js", "ts", "tsx", "jsx")
+  /** The ASCII whitespace set: space, \t, \n, \r, \x0b, \x0c. Spark's
+    * one-argument trim strips spaces only. */
+  private val Ws = " \t\n\r\u000b\u000c"
+  /** [[Ws]] in DuckDB, whose string literals process no escapes. */
+  private val DuckWs = Ws.map(c => s"chr(${c.toInt})").mkString("(", " || ", ")")
   private def isPy(ext: Column): Column = ext === "py"
   private def isJs(ext: Column): Column = ext.isin(JsExts: _*)
   private def isCode(ext: Column): Column = isPy(ext) || isJs(ext)
@@ -129,7 +134,7 @@ object Diagnostics {
     * `get_diagnostics` file-extension dispatch, lsp_tool.py:97-115): one
     * rule per entry, null where it does not fire, over one line's text. */
   def lineRules(line: Column, ext: Column): Column = {
-    val sl = trim(line)
+    val sl = trim(line, Ws)
     val semiCount = size(split(sl, ";", -1)) - 1
     array(
       // python: lsp_tool.py:146-156
@@ -152,7 +157,7 @@ object Diagnostics {
       // generic: lsp_tool.py:253-260
       rule(isGeneric(ext) && length(line) > 200,
         "warning", concat(lit("Very long line ("), length(line), lit(" chars)"))),
-      rule(isGeneric(ext) && rtrim(line) =!= line, "warning", lit("Trailing whitespace")))
+      rule(isGeneric(ext) && rtrim(line, Ws) =!= line, "warning", lit("Trailing whitespace")))
   }
 
   /** Characters of `text` inside non-overlapping occurrences of `s`:
@@ -191,7 +196,7 @@ object Diagnostics {
     * trailing newline — independent predicates, both can fire. */
   def fileRules(content: Column, ext: Column): Column =
     array(
-      rule(isGeneric(ext) && trim(content) === "", "warning", lit("File is empty")),
+      rule(isGeneric(ext) && trim(content, Ws) === "", "warning", lit("File is empty")),
       rule(isGeneric(ext) && !content.endsWith("\n"), "warning",
         lit("File doesn't end with newline")))
 
@@ -352,36 +357,36 @@ object Diagnostics {
        |            FROM ch)),
        |msg AS (
        |  SELECT file_path, line_no, 'warning' AS severity, 'Wildcard import detected' AS message
-       |  FROM v WHERE ext = 'py' AND starts_with(trim(line), 'import ')
-       |           AND NOT contains(trim(line), ' as ') AND contains(trim(line), '*')
+       |  FROM v WHERE ext = 'py' AND starts_with(trim(line, $DuckWs), 'import ')
+       |           AND NOT contains(trim(line, $DuckWs), ' as ') AND contains(trim(line, $DuckWs), '*')
        |  UNION ALL
        |  SELECT file_path, line_no, 'warning', 'print() statement found (consider logging)'
-       |  FROM v WHERE ext = 'py' AND contains(line, 'print(') AND NOT starts_with(trim(line), '#')
+       |  FROM v WHERE ext = 'py' AND contains(line, 'print(') AND NOT starts_with(trim(line, $DuckWs), '#')
        |  UNION ALL
        |  SELECT file_path, line_no, 'warning', 'Line too long (' || length(line) || ' chars)'
        |  FROM v WHERE ext IN $code AND length(line) > 120
        |  UNION ALL
        |  SELECT file_path, line_no, 'warning', 'console.log() found'
        |  FROM v WHERE ext IN $js AND contains(line, 'console.log(')
-       |           AND NOT starts_with(trim(line), '//')
+       |           AND NOT starts_with(trim(line, $DuckWs), '//')
        |  UNION ALL
        |  SELECT file_path, line_no, 'warning', 'Multiple statements on one line'
-       |  FROM v WHERE ext IN $js AND ends_with(trim(line), ';')
-       |           AND len(string_split(trim(line), ';')) - 1 > 1
+       |  FROM v WHERE ext IN $js AND ends_with(trim(line, $DuckWs), ';')
+       |           AND len(string_split(trim(line, $DuckWs), ';')) - 1 > 1
        |  UNION ALL
        |  SELECT file_path, line_no, 'warning', 'Missing semicolon?'
-       |  FROM v WHERE ext IN $js AND trim(line) <> ''
-       |           AND NOT starts_with(trim(line), '//') AND NOT starts_with(trim(line), '/*')
-       |           AND NOT ends_with(trim(line), ';') AND NOT ends_with(trim(line), '{')
-       |           AND NOT ends_with(trim(line), '}') AND NOT ends_with(trim(line), ',')
-       |           AND NOT contains(trim(line), 'if (') AND NOT contains(trim(line), 'for (')
-       |           AND NOT contains(trim(line), 'while (')
+       |  FROM v WHERE ext IN $js AND trim(line, $DuckWs) <> ''
+       |           AND NOT starts_with(trim(line, $DuckWs), '//') AND NOT starts_with(trim(line, $DuckWs), '/*')
+       |           AND NOT ends_with(trim(line, $DuckWs), ';') AND NOT ends_with(trim(line, $DuckWs), '{')
+       |           AND NOT ends_with(trim(line, $DuckWs), '}') AND NOT ends_with(trim(line, $DuckWs), ',')
+       |           AND NOT contains(trim(line, $DuckWs), 'if (') AND NOT contains(trim(line, $DuckWs), 'for (')
+       |           AND NOT contains(trim(line, $DuckWs), 'while (')
        |  UNION ALL
        |  SELECT file_path, line_no, 'warning', 'Very long line (' || length(line) || ' chars)'
        |  FROM v WHERE ext NOT IN $code AND length(line) > 200
        |  UNION ALL
        |  SELECT file_path, line_no, 'warning', 'Trailing whitespace'
-       |  FROM v WHERE ext NOT IN $code AND rtrim(line) <> line
+       |  FROM v WHERE ext NOT IN $code AND rtrim(line, $DuckWs) <> line
        |  UNION ALL
        |  SELECT DISTINCT file_path, 0 AS line_no, 'warning', 'File doesn''t end with newline'
        |  FROM v WHERE ext NOT IN $code

@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.functions.VectorFns.{duckSignBucketAt, signBucketAt}
-import graft.functions.VecExprs.dotc
+import graft.functions.VecExprs.{cosineTo, dotc}
 import graft.functions.VectorFns.duckDot
 
 /** Graph-based ANN construction: the k-NN graph by NN-descent
@@ -438,21 +442,36 @@ object NnDescent {
     * entries stalls in local minima: measured exact-top-10 recall from
     * lowest-id entries was 4/10 at sf0.001 vs 7/10 LSH-seeded, 9/10 at
     * sf0.01), unioned with the `beam` lowest vec_ids so the seed set is
-    * never empty when the query's buckets are singletons.
+    * never empty when the query's buckets are singletons. Seeding reads
+    * the stored row of `excludeId`: its band keys, at the width
+    * [[bitsFor]] derives from the sign relation's count, are the query's
+    * buckets; without that row there are no LSH seeds.
     *
-    * Per hop: expand the beam's stored out-edges (a tiny join against the
-    * [[graft.sources.GraphLayout]] artifact — broadcast-beam at any
-    * scale; at 100 TB the vector fetch is a point-lookup join against
-    * the bucketed vector layout), drop already-visited nodes, score the
-    * frontier exactly against the query, fold into the visited set, and
-    * re-cut the beam to the best `beam` visited. `hops` is fixed, so the
-    * walk is `hops` tiny jobs over eagerly-checkpointed ≤(beam·k·hops)-row
-    * state — the MMR loop discipline. Output: the best `k` visited.
+    * The walk's state is bounded — one query vector, a beam of `beam`
+    * ids, a frontier of ≤ beam·k ids — so it lives on the driver and
+    * every step is one narrow job selected by literal `IN` lists: no join,
+    * no checkpoint, no persisted state. A step over an id set S collects
+    * the union of S's index rows (exact cosine against the query literal,
+    * [[graft.functions.VecExprs.cosineTo]], plus the `pred` flag) and S's
+    * stored out-edges; on a bucketed graph the `IN` list prunes the read
+    * to the touched buckets. Per hop the beam is the best `beam` visited
+    * ids, the frontier their fetched neighbours not yet visited; an empty
+    * frontier ends the walk early with the same answer. Jobs per call:
+    * the query row, one count over the sign relation (map stage + result),
+    * the LSH seed ids, the `beam` lowest ids, then one per scored set —
+    * at most hops + 6, fewer when the walk stops early. Output: the best
+    * `k` visited ids that satisfy `pred`, as a local relation.
     *
-    * Every score is the shared bit-exact cosine kernel; ties → vec_id;
-    * round(6) display-only. The DuckDB mirror ([[duckGraphSearch]])
-    * rebuilds the graph in SQL ([[duckKnnGraph]]'s CTE chain) and unrolls
-    * the walk hop by hop.
+    * Contract: the call is EAGER (its jobs run here, the returned frame
+    * is local); `vec_id` must be a key of `index`; `queryVec` holds at
+    * most one `qv` row (none → empty result); the driver holds at most
+    * |seeds| + hops·beam·k scored rows and k edges per scored row.
+    *
+    * Every score is the shared bit-exact cosine kernel; ranking is on raw
+    * doubles in Spark's order (NaN largest, −0.0 = 0.0, null last), ties
+    * → vec_id; round(6) display-only. The DuckDB mirror
+    * ([[duckGraphSearch]]) rebuilds the graph in SQL ([[duckKnnGraph]]'s
+    * CTE chain) and unrolls the walk hop by hop.
     */
   /** `pred`: metadata post-filter (the reference's Q1 `where=` on the
     * graph path). The walk itself stays UNFILTERED — constraining the
@@ -465,61 +484,80 @@ object NnDescent {
                   k: Int = 10, beam: Int = 8, hops: Int = 3,
                   excludeId: Long = 0L, tables: Int = 4,
                   targetOcc: Int = 16,
-                  pred: Option[org.apache.spark.sql.Column] = None,
+                  pred: Option[Column] = None,
                   signs: Option[DataFrame] = None): DataFrame = {
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    val v = index.filter(col("vec_id") =!= excludeId)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("ed"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-
-    def score(ids: DataFrame): DataFrame = ids
-      .join(v, "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        (dotc(col("ed"), col("qe")) / (col("nrm") * col("qn"))).as("s"))
-
-    val edges = graph.select(col("vec_id"), col("nbr"))
-      .filter(col("nbr") =!= excludeId)
-    // seed set: the query's own band buckets (bits derived from the FULL
-    // index count — the same relation the graph build banded) + the beam
-    // lowest ids as the never-empty fallback. When the caller holds the
-    // persisted sign relation (GraphLayout), seeding is a narrow keyed
-    // probe against it — NO embedding-column rescan per search (ADVICE
-    // #4); content is bit-identical to the recompute path, so the oracle
-    // is unchanged.
-    val bands = signs.map(bandKeysOfSigns(_, targetOcc))
-      .getOrElse(bandKeys(index, tables, targetOcc))
-    val qb = bands.filter(col("vec_id") === excludeId).select("t", "bkey")
-    val lshSeeds = bands.filter(col("vec_id") =!= excludeId)
-      .join(broadcast(qb), Seq("t", "bkey"))
-      .select("vec_id").distinct()
-    val seeds = lshSeeds
-      .union(v.select("vec_id").orderBy(asc("vec_id")).limit(beam))
-      .distinct()
-    var visited = score(seeds).localCheckpoint(true)
-    for (_ <- 1 to hops) {
-      val b = visited.orderBy(desc("s"), asc("vec_id")).limit(beam)
-        .select("vec_id")
-      val frontier = edges.join(b, "vec_id")
-        .select(col("nbr").as("vec_id")).distinct()
-        .join(visited.select("vec_id"), Seq("vec_id"), "left_anti")
-      visited = visited.union(score(frontier)).localCheckpoint(true)
-    }
-    val selected = pred match {
-      case Some(p) =>
-        visited.join(index.filter(p).select("vec_id"), "vec_id")
-      case None => visited
-    }
-    // rank the ≤k survivors without a global window (coalesce(1) +
-    // in-partition sort + monotonically_increasing_id ≡ row_number on
-    // partition 0) — keeps WindowExec warnings out of the bench tail so
-    // a real unpartitioned-window regression would stand out
-    selected.orderBy(desc("s"), asc("vec_id")).limit(k)
-      .coalesce(1).sortWithinPartitions(desc("s"), asc("vec_id"))
-      .withColumn("rank", (monotonically_increasing_id() + 1).cast("long"))
+    val out = StructType(Seq(StructField("rank", LongType, nullable = false),
+      StructField("vec_id", LongType), StructField("s", DoubleType)))
+    def local(rows: Seq[Row]): DataFrame = index.sparkSession
+      .createDataFrame(rows.asJava, out)
       .select(col("rank"), col("vec_id"), round(col("s"), 6).as("sim"))
-      .orderBy("rank")
+    val qs = queryVec.select(col("qv").cast("array<double>")).collect()
+    require(qs.length <= 1, s"graphSearch takes one query row, got ${qs.length}")
+    if (qs.isEmpty) local(Nil)
+    else {
+      val sim =
+        if (qs.head.isNullAt(0)) lit(null).cast("double")
+        else cosineTo(qs.head.getSeq[Double](0).toArray, col("ed"),
+          sqrt(dotc(col("ed"), col("ed"))))
+      val ok = pred.map(coalesce(_, lit(false))).getOrElse(lit(true))
+
+      // seeds: the stored query row's band keys, as literals
+      val sg = signs.getOrElse(signsOf(index, tables))
+      val st = sg.agg(count(lit(1)),
+        collect_set(when(col("vec_id") === excludeId, col("sgn")))).head()
+      val bits = bitsFor(st.getLong(0), targetOcc)
+      val sameBucket = st.getSeq[String](1)
+        .flatMap(s => (0 until s.length / Block).map { t =>
+          substring(col("sgn"), t * Block + 1, bits) ===
+            s.substring(t * Block, math.min(s.length, t * Block + bits))
+        }).reduceOption(_ || _)
+      def ids(df: DataFrame): Seq[Long] = df.collect().toSeq.map(_.getLong(0))
+      val lshSeeds = sameBucket.toSeq.flatMap(m =>
+        ids(sg.filter(col("vec_id") =!= excludeId && m).select("vec_id")))
+      val lowSeeds = ids(index.filter(col("vec_id") =!= excludeId)
+        .select("vec_id").orderBy(asc("vec_id")).limit(beam))
+
+      // driver state: id → (score, pred flag), id → fetched out-edges
+      val visited = mutable.Map.empty[Long, (Option[Double], Boolean)]
+      val nbrs = mutable.Map.empty[Long, mutable.ArrayBuffer[Long]]
+      def step(set: Seq[Long], withEdges: Boolean): Unit = {
+        val vs = index.filter(col("vec_id").isin(set: _*) && col("vec_id") =!= excludeId)
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("ed"),
+            ok.as("ok"))
+          .select(col("vec_id"), sim.as("s"), col("ok"), lit(null).cast("long").as("nbr"))
+        lazy val es = graph.filter(col("vec_id").isin(set: _*) && col("nbr") =!= excludeId)
+          .select(col("vec_id"), lit(null).cast("double").as("s"),
+            lit(null).cast("boolean").as("ok"), col("nbr"))
+        (if (withEdges) vs.union(es) else vs).collect().foreach { r =>
+          val id = r.getLong(0)
+          if (r.isNullAt(2)) nbrs.getOrElseUpdate(id, mutable.ArrayBuffer.empty) += r.getLong(3)
+          else visited(id) = (if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getBoolean(2))
+        }
+      }
+      // (s desc nulls last in Spark's double order, vec_id asc)
+      val byRank: Ordering[(Long, Option[Double])] = (a, b) => {
+        val c = (a._2, b._2) match {
+          case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+          case (x, y) => java.lang.Boolean.compare(x.isEmpty, y.isEmpty)
+        }
+        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+      }
+      def best(n: Int, keep: Boolean => Boolean): Seq[(Long, Option[Double])] =
+        visited.toSeq.collect { case (id, (s, f)) if keep(f) => (id, s) }
+          .sorted(byRank).take(n)
+
+      step((lshSeeds ++ lowSeeds).distinct, hops > 0)
+      var h = 1
+      while (h <= hops) {
+        val frontier = best(beam, _ => true)
+          .flatMap(b => nbrs.getOrElse(b._1, Nil)).distinct.filterNot(visited.contains)
+        if (frontier.isEmpty) h = hops + 1
+        else { step(frontier, h < hops); h += 1 }
+      }
+      local(best(k, identity).zipWithIndex.map { case ((id, s), i) =>
+        Row(i + 1L, id, s.map(Double.box).orNull)
+      })
+    }
   }
 
   /** Batched multi-query [[graphSearch]]: every (qid, qv) row walks the

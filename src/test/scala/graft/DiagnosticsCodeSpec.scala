@@ -84,6 +84,21 @@ class DiagnosticsCodeSpec extends AnyFunSuite {
     assert(empty.contains("0:warning:File doesn't end with newline"))
   }
 
+  test("line rules strip the ASCII whitespace set, as str.strip() does") {
+    import spark.implicits._
+    val lf = "let a = 1;\nconsole.log(a);\n"
+    val files = Seq(("lf.js", lf), ("crlf.js", lf.replace("\n", "\r\n")),
+      ("tail.txt", "tail \r\nok\r\n"))
+    val got = Diagnostics.codeDiagnostics(files.toDF("file_path", "content")).collect()
+      .map(r => r.getAs[String]("file_path") -> r).toMap
+    def body(f: String) = got(f).toSeq.drop(1)
+    assert(got("lf.js").schema.fieldNames.head == "file_path")
+    // CRLF reports exactly what its LF copy reports: no "Missing semicolon?"
+    assert(body("crlf.js") == body("lf.js"))
+    assert(!got("crlf.js").getAs[String]("messages").contains("Missing semicolon"))
+    assert(got("tail.txt").getAs[String]("messages").contains("1:warning:Trailing whitespace"))
+  }
+
   test("clean files are valid: line-rule banks are warning-only") {
     val clean = Seq("check.py", "app.js", "notes.rst", "empty.cfg")
     assert(clean.forall(reports(_).getAs[Boolean]("valid")))

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark.{jobsDuring, jobsOf}
+import graft.functions.VecExprs.dotc
 import graft.operators.{Knn, NnDescent}
+import graft.sources.GraphLayout
 
 /** NN-descent k-NN-graph invariants on sf0.001; exact values are gated by
   * the DuckDB oracle at sf0.01 (q_knn_graph). */
@@ -89,6 +93,144 @@ class NnDescentSpec extends AnyFunSuite {
     val multi = NnDescent.multiGraphSearch(emb, g, qm, k = 10)
       .collect().map(r => (r.getAs[Long]("rn"), r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toSeq
     assert(single == multi)
+  }
+
+  /** The join + localCheckpoint beam walk that [[NnDescent.graphSearch]]
+    * replaced, kept verbatim as the parity oracle. */
+  private def joinWalk(index: DataFrame, graph: DataFrame, queryVec: DataFrame,
+                       k: Int, beam: Int, hops: Int, excludeId: Long,
+                       pred: Option[Column], signs: Option[DataFrame]): DataFrame = {
+    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
+      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
+    val v = index.filter(col("vec_id") =!= excludeId)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("ed"))
+      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
+    def score(ids: DataFrame): DataFrame = ids
+      .join(v, "vec_id")
+      .crossJoin(broadcast(q))
+      .select(col("vec_id"),
+        (dotc(col("ed"), col("qe")) / (col("nrm") * col("qn"))).as("s"))
+    val edges = graph.select(col("vec_id"), col("nbr"))
+      .filter(col("nbr") =!= excludeId)
+    val bands = NnDescent.bandKeysOfSigns(
+      signs.getOrElse(NnDescent.signsOf(index, 4)), 16)
+    val qb = bands.filter(col("vec_id") === excludeId).select("t", "bkey")
+    val lshSeeds = bands.filter(col("vec_id") =!= excludeId)
+      .join(broadcast(qb), Seq("t", "bkey"))
+      .select("vec_id").distinct()
+    val seeds = lshSeeds
+      .union(v.select("vec_id").orderBy(asc("vec_id")).limit(beam))
+      .distinct()
+    var visited = score(seeds).localCheckpoint(true)
+    for (_ <- 1 to hops) {
+      val b = visited.orderBy(desc("s"), asc("vec_id")).limit(beam)
+        .select("vec_id")
+      val frontier = edges.join(b, "vec_id")
+        .select(col("nbr").as("vec_id")).distinct()
+        .join(visited.select("vec_id"), Seq("vec_id"), "left_anti")
+      visited = visited.union(score(frontier)).localCheckpoint(true)
+    }
+    val selected = pred match {
+      case Some(p) => visited.join(index.filter(p).select("vec_id"), "vec_id")
+      case None => visited
+    }
+    selected.orderBy(desc("s"), asc("vec_id")).limit(k)
+      .coalesce(1).sortWithinPartitions(desc("s"), asc("vec_id"))
+      .withColumn("rank", (monotonically_increasing_id() + 1).cast("long"))
+      .select(col("rank"), col("vec_id"), round(col("s"), 6).as("sim"))
+      .orderBy("rank")
+  }
+
+  test("driver-held walk == the join + localCheckpoint walk, row for row") {
+    val (g, sg) = GraphLayout.ensureArt(spark, emb, TestSpark.sf, k = 8)
+    def qv(id: Long) = emb.filter(col("vec_id") === id).select(col("embedding").as("qv"))
+    val ids = emb.select("vec_id").orderBy("vec_id").collect().map(_.getLong(0))
+    val without42 = emb.filter(col("vec_id") =!= 42L)
+    val small = emb.filter(col("vec_id") < 20L)
+    val lab3 = Some(col("label") === 3)
+    // 100 vectors and their copies under new ids, over their own graph
+    // (collected: a local relation), so the walk meets exact score ties
+    val dups = emb.filter(col("vec_id") < 100L).select("vec_id", "embedding")
+    val dupIdx = dups.unionByName(dups.withColumn("vec_id", col("vec_id") + 1000000L))
+    val dupG = NnDescent.knnGraph(dupIdx, k = 8)
+    val dupGraph = spark.createDataFrame(
+      java.util.Arrays.asList(dupG.collect(): _*), dupG.schema)
+    // (label, index, query id, k, beam, hops, pred, signs)
+    val cases = Seq[(String, DataFrame, Long, Int, Int, Int, Option[Column], Option[DataFrame])](
+      ("query 0", emb, 0L, 10, 8, 3, None, Some(sg)),
+      ("query 7, signs None", emb, 7L, 10, 8, 3, None, None),
+      ("query 123", emb, 123L, 10, 8, 3, None, Some(sg)),
+      ("last id", emb, ids.last, 10, 8, 3, None, Some(sg)),
+      ("excludeId absent from index and signs", without42, 42L, 10, 8, 3, None,
+        Some(NnDescent.signsOf(without42, 4))),
+      ("excludeId absent, signs None", without42, 42L, 10, 8, 3, None, None),
+      ("beam >= |index|", small, 3L, 5, 32, 3, None, None),
+      ("hops 0", emb, 11L, 10, 8, 0, None, Some(sg)),
+      ("hops 1", emb, 11L, 10, 8, 1, None, Some(sg)),
+      ("label 3, beam 16", emb, 0L, 5, 16, 3, lab3, Some(sg)),
+      ("label 3, signs None", emb, 19L, 5, 16, 2, lab3, None))
+    cases.foreach { case (what, index, id, k, beam, hops, pred, signs) =>
+      val got = NnDescent.graphSearch(index, g, qv(id), k = k, beam = beam,
+        hops = hops, excludeId = id, pred = pred, signs = signs)
+      val want = joinWalk(index, g, qv(id), k, beam, hops, id, pred, signs)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)), what)
+      val rows = got.collect().map(_.toString).toSeq
+      assert(rows.nonEmpty, what)
+      assert(rows == want.collect().map(_.toString).toSeq, what)
+    }
+    val tied = NnDescent.graphSearch(dupIdx, dupGraph, qv(3L), excludeId = 3L).collect()
+    val sims = tied.map(_.getAs[Double]("sim"))
+    assert(sims.distinct.length < sims.length, "no tie reached the result")
+    assert(tied.map(_.toString).toSeq == joinWalk(dupIdx, dupGraph, qv(3L), 10, 8, 3, 3L,
+      None, None).collect().map(_.toString).toSeq)
+    // no query row: empty, as the cross join with an empty query gave
+    assert(NnDescent.graphSearch(emb, g, qv(-1L), signs = Some(sg)).collect().isEmpty)
+    intercept[IllegalArgumentException] {
+      NnDescent.graphSearch(emb, g, emb.limit(2).select(col("embedding").as("qv")))
+    }
+  }
+
+  test("graphSearch runs at most hops + 6 jobs and leaves nothing persisted") {
+    // the maintain benchmark's call shape: a query DataFrame over parquet,
+    // the stored graph and sign relation, hops = 3
+    val (g, sg) = GraphLayout.ensureArt(spark, emb, TestSpark.sf, k = 8)
+    val index = emb.filter(col("vec_id") < 400L)
+    val q = emb.filter(col("vec_id") === 5L).select(col("embedding").as("qv"))
+    val sc = spark.sparkContext
+    val rdds = sc.getPersistentRDDs.keySet
+    val cached = spark.sharedState.cacheManager.isEmpty
+    val conf = spark.conf.getAll
+    var n = 0
+    // query row, count (map stage + result), LSH seeds, lowest ids, and
+    // one score + expand job per scored set: 1 + 2 + 1 + 1 + (hops + 1)
+    val jobs = jobsOf {
+      n = NnDescent.graphSearch(index, g, q, excludeId = 5L, signs = Some(sg))
+        .collect().length
+    }
+    assert(n == 10)
+    assert(jobs == 9, s"$jobs jobs")
+    assert(sc.getPersistentRDDs.keySet == rdds, "an RDD was left persisted")
+    assert(spark.sharedState.cacheManager.isEmpty == cached, "a relation was left cached")
+    assert(spark.conf.getAll == conf, "a session conf was changed")
+  }
+
+  test("upsertStored job count on an sf0.001 artifact (baseline pin)") {
+    import java.nio.file.Files
+    val base = emb.filter(col("vec_id") % 10 =!= 7)
+    val batch = emb.filter(col("vec_id") % 10 === 7).select("vec_id", "embedding")
+    val dir = Files.createTempDirectory("graft_graph_jobs").toString
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+    }
+    try {
+      GraphLayout.writeBase(spark, base, dir, k = 8)
+      // counts every job, from any thread: the upsert writes from Futures.
+      // This pins today's count; removing the upsert's O(batch) actions
+      // (eager counts, per-round checkpoints) is the next step and lowers it.
+      val jobs = jobsDuring(GraphLayout.upsertStored(spark, dir, batch, "mb-0", k = 8))
+      assert(jobs == 43, s"$jobs jobs")
+    } finally rm(new java.io.File(dir))
   }
 
   test("streamed graph maintenance across forced micro-batches equals sequential stored-graph upserts") {

@@ -1,12 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark.jobsOf
 import graft.functions.Embedder
 import graft.sources.IndexBuild
 
@@ -25,24 +23,6 @@ class SearchPathSpec extends AnyFunSuite {
     val d = Files.createTempDirectory("graft_searchpath_idx").toString
     Graft.indexCodebase(spark, projectDir, d).collect()
     d
-  }
-
-  /** Jobs started while `body` runs, attributed by a local property (so
-    * any other thread's jobs are not counted). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.probe"
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) { n.incrementAndGet(); () }
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(key, tag)
-    try { body; Bridge.drainListenerBus(spark) }
-    finally { sc.setLocalProperty(key, null); sc.removeSparkListener(l) }
-    n.get
   }
 
   private def embedRow(t: String): Array[Double] = {

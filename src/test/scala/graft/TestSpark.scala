@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** One shared session for the whole test run (spark_guide.md: one session
   * per suite; sharing across suites avoids repeated JVM-wide setup). */
@@ -19,4 +22,34 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Jobs started while `body` runs, attributed by a local property (so
+    * any other thread's jobs are not counted). Jobs submitted from pool
+    * threads are missed: see [[jobsDuring]]. */
+  def jobsOf(body: => Unit): Int = {
+    val key = "graft.spec.probe"
+    val tag = java.util.UUID.randomUUID().toString
+    counted(_.exists(_.getProperty(key) == tag)) {
+      spark.sparkContext.setLocalProperty(key, tag)
+      try body finally spark.sparkContext.setLocalProperty(key, null)
+    }
+  }
+
+  /** Every job the session starts while `body` runs, from any thread — for
+    * calls that submit work from `Future`s, whose pool threads may carry a
+    * stale inherited local property that [[jobsOf]] would misattribute.
+    * The suites run one at a time, so no other test's jobs overlap. */
+  def jobsDuring(body: => Unit): Int = counted(_ => true)(body)
+
+  private def counted(take: Option[java.util.Properties] => Boolean)(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (take(Option(e.properties))) { n.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Bridge.drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
 }
