@@ -213,83 +213,31 @@ object NnDescent {
         .select(col("vec_id").as("a"), col("nbr").as("b")),
       batch, k, tables, targetOcc)
 
-  /** [[graphUpsert]] core over an ALREADY-BUILT edge relation (a, b) —
-    * the stored-artifact path [[graft.sources.GraphLayout.upsertStored]]
-    * maintains per micro-batch without ever rebuilding the base graph. */
+  /** [[graphUpsert]] core over an ALREADY-BUILT edge relation (a, b), the
+    * in-memory reference of the stored-artifact path
+    * [[graft.sources.GraphLayout.upsertStored]] maintains per micro-batch
+    * ([[graphUpsertDelta]] computes exactly its changed lists). `frozenBits`
+    * cuts the band keys at a fixed width instead of the in-plan width of
+    * the post-insert count (the stored artifact's sidecar width). */
   def graphUpsertWith(old: DataFrame, gOldEdges: DataFrame, batch: DataFrame,
                       k: Int = 8, tables: Int = 4,
                       targetOcc: Int = 16,
-                      oldSigns: Option[DataFrame] = None,
-                      frozenBits: Option[Int] = None,
-                      storedBands: Option[DataFrame] = None): DataFrame =
-    upsertCore(old, gOldEdges, batch, k, tables, targetOcc, oldSigns,
-      deltaOnly = false, frozenBits, storedBands)
-
-  /** The TOUCHED-LISTS-ONLY upsert (round-12, the per-batch full-graph
-    * rewrite fix): returns (vec_id, nbr, rn, sim) rows for exactly the
-    * nodes whose adjacency list an insert batch CHANGES — the batch nodes
-    * plus the old nodes that receive a reversed new edge (the re-cut
-    * set). Every other old node's candidate set under [[graphUpsertWith]]
-    * is its existing edges alone, and re-scoring the same k edges with
-    * the same deterministic cosine + (desc s, asc b) rank reproduces the
-    * stored list bit-for-bit — so
-    *
-    *   graphUpsertWith(old, g, batch) ≡
-    *     stored rows for untouched ids ∪ graphUpsertDeltaWith(...)
-    *
-    * (spec-pinned). The delta form never scores the O(n·k) stored edge
-    * relation — per-batch compute is O(batch·(occ+k²) + recut·k), the
-    * HNSW-insert cost envelope the reference's in-place index pays
-    * (`vector_search_tool.py:42-46`), and the piece that lets
-    * [[graft.sources.GraphLayout.upsertStored]] rewrite only the buckets
-    * the batch touches instead of the whole artifact. */
-  def graphUpsertDeltaWith(old: DataFrame, gOldEdges: DataFrame,
-                           batch: DataFrame, k: Int = 8, tables: Int = 4,
-                           targetOcc: Int = 16,
-                           oldSigns: Option[DataFrame] = None,
-                           frozenBits: Option[Int] = None,
-                           storedBands: Option[DataFrame] = None): DataFrame =
-    upsertCore(old, gOldEdges, batch, k, tables, targetOcc, oldSigns,
-      deltaOnly = true, frozenBits, storedBands)
-
-  private def upsertCore(old: DataFrame, gOldEdges: DataFrame, batch: DataFrame,
-                         k: Int, tables: Int,
-                         targetOcc: Int,
-                         oldSigns: Option[DataFrame],
-                         deltaOnly: Boolean,
-                         frozenBits: Option[Int] = None,
-                         storedBands: Option[DataFrame] = None): DataFrame = {
+                      frozenBits: Option[Int] = None): DataFrame = {
     val batchIds = batch.select("vec_id")
     val oldOnly = old.join(batchIds, Seq("vec_id"), "left_anti")
     val full = oldOnly.unionByName(batch)
-    // band relation over the post-insert corpus: from the PERSISTED sign
-    // strings when the stored artifact provides them (only the batch's
-    // signs are computed — the corpus embedding column is never rescanned
-    // per micro-batch; same replay anti-join as `old`), else derived from
-    // the live relation. Bits are in-plan from the unioned count by
-    // default; a STORED artifact passes `frozenBits` (the width recorded
-    // in its sidecar at snapshot time — round-13: a per-batch in-plan
-    // width is a per-batch corpus count, and it's what forced the banding
-    // probe to re-key the whole sign relation every micro-batch).
-    val fullSigns = oldSigns match {
-      case Some(s) => s.join(batchIds, Seq("vec_id"), "left_anti")
-        .unionByName(signsOf(batch, tables))
-      case None => signsOf(full, tables)
-    }
+    val fullSigns = signsOf(full, tables)
     // SPLIT score join (round-11, the SignatureLayout probe shape): the
     // per-batch rescore joins the corpus-scale vector relation on both
     // pair sides. Unioning old∪batch BEFORE the join (the r10 form)
     // destroys any partitioning the stored side arrives with, so every
     // batch re-exchanged the corpus twice. Joining the two sides
     // SEPARATELY and unioning the (disjoint — ids never overlap, and the
-    // replay guard enforces it) results keeps the stored side's bucketed
-    // layout usable: the batch side is explicitly broadcast (O(batch)),
-    // the stored side joins pre-partitioned when it comes from
-    // [[graft.sources.GraphLayout]]'s bucketed vectors. Each candidate
-    // relation is eagerly checkpointed first (tiny: O(batch·(occ+k²))
-    // for newCand; the old re-cut is the O(n·k) graph relation the batch
-    // rewrites anyway), since the nested split join references the pair
-    // subtree four times (the CollapseProject re-evaluation lesson).
+    // replay guard enforces it) results keeps the stored side's layout
+    // usable: the batch side is explicitly broadcast (O(batch)). Each
+    // candidate relation is eagerly checkpointed first, since the nested
+    // split join references the pair subtree four times (the
+    // CollapseProject re-evaluation lesson).
     val vOld = oldOnly.select(col("vec_id"),
         col("embedding").cast("array<double>").as("ed"))
       .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
@@ -315,38 +263,12 @@ object NnDescent {
 
     val bids = batch.select(col("vec_id").as("a"))
     val gOld = gOldEdges.join(bids, Seq("a"), "left_anti")
-    // the post-insert band relation the bucket-candidate join probes:
-    //   - (frozen, stored): stored band rows (the caller pre-prunes to the
-    //     batch's band-key partitions — pruning only ever REMOVES rows
-    //     that can't equijoin the batch's (t, bkey) keys, so it is pure
-    //     IO) + the batch's own keys at the frozen width. NO corpus term:
-    //     neither a count nor a full re-key. Replay anti-join mirrors
-    //     `fullSigns`'s.
-    //   - (frozen, none): full re-key at the frozen width (the semantics
-    //     alone, for spec/sequential-expectation callers).
-    //   - default: in-plan width from the post-insert count.
-    // bandsX = the BATCH's band rows (the probe side), bandsY = the full
-    // post-insert band relation. In the stored path bandsX is cut
-    // directly from the batch's signs, so the x side never evaluates the
-    // stored relation at all — one fewer read of the corpus-side subtree
-    // per micro-batch (and the right shape at scale: the probe side is
-    // O(batch) by construction).
-    val (bandsX, bandsY) = (frozenBits, storedBands) match {
-      case (Some(bits), Some(sb)) =>
-        val bb = bandKeysAt(signsOf(batch, tables), bits)
-        (bb, sb.join(batchIds, Seq("vec_id"), "left_anti").unionByName(bb))
-      case (Some(bits), None) =>
-        val b = bandKeysAt(fullSigns, bits)
-        (b.join(batchIds, Seq("vec_id")), b)
-      case (None, Some(_)) => throw new IllegalArgumentException(
-        "storedBands requires frozenBits — stored band keys are only valid " +
-          "at the width they were written with")
-      case (None, None) =>
-        val b = bandKeysOfSigns(fullSigns, targetOcc)
-        (b.join(batchIds, Seq("vec_id")), b)
-    }
-    val bucketCand = bandsX.as("x")
-      .join(bandsY.as("y"),
+    // the post-insert band relation: in-plan width from its count, or the
+    // frozen width; the batch's own rows are the probe side
+    val bands = frozenBits.fold(bandKeysOfSigns(fullSigns, targetOcc))(
+      bandKeysAt(fullSigns, _))
+    val bucketCand = bands.join(batchIds, Seq("vec_id")).as("x")
+      .join(bands.as("y"),
         col("x.t") === col("y.t") && col("x.bkey") === col("y.bkey") &&
           col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
@@ -357,22 +279,191 @@ object NnDescent {
       .filter(col("a") =!= col("b"))
     val newCand = bucketCand.union(hopCand).distinct().localCheckpoint(true)
     val newEdges = topPerA(score(newCand)).localCheckpoint(true)
-    // old nodes re-cut over stored edges ∪ reversed new edges; deltaOnly
-    // restricts the stored side to the RE-CUT nodes' own lists (broadcast:
-    // the re-cut id set is O(batch·k)) — same per-a candidate sets, so
-    // per-a results are identical to the full form's
+    // old nodes re-cut over stored edges ∪ reversed new edges
     val recutRev = newEdges.select(col("b").as("a"), col("a").as("b"))
       .join(bids, Seq("a"), "left_anti") // a batch-node a-side is newEdges' job
-    val gOldSide =
-      if (deltaOnly)
-        gOld.join(broadcast(recutRev.select("a").distinct()), "a")
-      else gOld
-    val oldCand = gOldSide.union(recutRev).distinct().localCheckpoint(true)
+    val oldCand = gOld.union(recutRev).distinct().localCheckpoint(true)
     val oldEdges = topPerA(score(oldCand))
     oldEdges.unionByName(newEdges)
       .select(col("a").as("vec_id"), col("b").as("nbr"), col("rn"),
         round(col("s"), 6).as("sim"))
       .orderBy(asc("vec_id"), asc("rn"))
+  }
+
+  /** The lists an insert batch CHANGES, for the stored-artifact path
+    * ([[graft.sources.GraphLayout.upsertStored]]): (vec_id, nbr, rn, sim)
+    * rows for the batch nodes plus the old nodes that receive a reversed
+    * new edge (the re-cut set R). Every other old node's candidate set
+    * under [[graphUpsertWith]] is its own stored list, and re-scoring it
+    * with the same cosine and (s desc, b asc) rank reproduces it bit for
+    * bit, so
+    *
+    *   graphUpsertWith(vectors, graph, batch) ≡
+    *     stored rows for untouched ids ∪ graphUpsertDelta(...)
+    *
+    * (spec-pinned, replays and exact ties included). Per batch the work is
+    * O(batch·(occ + k²)) — the HNSW-insert cost envelope of the reference's
+    * in-place index (`vector_search_tool.py:42-46`) — and never scores the
+    * O(n·k) stored edge relation.
+    *
+    * That state is bounded, so it lives on the DRIVER ([[graphSearch]]'s
+    * rule): the batch is collected once (no job for the local relation
+    * upsertStored passes), and stored state arrives in one job per
+    * dependency level that has ids left to fetch, each a `Union` of narrow
+    * scans filtered to the level's ids ([[idIn]], band keys likewise):
+    *   1. `bands`' rows sharing a (t, bkey) with the batch — bucket mates;
+    *   2. the mates' stored edges and vectors;
+    *   3. the hop targets' (mates' neighbours') edges and vectors — R is a
+    *      subset of mates ∪ hop targets, so R's lists are then fetched;
+    *   4. the vectors of R's stored neighbours.
+    * Scores are [[graft.functions.DotProduct]]'s sequential loop over the
+    * same doubles, so they are bit-identical to the Spark form; ranking is
+    * Spark's double order (NaN largest, −0.0 = 0.0, null last), ties → b;
+    * `round(s, 6)` is the folded projection of the returned local relation.
+    * A zero norm gives a null score where ANSI is off and raises where it
+    * is on, as Spark's division does.
+    *
+    * Inputs: `vectors` (vec_id, embedding) and `graph` (vec_id, nbr, …) map
+    * a set of ids to the stored relations' rows — any superset of those
+    * ids' rows (a caller may prune by bucket) — and `batch` (vec_id,
+    * embedding) is the insert; vec_id is a key of the stored vectors and of
+    * `batch`. `bands` maps the batch's distinct (t, bkey) keys to stored
+    * (vec_id, t, bkey) rows at width `bits`, likewise any superset of the
+    * rows sharing one of those keys (a caller may prune by key partition). Batch ids are dropped from every stored side, as
+    * [[graphUpsertWith]]'s anti-joins drop them, so a replayed batch
+    * reduces to a valid upsert.
+    *
+    * Driver memory: at most |batch| + min(n, batch·tables·occ·(1+k) +
+    * batch·k²) vectors (mates, their neighbours, R's neighbours) and k
+    * stored edges per fetched list. */
+  private[graft] def graphUpsertDelta(vectors: Seq[Long] => DataFrame,
+                                      graph: Seq[Long] => DataFrame,
+                                      bands: Seq[(Long, String)] => DataFrame,
+                                      batch: DataFrame, k: Int, tables: Int,
+                                      bits: Int): DataFrame = {
+    val spark = batch.sparkSession
+    val ansi = spark.sessionState.conf.ansiEnabled
+    // a vector and its norm, sqrt(dotc(ed, ed)); null embedding → null ed
+    final class Vec(val ed: Array[Double]) {
+      val n: Double = if (ed == null) 0.0 else math.sqrt(dot(ed, ed))
+    }
+    def vecAt(r: Row, i: Int) = new Vec(
+      if (r.isNullAt(i)) null else r.getSeq[Double](i).toArray)
+    val bt = batch.select(col("vec_id"), col("embedding").cast("array<double>"),
+        signBucketAt(col("embedding"), 0, tables * Block)).collect()
+    val bv = bt.map(r => r.getLong(0) -> vecAt(r, 1)).toMap
+    require(bv.size == bt.length, "graphUpsertDelta: batch vec_id is not a key")
+    // band keys exactly as bandKeysAt cuts them: t < length(sgn) DIV Block
+    val keysOf = bt.map { r =>
+      val sg = if (r.isNullAt(2)) "" else r.getString(2)
+      r.getLong(0) -> (0 until sg.length / Block).map(t =>
+        (t.toLong, sg.substring(t * Block, math.min(sg.length, t * Block + bits))))
+    }
+    val keys = keysOf.flatMap(_._2).distinct.toSeq
+
+    // 1. bucket mates: stored band rows (batch ids dropped) ∪ the batch's
+    val keySet = keys.toSet
+    val inKeys = udf((t: Long, b: String) => keySet((t, b)))
+    val stored = (if (keys.isEmpty) Seq.empty[Row]
+      else bands(keys).filter(inKeys(col("t"), col("bkey")))
+        .select("vec_id", "t", "bkey").collect().toSeq)
+      .map(r => (r.getLong(0), (r.getLong(1), r.getString(2))))
+      .filterNot(r => bv.contains(r._1))
+    val byKey = (stored ++ keysOf.flatMap { case (id, ks) => ks.map(id -> _) })
+      .groupMap(_._2)(_._1)
+    val mates = keysOf.map { case (a, ks) =>
+      a -> ks.flatMap(byKey.getOrElse(_, Nil)).filter(_ != a).distinct }
+
+    // stored state fetched so far: vectors and edge lists by id
+    val vecs = mutable.Map.empty[Long, Vec]
+    val edges = mutable.Map.empty[Long, mutable.LinkedHashSet[Long]]
+    val asked, listed = mutable.Set.empty[Long]
+    def fetch(lists: Iterable[Long], vs: Iterable[Long]): Unit = {
+      val es = lists.filterNot(i => bv.contains(i) || listed(i)).toSeq.distinct
+      val ws = vs.filterNot(i => bv.contains(i) || asked(i)).toSeq.distinct
+      listed ++= es
+      asked ++= ws
+      Seq(
+        Option.when(es.nonEmpty)(graph(es).filter(idIn(es))
+          .select(col("vec_id"), col("nbr"), lit(null).cast("array<double>").as("ed"))),
+        Option.when(ws.nonEmpty)(vectors(ws).filter(idIn(ws))
+          .select(col("vec_id"), lit(null).cast("long").as("nbr"),
+            col("embedding").cast("array<double>").as("ed")))
+      ).flatten.reduceOption(_ union _).foreach(_.collect().foreach { r =>
+        val id = r.getLong(0)
+        if (r.isNullAt(1)) vecs(id) = vecAt(r, 2)
+        else edges.getOrElseUpdate(id, mutable.LinkedHashSet.empty) += r.getLong(1)
+      })
+    }
+    def vecOf(id: Long): Option[Vec] = bv.get(id).orElse(vecs.get(id))
+    def listOf(id: Long): Iterable[Long] = edges.getOrElse(id, Nil)
+    // top-k of `a` over the candidates with a vector row (the score join)
+    def top(a: Long, cand: Iterable[Long]): Seq[(Long, Option[Double])] =
+      vecOf(a).toSeq.flatMap { va =>
+        cand.toSeq.distinct.flatMap(b => vecOf(b).map { vb =>
+          b -> (if (va.ed == null || vb.ed == null) None else {
+            val d = va.n * vb.n
+            if (d != 0.0) Some(dot(va.ed, vb.ed) / d)
+            else if (ansi) throw new ArithmeticException(
+              s"graphUpsertDelta: zero norm scoring ($a, $b)")
+            else None
+          })
+        }).sorted(byRank).take(k)
+      }
+
+    // 2. mates' lists and vectors; 3. hop targets' lists and vectors
+    fetch(mates.flatMap(_._2), mates.flatMap(_._2))
+    val newCand = mates.map { case (a, ms) =>
+      a -> (ms ++ ms.flatMap(listOf).filter(_ != a)) }
+    val cand = newCand.flatMap(_._2)
+    fetch(cand, cand)
+    val newEdges = newCand.map { case (a, c) => a -> top(a, c) }
+    // 4. the re-cut set: old nodes gaining a reversed new edge, over their
+    // stored list ∪ those edges
+    val recutRev = newEdges.toSeq
+      .flatMap { case (a, l) => l.map(_._1).filterNot(bv.contains).map(_ -> a) }
+      .groupMap(_._1)(_._2)
+    fetch(Nil, recutRev.keys.flatMap(listOf))
+    val oldEdges = recutRev.map { case (r, rev) => r -> top(r, listOf(r) ++ rev) }
+
+    val out = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("nbr", LongType, nullable = false),
+      StructField("rn", LongType, nullable = false), StructField("s", DoubleType)))
+    val rows = (newEdges ++ oldEdges).toSeq.sortBy(_._1).flatMap { case (a, l) =>
+      l.zipWithIndex.map { case ((b, s), i) => Row(a, b, i + 1L, s.map(Double.box).orNull) }
+    }
+    spark.createDataFrame(rows.asJava, out)
+      .select(col("vec_id"), col("nbr"), col("rn"), round(col("s"), 6).as("sim"))
+  }
+
+  /** `vec_id` ∈ `ids`, as a hash-set lookup. A literal `IN` of thousands
+    * of ids is pushed into the parquet scan, where it costs ≈ 40 µs a row
+    * (measured on a 160,000-row graph relation: 7.0 s with a 20,000-id
+    * `IN`, 0.5 s with this filter). */
+  private[graft] def idIn(ids: Iterable[Long]): Column = {
+    val s = ids.toSet
+    udf((id: Long) => s.contains(id)).apply(col("vec_id"))
+  }
+
+  /** [[graft.functions.DotProduct]]'s loop: sequential double sum over the
+    * shorter length — the same operations in the same order, so the same
+    * bits. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** (id, score) in Spark's `ORDER BY s DESC, id` order: doubles by
+    * `SQLOrderingUtil` (NaN largest, −0.0 = 0.0), a null score last. */
+  private val byRank: Ordering[(Long, Option[Double])] = (a, b) => {
+    val c = (a._2, b._2) match {
+      case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+      case (x, y) => java.lang.Boolean.compare(x.isEmpty, y.isEmpty)
+    }
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
   }
 
   /** DuckDB mirror of [[graphUpsert]]: [[duckKnnGraph]] over the OLD
@@ -533,14 +624,6 @@ object NnDescent {
           if (r.isNullAt(2)) nbrs.getOrElseUpdate(id, mutable.ArrayBuffer.empty) += r.getLong(3)
           else visited(id) = (if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getBoolean(2))
         }
-      }
-      // (s desc nulls last in Spark's double order, vec_id asc)
-      val byRank: Ordering[(Long, Option[Double])] = (a, b) => {
-        val c = (a._2, b._2) match {
-          case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
-          case (x, y) => java.lang.Boolean.compare(x.isEmpty, y.isEmpty)
-        }
-        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
       }
       def best(n: Int, keep: Boolean => Boolean): Seq[(Long, Option[Double])] =
         visited.toSeq.collect { case (id, (s, f)) if keep(f) => (id, s) }

@@ -231,7 +231,7 @@ object IndexBuild {
     * inference touches. Spark-written footers carry the Spark schema,
     * which `readSchemaFromFooter` prefers over converting the parquet
     * schema. None when the directory holds no data file directly. */
-  private def footerSchema(spark: SparkSession, fs: FileSystem, dir: Path): Option[StructType] =
+  private[graft] def footerSchema(spark: SparkSession, fs: FileSystem, dir: Path): Option[StructType] =
     fs.listStatus(dir).iterator
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))

@@ -328,18 +328,25 @@ object SignatureLayout {
   }
 
   /** Replace `live` with `stage` by two renames; the set-aside old dir is
-    * dropped only after the new one is in place. */
-  private[sources] def swapIn(spark: SparkSession, live: String, stage: String): Unit = {
+    * dropped only after the new one is in place. A failed swap-in rename
+    * puts the set-aside dir back before it throws (as
+    * [[IndexBuild]]'s swap does), so the live relation stays readable. */
+  private[graft] def swapIn(spark: SparkSession, live: String, stage: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val livep = new org.apache.hadoop.fs.Path(live)
     val stagep = new org.apache.hadoop.fs.Path(stage)
     val oldp = new org.apache.hadoop.fs.Path(live + "_old")
     val f = livep.getFileSystem(conf)
     if (f.exists(oldp)) { f.delete(oldp, true); () }
-    if (f.exists(livep) && !f.rename(livep, oldp))
+    val hadLive = f.exists(livep)
+    if (hadLive && !f.rename(livep, oldp))
       throw new java.io.IOException(s"compaction: set-aside $livep -> $oldp failed")
-    if (!f.rename(stagep, livep))
+    if (!f.rename(stagep, livep)) {
+      if (hadLive && !f.rename(oldp, livep))
+        throw new java.io.IOException(
+          s"compaction: swap-in $stagep -> $livep failed, and so did restoring $oldp")
       throw new java.io.IOException(s"compaction: swap-in $stagep -> $livep failed")
+    }
     f.delete(oldp, true)
   }
 

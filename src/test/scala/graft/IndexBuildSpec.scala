@@ -271,6 +271,24 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(s"$dir/code_elements")))
   }
 
+  test("a failed swap-in puts the live relation back before it throws") {
+    // SignatureLayout.swapIn (compaction, reband, the NB model): the
+    // set-aside rename succeeds, the stage → live rename is refused
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.${NoSwapInFs.Scheme}.impl", classOf[NoSwapInFs].getName)
+    conf.setBoolean(s"fs.${NoSwapInFs.Scheme}.impl.disable.cache", true)
+    val dir = Files.createTempDirectory("graft_swapin_norename").toString
+    Files.createDirectories(Paths.get(s"$dir/bands"))
+    Files.write(Paths.get(s"$dir/bands/part-0.parquet"), Array[Byte](1))
+    Files.createDirectories(Paths.get(s"$dir/bands_stage"))
+    val e = intercept[java.io.IOException](graft.sources.SignatureLayout.swapIn(spark,
+      s"${NoSwapInFs.Scheme}://$dir/bands", s"${NoSwapInFs.Scheme}://$dir/bands_stage"))
+    assert(e.getMessage.contains("swap-in"), e.getMessage)
+    assert(Files.exists(Paths.get(s"$dir/bands/part-0.parquet")), "the live relation is gone")
+    assert(!Files.exists(Paths.get(s"$dir/bands_old")))
+    assert(Files.isDirectory(Paths.get(s"$dir/bands_stage")))
+  }
+
   test("IVF layout: cluster-partitioned index prunes probes at the file level") {
     import org.apache.spark.sql.functions._
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -309,4 +327,16 @@ class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object NoRenameFs {
   val Scheme = "graftnorename"
+}
+
+/** A local FileSystem under its own scheme that refuses only renames out of
+  * a `_stage` dir: the swap-in failure a swap must recover from. */
+class NoSwapInFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${NoSwapInFs.Scheme}:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getName.endsWith("_stage") && super.rename(src, dst)
+}
+
+object NoSwapInFs {
+  val Scheme = "graftnoswapin"
 }

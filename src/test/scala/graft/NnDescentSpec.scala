@@ -215,7 +215,7 @@ class NnDescentSpec extends AnyFunSuite {
     assert(spark.conf.getAll == conf, "a session conf was changed")
   }
 
-  test("upsertStored job count on an sf0.001 artifact (baseline pin)") {
+  test("upsertStored job count on an sf0.001 artifact") {
     import java.nio.file.Files
     val base = emb.filter(col("vec_id") % 10 =!= 7)
     val batch = emb.filter(col("vec_id") % 10 === 7).select("vec_id", "embedding")
@@ -226,10 +226,35 @@ class NnDescentSpec extends AnyFunSuite {
     try {
       GraphLayout.writeBase(spark, base, dir, k = 8)
       // counts every job, from any thread: the upsert writes from Futures.
-      // This pins today's count; removing the upsert's O(batch) actions
-      // (eager counts, per-round checkpoints) is the next step and lowers it.
+      // The batch collect, the band probe, the mates' lists and vectors (on
+      // a 450-vector base every stored id is a bucket mate, so the hop and
+      // re-cut levels have nothing left to fetch) and 7 commit jobs
       val jobs = jobsDuring(GraphLayout.upsertStored(spark, dir, batch, "mb-0", k = 8))
-      assert(jobs == 43, s"$jobs jobs")
+      assert(jobs == 10, s"$jobs jobs")
+    } finally rm(new java.io.File(dir))
+  }
+
+  test("upsertStored leaves nothing persisted") {
+    import java.nio.file.Files
+    val base = emb.filter(col("vec_id") < 380L)
+    val dir = Files.createTempDirectory("graft_graph_persist").toString
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+    }
+    try {
+      GraphLayout.writeBase(spark, base, dir, k = 8)
+      val sc = spark.sparkContext
+      for (lo <- Seq(380L, 420L)) {
+        val rdds = sc.getPersistentRDDs.keySet
+        val cached = spark.sharedState.cacheManager.isEmpty
+        val conf = spark.conf.getAll
+        GraphLayout.upsertStored(spark, dir, emb.filter(col("vec_id") >= lo &&
+          col("vec_id") < lo + 40L).select("vec_id", "embedding"), s"mb-$lo", k = 8)
+        assert(sc.getPersistentRDDs.keySet == rdds, "an RDD was left persisted")
+        assert(spark.sharedState.cacheManager.isEmpty == cached, "a relation was left cached")
+        assert(spark.conf.getAll == conf, "a session conf was changed")
+      }
+      assert(GraphLayout.readGraph(spark, dir).select("vec_id").distinct().count() == 460L)
     } finally rm(new java.io.File(dir))
   }
 
@@ -302,27 +327,84 @@ class NnDescentSpec extends AnyFunSuite {
   }
 
   test("delta upsert ∪ untouched stored lists equals the full upsert") {
-    val old = emb.filter(col("vec_id") % 10 =!= 7)
-    val batch = emb.filter(col("vec_id") % 10 === 7)
-    val g0full = NnDescent.knnGraph(old, k = 8)
-    val g0 = g0full.select(col("vec_id").as("a"), col("nbr").as("b"))
-    val full = NnDescent.graphUpsertWith(old, g0, batch, k = 8)
-      .orderBy(col("vec_id"), col("rn"))
-      .collect().map(_.toString).toSeq
-    val delta = NnDescent.graphUpsertDeltaWith(old, g0, batch, k = 8)
-    // the bucket-confined commit's composition: stored lists for untouched
-    // ids carried verbatim, delta lists swapped in
-    val composed = g0full
-      .join(delta.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .unionByName(delta)
-      .orderBy(col("vec_id"), col("rn"))
-      .collect().map(_.toString).toSeq
-    assert(composed == full,
-      "untouched stored rows + delta must reproduce the full upsert bit-for-bit")
+    def local(df: DataFrame) =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    def rows(df: DataFrame) = df.orderBy(col("vec_id"), col("rn")).collect().map(_.toString).toSeq
+    // (old vectors, their stored graph, batch) → the delta, checked against
+    // graphUpsertWith at the same band width composed as the bucket-confined
+    // commit composes it: stored lists of untouched ids verbatim ∪ delta
+    def check(what: String, old: DataFrame, g0full: DataFrame, batch: DataFrame): DataFrame = {
+      val bits = NnDescent.bitsFor(old.count(), 16)
+      val full = NnDescent.graphUpsertWith(old, g0full.select(col("vec_id").as("a"),
+        col("nbr").as("b")), batch, k = 8, frozenBits = Some(bits))
+      val signs = NnDescent.signsOf(old, 4)
+      val delta = NnDescent.graphUpsertDelta(_ => old, _ => g0full,
+        _ => NnDescent.bandKeysAt(signs, bits), batch, 8, 4, bits)
+      val composed = g0full
+        .join(delta.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
+        .unionByName(delta)
+      assert(delta.schema.map(f => (f.name, f.dataType)) ==
+        full.schema.map(f => (f.name, f.dataType)), what)
+      assert(rows(composed) == rows(full),
+        s"$what: untouched stored rows + delta must reproduce the full upsert bit-for-bit")
+      delta
+    }
+    val vecs = emb.select("vec_id", "embedding")
+    val old = local(vecs.filter(col("vec_id") % 10 =!= 7))
+    val batch = local(vecs.filter(col("vec_id") % 10 === 7))
+    val g0 = local(NnDescent.knnGraph(old, k = 8))
+    val delta = check("sf0.001 batch", old, g0, batch)
     // and the delta really is confined: strictly fewer lists than the corpus
     val nDelta = delta.select("vec_id").distinct().count()
-    assert(nDelta < old.count() + batch.count(),
-      s"delta covers $nDelta lists — not confined")
+    assert(nDelta < old.count() + batch.count(), s"delta covers $nDelta lists — not confined")
+
+    // a replayed batch: its ids already in the stored vectors, graph, signs
+    // and bands (the state after the first commit)
+    val absorbed = local(NnDescent.graphUpsertWith(old, g0.select(col("vec_id").as("a"),
+      col("nbr").as("b")), batch, k = 8, frozenBits = Some(NnDescent.bitsFor(old.count(), 16))))
+    check("replayed batch", local(old.unionByName(batch)), absorbed, batch)
+
+    // exact score ties: copies of vectors under new ids, in the base and in
+    // the batch, so equal scores compete for the same ranks
+    val small = vecs.filter(col("vec_id") < 200L)
+    val tOld = local(small.filter(col("vec_id") % 10 =!= 7).unionByName(
+      small.filter(col("vec_id") % 10 === 1).withColumn("vec_id", col("vec_id") + 1000000L)))
+    val tBatch = local(small.filter(col("vec_id") % 10 === 7).unionByName(
+      small.filter(col("vec_id") % 20 === 7).withColumn("vec_id", col("vec_id") + 2000000L)))
+    val tied = check("exact ties", tOld, local(NnDescent.knnGraph(tOld, k = 8)), tBatch)
+      .collect().groupBy(_.getLong(0)).values
+    assert(tied.exists(l => l.map(_.getDouble(3)).distinct.length < l.length),
+      "no tie reached a delta list")
+
+    // an empty base: every list is a batch list
+    val none = local(vecs.filter(lit(false)))
+    val noGraph = local(g0.filter(lit(false)))
+    val fromEmpty = check("empty base", none, noGraph, local(vecs.filter(col("vec_id") < 60L)))
+    assert(fromEmpty.select("vec_id").distinct().count() == 60L)
+  }
+
+  test("upsertStored in the reband crash window uses the post-insert width") {
+    import java.nio.file.{Files, Paths}
+    // base 64 vectors: frozen bits = 2; base + batch = 200: bits = 3
+    val vecs = emb.select("vec_id", "embedding")
+    val base = vecs.filter(col("vec_id") < 64L)
+    val batch = vecs.filter(col("vec_id") >= 64L && col("vec_id") < 200L)
+    assert(NnDescent.bitsFor(64, 16) != NnDescent.bitsFor(200, 16))
+    val dir = Files.createTempDirectory("graft_graph_window").toString
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+    }
+    try {
+      GraphLayout.writeBase(spark, base, dir, k = 8)
+      // rebandStored deletes the sidecar first and rewrites it last
+      Files.delete(Paths.get(s"$dir/_graft_bands"))
+      GraphLayout.upsertStored(spark, dir, batch, "mb-0", k = 8)
+      val got = GraphLayout.readGraph(spark, dir).collect().map(_.toString).sorted.toSeq
+      val want = NnDescent.graphUpsertWith(base, NnDescent.knnGraph(base, k = 8)
+          .select(col("vec_id").as("a"), col("nbr").as("b")), batch, k = 8)
+        .collect().map(_.toString).sorted.toSeq
+      assert(got == want, "the window must upsert at bitsFor of the post-insert count")
+    } finally rm(new java.io.File(dir))
   }
 
   test("bucket-confined commit self-heals a crash mid-rename (marker + stage present)") {
