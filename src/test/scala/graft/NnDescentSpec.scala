@@ -519,6 +519,27 @@ class NnDescentSpec extends AnyFunSuite {
     } finally rm(new java.io.File(dir))
   }
 
+  test("upsertStored refuses a batch over its row ceiling, naming writeBase") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_graph_ceiling").toString
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+    }
+    def files(f: java.io.File): Seq[String] = Option(f.listFiles()).toSeq.flatten
+      .flatMap(c => if (c.isDirectory) files(c) else Seq(s"${c.getPath}:${c.length}")).sorted
+    try {
+      GraphLayout.writeBase(spark, emb.filter(col("vec_id") < 64L), dir, k = 8)
+      val before = files(new java.io.File(dir))
+      val over = spark.range(GraphLayout.MaxUpsertRows + 1L).select(
+        (col("id") + 1000000L).as("vec_id"), array(lit(1.0f), lit(0.0f)).as("embedding"))
+      val e = intercept[IllegalArgumentException] {
+        GraphLayout.upsertStored(spark, dir, over, "mb-0", k = 8)
+      }
+      assert(e.getMessage.contains("writeBase"), e.getMessage)
+      assert(files(new java.io.File(dir)) == before, "a refused batch must not touch the artifact")
+    } finally rm(new java.io.File(dir))
+  }
+
   test("upsertStored rejects a base without its _graft_buckets sidecar") {
     import java.nio.file.{Files, Paths}
     val base = emb.filter(col("vec_id") % 10 =!= 7)
