@@ -235,7 +235,8 @@ object KMeans {
   /** Assign every (vec_id, sub) to its nearest codebook entry — argmin L2²,
     * lowest-cid tiebreak: the PQ family's own assignment semantics
     * ([[Knn.pqCodes]]), against an INJECTED codebook (sub, cid, ce).
-    * Output (vec_id, sub, cid) — the codes relation. */
+    * Output (vec_id, sub, cid, sv, ce) — the codes relation, with the
+    * subvector and its assigned codebook entry. */
   private[operators] def pqAssignWith(parts: DataFrame, cent: DataFrame,
                                       dsub: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -244,7 +245,7 @@ object KMeans {
       .withColumn("dist", l2Sub(dsub))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-      .select(col("vec_id"), col("sub"), col("cid"), col("sv"))
+      .select(col("vec_id"), col("sub"), col("cid"), col("sv"), col("ce"))
   }
 
   /** Per-subspace Lloyd trainer for PQ codebooks — [[train]]'s loop with

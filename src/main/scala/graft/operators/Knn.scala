@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFns.signBucket
-import graft.functions.VecExprs.{bestCentroid, dotc, quantize}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
+import graft.functions.VectorFns.{signBucket, signBucketAt}
+import graft.functions.VecExprs.{bestCentroid, cosineTo, dotc, quantize}
 
 /** k-nearest-neighbor search over an embedding column.
   *
@@ -17,6 +19,10 @@ import graft.functions.VecExprs.{bestCentroid, dotc, quantize}
   * sort and no full materialization of distances ever happens. At cluster
   * scale the scan parallelizes per parquet split and the top-k merge traffic
   * is O(k · partitions), independent of table size.
+  *
+  * The single-query entries are candidates → exact rescore → [[ranked]],
+  * with the query a driver literal ([[queryOf]]), never a broadcast
+  * relation; they are EAGER, as [[NnDescent.graphSearch]] is.
   *
   * Physical-plan hygiene for 100 TB: the embedding array is cast to double
   * and its L2 norm computed ONCE per row before any join, so a pair inside a
@@ -58,28 +64,72 @@ object Knn {
         substring(bucket, i + 1, bits - i))
     }
 
+  // ------------------------------------------------- single-query entries
+
+  /** The query rule of the single-query entries and [[NnDescent.graphSearch]]:
+    * the `qv` row collected once (one job). None for no row, Some(null) for
+    * a null `qv`; a second row fails the `require` naming `entry`. */
+  private[graft] def queryOf(queryVec: DataFrame, entry: String): Option[Array[Double]] = {
+    val qs = queryVec.select(col("qv").cast("array<double>")).collect()
+    require(qs.length <= 1, s"$entry takes one query row, got ${qs.length}")
+    qs.headOption.map(arr)
+  }
+
+  private def arr(r: Row): Array[Double] =
+    if (r.isNullAt(0)) null else r.getSeq[Double](0).toArray
+
+  /** [[VecExprs.cosineTo]] (bit-identical to [[sim]]); null for a null query. */
+  private[graft] def simTo(q: Array[Double], vec: Column, norm: Column): Column =
+    if (q == null) lit(null).cast("double") else cosineTo(q, vec, norm)
+
+  /** `f` — the index side's own Column expressions — over a one-row local
+    * relation holding the query as `qe`: folded, no job
+    * ([[graft.functions.Embedder.queryVector]]'s pattern). */
+  private def fold(spark: org.apache.spark.sql.SparkSession, q: Array[Double])(
+      f: DataFrame => DataFrame): Row =
+    f(spark.createDataFrame(java.util.List.of(Row(q)),
+      StructType(Seq(StructField("qe", ArrayType(DoubleType)))))).head()
+
+  /** `plan` over the collected query; with no query row, an empty
+    * (vec_id, label, `extra`…, sim) relation. */
+  private[graft] def single(index: DataFrame, queryVec: DataFrame, entry: String,
+                            extra: StructField*)(plan: Array[Double] => DataFrame): DataFrame =
+    queryOf(queryVec, entry).map(plan).getOrElse(
+      index.sparkSession.createDataFrame(java.util.List.of[Row](), StructType(
+        (index.schema("vec_id") +: index.schema("label") +: extra) :+
+          StructField("sim", DoubleType))))
+
+  /** The one kNN rank order: raw similarity desc, ties → lowest vec_id. */
+  private val SimOrder = Seq(desc("sim_raw"), asc("vec_id"))
+
+  /** The one rank tail: (ed, nrm) candidates scored against the query,
+    * top `k` on the raw double, rounded only in the projection; `extra`
+    * sit between `label` and `sim`. */
+  private[graft] def ranked(cands: DataFrame, q: Array[Double], k: Int, extra: Column*): DataFrame =
+    cands.withColumn("sim_raw", simTo(q, col("ed"), col("nrm")))
+      .orderBy(SimOrder: _*)
+      .limit(k)
+      .select((col("vec_id") +: col("label") +: extra) :+ round(col("sim_raw"), 6).as("sim"): _*)
+
+  private def prepped(df: DataFrame): DataFrame =
+    df.withColumn("ed", col("embedding").cast("array<double>"))
+      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
+
+  private def excluded(df: DataFrame, id: Option[Long]): DataFrame =
+    id.map(i => df.filter(col("vec_id") =!= i)).getOrElse(df)
+
   /** Exact top-k by cosine similarity against one query vector.
     *
-    * `queryVec` is a 1-row DataFrame `(qv array<float>)` — it is broadcast,
-    * so the probe is a map-side operation over the index.
+    * `queryVec` is a 1-row DataFrame `(qv array<float>)`, collected once:
+    * the query is a driver literal, so the plan is one scan into a
+    * `TakeOrderedAndProject` with no query-side subplan.
     * `pred` is an optional metadata pre-filter (pushed to the parquet scan).
     */
   def topK(index: DataFrame, queryVec: DataFrame, k: Int,
-           pred: Option[Column] = None, excludeId: Option[Long] = None): DataFrame = {
-    val filtered0 = pred.map(index.filter).getOrElse(index)
-    val filtered = excludeId.map(id => filtered0.filter(col("vec_id") =!= id)).getOrElse(filtered0)
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    val ed = col("embedding").cast("array<double>")
-    filtered
-      .withColumn("ed", ed)
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .crossJoin(broadcast(q))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("sim_raw"), 6).as("sim"))
-  }
+           pred: Option[Column] = None, excludeId: Option[Long] = None): DataFrame =
+    single(index, queryVec, "topK") { q =>
+      ranked(prepped(excluded(pred.map(index.filter).getOrElse(index), excludeId)), q, k)
+    }
 
   /** Shared multi-query scoring subtree: every (query, index) pair scored,
     * no ranking yet — consumed by the window formulation ([[multiTopK]])
@@ -109,83 +159,57 @@ object Knn {
     * shuffle is partitioned by qid — at scale that is |queries| independent
     * top-k heaps, no global sort. `rn` is long so the schema is identical
     * to [[multiTopKNative]] (the two are drop-in comparable). */
-  def multiTopK(index: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(desc("sim_raw"), asc("vec_id"))
-    multiScored(index, queries)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id"), round(col("sim_raw"), 6).as("sim"), col("rn"))
-      .orderBy(asc("qid"), asc("rn"))
-  }
+  def multiTopK(index: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    perQuery(multiScored(index, queries), k)
 
   /** [[multiTopK]] through the native [[graft.plans.TopKPerKey]] operator:
     * same rows, but the per-key pruning is a bounded heap inside each task
     * instead of WindowExec's full partition sort — the rank window that
     * follows runs over ≤ k·|queries| survivors only. */
-  def multiTopKNative(index: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val pruned = graft.plans.TopKPerKey.perKey(
+  def multiTopKNative(index: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    perQuery(graft.plans.TopKPerKey.perKey(
       multiScored(index, queries).select(col("qid"), col("vec_id"), col("sim_raw")),
       keyCols = Seq("qid"),
-      orderCols = Seq(("sim_raw", false), ("vec_id", true)), k = k)
-    val w = Window.partitionBy("qid").orderBy(desc("sim_raw"), asc("vec_id"))
-    pruned
-      .withColumn("rn", row_number().over(w).cast("long"))
-      // re-prune: the native operator's contract is a top-k SUPERSET (it
-      // drains early under memory pressure — TopKPerKey flush contract)
+      orderCols = Seq(("sim_raw", false), ("vec_id", true)), k = k), k)
+
+  /** Both multi-query forms: the first k by `rn` within qid (re-pruning the
+    * native operator's top-k SUPERSET, the TopKPerKey flush contract). */
+  private def perQuery(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .withColumn("rn", row_number().over(Window.partitionBy("qid").orderBy(SimOrder: _*)).cast("long"))
       .filter(col("rn") <= k)
       .select(col("qid"), col("vec_id"), round(col("sim_raw"), 6).as("sim"), col("rn"))
       .orderBy(asc("qid"), asc("rn"))
-  }
 
   /** LSH-pruned top-k: only index rows in the query's sign-bucket are
     * scanned. With `bits` bucket bits the candidate set shrinks ~2^bits-fold;
-    * the bucket-equality join broadcasts the (tiny) query side.
+    * the query's bucket is a literal, so the prune is a scan filter.
     */
-  def topKLsh(index: DataFrame, queryVec: DataFrame, k: Int, bits: Int): DataFrame = {
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-      .withColumn("qbucket", signBucket(col("qe"), bits))
-    index
-      .withColumn("bucket", signBucket(col("embedding"), bits))
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .join(broadcast(q), col("bucket") === col("qbucket"))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("bucket"), round(col("sim_raw"), 6).as("sim"))
-  }
+  def topKLsh(index: DataFrame, queryVec: DataFrame, k: Int, bits: Int): DataFrame =
+    single(index, queryVec, "topKLsh", StructField("bucket", StringType)) { q =>
+      val home = fold(index.sparkSession, q)(_.select(signBucket(col("qe"), bits))).getString(0)
+      ranked(prepped(index.withColumn("bucket", signBucket(col("embedding"), bits))
+        .filter(col("bucket") === home)), q, k, col("bucket"))
+    }
 
   /** Multi-probe LSH top-k: scans the query's sign-bucket PLUS every
     * hamming-1 neighbor bucket — the standard recall-recovery technique
     * for LSH (near-neighbors straddling one bucket-boundary bit are the
     * dominant miss mode of [[topKLsh]]). Candidate volume grows from
-    * ~N/2^bits to ~N·(bits+1)/2^bits, still sub-linear; the probe table
-    * (bits+1 rows, derived from the 1-row query) is broadcast, so the
-    * probe remains one map-side equijoin on the bucket key. `probe_dist`
-    * reports which shell each hit came from (0 = home bucket, 1 = flip).
+    * ~N/2^bits to ~N·(bits+1)/2^bits, still sub-linear; the probe set
+    * (bits+1 buckets, derived from the query) is a literal `IN` list, so
+    * the probe remains one scan filter. `probe_dist` reports which shell
+    * each hit came from (0 = home bucket, 1 = flip).
     */
-  def topKLshMultiprobe(index: DataFrame, queryVec: DataFrame, k: Int, bits: Int): DataFrame = {
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-      .withColumn("qbucket", signBucket(col("qe"), bits))
-    val flips = bitFlips(col("qbucket"), bits).map(f =>
-      struct(f.as("pbucket"), lit(1L).as("pdist")))
-    val home = struct(col("qbucket").as("pbucket"), lit(0L).as("pdist"))
-    val probes = q.select(col("qe"), col("qn"),
-        explode(array(home +: flips: _*)).as("p"))
-      .select(col("qe"), col("qn"), col("p.pbucket"), col("p.pdist"))
-    index
-      .withColumn("bucket", signBucket(col("embedding"), bits))
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .join(broadcast(probes), col("bucket") === col("pbucket"))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("bucket"), col("pdist").as("probe_dist"),
-        round(col("sim_raw"), 6).as("sim"))
-  }
+  def topKLshMultiprobe(index: DataFrame, queryVec: DataFrame, k: Int, bits: Int): DataFrame =
+    single(index, queryVec, "topKLshMultiprobe",
+        StructField("bucket", StringType), StructField("probe_dist", LongType)) { q =>
+      val probes = fold(index.sparkSession, q)(_.select(signBucket(col("qe"), bits).as("b"))
+        .select(col("b") +: bitFlips(col("b"), bits): _*))
+      ranked(prepped(index.withColumn("bucket", signBucket(col("embedding"), bits))
+          .filter(col("bucket").isin(probes.toSeq: _*))), q, k, col("bucket"),
+        when(col("bucket") === probes.getString(0), 0L).otherwise(1L).as("probe_dist"))
+    }
 
   /** Banded multi-table sign-LSH top-k — the OR-ed union-of-probes
     * construction that recovers the recall a single sign-bucket table
@@ -194,46 +218,88 @@ object Knn {
     * its own disjoint `bandBits`-dimension band ([[signBucketAt]] — the
     * minhash band trick applied to hyperplane LSH, proven in
     * [[Dedup.minhash]]); a vector is a candidate if it collides with the
-    * query in ANY table. Candidate-first: the band equijoin emits bare
-    * vec_ids, survivors are deduped, re-fetched, and EXACTLY re-ranked, so
-    * banding affects recall only, never precision.
+    * query in ANY table. Candidate-first: the query's `tables` band keys
+    * are literals, the candidate test is an OR of per-table key
+    * equalities, and survivors are EXACTLY re-ranked, so banding affects
+    * recall only, never precision.
     *
-    * Scale shape: the exploded (vec_id, t, bucket) relation is the
-    * materialized multi-table index of a deployment — `tables`× storage,
-    * the textbook multi-table LSH trade — written bucketed by (t, bucket)
-    * so a probe reads `tables` buckets instead of the corpus. The probe
-    * side (`tables` rows, derived from the 1-row query) is broadcast; the
-    * dedup keys on vec_id; the re-rank is the [[topK]] kernel over the
-    * candidate semi-join (both sides uncached — natural estimates, no
-    * broadcast lock-in).
+    * Scale shape: the (vec_id, t, bucket) relation is the materialized
+    * multi-table index of a deployment — `tables`× storage, the textbook
+    * multi-table LSH trade — written bucketed by (t, bucket) so a probe
+    * reads `tables` buckets instead of the corpus; over the raw embedding
+    * table the probe is one scan filter with no join, no dedup and no
+    * exchange.
     *
     * Parameter shape: recall per neighbor at angle θ is
     * 1 − (1 − (1 − θ/π)^bandBits)^tables — MORE tables add recall, WIDER
     * bands add pruning. bandBits·tables ≤ dim (disjoint bands).
     */
   def topKLshBanded(index: DataFrame, queryVec: DataFrame, k: Int,
-                    bandBits: Int, tables: Int): DataFrame = {
-    import graft.functions.VectorFns.signBucketAt
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    val qprobes = q.select(
-      posexplode(array((0 until tables).map(t =>
-        signBucketAt(col("qe"), t * bandBits, bandBits)): _*)).as(Seq("pt", "pbucket")))
-    val bands = index.select(col("vec_id"),
-      posexplode(array((0 until tables).map(t =>
-        signBucketAt(col("embedding"), t * bandBits, bandBits)): _*)).as(Seq("t", "bucket")))
-    val cand = bands
-      .join(broadcast(qprobes), col("t") === col("pt") && col("bucket") === col("pbucket"))
-      .select("vec_id").distinct()
-    index
-      .join(cand, Seq("vec_id"), "left_semi")
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .crossJoin(broadcast(q))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("sim_raw"), 6).as("sim"))
+                    bandBits: Int, tables: Int): DataFrame =
+    single(index, queryVec, "topKLshBanded") { q =>
+      def band(t: Int)(e: Column): Column = signBucketAt(e, t * bandBits, bandBits)
+      val keys = fold(index.sparkSession, q)(_.select((0 until tables).map(band(_)(col("qe"))): _*))
+      val hit = (0 until tables).map(t => band(t)(col("embedding")) === keys.getString(t))
+        .reduceOption(_ || _).getOrElse(lit(false))
+      ranked(prepped(index.filter(hit)), q, k)
+    }
+
+  /** The centroid relation — ONE definition for assignment and probing:
+    * if selection ever changes (e.g. sampled centroids instead of the
+    * deterministic lowest-vec_id rows), both phases change together or
+    * IVF recall silently collapses (round-4 review). */
+  private def centroids(index: DataFrame, numCentroids: Int): DataFrame =
+    prep(index.filter(col("vec_id") < numCentroids), "c")
+
+  /** IVF layout phase, exposed as its own operator: every index row gets
+    * its argmax-cosine centroid id (tiebreak: lowest cid), computed per row
+    * by the codegen'd BestCentroid expression over the centroid table
+    * collapsed to ONE broadcast array-of-structs row. A pure map-side
+    * projection: no N·C row expansion, no aggregate, no shuffle, no sort
+    * (round-2 verdict #2 — and strictly tighter than the max_by form
+    * suggested there, whose struct ordering key forces a SortAggregate
+    * fallback; see BestCentroid's scaladoc). A deployment runs this
+    * offline and writes the result `partitionBy("cluster")` so probes
+    * prune at the parquet-partition level (asserted in IndexBuildSpec).
+    * Output: (vec_id, label, ed, nrm, cluster). */
+  def ivfAssign(index: DataFrame, numCentroids: Int): DataFrame =
+    ivfAssignWith(index, centroids(index, numCentroids))
+
+  /** [[ivfAssign]] against an INJECTED centroid relation (cid, ce, cn) —
+    * the seam that makes a [[KMeans.train]]ed layout drop-in: assignment
+    * semantics (argmax cosine, lowest-cid tiebreak, codegen'd
+    * [[graft.functions.BestCentroid]]) are this one definition whether the
+    * centroids are the untrained lowest-vec_id rows or trained means. */
+  def ivfAssignWith(index: DataFrame, cent: DataFrame): DataFrame =
+    assign(prepped(index).crossJoin(broadcast(
+      cent.agg(collect_list(struct(col("cid"), col("ce"), col("cn"))).as("cents")))), col("cents"))
+
+  /** Each prepped row's argmax-cosine centroid among `cents`
+    * (array<struct<cid, ce, cn>>). */
+  private def assign(e: DataFrame, cents: Column): DataFrame =
+    e.withColumn("cluster", bestCentroid(cents, col("ed"), col("nrm")))
+      .select(col("vec_id"), col("label"), col("ed"), col("nrm"), col("cluster"))
+
+  /** The IVF probe of [[topKIvfWith]], [[topKIvfSq8]] and VectorLayout.search:
+    * the centroid rows (cid, ce, cn) collected once (one job), and the ids
+    * of the `nprobe` nearest the query — [[simTo]] folded over them, in
+    * Spark's `ORDER BY qsim DESC, cid` order. */
+  private[graft] def probeCells(cent: DataFrame, q: Array[Double], nprobe: Int): (Seq[Row], Seq[Long]) = {
+    val c = cent.select(col("cid"), col("ce").cast("array<double>"), col("cn").cast("double"))
+    val rows = c.collect().toSeq
+    val cells = c.sparkSession.createDataFrame(rows.asJava, c.schema)
+      .select(col("cid"), simTo(q, col("ce"), col("cn"))).collect().toSeq
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+      .sorted(NnDescent.byRank).take(nprobe).map(_._1)
+    (rows, cells)
+  }
+
+  /** The probed cells' rows, assigned against the collected centroids as a
+    * literal — [[ivfAssignWith]]'s BestCentroid without its broadcast. */
+  private def probed(index: DataFrame, cent: DataFrame, q: Array[Double], nprobe: Int): DataFrame = {
+    val (rows, cells) = probeCells(cent, q, nprobe)
+    assign(prepped(index), typedLit(rows.map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))))
+      .filter(col("cluster").isin(cells: _*))
   }
 
   /** IVF (inverted-file) approximate kNN — the scale path for vector search.
@@ -254,70 +320,23 @@ object Knn {
     * bounded to neighbors whose cluster wasn't probed (the standard IVF
     * trade; raise nprobe to recover).
     */
-  /** IVF layout phase, exposed as its own operator: every index row gets
-    * its argmax-cosine centroid id (tiebreak: lowest cid), computed per row
-    * by the codegen'd BestCentroid expression over the centroid table
-    * collapsed to ONE broadcast array-of-structs row. A pure map-side
-    * projection: no N·C row expansion, no aggregate, no shuffle, no sort
-    * (round-2 verdict #2 — and strictly tighter than the max_by form
-    * suggested there, whose struct ordering key forces a SortAggregate
-    * fallback; see BestCentroid's scaladoc). A deployment runs this
-    * offline and writes the result `partitionBy("cluster")` so probes
-    * prune at the parquet-partition level (asserted in IndexBuildSpec).
-    * Output: (vec_id, label, ed, nrm, cluster). */
-  /** The centroid relation — ONE definition for assignment and probing:
-    * if selection ever changes (e.g. sampled centroids instead of the
-    * deterministic lowest-vec_id rows), both phases change together or
-    * IVF recall silently collapses (round-4 review). */
-  private def centroids(index: DataFrame, numCentroids: Int): DataFrame =
-    prep(index.filter(col("vec_id") < numCentroids), "c")
-
-  def ivfAssign(index: DataFrame, numCentroids: Int): DataFrame =
-    ivfAssignWith(index, centroids(index, numCentroids))
-
-  /** [[ivfAssign]] against an INJECTED centroid relation (cid, ce, cn) —
-    * the seam that makes a [[KMeans.train]]ed layout drop-in: assignment
-    * semantics (argmax cosine, lowest-cid tiebreak, codegen'd
-    * [[graft.functions.BestCentroid]]) are this one definition whether the
-    * centroids are the untrained lowest-vec_id rows or trained means. */
-  def ivfAssignWith(index: DataFrame, cent: DataFrame): DataFrame = {
-    val e = index
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-    val centArr = broadcast(
-      cent.agg(collect_list(struct(col("cid"), col("ce"), col("cn"))).as("cents")))
-    e.crossJoin(centArr)
-      .withColumn("cluster", bestCentroid(col("cents"), col("ed"), col("nrm")))
-      .select(col("vec_id"), col("label"), col("ed"), col("nrm"), col("cluster"))
-  }
-
   def topKIvf(index: DataFrame, queryVec: DataFrame, k: Int,
               numCentroids: Int, nprobe: Int, excludeId: Option[Long] = None): DataFrame =
-    topKIvfWith(index, centroids(index, numCentroids), queryVec, k, nprobe, excludeId)
+    ivf("topKIvf", index, centroids(index, numCentroids), queryVec, k, nprobe, excludeId)
 
   /** [[topKIvf]] against an INJECTED centroid relation — probe ranking and
     * cell assignment share the SAME relation by construction (the round-4
     * "both phases change together or recall silently collapses" rule,
     * now enforced by the signature). */
   def topKIvfWith(index: DataFrame, cent: DataFrame, queryVec: DataFrame, k: Int,
-                  nprobe: Int, excludeId: Option[Long] = None): DataFrame = {
-    val assigned = ivfAssignWith(index, cent)
-    // probe list: top-nprobe centroids for the query
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    val probes = cent.crossJoin(broadcast(q))
-      .withColumn("qsim", sim(col("ce"), col("cn"), col("qe"), col("qn")))
-      .orderBy(desc("qsim"), asc("cid"))
-      .limit(nprobe)
-      .select(col("cid").as("pcid"), col("qe"), col("qn"))
-    val candidates0 = assigned.join(broadcast(probes), col("cluster") === col("pcid"))
-    val candidates = excludeId.map(id => candidates0.filter(col("vec_id") =!= id)).getOrElse(candidates0)
-    candidates
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("cluster"), round(col("sim_raw"), 6).as("sim"))
-  }
+                  nprobe: Int, excludeId: Option[Long] = None): DataFrame =
+    ivf("topKIvfWith", index, cent, queryVec, k, nprobe, excludeId)
+
+  private def ivf(entry: String, index: DataFrame, cent: DataFrame, queryVec: DataFrame,
+                  k: Int, nprobe: Int, excludeId: Option[Long]): DataFrame =
+    single(index, queryVec, entry, StructField("cluster", LongType)) { q =>
+      ranked(excluded(probed(index, cent, q, nprobe), excludeId), q, k, col("cluster"))
+    }
 
   /** IVF layout health report — per-cell fill and coherence, the report a
     * deployment reads before tuning (numCentroids, nprobe) at scale: fill
@@ -407,6 +426,24 @@ object Knn {
       .withColumn("cnq", sqrt(dotc(col("code"), col("code"))))
       .drop("scales")
 
+  /** SQ8/RP in one plan: the `c` candidates whose `f(ed)` is nearest to `f`
+    * of the query (folded), ties → lowest vec_id, then [[ranked]]. */
+  private def prefiltered(cands: DataFrame, q: Array[Double], c: Int, k: Int, extra: Column*)(
+      f: Column => Column): DataFrame = {
+    val qf = arr(fold(cands.sparkSession, q)(_.select(f(col("qe")))))
+    ranked(cands.withColumn("av", f(col("ed")))
+      .withColumn("an", sqrt(dotc(col("av"), col("av"))))
+      .withColumn("sima_raw", simTo(qf, col("av"), col("an")))
+      .orderBy(desc("sima_raw"), asc("vec_id"))
+      .limit(c), q, k, extra: _*)
+  }
+
+  /** The full index's SQ8 code book ([[sq8Scales]]) as a literal quantizer. */
+  private def sq8Of(index: DataFrame): Column => Column = {
+    val scales = typedLit(arr(sq8Scales(index).head()))
+    quantize(_, scales)
+  }
+
   /** Scalar-quantized (SQ8) top-k: rank the whole index by cosine over
     * int8 codes (4 B/dim → 1 B/dim — a 4× scan-bandwidth cut, the
     * FAISS-SQ8 memory story), keep the top `k·candMultiple` candidates,
@@ -415,37 +452,18 @@ object Knn {
     * Scale shape: the approximate pass is a map-side projection over the
     * (at deployment, materialized) codes table into a
     * `TakeOrderedAndProject` — O(C·partitions) driver merge, no global
-    * sort; the exact pass touches full vectors for C rows via a broadcast
-    * semi-join on the candidate ids. Both ranking keys are exact across
+    * sort; the exact pass re-ranks only the C survivors, which carry
+    * their full vectors (one plan, no second scan). Both ranking keys are exact across
     * engines: the quantized dot is integer-valued, the re-rank is the
     * shared [[sim]] tree. Recall loss is quantization error at the
     * candidate boundary only — measured, not asserted, in
     * [[KnnRecall.annRecall]]'s `sq8` row. */
   def topKSq8(index: DataFrame, queryVec: DataFrame, k: Int,
-              candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame = {
-    val e0 = excludeId.map(id => index.filter(col("vec_id") =!= id)).getOrElse(index)
-    val scales = sq8Scales(index)
-    val q = sq8Codes(
-      queryVec.select(col("qv").cast("array<double>").as("ed"))
-        .withColumn("qn", sqrt(dotc(col("ed"), col("ed")))), scales)
-      .select(col("ed").as("qe"), col("qn"),
-        col("code").as("qcode"), col("cnq").as("qcnq"))
-    val cands = sq8Codes(
-      e0.withColumn("ed", col("embedding").cast("array<double>")), scales)
-      .crossJoin(broadcast(q.select(col("qcode"), col("qcnq"))))
-      .withColumn("simq_raw", sim(col("code"), col("cnq"), col("qcode"), col("qcnq")))
-      .orderBy(desc("simq_raw"), asc("vec_id"))
-      .limit(k * candMultiple)
-      .select(col("vec_id"))
-    e0.withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .join(broadcast(cands), Seq("vec_id"))
-      .crossJoin(broadcast(q.select(col("qe"), col("qn"))))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("sim_raw"), 6).as("sim"))
-  }
+              candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame =
+    single(index, queryVec, "topKSq8") { q =>
+      val e0 = prepped(excluded(index, excludeId))
+      prefiltered(e0, q, k * candMultiple, k)(sq8Of(index))
+    }
 
   /** IVF × SQ8 composition — the production vector-search shape the
     * compression ladder's scaladoc promises ("SQ8 composes with IVF:
@@ -466,37 +484,11 @@ object Knn {
     * saturating pool reproduce exact top-k. */
   def topKIvfSq8(index: DataFrame, queryVec: DataFrame, k: Int,
                  numCentroids: Int = 16, nprobe: Int = 4,
-                 candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame = {
-    val cent = centroids(index, numCentroids)
-    val scales = sq8Scales(index)
-    val q0 = queryVec.select(col("qv").cast("array<double>").as("ed"))
-      .withColumn("qn", sqrt(dotc(col("ed"), col("ed"))))
-    val qc = sq8Codes(q0, scales)
-      .select(col("ed").as("qe"), col("qn"),
-        col("code").as("qcode"), col("cnq").as("qcnq"))
-    val probes = cent
-      .crossJoin(broadcast(q0.select(col("ed").as("qe"), col("qn"))))
-      .withColumn("qsim", sim(col("ce"), col("cn"), col("qe"), col("qn")))
-      .orderBy(desc("qsim"), asc("cid"))
-      .limit(nprobe)
-      .select(col("cid").as("pcid"))
-    val assigned = ivfAssign(index, numCentroids)
-    val e0 = excludeId.map(id => assigned.filter(col("vec_id") =!= id)).getOrElse(assigned)
-    val probed = e0.join(broadcast(probes), col("cluster") === col("pcid"))
-    val cands = sq8Codes(probed, scales)
-      .crossJoin(broadcast(qc.select(col("qcode"), col("qcnq"))))
-      .withColumn("simq_raw", sim(col("code"), col("cnq"), col("qcode"), col("qcnq")))
-      .orderBy(desc("simq_raw"), asc("vec_id"))
-      .limit(k * candMultiple)
-      .select(col("vec_id"))
-    probed.join(broadcast(cands), Seq("vec_id"))
-      .crossJoin(broadcast(qc.select(col("qe"), col("qn"))))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("cluster"),
-        round(col("sim_raw"), 6).as("sim"))
-  }
+                 candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame =
+    single(index, queryVec, "topKIvfSq8", StructField("cluster", LongType)) { q =>
+      val p = excluded(probed(index, centroids(index, numCentroids), q, nprobe), excludeId)
+      prefiltered(p, q, k * candMultiple, k, col("cluster"))(sq8Of(index))
+    }
 
   /** DuckDB mirror of [[topKIvfSq8]] — the q_knn_ivf assignment/probe CTEs
     * composed with the q_knn_sq8 code CTEs; the quantized dot restricted
@@ -543,17 +535,6 @@ object Knn {
       if (((h(0) >> 4) & 0xF) % 2 == 0) 1.0 else -1.0
     }
 
-  /** The projected vector as an rdim-entry array column — the codegen'd
-    * [[graft.functions.RpProject]] kernel: entry j is the sequential
-    * (left-associated) sum Σ_d v_d·s(j,d), each term exactly ±v_d, so
-    * projected coordinates are bit-identical to the oracle's
-    * `list_sum(list_transform(...))`. One expression node in the plan;
-    * still a pure scan projection (no join, no shuffle, no UDF). The
-    * original literal-tree form (rdim·dim element_at·lit terms) measured
-    * ~8.7 s plan/codegen on first execution at sf0.1 (round-6 verdict #1). */
-  private def rpProject(ed: Column, signs: Array[Array[Double]]): Column =
-    graft.functions.VecExprs.rpProject(ed, signs)
-
   /** Random-projection top-k — the DIMENSION-reduction member of the ANN
     * toolbox (IVF/LSH prune the candidate set, SQ8/PQ compress bytes per
     * dim, RP cuts the dims themselves: 64 → rdim floats, a dim/rdim
@@ -561,34 +542,18 @@ object Knn {
     * cosine in the projected space, keep the top `k·candMultiple`, exact
     * re-rank. Approximation bounds candidate loss only — returned sims
     * are exact; recall of the projection is spec-measured and recorded in
-    * SCALE.md. */
+    * SCALE.md. The projection is the codegen'd
+    * [[graft.functions.RpProject]] kernel (one expression node; the
+    * literal-tree form measured ~8.7 s plan/codegen at sf0.1, round-6
+    * verdict #1), bit-identical to the oracle's `list_sum`. */
   def topKRp(index: DataFrame, queryVec: DataFrame, k: Int,
              rdim: Int = 16, dim: Int = 64,
-             candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame = {
-    val signs = rpSigns(rdim, dim)
-    val e0 = excludeId.map(id => index.filter(col("vec_id") =!= id)).getOrElse(index)
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-      .withColumn("qrp", rpProject(col("qe"), signs))
-      .withColumn("qrn", sqrt(dotc(col("qrp"), col("qrp"))))
-    val cands = e0
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("rp", rpProject(col("ed"), signs))
-      .withColumn("rn", sqrt(dotc(col("rp"), col("rp"))))
-      .crossJoin(broadcast(q.select(col("qrp"), col("qrn"))))
-      .withColumn("simr_raw", sim(col("rp"), col("rn"), col("qrp"), col("qrn")))
-      .orderBy(desc("simr_raw"), asc("vec_id"))
-      .limit(k * candMultiple)
-      .select(col("vec_id"))
-    e0.withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .join(broadcast(cands), Seq("vec_id"))
-      .crossJoin(broadcast(q.select(col("qe"), col("qn"))))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("sim_raw"), 6).as("sim"))
-  }
+             candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame =
+    single(index, queryVec, "topKRp") { q =>
+      val signs = rpSigns(rdim, dim)
+      val e0 = prepped(excluded(index, excludeId))
+      prefiltered(e0, q, k * candMultiple, k)(graft.functions.VecExprs.rpProject(_, signs))
+    }
 
   /** DuckDB mirror of [[topKRp]] — the same md5-derived signs recomputed
     * in SQL, sequential list_sum per projected coordinate. */
@@ -622,91 +587,52 @@ object Knn {
     * (vec_id, sub, cid) — m·log2(ncent) bits per vector, the FAISS-PQ
     * memory story (64 float dims → 8 bytes at 8×16).
     *
-    * Float discipline: each of the ncent candidate distances is a LITERAL
-    * dsub-term sum of squared diffs (element_at, fixed index order) — an
-    * identical expression tree in both engines — and argmin is a strict
-    * total order (dist asc, cid asc), so codes are engine-exact.
+    * Assignment is the trained path's own [[KMeans.pqAssignWith]], so the
+    * two codebooks cannot diverge in semantics. Float discipline: each of
+    * the ncent candidate distances is a LITERAL dsub-term sum of squared
+    * diffs (element_at, fixed index order) — an identical expression tree
+    * in both engines — and argmin is a strict total order (dist asc, cid
+    * asc), so codes are engine-exact.
     *
     * Scale shape: centroids collapse to an m·ncent-row broadcast; the
     * assignment is a per-row map over the index followed by a
     * (vec_id, sub)-partitioned rank window of width ncent. At deployment
     * the codes table is the materialized artifact (written once per
-    * codebook version); queries never touch it row-by-row — they join it
-    * against an m·ncent-entry ADC table. */
-  private[graft] def pqCodes(index: DataFrame, m: Int, dsub: Int,
-                             ncent: Int): DataFrame = {
-    val cent = index.filter(col("vec_id") < ncent)
-      .withColumn("ced", col("embedding").cast("array<double>"))
-      .select(col("vec_id").as("cid"), col("ced"),
-        explode(array((0 until m).map(lit(_)): _*)).as("sub"))
-    val e = index.withColumn("ed", col("embedding").cast("array<double>"))
-      .select(col("vec_id"), col("ed"))
-    val dist = (1 to dsub).map { i =>
-      val d = element_at(col("ed"), (col("sub") * dsub + i).cast("int")) -
-        element_at(col("ced"), (col("sub") * dsub + i).cast("int"))
-      d * d
-    }.reduce(_ + _)
-    val w = Window.partitionBy("vec_id", "sub").orderBy(asc("dist"), asc("cid"))
-    e.crossJoin(broadcast(cent))
-      .withColumn("dist", dist)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    * codebook version); a query scores each code against the query
+    * literal. */
+  private[graft] def pqCodes(index: DataFrame, m: Int, dsub: Int, ncent: Int): DataFrame =
+    KMeans.pqAssignWith(KMeans.pqParts(index, m, dsub), pqBook(index, m, dsub, ncent), dsub)
       .select(col("vec_id"), col("sub"), col("cid"))
-  }
 
-  /** PQ top-k via asymmetric distance computation (ADC): precompute the
-    * query's partial dot against every (sub, cid) codebook entry — an
-    * m·ncent-row table — then score each vector as the FIXED-ORDER sum of
-    * its m code lookups (rank-indexed pivot columns added as a literal
+  /** The untrained codebook (sub, cid, ce) — [[KMeans.trainPq]]'s initial one. */
+  private def pqBook(index: DataFrame, m: Int, dsub: Int, ncent: Int): DataFrame =
+    KMeans.pqParts(index.filter(col("vec_id") < ncent), m, dsub)
+      .select(col("sub"), col("vec_id").as("cid"), col("sv").as("ce"))
+
+
+  /** PQ top-k via asymmetric distance computation (ADC): each code's
+    * partial dot against the query literal (the (sub, cid) entry's ADC
+    * value), then each vector scored as the FIXED-ORDER sum of its m
+    * partials (rank-indexed pivot columns added as a literal
     * expression, the same float discipline as [[marginPairs]]; an
     * aggregate sum over the m partials would accumulate in partition
     * order and break the oracle). Top `k·candMultiple` by approximate
     * dot, then exact cosine re-rank — approximation bounds candidate
     * LOSS only, never returned-similarity error.
     *
-    * Scale shape: the ADC table is m·ncent rows (128 at 8×16) — always
-    * broadcast; scoring joins the materialized codes table on (sub, cid)
-    * and aggregates m rows per vector (partial-agged), so the full float
-    * vectors are touched for C candidates only. Compression: 256 B/vector
+    * Scale shape: a partial is dsub multiply-adds on a code row against
+    * the query literal — no ADC relation, no join; scoring aggregates m
+    * rows per vector (partial-agged), and the full float vectors are
+    * touched for the C collected candidates only. Compression: 256 B/vector
     * float32 → m·log2(ncent) bits = 8 B at the defaults. Recall of THIS
     * (untrained) codebook is measured in [[KnnRecall.annRecall]]'s `pq`
     * row, not asserted. */
   def topKPq(index: DataFrame, queryVec: DataFrame, k: Int,
              m: Int = 8, dsub: Int = 8, ncent: Int = 16,
-             candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame = {
-    val e0 = excludeId.map(id => index.filter(col("vec_id") =!= id)).getOrElse(index)
-    val codes0 = pqCodes(index, m, dsub, ncent)
-    val codes = excludeId.map(id => codes0.filter(col("vec_id") =!= id)).getOrElse(codes0)
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    val cent = index.filter(col("vec_id") < ncent)
-      .withColumn("ced", col("embedding").cast("array<double>"))
-      .select(col("vec_id").as("cid"), col("ced"),
-        explode(array((0 until m).map(lit(_)): _*)).as("sub"))
-    val pdot = (1 to dsub).map { i =>
-      element_at(col("qe"), (col("sub") * dsub + i).cast("int")) *
-        element_at(col("ced"), (col("sub") * dsub + i).cast("int"))
-    }.reduce(_ + _)
-    val qtab = cent.crossJoin(broadcast(q.select("qe")))
-      .withColumn("pdot", pdot)
-      .select(col("sub"), col("cid"), col("pdot"))
-    val pivots = (0 until m).map(s =>
-      max(when(col("sub") === s, col("pdot"))).as(s"p$s"))
-    val cands = codes.join(broadcast(qtab), Seq("sub", "cid"))
-      .groupBy("vec_id").agg(pivots.head, pivots.tail: _*)
-      .withColumn("adot", (0 until m).map(s => col(s"p$s")).reduce(_ + _))
-      .orderBy(desc("adot"), asc("vec_id"))
-      .limit(k * candMultiple)
-      .select(col("vec_id"))
-    e0.withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .join(broadcast(cands), Seq("vec_id"))
-      .crossJoin(broadcast(q))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("sim_raw"), 6).as("sim"))
-  }
+             candMultiple: Int = 4, excludeId: Option[Long] = None): DataFrame =
+    single(index, queryVec, "topKPq") { q =>
+      pqRanked(index, pqBook(index, m, dsub, ncent), q, k, m, dsub, candMultiple, excludeId)
+    }
 
   /** [[topKPq]] over a TRAINED codebook ([[KMeans.trainPq]], `iters` Lloyd
     * rounds per subspace): codes assigned by the SHARED
@@ -721,53 +647,42 @@ object Knn {
   def topKPqTrained(index: DataFrame, queryVec: DataFrame, k: Int,
                     m: Int = 8, dsub: Int = 8, ncent: Int = 16, iters: Int = 3,
                     candMultiple: Int = 4, excludeId: Option[Long] = None,
-                    centOpt: Option[DataFrame] = None): DataFrame = {
-    val e0 = excludeId.map(id => index.filter(col("vec_id") =!= id)).getOrElse(index)
-    // centOpt: a persisted trained codebook (CentroidLayout.ensurePq) —
-    // the production "train offline, swap the codebook" path; None
-    // retrains in-query (the self-contained gate form)
-    val cent = centOpt.getOrElse(KMeans.trainPq(index, m, dsub, ncent, iters))
-    val parts = KMeans.pqParts(index, m, dsub)
-    val codes0 = KMeans.pqAssignWith(parts, cent, dsub)
-      .select(col("vec_id"), col("sub"), col("cid"))
-    val codes = excludeId.map(id => codes0.filter(col("vec_id") =!= id)).getOrElse(codes0)
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
+                    centOpt: Option[DataFrame] = None): DataFrame =
+    single(index, queryVec, "topKPqTrained") { q =>
+      // centOpt: a persisted trained codebook (CentroidLayout.ensurePq) —
+      // the production "train offline, swap the codebook" path; None
+      // retrains in-query (the self-contained gate form)
+      pqRanked(index, centOpt.getOrElse(KMeans.trainPq(index, m, dsub, ncent, iters)), q, k, m,
+        dsub, candMultiple, excludeId)
+    }
+
+  /** Both PQ entries: codes under `book` (sub, cid, ce), each code's partial
+    * dot against the query literal, the m partials summed in fixed sub
+    * order, the top `k·candMultiple` collected and re-ranked exactly. */
+  private def pqRanked(index: DataFrame, book: DataFrame, q: Array[Double],
+                       k: Int, m: Int, dsub: Int, candMultiple: Int,
+                       excludeId: Option[Long]): DataFrame = {
     val pdot = (1 to dsub).map { i =>
-      element_at(col("qe"), (col("sub") * dsub + i).cast("int")) *
-        element_at(col("ce"), i)
+      element_at(typedLit(q), (col("sub") * dsub + i).cast("int")) * element_at(col("ce"), i)
     }.reduce(_ + _)
-    val qtab = cent.crossJoin(broadcast(q.select("qe")))
+    val pivots = (0 until m).map(s => max(when(col("sub") === s, col("pdot"))).as(s"p$s"))
+    val ids = excluded(KMeans.pqAssignWith(KMeans.pqParts(index, m, dsub), book, dsub), excludeId)
       .withColumn("pdot", pdot)
-      .select(col("sub"), col("cid"), col("pdot"))
-    val pivots = (0 until m).map(s =>
-      max(when(col("sub") === s, col("pdot"))).as(s"p$s"))
-    val cands = codes.join(broadcast(qtab), Seq("sub", "cid"))
       .groupBy("vec_id").agg(pivots.head, pivots.tail: _*)
       .withColumn("adot", (0 until m).map(s => col(s"p$s")).reduce(_ + _))
       .orderBy(desc("adot"), asc("vec_id"))
       .limit(k * candMultiple)
-      .select(col("vec_id"))
-    e0.withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .join(broadcast(cands), Seq("vec_id"))
-      .crossJoin(broadcast(q))
-      .withColumn("sim_raw", sim(col("ed"), col("nrm"), col("qe"), col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("sim_raw"), 6).as("sim"))
+      .select("vec_id").collect().toSeq.map(_.getLong(0))
+    ranked(prepped(excluded(index, excludeId)).filter(col("vec_id").isin(ids: _*)), q, k)
   }
+
 
   /** DuckDB mirror of [[topKPqTrained]] — [[KMeans.duckTrainPqCtes]]'s
     * final codebook composed with the q_knn_pq code/ADC/pivot CTEs. */
   def duckTopKPqTrained(table: String, k: Int,
                         m: Int = 8, dsub: Int = 8, ncent: Int = 16, iters: Int = 3,
                         candMultiple: Int = 4): String = {
-    import graft.functions.VectorFns.duckCosine
     val distTerms = KMeans.pqTrainedDistSql(dsub)
-    val pdotTerms = KMeans.pqTrainedPdotSql(dsub)
-    val pivotCols = (0 until m).map(s =>
-      s"max(CASE WHEN sub = $s THEN pdot END)").mkString(" + ")
     s"""WITH ${graft.operators.KMeans.duckTrainPqCtes(table, m, dsub, ncent, iters)},
        |tcent AS (SELECT sub, cid, ce FROM pqt_cent$iters),
        |codes AS (SELECT vec_id, sub, cid FROM (
@@ -776,33 +691,19 @@ object Knn {
        |                     ORDER BY ($distTerms) ASC, c.cid) AS rn
        |            FROM pqt_parts p JOIN tcent c USING (sub)) t
        |          WHERE rn = 1),
-       |q AS (SELECT embedding AS qv FROM $table WHERE vec_id = 0),
-       |qtab AS (SELECT c.sub, c.cid, ($pdotTerms) AS pdot
-       |         FROM tcent c CROSS JOIN q),
-       |adot AS (SELECT vec_id, ($pivotCols) AS adot
-       |         FROM codes JOIN qtab USING (sub, cid)
-       |         WHERE vec_id <> 0 GROUP BY vec_id),
-       |cand AS (SELECT vec_id FROM adot
-       |         ORDER BY adot DESC, vec_id LIMIT ${k * candMultiple}),
-       |s AS (SELECT e.vec_id, e.label, ${duckCosine("e.embedding", "q.qv")} AS sim_raw
-       |      FROM $table e JOIN cand USING (vec_id) CROSS JOIN q)
-       |SELECT vec_id, label, round(sim_raw, 6) AS sim
-       |FROM s ORDER BY sim_raw DESC, vec_id LIMIT $k""".stripMargin
+       |${duckPqTail(table, "tcent", KMeans.pqTrainedPdotSql(dsub), k, m, candMultiple)}""".stripMargin
   }
 
   /** DuckDB mirror of [[topKPq]] — same literal distance/pivot trees. */
   def duckTopKPq(table: String, k: Int,
                  m: Int = 8, dsub: Int = 8, ncent: Int = 16,
                  candMultiple: Int = 4): String = {
-    import graft.functions.VectorFns.duckCosine
     val distTerms = (1 to dsub).map(i =>
       s"(e.embedding[c.sub*$dsub+$i]::DOUBLE - c.ced[c.sub*$dsub+$i]::DOUBLE)" +
         s" * (e.embedding[c.sub*$dsub+$i]::DOUBLE - c.ced[c.sub*$dsub+$i]::DOUBLE)")
       .mkString(" + ")
     val pdotTerms = (1 to dsub).map(i =>
       s"(q.qv[c.sub*$dsub+$i]::DOUBLE * c.ced[c.sub*$dsub+$i]::DOUBLE)").mkString(" + ")
-    val pivotCols = (0 until m).map(s =>
-      s"max(CASE WHEN sub = $s THEN pdot END)").mkString(" + ")
     s"""WITH subs AS (SELECT unnest(generate_series(0, ${m - 1})) AS sub),
        |cent AS (SELECT s.sub, e.vec_id AS cid, e.embedding AS ced
        |         FROM $table e CROSS JOIN subs s WHERE e.vec_id < $ncent),
@@ -812,9 +713,19 @@ object Knn {
        |                     ORDER BY ($distTerms) ASC, c.cid) AS rn
        |            FROM $table e CROSS JOIN cent c) t
        |          WHERE rn = 1),
-       |q AS (SELECT embedding AS qv FROM $table WHERE vec_id = 0),
+       |${duckPqTail(table, "cent", pdotTerms, k, m, candMultiple)}""".stripMargin
+  }
+
+  /** The query, ADC table, pivot sums and exact re-rank both PQ mirrors
+    * end with, over their codebook CTE `cent` and their `codes` CTE. */
+  private def duckPqTail(table: String, cent: String, pdotTerms: String,
+                         k: Int, m: Int, candMultiple: Int): String = {
+    import graft.functions.VectorFns.duckCosine
+    val pivotCols = (0 until m).map(s =>
+      s"max(CASE WHEN sub = $s THEN pdot END)").mkString(" + ")
+    s"""q AS (SELECT embedding AS qv FROM $table WHERE vec_id = 0),
        |qtab AS (SELECT c.sub, c.cid, ($pdotTerms) AS pdot
-       |         FROM cent c CROSS JOIN q),
+       |         FROM $cent c CROSS JOIN q),
        |adot AS (SELECT vec_id, ($pivotCols) AS adot
        |         FROM codes JOIN qtab USING (sub, cid)
        |         WHERE vec_id <> 0 GROUP BY vec_id),
@@ -857,21 +768,19 @@ object Knn {
     * contract: the harness clears session caches per query; a library
     * caller clears them once the result is materialized. */
   def marginPairs(index: DataFrame, srcLabel: Int, tgtLabel: Int,
-                  k: Int = 4, topM: Int = 20): DataFrame = {
-    val a = prep(index.filter(col("label") === srcLabel), "x")
-    val b = prep(index.filter(col("label") === tgtLabel), "y")
-    val scored = a.crossJoin(b)
+                  k: Int = 4, topM: Int = 20): DataFrame =
+    marginOf(index, srcLabel, tgtLabel, k, topM)(_.crossJoin(_))
+
+  /** Both margin forms: `pairs` of the two label pools scored and cached
+    * (three readers: the numerator and both k-NN pivots), per-endpoint
+    * k-NN pivot sums, hubness-corrected margin, top-M. */
+  private def marginOf(index: DataFrame, srcLabel: Int, tgtLabel: Int, k: Int, topM: Int)(
+      pairs: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val scored = pairs(prep(index.filter(col("label") === srcLabel), "x"),
+        prep(index.filter(col("label") === tgtLabel), "y"))
       .withColumn("sim_raw", sim(col("xe"), col("xn"), col("ye"), col("yn")))
       .select(col("xid"), col("yid"), col("sim_raw"))
-      .cache() // three readers: margin numerator + both k-NN pivots
-    marginOfScored(scored, k, topM)
-  }
-
-  /** The margin tail shared by [[marginPairs]] (exact, all-pairs scored)
-    * and [[marginPairsBanded]] (candidates-first): per-endpoint k-NN
-    * pivot sums over the scored relation, hubness-corrected margin,
-    * top-M. `scored` must be cached by the caller (three readers). */
-  private def marginOfScored(scored: DataFrame, k: Int, topM: Int): DataFrame = {
+      .cache()
     def knnSum(idCol: String, otherCol: String, prefix: String): DataFrame = {
       val w = Window.partitionBy(idCol).orderBy(desc("sim_raw"), asc(otherCol))
       val ranked = scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
@@ -912,45 +821,23 @@ object Knn {
   def marginPairsBanded(index: DataFrame, srcLabel: Int, tgtLabel: Int,
                         k: Int = 4, topM: Int = 20,
                         bandBits: Int = 4, tables: Int = 16): DataFrame = {
-    import graft.functions.VectorFns.signBucketAt
-    val a = prep(index.filter(col("label") === srcLabel), "x")
-    val b = prep(index.filter(col("label") === tgtLabel), "y")
     def bandsOf(df: DataFrame, idCol: String, eCol: String): DataFrame =
       df.select(col(idCol), posexplode(array((0 until tables).map(t =>
         signBucketAt(col(eCol), t * bandBits, bandBits)): _*)).as(Seq("t", "bucket")))
-    val cand = bandsOf(a, "xid", "xe")
-      .join(bandsOf(b, "yid", "ye"), Seq("t", "bucket"))
-      .select("xid", "yid").distinct()
-    val scored = cand
-      .join(a, "xid").join(b, "yid")
-      .withColumn("sim_raw", sim(col("xe"), col("xn"), col("ye"), col("yn")))
-      .select(col("xid"), col("yid"), col("sim_raw"))
-      .cache() // same three-reader lifecycle as the exact form
-    marginOfScored(scored, k, topM)
+    marginOf(index, srcLabel, tgtLabel, k, topM) { (a, b) =>
+      bandsOf(a, "xid", "xe")
+        .join(bandsOf(b, "yid", "ye"), Seq("t", "bucket"))
+        .select("xid", "yid").distinct()
+        .join(a, "xid").join(b, "yid")
+    }
   }
 
   /** DuckDB mirror of [[marginPairs]] — same fixed-order pivot sums. */
   def duckMarginPairs(table: String, srcLabel: Int, tgtLabel: Int,
                       k: Int = 4, topM: Int = 20): String = {
     import graft.functions.VectorFns.duckCosine
-    def pivotSum(id: String, other: String): String = {
-      val cols = (1 to k).map(r => s"max(CASE WHEN rn = $r THEN sim_raw END)").mkString(" + ")
-      s"""SELECT $id, ($cols) AS sm FROM (
-         |    SELECT $id, $other, sim_raw,
-         |           row_number() OVER (PARTITION BY $id
-         |             ORDER BY sim_raw DESC, $other) AS rn FROM s) t
-         |  WHERE rn <= $k GROUP BY $id""".stripMargin
-    }
-    s"""WITH a AS (SELECT vec_id AS xid, embedding AS xe FROM $table WHERE label = $srcLabel),
-       |b AS (SELECT vec_id AS yid, embedding AS ye FROM $table WHERE label = $tgtLabel),
-       |s AS (SELECT xid, yid, ${duckCosine("xe", "ye")} AS sim_raw FROM a CROSS JOIN b),
-       |nx AS (${pivotSum("xid", "yid")}),
-       |ny AS (${pivotSum("yid", "xid")}),
-       |m AS (SELECT s.xid, s.yid, s.sim_raw,
-       |             s.sim_raw / ((nx.sm + ny.sm) / ${2 * k}.0::DOUBLE) AS margin_raw
-       |      FROM s JOIN nx USING (xid) JOIN ny USING (yid))
-       |SELECT xid, yid, round(sim_raw, 6) AS sim, round(margin_raw, 6) AS margin
-       |FROM m ORDER BY margin_raw DESC, xid, yid LIMIT $topM""".stripMargin
+    duckMargin(table, srcLabel, tgtLabel, k, topM)(
+      s"s AS (SELECT xid, yid, ${duckCosine("xe", "ye")} AS sim_raw FROM a CROSS JOIN b)")
   }
 
   /** DuckDB mirror of [[marginPairsBanded]] — the same per-table
@@ -964,6 +851,20 @@ object Knn {
       (0 until tables).map(t =>
         s"SELECT $id, $t AS t, ${duckSignBucketAt(e, t * bandBits, bandBits)} AS bucket FROM $src")
         .mkString("\n       UNION ALL ")
+    duckMargin(table, srcLabel, tgtLabel, k, topM)(
+      s"""ab AS (${bands("a", "xid", "xe")}),
+         |bb AS (${bands("b", "yid", "ye")}),
+         |cand AS (SELECT DISTINCT ab.xid, bb.yid
+         |         FROM ab JOIN bb ON ab.t = bb.t AND ab.bucket = bb.bucket),
+         |s AS (SELECT c.xid, c.yid, ${duckCosine("a.xe", "b.ye")} AS sim_raw
+         |      FROM cand c JOIN a ON a.xid = c.xid JOIN b ON b.yid = c.yid)""".stripMargin)
+  }
+
+  /** Both margin mirrors: the label pools `a`/`b`, the caller's CTEs
+    * ending in the scored relation `s`, then the fixed-order k-NN pivot
+    * sums and the margin top-M. */
+  private def duckMargin(table: String, srcLabel: Int, tgtLabel: Int, k: Int, topM: Int)(
+      scored: String): String = {
     def pivotSum(id: String, other: String): String = {
       val cols = (1 to k).map(r => s"max(CASE WHEN rn = $r THEN sim_raw END)").mkString(" + ")
       s"""SELECT $id, ($cols) AS sm FROM (
@@ -974,12 +875,7 @@ object Knn {
     }
     s"""WITH a AS (SELECT vec_id AS xid, embedding AS xe FROM $table WHERE label = $srcLabel),
        |b AS (SELECT vec_id AS yid, embedding AS ye FROM $table WHERE label = $tgtLabel),
-       |ab AS (${bands("a", "xid", "xe")}),
-       |bb AS (${bands("b", "yid", "ye")}),
-       |cand AS (SELECT DISTINCT ab.xid, bb.yid
-       |         FROM ab JOIN bb ON ab.t = bb.t AND ab.bucket = bb.bucket),
-       |s AS (SELECT c.xid, c.yid, ${duckCosine("a.xe", "b.ye")} AS sim_raw
-       |      FROM cand c JOIN a ON a.xid = c.xid JOIN b ON b.yid = c.yid),
+       |$scored,
        |nx AS (${pivotSum("xid", "yid")}),
        |ny AS (${pivotSum("yid", "xid")}),
        |m AS (SELECT s.xid, s.yid, s.sim_raw,

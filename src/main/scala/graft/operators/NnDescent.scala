@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.functions.VectorFns.{duckSignBucketAt, signBucketAt}
-import graft.functions.VecExprs.{cosineTo, dotc}
+import graft.functions.VecExprs.dotc
 import graft.functions.VectorFns.duckDot
 
 /** Graph-based ANN construction: the k-NN graph by NN-descent
@@ -46,7 +46,11 @@ import graft.functions.VectorFns.duckDot
   * WindowGroupLimit-pruned (and the heap rewrite applies). The graph
   * state (n·k rows) is eagerly localCheckpoint-ed per round — the
   * iterative-state discipline (without it round r re-evaluates the whole
-  * prefix; with T=2 rounds the loop costs exactly T passes).
+  * prefix; with T=2 rounds the loop costs exactly T passes). A round's
+  * checkpoint is released once the next one is materialized; the last
+  * one backs the returned lazy graph, so an eager writer
+  * ([[graft.sources.GraphLayout.writeBase]]) [[release]]s it after its
+  * write.
   *
   * Float discipline: scoring joins the PLAIN (vec_id, ed, nrm) relation
   * (honest stats — broadcast at test scale, shuffle join at corpus
@@ -159,12 +163,22 @@ object NnDescent {
         .filter(col("a") =!= col("b"))
         .union(g.select("a", "b"))
         .distinct()
-      g = topPerA(score(cand)).localCheckpoint(true)
+      val next = topPerA(score(cand)).localCheckpoint(true)
+      release(g)
+      g = next
     }
     g.select(col("a").as("vec_id"), col("b").as("nbr"), col("rn"),
         round(col("s"), 6).as("sim"))
       .orderBy(asc("vec_id"), asc("rn"))
   }
+
+  /** Unpersist the `localCheckpoint` blocks `df` reads (the RDD leaves of
+    * its plan), once nothing will read `df` again. */
+  private[graft] def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 
   // --------------------------------------------------------- graph upsert
 
@@ -458,7 +472,7 @@ object NnDescent {
 
   /** (id, score) in Spark's `ORDER BY s DESC, id` order: doubles by
     * `SQLOrderingUtil` (NaN largest, −0.0 = 0.0), a null score last. */
-  private val byRank: Ordering[(Long, Option[Double])] = (a, b) => {
+  private[operators] val byRank: Ordering[(Long, Option[Double])] = (a, b) => {
     val c = (a._2, b._2) match {
       case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
       case (x, y) => java.lang.Boolean.compare(x.isEmpty, y.isEmpty)
@@ -582,14 +596,8 @@ object NnDescent {
     def local(rows: Seq[Row]): DataFrame = index.sparkSession
       .createDataFrame(rows.asJava, out)
       .select(col("rank"), col("vec_id"), round(col("s"), 6).as("sim"))
-    val qs = queryVec.select(col("qv").cast("array<double>")).collect()
-    require(qs.length <= 1, s"graphSearch takes one query row, got ${qs.length}")
-    if (qs.isEmpty) local(Nil)
-    else {
-      val sim =
-        if (qs.head.isNullAt(0)) lit(null).cast("double")
-        else cosineTo(qs.head.getSeq[Double](0).toArray, col("ed"),
-          sqrt(dotc(col("ed"), col("ed"))))
+    Knn.queryOf(queryVec, "graphSearch").fold(local(Nil)) { qv =>
+      val sim = Knn.simTo(qv, col("ed"), sqrt(dotc(col("ed"), col("ed"))))
       val ok = pred.map(coalesce(_, lit(false))).getOrElse(lit(true))
 
       // seeds: the stored query row's band keys, as literals

@@ -315,16 +315,18 @@ object GraphLayout {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    val graph = Future(graft.operators.NnDescent.knnGraph(index, k, tables, rounds, targetOcc))
     val writes = Seq(
-      Future(stageBucketed(spark,
-        graft.operators.NnDescent.knnGraph(index, k, tables, rounds, targetOcc),
-        s"$dir/graph", Seq("vec_id", "rn"), b)),
+      graph.map(stageBucketed(spark, _, s"$dir/graph", Seq("vec_id", "rn"), b)),
       Future(graft.operators.NnDescent.signsOf(index, tables)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/signs")),
       Future(writeBandsFull(spark,
         graft.operators.NnDescent.signsOf(index, tables),
         s"$dir/bands", bits, pparts)))
-    SignatureLayout.drainAll(writes) // drain-before-propagate (r13 ADVICE)
+    // drain-before-propagate (r13 ADVICE); then nothing reads the build's
+    // last checkpoint again
+    try SignatureLayout.drainAll(writes)
+    finally graph.value.flatMap(_.toOption).foreach(graft.operators.NnDescent.release)
     writeSpec(spark, dir, b)
     writeBandSpec(spark, dir, bits, pparts, tables, targetOcc)
   }
@@ -389,10 +391,9 @@ object GraphLayout {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    val graph = Future(graft.operators.NnDescent.knnGraph(old, k, tables, rounds, targetOcc))
     val writes = Seq(
-      Future(stageBucketed(spark,
-        graft.operators.NnDescent.knnGraph(old, k, tables, rounds, targetOcc),
-        s"$dir/graph", Seq("vec_id", "rn"), b)),
+      graph.map(stageBucketed(spark, _, s"$dir/graph", Seq("vec_id", "rn"), b)),
       Future(stageBucketed(spark, old.select("vec_id", "embedding"),
         s"$dir/vectors", Seq("vec_id"), b)),
       Future(graft.operators.NnDescent.signsOf(old, tables)
@@ -400,7 +401,10 @@ object GraphLayout {
       Future(writeBandsFull(spark,
         graft.operators.NnDescent.signsOf(old, tables),
         s"$dir/bands", bits, pparts)))
-    SignatureLayout.drainAll(writes) // drain-before-propagate (r13 ADVICE)
+    // drain-before-propagate (r13 ADVICE); then nothing reads the build's
+    // last checkpoint again
+    try SignatureLayout.drainAll(writes)
+    finally graph.value.flatMap(_.toOption).foreach(graft.operators.NnDescent.release)
     writeSpec(spark, dir, b)
     writeBandSpec(spark, dir, bits, pparts, tables, targetOcc)
   }

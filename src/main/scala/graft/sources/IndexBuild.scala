@@ -131,7 +131,7 @@ object IndexBuild {
     }
     val tmp = s"$indexDir/code_elements_tmp"
     merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(spark, tmp, target)
+    SignatureLayout.swapIn(spark, target, tmp)
   }
 
   /** Schema reconcile for legacy index tables built before norms were
@@ -146,50 +146,6 @@ object IndexBuild {
     if (df.columns.contains("nrm") || !df.columns.contains("embedding")) df
     else df.withColumn("nrm",
       sqrt(graft.functions.VecExprs.dotc(col("embedding"), col("embedding"))))
-
-  /** Crash-safe table swap: rename the live table ASIDE first (target →
-    * target_old, tmp → target, delete target_old) instead of
-    * delete-then-rename — a crash mid-swap leaves either the old or the new
-    * table recoverable on disk, never neither. The non-atomic visibility
-    * window for concurrent readers shrinks to the instant between the two
-    * renames (a real deployment would put a format with atomic commit —
-    * table-format metadata pointers — under this seam; the swap ORDER here
-    * is the part that must be right either way). */
-  private def swapInto(spark: SparkSession, tmp: String, target: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val t = new org.apache.hadoop.fs.Path(target)
-    val old = new org.apache.hadoop.fs.Path(target + "_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadPrev = fs.exists(t)
-    // FileSystem.rename reports failure by RETURNING FALSE, not throwing
-    // (round-4 review): an unchecked first rename makes the second fail
-    // silently (no-op upsert the caller believes succeeded); an unchecked
-    // second followed by the delete below would destroy the only copy.
-    if (hadPrev && !fs.rename(t, old))
-      throw new java.io.IOException(s"swap: rename $target -> ${target}_old failed")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), t)) {
-      // restore the live table before surfacing the failure
-      if (hadPrev) fs.rename(old, t)
-      throw new java.io.IOException(s"swap: rename $tmp -> $target failed")
-    }
-    if (hadPrev) fs.delete(old, true)
-  }
-
-  /** Recover from a swap interrupted between its two renames: the live
-    * table is parked at `<target>_old` and `target` is missing — rename it
-    * back. A no-op in every healthy state (target present, or neither
-    * present on a first build). Runs before every open of a live table
-    * ([[tableOrEmpty]]) and at the entry of [[compact]]. */
-  private[graft] def recoverSwap(spark: SparkSession, target: String): Unit = {
-    val t = new Path(target)
-    val old = new Path(target + "_old")
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // rename reports failure by returning false: an unchecked one would
-    // leave the index parked and read as "no index" (tableOrEmpty)
-    if (!fs.exists(t) && fs.exists(old) && !fs.rename(old, t))
-      throw new java.io.IOException(s"swap recovery: rename $old -> $t failed")
-  }
 
   /** The one "open an index table or None" rule: the live table at `path`
     * after swap recovery, or None when there is no index (missing
@@ -211,14 +167,15 @@ object IndexBuild {
     * path's Hadoop FileSystem — a java.nio check on the raw string returned
     * false for every hdfs://'/s3a:// index IndexBuild happily writes,
     * silently reporting 0 hits. Swap recovery runs first: a crash parked
-    * between swapInto's renames must read as "index present (recovered)",
-    * not "never indexed" — for a merge that would silently drop every
-    * previously indexed file, for [[run]] re-embed the whole tree. Any
+    * between [[SignatureLayout.swapIn]]'s renames must read as "index
+    * present (recovered)", not "never indexed" — for a merge that would
+    * silently drop every previously indexed file, for [[run]] re-embed the
+    * whole tree. Any
     * other read failure propagates (a broad catch here turned a transient
     * failure into "no index", truncating the table to one call's fresh
     * subset; round-4 review). */
   private[graft] def tableOrEmpty(spark: SparkSession, path: String): Option[DataFrame] = {
-    recoverSwap(spark, path)
+    SignatureLayout.recoverPath(spark, path)
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -254,15 +211,15 @@ object IndexBuild {
   def compact(spark: SparkSession, indexDir: String, table: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val target = s"$indexDir/$table"
-    recoverSwap(spark, target)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val t = new org.apache.hadoop.fs.Path(target)
-    val bytes = fs.getContentSummary(t).getLength
+    SignatureLayout.recoverPath(spark, target)
+    val t = new Path(target)
+    val bytes = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(t).getLength
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val tmp = s"$indexDir/${table}_compact_tmp"
     spark.read.parquet(target).repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(spark, tmp, target)
+    SignatureLayout.swapIn(spark, target, tmp)
   }
 
   /** Q9 end-to-end, oracle-gated: incremental re-index equivalence. Builds

@@ -317,20 +317,33 @@ object SignatureLayout {
   private def recoverRel(spark: SparkSession, dir: String, rel: String): Unit =
     recoverPath(spark, absPath(dir, rel))
 
-  private[sources] def recoverPath(spark: SparkSession, livePath: String): Unit = {
+  /** Recover from a swap interrupted between its two renames ([[swapIn]]):
+    * the live relation is parked at `<livePath>_old` and `livePath` is
+    * missing — rename it back, on the path's own FileSystem. A no-op in
+    * every healthy state (live present, or neither present on a first
+    * build). Rename reports failure by returning false, so a refused one
+    * throws instead of leaving the relation parked and read as absent. */
+  private[graft] def recoverPath(spark: SparkSession, livePath: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(livePath)
     val old = new org.apache.hadoop.fs.Path(livePath + "_old")
     val f = fs(spark, live)
     if (!f.exists(live) && f.exists(old)) {
       if (!f.rename(old, live))
-        throw new java.io.IOException(s"compaction recovery: rename $old -> $live failed")
+        throw new java.io.IOException(s"swap recovery: rename $old -> $live failed")
     }
   }
 
-  /** Replace `live` with `stage` by two renames; the set-aside old dir is
-    * dropped only after the new one is in place. A failed swap-in rename
-    * puts the set-aside dir back before it throws (as
-    * [[IndexBuild]]'s swap does), so the live relation stays readable. */
+  /** The one crash-safe swap of every rewritten relation (index tables,
+    * compaction, reband, the NB model): rename the live dir ASIDE first
+    * (live → live_old, stage → live, delete live_old) instead of
+    * delete-then-rename, so a crash mid-swap leaves the old or the new
+    * relation recoverable on disk ([[recoverPath]]), never neither. The
+    * non-atomic visibility window for concurrent readers is the instant
+    * between the two renames (a real deployment would put a format with
+    * atomic commit under this seam; the swap ORDER is the part that must
+    * be right either way). Every rename's return value is checked, on the
+    * path's own FileSystem; a failed swap-in rename puts the set-aside dir
+    * back before it throws, so the live relation stays readable. */
   private[graft] def swapIn(spark: SparkSession, live: String, stage: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val livep = new org.apache.hadoop.fs.Path(live)
@@ -340,12 +353,12 @@ object SignatureLayout {
     if (f.exists(oldp)) { f.delete(oldp, true); () }
     val hadLive = f.exists(livep)
     if (hadLive && !f.rename(livep, oldp))
-      throw new java.io.IOException(s"compaction: set-aside $livep -> $oldp failed")
+      throw new java.io.IOException(s"swap: set-aside $livep -> $oldp failed")
     if (!f.rename(stagep, livep)) {
       if (hadLive && !f.rename(oldp, livep))
         throw new java.io.IOException(
-          s"compaction: swap-in $stagep -> $livep failed, and so did restoring $oldp")
-      throw new java.io.IOException(s"compaction: swap-in $stagep -> $livep failed")
+          s"swap: swap-in $stagep -> $livep failed, and so did restoring $oldp")
+      throw new java.io.IOException(s"swap: swap-in $stagep -> $livep failed")
     }
     f.delete(oldp, true)
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 import graft.functions.VecExprs.dotc
 import graft.operators.{KMeans, Knn}
 
@@ -45,35 +46,25 @@ object VectorLayout {
   }
 
   /** Probe the persisted layout: rank the stored centroids against the
-    * query, statically prune to the top-`nprobe` cells, exact-rank within
-    * them. Output matches [[Knn.topKIvfWith]]: (vec_id, label, cluster,
-    * sim). */
+    * query ([[Knn.probeCells]], the in-memory path's probe ranking),
+    * statically prune to the top-`nprobe` cells, exact-rank within them
+    * ([[Knn.ranked]]). Output matches [[Knn.topKIvfWith]]: (vec_id,
+    * label, cluster, sim). */
   def search(spark: SparkSession, dir: String, queryVec: DataFrame, k: Int,
              nprobe: Int = 4, excludeId: Option[Long] = None): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val q = queryVec.select(col("qv").cast("array<double>").as("qe"))
-      .withColumn("qn", sqrt(dotc(col("qe"), col("qe"))))
-    val probeIds = cent.crossJoin(broadcast(q))
-      .withColumn("qsim", dotc(col("ce"), col("qe")) / (col("cn") * col("qn")))
-      .orderBy(desc("qsim"), asc("cid"))
-      .limit(nprobe)
-      .select("cid")
-      .collect().map(_.getLong(0)).toSeq
-    val cells = spark.read.parquet(s"$dir/cells")
-      .filter(col("cluster").isin(probeIds: _*))
-    val candidates = excludeId
-      .map(id => cells.filter(col("vec_id") =!= id)).getOrElse(cells)
-    candidates
-      .crossJoin(broadcast(q))
-      .withColumn("sim_raw", dotc(col("ed"), col("qe")) / (col("nrm") * col("qn")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(k)
+    val stored = spark.read.parquet(s"$dir/cells")
+    Knn.single(stored, queryVec, "VectorLayout.search",
+        StructField("cluster", LongType)) { q =>
+      val (_, probeIds) = Knn.probeCells(spark.read.parquet(s"$dir/centroids"), q, nprobe)
+      val cells = stored.filter(col("cluster").isin(probeIds: _*))
+      val candidates = excludeId
+        .map(id => cells.filter(col("vec_id") =!= id)).getOrElse(cells)
       // cluster comes back as a PARTITION column, which Spark's directory
       // inference types IntegerType — cast restores the LongType contract
       // shared with Knn.topKIvfWith (review finding: a union of the two
       // paths' outputs would otherwise fail analysis)
-      .select(col("vec_id"), col("label"), col("cluster").cast("long").as("cluster"),
-        round(col("sim_raw"), 6).as("sim"))
+      Knn.ranked(candidates, q, k, col("cluster").cast("long").as("cluster"))
+    }
   }
 
   /** The stored cells with the partition column's LongType contract

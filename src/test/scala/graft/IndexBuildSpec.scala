@@ -224,7 +224,7 @@ class IndexBuildSpec extends AnyFunSuite {
     docs.write.parquet(s"$dir/code_elements")
     val before = spark.read.parquet(s"$dir/code_elements")
       .orderBy("doc_id").collect().toSeq
-    // simulate a crash between swapInto's two renames: live table parked
+    // simulate a crash between the swap's two renames: live table parked
     // aside, target missing
     val f = new java.io.File(s"$dir/code_elements")
     assert(f.renameTo(new java.io.File(s"$dir/code_elements_old")))
@@ -264,7 +264,7 @@ class IndexBuildSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_swap_norename").toString
     Files.createDirectories(Paths.get(s"$dir/code_elements_old"))
     val target = s"${NoRenameFs.Scheme}://$dir/code_elements"
-    val e = intercept[java.io.IOException](IndexBuild.recoverSwap(spark, target))
+    val e = intercept[java.io.IOException](graft.sources.SignatureLayout.recoverPath(spark, target))
     assert(e.getMessage.contains(s"$dir/code_elements_old") &&
       e.getMessage.contains(s"$dir/code_elements failed"), e.getMessage)
     assert(Files.isDirectory(Paths.get(s"$dir/code_elements_old")))
@@ -287,6 +287,29 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(s"$dir/bands/part-0.parquet")), "the live relation is gone")
     assert(!Files.exists(Paths.get(s"$dir/bands_old")))
     assert(Files.isDirectory(Paths.get(s"$dir/bands_stage")))
+  }
+
+  test("index upsert and compaction swap on the path's own FileSystem and keep the live table") {
+    // the `_tmp` → live rename is refused on a non-default scheme; the swap
+    // must run there (not on file:///) and put the live table back
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.${NoSwapInFs.Scheme}.impl", classOf[NoSwapInFs].getName)
+    conf.setBoolean(s"fs.${NoSwapInFs.Scheme}.impl.disable.cache", true)
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_upsert_noswapin").toString
+    Seq(("a.py", 1L), ("b.py", 2L)).toDF("file_path", "n").write.parquet(s"$dir/code_elements")
+    def live() = spark.read.parquet(s"$dir/code_elements").orderBy("file_path").collect().toSeq
+    val before = live()
+    val e = intercept[java.io.IOException](IndexBuild.upsertIndex(spark,
+      s"${NoSwapInFs.Scheme}://$dir", Seq(("b.py", 3L)).toDF("file_path", "n")))
+    assert(e.getMessage.contains(s"swap-in ${NoSwapInFs.Scheme}:$dir/code_elements_tmp"), e.getMessage)
+    assert(live() == before, "the live table is gone or changed")
+    assert(!Files.exists(Paths.get(s"$dir/code_elements_old")))
+    val c = intercept[java.io.IOException](
+      IndexBuild.compact(spark, s"${NoSwapInFs.Scheme}://$dir", "code_elements"))
+    assert(c.getMessage.contains("swap-in") && c.getMessage.contains("code_elements_compact_tmp"),
+      c.getMessage)
+    assert(live() == before, "the live table is gone or changed")
   }
 
   test("IVF layout: cluster-partitioned index prunes probes at the file level") {
@@ -330,11 +353,11 @@ object NoRenameFs {
 }
 
 /** A local FileSystem under its own scheme that refuses only renames out of
-  * a `_stage` dir: the swap-in failure a swap must recover from. */
+  * a `_stage` or `_tmp` dir: the swap-in failure a swap must recover from. */
 class NoSwapInFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create(s"${NoSwapInFs.Scheme}:///")
   override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
-    !src.getName.endsWith("_stage") && super.rename(src, dst)
+    !src.getName.endsWith("_stage") && !src.getName.endsWith("_tmp") && super.rename(src, dst)
 }
 
 object NoSwapInFs {

@@ -258,6 +258,27 @@ class NnDescentSpec extends AnyFunSuite {
     } finally rm(new java.io.File(dir))
   }
 
+  test("writeBase leaves nothing persisted") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_graph_base_persist").toString
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+    }
+    try {
+      val sc = spark.sparkContext
+      val rdds = sc.getPersistentRDDs.keySet
+      val cached = spark.sharedState.cacheManager.isEmpty
+      val conf = spark.conf.getAll
+      // two NN-descent rounds: three round checkpoints, none may stay
+      GraphLayout.writeBase(spark, emb.filter(col("vec_id") < 300L), dir, k = 8, rounds = 2)
+      val left = sc.getPersistentRDDs.keySet -- rdds
+      assert(left.isEmpty, s"RDDs left persisted: $left")
+      assert(spark.sharedState.cacheManager.isEmpty == cached, "a relation was left cached")
+      assert(spark.conf.getAll == conf, "a session conf was changed")
+      assert(GraphLayout.readGraph(spark, dir).select("vec_id").distinct().count() == 300L)
+    } finally rm(new java.io.File(dir))
+  }
+
   test("streamed graph maintenance across forced micro-batches equals sequential stored-graph upserts") {
     import graft.streaming.StreamOps
     val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_graph_src").toFile
