@@ -43,8 +43,10 @@ object Prof {
   /** Bucket-confined graph maintenance (round-12 claim, SCALE.md "Bucket-
     * confined graph maintenance"): per micro-batch, the wall of
     * `upsertStored`, the bytes it wrote into the live graph relation
-    * (files carrying the batch's prefix) vs the relation's total, and its
-    * touched-bucket count. `writeBase`, the once-per-snapshot price, is
+    * (files carrying the batch's prefix) vs the relation's total, its
+    * touched-bucket count, and the live data-file count of each relation
+    * (graph, vectors, signs, bands) — the files a walk step or the next
+    * batch may open. `writeBase`, the once-per-snapshot price, is
     * timed separately so the per-batch number is the one that scales.
     * `buckets` = 0 derives the grain from the corpus
     * (`GraphLayout.bucketsFor`); at 32 buckets any batch ≥ ~100 vectors
@@ -60,6 +62,12 @@ object Prof {
     val e = Tables.embeddings(spark, sfDir)
     val base = e.filter(col("vec_id") % batchMod >= nBatches)
     val dir = s"$workDir/graph-incr"
+
+    // live data files of a relation, `pb=` partition dirs included
+    def liveFiles(p: java.io.File): Int = Option(p.listFiles()).toSeq.flatten.map { f =>
+      if (f.isDirectory) liveFiles(f)
+      else if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0 else 1
+    }.sum
 
     def dirBytes(p: String, prefix: String): (Long, Int) = {
       val fs = Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
@@ -89,7 +97,9 @@ object Prof {
           val (total, _) = dirBytes(s"$dir/graph", "")
           println(f"[graph-incr] pass $pass batch $b (${batch.count()} vecs): " +
             f"$tU%.2f s, wrote ${wrote / 1024}%d KiB of ${total / 1024}%d KiB live " +
-            f"($touched touched buckets)")
+            f"($touched touched buckets); live files " +
+            Seq("graph", "vectors", "signs", "bands")
+              .map(r => s"$r=${liveFiles(new java.io.File(s"$dir/$r"))}").mkString(" "))
         }
       }
       t0 = System.nanoTime()

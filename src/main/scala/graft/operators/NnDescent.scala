@@ -105,6 +105,12 @@ object NnDescent {
       .select(col("vec_id"), col("t"),
         expr(s"substring(sgn, t * $Block + 1, $bits)").as("bkey"))
 
+  /** [[bandKeysAt]]'s (t, bkey) rows of one sign string, on the driver,
+    * cut exactly as it cuts them: t < length(sgn) DIV Block. */
+  private[graft] def bandKeysOfSign(sg: String, bits: Int): Seq[(Long, String)] =
+    (0 until sg.length / Block).map(t =>
+      (t.toLong, sg.substring(t * Block, math.min(sg.length, t * Block + bits))))
+
   /** The band-width rule as eager Scala — EXACTLY the in-plan
     * `greatest(2, least(Block, length(bin(n DIV occ)) - 1))` (bin() is
     * unpadded, so length(bin(x)) - 1 = floor(log2(x)) for x ≥ 1 and 0
@@ -367,11 +373,8 @@ object NnDescent {
         signBucketAt(col("embedding"), 0, tables * Block)).collect()
     val bv = bt.map(r => r.getLong(0) -> vecAt(r, 1)).toMap
     require(bv.size == bt.length, "graphUpsertDelta: batch vec_id is not a key")
-    // band keys exactly as bandKeysAt cuts them: t < length(sgn) DIV Block
     val keysOf = bt.map { r =>
-      val sg = if (r.isNullAt(2)) "" else r.getString(2)
-      r.getLong(0) -> (0 until sg.length / Block).map(t =>
-        (t.toLong, sg.substring(t * Block, math.min(sg.length, t * Block + bits))))
+      r.getLong(0) -> (if (r.isNullAt(2)) Nil else bandKeysOfSign(r.getString(2), bits))
     }
     val keys = keysOf.flatMap(_._2).distinct.toSeq
 
@@ -392,9 +395,11 @@ object NnDescent {
     val vecs = mutable.Map.empty[Long, Vec]
     val edges = mutable.Map.empty[Long, mutable.LinkedHashSet[Long]]
     val asked, listed = mutable.Set.empty[Long]
+    // ids de-duplicated BEFORE the membership tests: candidate lists
+    // repeat ids many times over (a 20,000-row batch's hop candidates)
     def fetch(lists: Iterable[Long], vs: Iterable[Long]): Unit = {
-      val es = lists.filterNot(i => bv.contains(i) || listed(i)).toSeq.distinct
-      val ws = vs.filterNot(i => bv.contains(i) || asked(i)).toSeq.distinct
+      val es = lists.iterator.distinct.filterNot(i => bv.contains(i) || listed(i)).toSeq
+      val ws = vs.iterator.distinct.filterNot(i => bv.contains(i) || asked(i)).toSeq
       listed ++= es
       asked ++= ws
       Seq(

@@ -232,37 +232,45 @@ object GraphLayout {
 
   /** Write `df` as a bucketed-by-(vec_id) external table at `path`, then
     * drop the table name: the files are the durable state, [[readBucketed]]
-    * re-registers in any JVM. `sortCols` must start with vec_id.
-    *
-    * One file per bucket per snapshot either way: the default
-    * `repartition(buckets, vec_id)` is one bucket per task (full write
-    * parallelism — the base-snapshot path); `maxTasks < buckets`
-    * repartitions on the bucket-id EXPRESSION instead (same murmur3 pmod
-    * as the bucket-id function), so a task holds WHOLE buckets and each
-    * still writes exactly one file — the per-batch stage path, where a
-    * corpus-grain task count (3199 launches for ~20 rows of delta at
-    * sf10) was ~18 s of the per-batch commit wall (round-13 measured). */
+    * re-registers in any JVM. `sortCols` must start with vec_id. One file
+    * per bucket per snapshot: `repartition(buckets, vec_id)` is one bucket
+    * per task (full write parallelism — the snapshot paths; a micro-batch's
+    * files are written from the driver, [[stageOnDriver]]). */
   private def stageBucketed(spark: SparkSession, df: DataFrame, path: String,
-                            sortCols: Seq[String], buckets: Int,
-                            maxTasks: Int = 0): Unit = {
+                            sortCols: Seq[String], buckets: Int): Unit = {
     val t = tableName(path)
     spark.sql(s"DROP TABLE IF EXISTS $t")
     val p = new org.apache.hadoop.fs.Path(absPath(path))
     val f = fs(spark, p)
     if (f.exists(p)) { f.delete(p, true); () }
-    val parted =
-      if (maxTasks > 0 && maxTasks < buckets)
-        df.repartition(maxTasks,
-          org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.hash(col("vec_id")),
-            org.apache.spark.sql.functions.lit(buckets)))
-      else df.repartition(buckets, col("vec_id"))
-    parted
+    df.repartition(buckets, col("vec_id"))
       .write.mode(SaveMode.Overwrite).format("parquet")
       .option("path", absPath(path))
       .bucketBy(buckets, "vec_id").sortBy(sortCols.head, sortCols.tail: _*)
       .saveAsTable(t)
     spark.sql(s"DROP TABLE $t")
+  }
+
+  /** Stage a micro-batch's rows of one relation from the DRIVER: a fresh
+    * `stage` dir holding one parquet file per group, `groups` mapping a
+    * group's relative dir (`""` or `pb=N`) and bucket id (None for an
+    * unbucketed relation) to its rows, in file order. File names are the
+    * ones a Spark write gives (`part-00000-<uuid>_NNNNN.c000.snappy.parquet`
+    * bucketed, `part-00000-<uuid>-c000.snappy.parquet` otherwise), so the
+    * commit protocols ([[replaceBuckets]], [[SignatureLayout.moveInto]],
+    * [[moveIntoPartitioned]]) take them exactly as before. */
+  private def stageOnDriver(spark: SparkSession, stage: String, schema: StructType,
+                            groups: Iterable[((String, Option[Int]), Seq[Row])]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(absPath(stage))
+    val f = fs(spark, p)
+    if (f.exists(p)) { f.delete(p, true); () }
+    f.mkdirs(p)
+    val uuid = java.util.UUID.randomUUID().toString
+    org.apache.spark.sql.graftbridge.Bridge.writeParquet(spark, schema,
+      groups.map { case ((sub, bucket), rows) =>
+        val name = bucket.fold(s"part-00000-$uuid-c000")(b => f"part-00000-${uuid}_$b%05d.c000")
+        (if (sub.isEmpty) s"$p/$name" else s"$p/$sub/$name") -> rows
+      })
   }
 
   /** Register (if needed) and read the bucketed external table at `path`
@@ -409,18 +417,23 @@ object GraphLayout {
     writeBandSpec(spark, dir, bits, pparts, tables, targetOcc)
   }
 
+  /** Each id's bucket: the writer's `pmod(hash(vec_id), buckets)`, a
+    * folded projection over a local relation (no job). */
+  private def bucketsOf(spark: SparkSession, buckets: Int,
+                        ids: Seq[Long]): Map[Long, Int] = {
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
+    spark.createDataFrame(ids.distinct.map(Tuple1(_))).toDF("vec_id")
+      .select(col("vec_id"), pmod(hash(col("vec_id")), lit(buckets)))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+  }
+
   /** The bucketed relation at `path`, read with `schema` from only the
     * files of `ids`' buckets: a `pathGlobFilter` on the `_NNNNN` bucket-id
     * suffix, so the driver lists the one directory (a list of file paths
-    * over Spark's listing threshold would start a parallel-listing job).
-    * An id's bucket is the writer's `pmod(hash(vec_id), buckets)`, here a
-    * folded projection over a local relation. */
+    * over Spark's listing threshold would start a parallel-listing job). */
   private def bucketRows(spark: SparkSession, path: String, schema: StructType,
                          buckets: Int, ids: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.{hash, lit, pmod}
-    val bks = spark.createDataFrame(ids.map(Tuple1(_))).toDF("vec_id")
-      .select(pmod(hash(col("vec_id")), lit(buckets)))
-      .collect().map(_.getInt(0)).distinct
+    val bks = bucketsOf(spark, buckets, ids).values.toSeq.distinct.sorted
     if (bks.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
     else spark.read.schema(schema)
       .option("pathGlobFilter", bks.map(b => f"$b%05d").mkString("*_{", ",", "}.*"))
@@ -462,25 +475,34 @@ object GraphLayout {
     *     from the stored signs.
     *     Stored graph and vector rows are read from only the files of
     *     the fetched ids' buckets ([[bucketRows]]).
-    *  3. The touched ids map to their buckets (`pmod(hash(vec_id),
-    *     buckets)`, the writer's murmur3 bucket id); only those buckets'
-    *     live files are read back (by their `_NNNNN` name suffix, with the
-    *     fixed graph schema) to carry their untouched rows, and
+    *  3. The commit is written from the DRIVER: every staged parquet file
+    *     goes through Spark's own parquet writer on the calling thread
+    *     (`Bridge.writeParquet`), with the schema the relation's Spark write
+    *     would have used, and then through the unchanged commit protocols.
+    *     Placement comes from Spark's expressions folded over local
+    *     relations: a row's bucket is `pmod(hash(vec_id), buckets)` and a
+    *     band row's partition `pbCol(pparts)`. The touched buckets' live
+    *     files are read back (by their `_NNNNN` name suffix, with the fixed
+    *     graph schema) in ONE collect to carry their untouched rows, and
     *     [[replaceBuckets]] swaps in one file per touched bucket, sorted by
-    *     (vec_id, rn). The batch's vectors (bucket-suffixed files), signs
-    *     and band keys append under the batch's file prefix, so the next
-    *     micro-batch sees them.
+    *     (vec_id, rn). The batch's vectors (one file per bucket, sorted by
+    *     vec_id), signs (one file) and band keys (one file per `pb=` dir)
+    *     append under the batch's file prefix, so the next micro-batch
+    *     sees them. The four commits run as concurrent Futures.
     *
-    * Per batch: at most 12 Spark jobs for a single-partition batch (the
+    * Per batch: at most 6 Spark jobs for a single-partition batch (the
     * batch collect, ≤ 4 delta levels — a level with nothing left to fetch
-    * runs none — and 7 commit jobs), compute O(batch·(occ + k²)) and IO
+    * runs none — and the untouched-rows collect; 4 on the `maintain`
+    * benchmark's 500-vector graph), compute O(batch·(occ + k²)) and IO
     * O(touched buckets), not O(n·k). Two more can run: the reband crash
-    * window's eager count (≤ 13), and a second collect round when the
-    * batch spans several partitions and its first holds fewer rows than
-    * the ceiling (the limited collect scans partitions in rounds). Nothing
-    * is left persisted: no cache, checkpoint or session conf. Driver
-    * memory: at most |batch| + min(n, batch·tables·occ·(1+k) + batch·k²)
-    * vectors.
+    * window's eager count, and a second collect round when the batch spans
+    * several partitions and its first holds fewer rows than the ceiling
+    * (the limited collect scans partitions in rounds). No Spark job writes
+    * a file. Nothing is left persisted: no cache, checkpoint, session conf
+    * or thread pool. Driver memory: at most |batch| + min(n,
+    * batch·tables·occ·(1+k) + batch·k²) vectors, plus the touched buckets'
+    * stored graph rows the commit rewrites — at most min(n·k, touched
+    * buckets × rows per bucket).
     *
     * Replay safety: the delta drops the batch ids from every stored side,
     * and [[replaceBuckets]]' generation protocol plus the prefix-keyed
@@ -530,33 +552,42 @@ object GraphLayout {
     val delta = graft.operators.NnDescent.graphUpsertDelta(
       rowsOf("vectors", vecSchema), rowsOf("graph", graphSchema),
       bands, local, k, tables, bits)
-    // the touched buckets' untouched rows ride along into the staged files
-    val touchedIds = delta.select("vec_id").collect().map(_.getLong(0)).distinct.toSeq
-    val keep = rowsOf("graph", graphSchema)(touchedIds)
-      .filter(!graft.operators.NnDescent.idIn(touchedIds))
+    // the delta, the batch's signs and the placement lookups below are
+    // folded projections over local relations: collecting them runs no job
+    val deltaRows = delta.collect().toSeq
+    val touchedIds = deltaRows.map(_.getLong(0)).distinct
+    val signs = graft.operators.NnDescent.signsOf(local, tables)
+    val signRows = signs.collect().toSeq
+    // one file per bucket, rows in the bucketed write's sort order
+    def byBucket(rs: Seq[Row], order: Ordering[Row]) = {
+      val b = bucketsOf(spark, buckets, rs.map(_.getLong(0)))
+      rs.groupBy(r => ("", Option(b(r.getLong(0))))).view.mapValues(_.sorted(order))
+    }
     // the per-batch commits — graph bucket replace, vector append, sign and
     // band appends — are independent relations on disjoint paths: submit
-    // CONCURRENTLY (the writeArt/compact precedent — sequential
-    // submission serialized ~10 small jobs' stage tails per micro-batch).
-    // A crash leaving ANY subset committed still replays to a valid
-    // upsert: the delta drops the batch ids from every stored side, and
-    // each commit is prefix-keyed (replace, not append twice), so commit
-    // ORDER carries no correctness weight here.
+    // CONCURRENTLY (the writeArt/compact precedent). Each stages its files
+    // from the driver (no Spark job) and commits through its protocol. A
+    // crash leaving ANY subset committed still replays to a valid upsert:
+    // the delta drops the batch ids from every stored side, and each commit
+    // is prefix-keyed (replace, not append twice), so commit ORDER carries
+    // no correctness weight here.
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
     val commits = Seq(
       Future {
-        // per-batch stage: task count capped (the maxTasks note) — the
-        // staged rows are O(touched buckets), not O(corpus)
-        stageBucketed(spark, keep.unionByName(delta),
-          s"$dir/graph_stage", Seq("vec_id", "rn"), buckets, maxTasks = 64)
+        // the touched buckets' untouched rows ride along into the staged
+        // files: the call's one collect of stored rows
+        val keep = rowsOf("graph", graphSchema)(touchedIds)
+          .filter(!graft.operators.NnDescent.idIn(touchedIds)).collect()
+        stageOnDriver(spark, s"$dir/graph_stage", graphSchema,
+          byBucket(keep.toSeq ++ deltaRows, Ordering.by((r: Row) => (r.getLong(0), r.getLong(2)))))
         replaceBuckets(spark, s"$dir/graph", s"$dir/graph_stage", s"${batchId}g")
         refresh(spark, s"$dir/graph")
       },
       Future {
-        // batch vectors: bucketed stage + suffix-preserving rename append
-        stageBucketed(spark, local, s"$dir/vec_stage", Seq("vec_id"), buckets,
-          maxTasks = 64)
+        // batch vectors: one file per bucket + suffix-preserving rename append
+        stageOnDriver(spark, s"$dir/vec_stage", bsel.schema,
+          byBucket(rows.toSeq, Ordering.by((r: Row) => r.getLong(0))))
         SignatureLayout.moveInto(spark, s"$dir/vec_stage", s"$dir/vectors", batchId)
         refresh(spark, s"$dir/vectors")
       },
@@ -564,22 +595,25 @@ object GraphLayout {
         // batch signs: plain append under the same idempotent prefix
         // (signs stay the full-width source of truth the reband op
         // re-derives band keys from)
-        // (one file: a local relation is split over the session's cores)
-        graft.operators.NnDescent.signsOf(local, tables).coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/sign_stage")
+        stageOnDriver(spark, s"$dir/sign_stage", signs.schema, Seq(("", None) -> signRows))
         SignatureLayout.moveInto(spark, s"$dir/sign_stage", s"$dir/signs",
           s"$batchId-sg")
       }) ++ bandSpec.map { case (_, pparts) => Future {
         // batch band keys: partitioned append under the batch prefix so
         // the NEXT micro-batch's pruned probe sees this batch's rows;
         // a replay stages the same partitions (keys are deterministic
-        // in batch content) and REPLACES its delta per partition
-        graft.operators.NnDescent.bandKeysAt(
-            graft.operators.NnDescent.signsOf(local, tables), bits)
-          .withColumn("pb", pbCol(pparts))
-          .repartition(col("pb"))
-          .write.mode(SaveMode.Overwrite).partitionBy("pb")
-          .parquet(s"$dir/band_stage")
+        // in batch content) and REPLACES its delta per partition. The
+        // keys are bandKeysAt's rows, in its order; each lands in the
+        // `pb=` dir of its pbCol
+        val keyRows = signRows.filter(!_.isNullAt(1)).flatMap(r =>
+          graft.operators.NnDescent.bandKeysOfSign(r.getString(1), bits)
+            .map { case (t, bkey) => Row(r.getLong(0), t, bkey) })
+        val pbOf = spark.createDataFrame(keyRows.map(r => (r.getLong(1), r.getString(2))).distinct)
+          .toDF("t", "bkey").select(col("t"), col("bkey"), pbCol(pparts))
+          .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getInt(2)).toMap
+        val schema = graft.operators.NnDescent.bandKeysAt(signs, bits).schema
+        stageOnDriver(spark, s"$dir/band_stage", schema,
+          keyRows.groupBy(r => (s"pb=${pbOf((r.getLong(1), r.getString(2)))}", None)))
         moveIntoPartitioned(spark, s"$dir/band_stage", s"$dir/bands",
           s"$batchId-bd")
       }}

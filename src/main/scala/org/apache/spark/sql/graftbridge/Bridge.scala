@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.types.StructType
 
 /** Spark 4 removed the public Column <-> catalyst Expression constructors
   * (Connect API unification); the supported internal path is
@@ -13,8 +15,8 @@ import org.apache.spark.sql.execution.SparkStrategy
   * re-export those conversions — plus the two classic-session hooks a
   * custom-operator library needs (Dataset.ofRows to wrap a hand-built
   * LogicalPlan, experimental.extraStrategies to register its planner
-  * strategy) and the listener-bus drain a job-counting check needs — to the
-  * graft package.
+  * strategy), the listener-bus drain a job-counting check needs, and Spark's
+  * parquet writer for a file written from the driver — to the graft package.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -47,4 +49,29 @@ object Bridge {
     * listener's counts are complete when the call returns. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Write each `(path, rows)` of `files` as ONE parquet file
+    * `<path><ext>` (rows in `schema`, `ext` the writer's own:
+    * `.snappy.parquet` under the default codec), from the calling thread:
+    * `ParquetFileFormat.prepareWrite` → `OutputWriterFactory.newInstance` →
+    * `OutputWriter.write`, under the session's write conf — the file one
+    * task of a Spark write of these rows, in this order, would produce,
+    * with no job and no committer. The caller owns placement and the
+    * commit. */
+  def writeParquet(spark: SparkSession, schema: StructType,
+                   files: Iterable[(String, Seq[Row])]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    files.foreach { case (path, rows) =>
+      val w = factory.newInstance(path + factory.getFileExtension(ctx), schema, ctx)
+      try rows.foreach(r => w.write(toInternal(r).asInstanceOf[InternalRow]))
+      finally w.close()
+    }
+  }
 }

@@ -225,12 +225,79 @@ class NnDescentSpec extends AnyFunSuite {
     }
     try {
       GraphLayout.writeBase(spark, base, dir, k = 8)
-      // counts every job, from any thread: the upsert writes from Futures.
+      // counts every job, from any thread: the upsert commits from Futures.
       // The batch collect, the band probe, the mates' lists and vectors (on
       // a 450-vector base every stored id is a bucket mate, so the hop and
-      // re-cut levels have nothing left to fetch) and 7 commit jobs
+      // re-cut levels have nothing left to fetch) and the touched buckets'
+      // untouched graph rows; the driver writes every staged file itself
       val jobs = jobsDuring(GraphLayout.upsertStored(spark, dir, batch, "mb-0", k = 8))
-      assert(jobs == 10, s"$jobs jobs")
+      assert(jobs == 4, s"$jobs jobs")
+    } finally rm(new java.io.File(dir))
+  }
+
+  test("upsertStored's driver-written files sit where Spark's writes put them") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val base = emb.filter(col("vec_id") % 10 =!= 7 && col("vec_id") % 10 =!= 3)
+    val batches = Seq(7, 3).map(m => emb.filter(col("vec_id") % 10 === m).select("vec_id", "embedding"))
+    val dir = Files.createTempDirectory("graft_graph_place").toString
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+    }
+    def files(f: java.io.File): Seq[java.io.File] = Option(f.listFiles()).toSeq.flatten
+      .flatMap(c => if (c.isDirectory) files(c) else Seq(c))
+      .filter(_.getName.endsWith(".parquet"))
+    // the Spark schema a file's writer recorded in its footer, nullability included
+    def footer(f: java.io.File): StructType = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+      try DataType.fromJson(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
+      finally r.close()
+    }
+    try {
+      GraphLayout.writeBase(spark, base, dir, k = 8)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        GraphLayout.upsertStored(spark, dir, b, s"mb-$i", k = 8)
+      }
+      val buckets = GraphLayout.storedBuckets(spark, dir)
+      val meta = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/_graft_bands")), "UTF-8")
+      val Seq(bits, pparts) = Seq("bits", "pparts").map(k =>
+        meta.split(";").map(_.split(":")).collectFirst { case Array(`k`, v) => v.toInt }.get)
+      val fileId = regexp_extract(input_file_name(), "_(\\d+)\\.[^/]*$", 1).cast("int")
+      for (rel <- Seq("graph", "vectors")) {
+        val bad = spark.read.parquet(s"$dir/$rel")
+          .filter(fileId =!= pmod(hash(col("vec_id")), lit(buckets))).count()
+        assert(bad == 0, s"$rel: $bad rows in a file named for another bucket")
+      }
+      val badBands = spark.read.parquet(s"$dir/bands")
+        .filter(regexp_extract(input_file_name(), "/pb=(\\d+)/", 1).cast("int") =!=
+          pmod(hash(col("t"), col("bkey")), lit(pparts))).count()
+      assert(badBands == 0, s"bands: $badBands rows under another pb= dir")
+      // graph files in the bucketed write's sort: (vec_id, rn) within each file
+      val inFile = spark.read.parquet(s"$dir/graph")
+        .select(input_file_name(), col("vec_id"), col("rn")).collect()
+        .groupBy(_.getString(0)).values
+      inFile.foreach { rs =>
+        val keys = rs.map(r => (r.getLong(1), r.getLong(2))).toSeq
+        assert(keys == keys.sorted, s"${rs.head.getString(0)} is not sorted by (vec_id, rn)")
+      }
+      // the upserts' files carry the schema each relation's Spark write had
+      val sg = NnDescent.signsOf(batches.head, 4)
+      val want = Map(
+        "graph" -> StructType.fromDDL("vec_id LONG, nbr LONG, rn LONG, sim DOUBLE"),
+        "vectors" -> batches.head.schema,
+        "signs" -> sg.schema,
+        "bands" -> NnDescent.bandKeysAt(sg, bits).schema)
+      for ((rel, schema) <- want) {
+        val written = files(new java.io.File(s"$dir/$rel")).filter(_.getName.startsWith("mb-"))
+        assert(written.nonEmpty, s"$rel: no upsert file")
+        written.foreach(f => assert(footer(f) == schema, s"$rel: ${f.getName}: ${footer(f)}"))
+      }
+      // and the catalog's bucketed read sees exactly the files' rows
+      def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(sorted(GraphLayout.readGraph(spark, dir)) == sorted(spark.read.parquet(s"$dir/graph")))
     } finally rm(new java.io.File(dir))
   }
 

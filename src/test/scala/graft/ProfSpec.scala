@@ -23,7 +23,8 @@ class ProfSpec extends AnyFunSuite {
     for (pass <- 1 to 2) {
       assert(lines.exists(_.startsWith(s"[graph-incr] pass $pass writeBase(n=")), lines)
       assert(lines.exists(_.matches(
-        s"""\\[graph-incr\\] pass $pass batch 0 \\(\\d+ vecs\\): .* s, wrote \\d+ KiB of \\d+ KiB live \\(\\d+ touched buckets\\)""")),
+        s"""\\[graph-incr\\] pass $pass batch 0 \\(\\d+ vecs\\): .* s, wrote \\d+ KiB of \\d+ KiB live \\(\\d+ touched buckets\\); """ +
+          """live files graph=\d+ vectors=\d+ signs=\d+ bands=\d+""")),
         lines)
       assert(lines.exists(_.startsWith(s"[graph-incr] pass $pass final read: ")), lines)
     }
