@@ -62,10 +62,12 @@ object KMeans {
   /** The Lloyd loop over an arbitrary seed relation — lets callers whose
     * rows have no numeric vec_id (e.g. the code-elements index, string
     * ids) supply their own deterministic seeds. `e` needs (ed, nrm);
-    * `cent0` needs (cid, ce, cn). */
+    * `cent0` needs (cid, ce, cn). Each round's checkpoint is released once
+    * the next one is materialized; the last round's stays with the result,
+    * for a caller that persists it to release ([[NnDescent.release]]). */
   private[graft] def lloyd(e: DataFrame, cent0: DataFrame, iters: Int): DataFrame = {
     var cent = cent0
-    for (_ <- 1 to iters) {
+    for (round <- 1 to iters) {
       val centArr = broadcast(
         cent.agg(collect_list(struct(col("cid"), col("ce"), col("cn"))).as("cents")))
       val asg = e.crossJoin(centArr)
@@ -83,10 +85,13 @@ object KMeans {
         // dims-length arrays — the sq8Scales bounded-HOF exemption.
         .select(col("cluster").as("ucid"),
           transform(col("dm"), x => x.getField("m")).as("uce"))
-      cent = cent.join(upd, col("cid") === col("ucid"), "left")
+      val next = cent.join(upd, col("cid") === col("ucid"), "left")
         .select(col("cid"), coalesce(col("uce"), col("ce")).as("ce"))
         .withColumn("cn", sqrt(dotc(col("ce"), col("ce"))))
         .localCheckpoint(true)
+      // the superseded round's checkpoint (never the caller's seeds)
+      if (round > 1) NnDescent.release(cent)
+      cent = next
     }
     cent
   }

@@ -111,7 +111,7 @@ object Knn {
       .limit(k)
       .select((col("vec_id") +: col("label") +: extra) :+ round(col("sim_raw"), 6).as("sim"): _*)
 
-  private def prepped(df: DataFrame): DataFrame =
+  private[graft] def prepped(df: DataFrame): DataFrame =
     df.withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
 
@@ -280,12 +280,24 @@ object Knn {
     e.withColumn("cluster", bestCentroid(cents, col("ed"), col("nrm")))
       .select(col("vec_id"), col("label"), col("ed"), col("nrm"), col("cluster"))
 
-  /** The IVF probe of [[topKIvfWith]], [[topKIvfSq8]] and VectorLayout.search:
-    * the centroid rows (cid, ce, cn) collected once (one job), and the ids
-    * of the `nprobe` nearest the query — [[simTo]] folded over them, in
-    * Spark's `ORDER BY qsim DESC, cid` order. */
+  /** The centroid rows (cid, ce: array<double>, cn: double), collected
+    * once (one job). */
+  private[graft] def centroidRows(cent: DataFrame): Seq[Row] = centroidCols(cent).collect().toSeq
+
+  private def centroidCols(cent: DataFrame): DataFrame =
+    cent.select(col("cid"), col("ce").cast("array<double>"), col("cn").cast("double"))
+
+  /** [[centroidRows]] as the BestCentroid literal — the assignment's
+    * centroids without a broadcast relation. */
+  private[graft] def centroidsLit(rows: Seq[Row]): Column =
+    typedLit(rows.map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))))
+
+  /** The IVF probe of [[topKIvfWith]], [[topKIvfSq8]] and the persisted
+    * layouts (graft.sources.VectorLayout): the [[centroidRows]], and the
+    * ids of the `nprobe` nearest the query — [[simTo]] folded over them,
+    * in Spark's `ORDER BY qsim DESC, cid` order. */
   private[graft] def probeCells(cent: DataFrame, q: Array[Double], nprobe: Int): (Seq[Row], Seq[Long]) = {
-    val c = cent.select(col("cid"), col("ce").cast("array<double>"), col("cn").cast("double"))
+    val c = centroidCols(cent)
     val rows = c.collect().toSeq
     val cells = c.sparkSession.createDataFrame(rows.asJava, c.schema)
       .select(col("cid"), simTo(q, col("ce"), col("cn"))).collect().toSeq
@@ -298,8 +310,7 @@ object Knn {
     * literal — [[ivfAssignWith]]'s BestCentroid without its broadcast. */
   private def probed(index: DataFrame, cent: DataFrame, q: Array[Double], nprobe: Int): DataFrame = {
     val (rows, cells) = probeCells(cent, q, nprobe)
-    assign(prepped(index), typedLit(rows.map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))))
-      .filter(col("cluster").isin(cells: _*))
+    assign(prepped(index), centroidsLit(rows)).filter(col("cluster").isin(cells: _*))
   }
 
   /** IVF (inverted-file) approximate kNN — the scale path for vector search.

@@ -36,10 +36,7 @@ object CentroidLayout {
   def ensureTrain(spark: SparkSession, index: DataFrame, sfDir: String,
                   k: Int = 16, iters: Int = 3): DataFrame = {
     val dir = dirFor(sfDir, "train", s"$k|$iters")
-    built.onceIfAbsent(dir) {
-      graft.operators.KMeans.train(index, k, iters)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
-    }
+    built.onceIfAbsent(dir)(trainTo(index, dir, k, iters))
     spark.read.parquet(dir)
   }
 
@@ -47,11 +44,16 @@ object CentroidLayout {
   def rebuildTrain(spark: SparkSession, index: DataFrame, sfDir: String,
                    k: Int = 16, iters: Int = 3): DataFrame = {
     val dir = dirFor(sfDir, "train", s"$k|$iters")
-    built.always(dir) {
-      graft.operators.KMeans.train(index, k, iters)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
-    }
+    built.always(dir)(trainTo(index, dir, k, iters))
     spark.read.parquet(dir)
+  }
+
+  /** Train and write the centroids, then release the training's last
+    * round checkpoint: the artifact is what every consumer reads. */
+  private def trainTo(index: DataFrame, dir: String, k: Int, iters: Int): Unit = {
+    val cent = graft.operators.KMeans.train(index, k, iters)
+    cent.write.mode(SaveMode.Overwrite).parquet(dir)
+    graft.operators.NnDescent.release(cent)
   }
 
   /** Build-once-per-run PQ codebooks ([[graft.operators.KMeans.trainPq]]

@@ -455,22 +455,20 @@ object IndexBuild {
 
   /** Train + persist an IVF layout over the code-elements index —
     * `$indexDir/vector_layout/{centroids, cells}` — wiring the
-    * [[VectorLayout]] seam into the flagship search surface (the round-6
-    * hand-off item: the two were separate surfaces with parity only
-    * spec-proven). Elements have STRING ids, so seeding uses the k
+    * [[VectorLayout]] cell layout into the flagship search surface.
+    * Elements have STRING ids, so seeding uses the k
     * lexicographically-first ids (TakeOrderedAndProject — the sanctioned
     * global top-k shape, never an unpartitioned rank window) numbered
     * through a [[graft.functions.BoundedWindow]] over the k-row seed
-    * relation, then the shared [[graft.operators.KMeans.lloyd]] loop.
+    * relation, then the shared [[graft.operators.KMeans.lloyd]] loop; the
+    * layout is written and swapped in by [[VectorLayout.writeCells]].
     * Cells carry the FULL element columns + nrm, partitioned by cluster,
     * so a probe reads only the layout (static PartitionFilters), never
     * joins back to code_elements. */
   def writeSearchLayout(spark: SparkSession, indexDir: String,
                         numCentroids: Int = 16, iters: Int = 3): Unit = {
-    import graft.functions.VecExprs.{bestCentroid, dotc}
-    val els = spark.read.parquet(s"$indexDir/code_elements")
-    val e = els.select(col("id"), col("embedding").cast("array<double>").as("ed"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
+    val els = ensureNrm(spark.read.parquet(s"$indexDir/code_elements"))
+    val e = els.select(col("id"), col("embedding").cast("array<double>").as("ed"), col("nrm"))
     val seeds = e.orderBy(asc("id")).limit(numCentroids)
     // tag must be a REAL column (a lit folds and EliminateWindowPartitions
     // re-empties the spec — the warning comes back; BoundedWindow scaladoc)
@@ -478,27 +476,19 @@ object IndexBuild {
     val cent0 = seeds
       .withColumn("cid", (row_number().over(w) - 1).cast("long"))
       .select(col("cid"), col("ed").as("ce"), col("nrm").as("cn"))
-    graft.operators.KMeans.lloyd(e.select(col("ed"), col("nrm")), cent0, iters)
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/vector_layout/centroids")
-    val cent = spark.read.parquet(s"$indexDir/vector_layout/centroids")
-    val centArr = broadcast(
-      cent.agg(collect_list(struct(col("cid"), col("ce"), col("cn"))).as("cents")))
-    els
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .drop("ed")
-      .crossJoin(centArr)
-      .withColumn("cluster", bestCentroid(col("cents"), col("embedding"), col("nrm")))
-      .drop("cents")
-      .write.mode(SaveMode.Overwrite).partitionBy("cluster")
-      .parquet(s"$indexDir/vector_layout/cells")
+    VectorLayout.writeCells(spark, layoutDir(indexDir),
+      graft.operators.KMeans.lloyd(e.select(col("ed"), col("nrm")), cent0, iters),
+      els, "embedding")
   }
 
+  private def layoutDir(indexDir: String): String = s"$indexDir/vector_layout"
+
   /** Incremental maintenance of the search layout — [[VectorLayout.upsert]]
-    * for the string-keyed code-elements cells: assign the fresh elements
-    * against the STORED centroids, rewrite only the affected cluster
-    * partitions (dynamic partition overwrite, scoped conf), delete a
-    * partition emptied by a cluster move. Last-writer-wins per element id.
+    * for the string-keyed code-elements cells, through the same
+    * [[VectorLayout.upsertCells]]: the fresh elements are assigned against
+    * the STORED centroids, and every stored cell of a touched file is
+    * displaced (FILE-granular, the [[upsertIndex]] delete-insert
+    * contract: an element deleted from a re-indexed file cannot linger).
     * No-op when no layout exists (callers need not probe first).
     *
     * `touchedFiles`: the file_path set the re-index batch TOUCHED, when it
@@ -508,81 +498,26 @@ object IndexBuild {
     * ADVICE). None = derive from `fresh`, the plain contract. */
   def upsertSearchLayout(spark: SparkSession, indexDir: String,
                          fresh: DataFrame,
-                         touchedFiles: Option[DataFrame] = None): Unit = {
-    import graft.functions.VecExprs.{bestCentroid, dotc}
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$indexDir/vector_layout/centroids"))) return
-    val cent = spark.read.parquet(s"$indexDir/vector_layout/centroids")
-    val centArr = broadcast(
-      cent.agg(collect_list(struct(col("cid"), col("ce"), col("cn"))).as("cents")))
-    val assigned = fresh
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(dotc(col("ed"), col("ed"))))
-      .drop("ed")
-      .crossJoin(centArr)
-      .withColumn("cluster", bestCentroid(col("cents"), col("embedding"), col("nrm")))
-      .drop("cents")
-    val stored = spark.read.parquet(s"$indexDir/vector_layout/cells")
-      .withColumn("cluster", col("cluster").cast("long"))
-    // FILE-granular displacement (the upsertIndex delete-insert contract):
-    // every stored cell of a touched file goes, so an element deleted from
-    // a re-indexed file cannot linger in the layout as a stale row
-    val paths = touchedFiles.getOrElse(fresh).select("file_path").distinct()
-    val affected = assigned.select("cluster").distinct()
-      .union(stored.join(paths, Seq("file_path"), "left_semi")
-        .select("cluster").distinct())
-      .distinct()
-    // materialized before the overwrite replaces the very partition dirs
-    // this plan scans (the VectorLayout.upsert contract, round-7 ADVICE):
-    // after the checkpoint the write reads executor blocks, and the two
-    // driver collects below cost no extra executions of the merge
-    val rewritten = stored
-      .join(affected, Seq("cluster"), "left_semi")
-      .join(paths, Seq("file_path"), "left_anti")
-      .unionByName(assigned.select(stored.columns.map(col).toIndexedSeq: _*))
-      .localCheckpoint(true)
-    val affectedIds = affected.collect().map(_.getLong(0)).toSet
-    val writtenIds = rewritten.select("cluster").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try rewritten.write.mode(SaveMode.Overwrite).partitionBy("cluster")
-      .parquet(s"$indexDir/vector_layout/cells")
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    (affectedIds -- writtenIds).foreach { cid =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$indexDir/vector_layout/cells/cluster=$cid"), true)
-      ()
-    }
-  }
+                         touchedFiles: Option[DataFrame] = None): Unit =
+    VectorLayout.upsertCells(spark, layoutDir(indexDir), ensureNrm(fresh),
+      touchedFiles.getOrElse(fresh).select("file_path"), "embedding")
 
-  /** [[searchIndex]] through the persisted trained layout: rank the stored
-    * centroids against the query embedding, statically prune to the
-    * top-`nprobe` cell partitions, then run the SAME filter + exact-top-k
-    * kernel over the pruned cells. Approximate by the standard IVF
-    * contract (recall loss bounded to unprobed clusters; exhaustive
-    * nprobe ≡ [[searchIndex]], spec-pinned). Metadata filters apply AFTER
-    * pruning — cells carry every element column, so no join back. */
+  /** [[searchIndex]] through the persisted trained layout: the
+    * [[VectorLayout.probe]]d cells of the `nprobe` centroids nearest the
+    * query embedding, then the SAME filter + exact-top-k kernel over them.
+    * Approximate by the standard IVF contract (recall loss bounded to
+    * unprobed clusters; exhaustive nprobe ≡ [[searchIndex]], spec-pinned).
+    * Metadata filters apply AFTER pruning — cells carry every element
+    * column, so no join back. */
   def searchIndexIvf(spark: SparkSession, indexDir: String, queryText: String,
                      k: Int, nprobe: Int = 4,
                      elementType: Option[String] = None,
                      fileType: Option[String] = None): DataFrame = {
     // embedded ONCE: the same vector probes the centroids and ranks the cells
     val queryVec = Embedder.queryVector(spark, queryText)
-    val probeIds = spark.read.parquet(s"$indexDir/vector_layout/centroids")
-      .withColumn("qsim", cosineTo(queryVec, col("ce"), col("cn")))
-      .orderBy(desc("qsim"), asc("cid"))
-      .limit(nprobe)
-      .select("cid").collect().map(_.getLong(0)).toSeq
-    val cells = spark.read.parquet(s"$indexDir/vector_layout/cells")
-      .filter(col("cluster").isin(probeIds: _*))
-      .drop("cluster") // partition col (int-inferred) — not part of the contract
+    val dir = layoutDir(indexDir)
+    val cells = VectorLayout.probe(VectorLayout.cells(spark, dir), dir, queryVec, nprobe)
+      .drop("cluster") // the partition column — not part of the contract
     hitsTable(rankedElements(cells, queryVec, k, elementType, fileType))
   }
 

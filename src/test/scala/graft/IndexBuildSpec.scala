@@ -136,6 +136,68 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(probed == exact)
   }
 
+  /** Re-chunks the first .py file of index `d` with new content through
+    * [[IndexBuild.upsertIndex]]; its path. */
+  private def rechunkOne(d: String): String = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val path = spark.read.parquet(s"$d/code_elements").filter(col("file_type") === ".py")
+      .select("file_path").orderBy("file_path").head().getString(0)
+    IndexBuild.upsertIndex(spark, d, IndexBuild.buildElements(
+      Seq((path, "def lonely_survivor():\n    return 42\n")).toDS()))
+    path
+  }
+  private def elementsOf(d: String, path: String) =
+    spark.read.parquet(s"$d/code_elements")
+      .filter(org.apache.spark.sql.functions.col("file_path") === path)
+  private def layoutHits(d: String): Seq[String] =
+    IndexBuild.searchIndexIvf(spark, d, "lonely survivor", 3, nprobe = 1)
+      .collect().map(_.toString).toSeq
+  private def layoutCells(d: String): Seq[String] = {
+    val t = spark.read.parquet(s"$d/vector_layout/cells")
+    t.select(t.columns.sorted.map(t.col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+  }
+
+  test("search layout write, upsert and search leave nothing persisted, cached or set") {
+    val d = Files.createTempDirectory("graft_idx_leak").toString
+    IndexBuild.run(spark, projectDir, d).collect()
+    TestSpark.leavesNothing("write")(
+      IndexBuild.writeSearchLayout(spark, d, numCentroids = 2, iters = 2))
+    val path = rechunkOne(d)
+    TestSpark.leavesNothing("upsert")(IndexBuild.upsertSearchLayout(spark, d, elementsOf(d, path)))
+    TestSpark.leavesNothing("search")(layoutHits(d))
+  }
+
+  test("search-layout upsert over a refused swap-in fails loudly, keeps the old layout; a replay equals a clean run") {
+    val d = Files.createTempDirectory("graft_idx_fault").toString
+    IndexBuild.run(spark, projectDir, d).collect()
+    IndexBuild.writeSearchLayout(spark, d, numCentroids = 2, iters = 1)
+    val path = rechunkOne(d)
+    val clean = Files.createTempDirectory("graft_idx_clean").toString
+    Files.walk(Paths.get(d)).forEach { p =>
+      val to = Paths.get(clean).resolve(Paths.get(d).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+      ()
+    }
+    val before = layoutHits(d)
+    val stored = layoutCells(d)
+    // the scheme's own FileSystem refuses the swap-in; before this layout
+    // shared VectorLayout's commit, a non-file: layout was never maintained
+    val e = intercept[java.io.IOException](IndexBuild.upsertSearchLayout(spark,
+      NoSwapInFs.path(spark, d), elementsOf(d, path)))
+    assert(e.getMessage.contains("swap-in"), e.getMessage)
+    assert(layoutHits(d) == before && layoutCells(d) == stored, "the live layout changed")
+    assert(TestSpark.swapLeftovers(d).isEmpty, TestSpark.swapLeftovers(d).toString)
+    Seq(d, clean).foreach(i => IndexBuild.upsertSearchLayout(spark, i, elementsOf(i, path)))
+    assert(layoutCells(d) == layoutCells(clean))
+    assert(layoutCells(d).exists(_.contains("lonely_survivor")))
+    // a search over cells parked by an upsert's swap recovers them
+    assert(new java.io.File(s"$d/vector_layout/cells")
+      .renameTo(new java.io.File(s"$d/vector_layout/cells_old")))
+    assert(layoutHits(d) == layoutHits(clean))
+    assert(TestSpark.swapLeftovers(d).isEmpty, TestSpark.swapLeftovers(d).toString)
+  }
+
   test("empty or untokenizable query text fails loudly instead of returning nothing") {
     intercept[IllegalArgumentException] {
       IndexBuild.searchIndex(spark, indexDir, "!!! ---", 3)
@@ -362,4 +424,12 @@ class NoSwapInFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object NoSwapInFs {
   val Scheme = "graftnoswapin"
+
+  /** Local `dir` under this scheme, registered on `spark`'s Hadoop conf. */
+  def path(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.$Scheme.impl", classOf[NoSwapInFs].getName)
+    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+    s"$Scheme://$dir"
+  }
 }

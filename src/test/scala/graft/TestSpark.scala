@@ -41,6 +41,30 @@ object TestSpark {
     * The suites run one at a time, so no other test's jobs overlap. */
   def jobsDuring(body: => Unit): Int = counted(_ => true)(body)
 
+  /** `body`, failing if it left an RDD persisted, a relation cached or a
+    * session conf changed. */
+  def leavesNothing(step: String)(body: => Unit): Unit = {
+    import org.scalatest.Assertions.assert
+    val sc = spark.sparkContext
+    val rdds = sc.getPersistentRDDs.keySet
+    val cached = spark.sharedState.cacheManager.isEmpty
+    val conf = spark.conf.getAll
+    body
+    assert(sc.getPersistentRDDs.keySet == rdds, s"$step: an RDD was left persisted")
+    assert(spark.sharedState.cacheManager.isEmpty == cached, s"$step: a relation was left cached")
+    assert(spark.conf.getAll == conf, s"$step: a session conf was changed")
+  }
+
+  /** What a stage-then-swap leaves behind when it fails to clean up: the
+    * `*_stage` and `*_old` dirs under local dir `dir` and beside it. */
+  def swapLeftovers(dir: String): Seq[String] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val under = Files.walk(Paths.get(dir)).iterator().asScala.map(_.toString).toSeq
+    (under ++ Seq(s"${dir}_stage", s"${dir}_old").filter(p => Files.exists(Paths.get(p))))
+      .filter(p => p.endsWith("_stage") || p.endsWith("_old"))
+  }
+
   private def counted(take: Option[java.util.Properties] => Boolean)(body: => Unit): Int = {
     val n = new AtomicInteger
     val l = new SparkListener {

@@ -112,4 +112,67 @@ class VectorLayoutSpec extends AnyFunSuite {
       .orderBy("cid").collect().map(_.toString).toSeq
     assert(stored == trained)
   }
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def held = emb.filter(col("vec_id") % 10 === 7)
+  private def q20 = emb.filter(col("vec_id") === 20).select(col("embedding").as("qv"))
+  private def answer(d: String): Seq[String] =
+    VectorLayout.search(spark, d, q20, k = 10, nprobe = 3).collect().map(_.toString).toSeq
+  private def content(d: String): Seq[String] =
+    Seq("centroids", "cells").flatMap { rel =>
+      val t = spark.read.parquet(s"$d/$rel")
+      t.select(t.columns.sorted.map(t.col).toIndexedSeq: _*).collect().map(_.toString).sorted
+    }
+
+  test("write, upsert and search leave nothing persisted, cached or set") {
+    val d = tmp("graft_vlayout_leak")
+    TestSpark.leavesNothing("write")(VectorLayout.write(spark,
+      emb.filter(col("vec_id") % 10 =!= 7), d, numCentroids = 8, iters = 2))
+    TestSpark.leavesNothing("upsert")(VectorLayout.upsert(spark, d, held))
+    TestSpark.leavesNothing("search")(answer(d))
+  }
+
+  test("a refused swap-in fails the upsert and the write, keeps the old layout; a replay equals a clean run") {
+    val d = tmp("graft_vlayout_fault")
+    val clean = tmp("graft_vlayout_clean")
+    val base = emb.filter(col("vec_id") % 10 =!= 7)
+    Seq(d, clean).foreach(VectorLayout.write(spark, base, _, numCentroids = 8, iters = 2))
+    val before = answer(d)
+    val stored = content(d)
+    val up = intercept[java.io.IOException](
+      VectorLayout.upsert(spark, NoSwapInFs.path(spark, d), held))
+    assert(up.getMessage.contains("swap-in"), up.getMessage)
+    assert(answer(d) == before && content(d) == stored, "the upsert changed the live layout")
+    assert(TestSpark.swapLeftovers(d).isEmpty, TestSpark.swapLeftovers(d).toString)
+    Seq(d, clean).foreach(VectorLayout.upsert(spark, _, held))
+    assert(content(d) == content(clean))
+    val upserted = answer(d)
+    val wr = intercept[java.io.IOException](VectorLayout.write(spark, emb,
+      NoSwapInFs.path(spark, d), numCentroids = 8, iters = 2))
+    assert(wr.getMessage.contains("swap-in"), wr.getMessage)
+    assert(answer(d) == upserted && content(d) == content(clean),
+      "the write changed the live layout")
+    assert(TestSpark.swapLeftovers(d).isEmpty, TestSpark.swapLeftovers(d).toString)
+    Seq(d, clean).foreach(VectorLayout.write(spark, emb, _, numCentroids = 8, iters = 2))
+    assert(content(d) == content(clean))
+  }
+
+  test("a layout parked between a swap's renames is recovered by the next search or write") {
+    val d = tmp("graft_vlayout_parked")
+    VectorLayout.write(spark, emb, d, numCentroids = 8, iters = 2)
+    val before = answer(d)
+    // an upsert's swap (cells set aside), then a write's (the whole dir)
+    for (live <- Seq(s"$d/cells", d)) {
+      assert(new java.io.File(live).renameTo(new java.io.File(s"${live}_old")))
+      assert(answer(d) == before, s"$live parked")
+      assert(TestSpark.swapLeftovers(d).isEmpty, TestSpark.swapLeftovers(d).toString)
+    }
+    // a write recovers it before its own (here refused) swap-in
+    assert(new java.io.File(d).renameTo(new java.io.File(s"${d}_old")))
+    intercept[java.io.IOException](VectorLayout.write(spark, emb,
+      NoSwapInFs.path(spark, d), numCentroids = 8, iters = 2))
+    assert(TestSpark.swapLeftovers(d).isEmpty, TestSpark.swapLeftovers(d).toString)
+    assert(new java.io.File(s"$d/cells").isDirectory && answer(d) == before)
+  }
 }
