@@ -48,10 +48,11 @@ object Prof {
     * (graph, vectors, signs, bands) — the files a walk step or the next
     * batch may open. `writeBase`, the once-per-snapshot price, is
     * timed separately so the per-batch number is the one that scales.
-    * `buckets` = 0 derives the grain from the corpus
-    * (`GraphLayout.bucketsFor`); at 32 buckets any batch ≥ ~100 vectors
-    * touches every bucket, so the confined fraction only shows once
-    * buckets ≫ batch. */
+    * `buckets` = 0 derives the grain from the corpus's rows alone
+    * (`GraphLayout.bucketsFor`, ~500 graph rows per bucket: 8 buckets at
+    * the `maintain` benchmark's 500-vector base, where each 40-vector
+    * batch, re-cutting up to 40·k more lists, touches all of them), so the
+    * confined fraction only shows once buckets ≫ batch·(1+k). */
   def graphIncr(spark: SparkSession, args: Seq[String]): Unit = {
     import graft.sources.GraphLayout
     val Seq(sfDir, workDir) = args.take(2)

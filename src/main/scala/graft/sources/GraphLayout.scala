@@ -41,27 +41,25 @@ object GraphLayout {
 
   private val built = new BuildLatch
 
-  /** Floor bucket count — matches local[32]. For the bucket-CONFINED
-    * maintenance below the bucket count is the IO-confinement grain: a
-    * micro-batch rewrites ~min(buckets, batch·(1+recut-spread)) buckets,
-    * so buckets ≫ typical batch size is what makes per-batch write
-    * volume O(batch), not O(corpus) (round-12; `graft.Prof graph-incr`
-    * measures the fraction). */
-  private val DefaultBuckets = 32
-
-  /** Target graph rows (n·k) per bucket for AUTO-sized artifacts —
-    * constant bucket bytes as the corpus grows, which is what makes
-    * per-batch write IO corpus-INDEPENDENT (round-12, SCALE.md
-    * "Bucket-confined graph maintenance": 98% → 42% → 5.4% of live bytes
-    * per batch across three decades at exactly this grain: 16k/32,
-    * 160k/320, 1.6M/3200 rows per relation = ~500 rows per bucket).
-    * Round-13 (r12 verdict #3): derived by default instead of hand-set per run. */
+  /** Target graph rows (n·k) per bucket — the artifact's grain is a
+    * property of its rows alone, never of the session's cores. Constant
+    * bucket bytes as the corpus grows make per-batch write IO
+    * corpus-INDEPENDENT (SCALE.md "Bucket-confined graph maintenance":
+    * 98% → 42% → 5.4% of live bytes per batch across three decades at
+    * exactly this grain, ~500 rows per bucket). It is also the cheap
+    * direction below that: the micro-batch commit writes each file from
+    * the driver, and every fetch opens each touched bucket's files, at
+    * ≈ 5–10 ms of driver time per file, so a floor above the rows' own
+    * count (say 32, to match a 32-core session) only buys files. At the
+    * `maintain` benchmark's shape (500 vectors, 40 per batch, k = 8) the
+    * rule gives 8 buckets and 4 `pb=` dirs and a batch writes 21 files;
+    * a floor of 32 made it ≈ 82 files and the upsert p50 1,294 ms
+    * instead of 815 ms (4-vCPU VM). */
   private val TargetBucketRows = 500L
 
-  /** buckets = clamp(32, 2^16, graphRows / 500) — `graphRows` is n·k. */
+  /** buckets = clamp(1, 2^16, graphRows / 500) — `graphRows` is n·k. */
   private[graft] def bucketsFor(graphRows: Long): Int =
-    math.max(DefaultBuckets,
-      math.min(1 << 16, (graphRows / TargetBucketRows).toInt))
+    math.max(1, math.min(1 << 16, graphRows / TargetBucketRows).toInt)
 
   /** Sidecar guarding the bucket declaration (a mis-declared CLUSTERED
     * BY silently mis-joins). Records the COUNT, which varies per
@@ -124,9 +122,9 @@ object GraphLayout {
     * band relation — same constant-bytes rule as [[TargetBucketRows]]. */
   private val TargetBandRows = 500L
 
+  /** pparts = clamp(1, 2^16, bandRows / 500) — `bandRows` is n·tables. */
   private[graft] def bandPartsFor(bandRows: Long): Int =
-    math.max(DefaultBuckets,
-      math.min(1 << 16, (bandRows / TargetBandRows).toInt))
+    math.max(1, math.min(1 << 16, bandRows / TargetBandRows).toInt)
 
   private def bandSpecString(bits: Int, pparts: Int, tables: Int,
                              targetOcc: Int): String =

@@ -152,9 +152,16 @@ object VectorLayout {
     staged(spark, root, stage) {
       try cent.write.parquet(s"$stage/centroids") finally NnDescent.release(cent)
       val cents = Knn.centroidRows(spark.read.parquet(s"$stage/centroids"))
-      assigned(rows, cents, vec).write.partitionBy("cluster").parquet(s"$stage/cells")
+      cellFiles(assigned(rows, cents, vec)).parquet(s"$stage/cells")
     }
   }
+
+  /** The cells writer: one file per cluster, whatever the input's
+    * partitioning — without the `repartition` a write emits one file per
+    * (input task, cluster), and an upsert's stored scan and assigned batch
+    * land in separate tasks, so each upsert would double a cluster's files. */
+  private def cellFiles(cells: DataFrame) =
+    cells.repartition(col("cluster")).write.partitionBy("cluster")
 
   /** The one upsert: the stored cells minus those whose `displaced` key
     * (a one-column relation: `vec_id`, or the search layout's `file_path`)
@@ -176,9 +183,9 @@ object VectorLayout {
       val root = new Path(dir).toString
       val cents = Knn.centroidRows(spark.read.parquet(s"$root/centroids"))
       staged(spark, s"$root/cells", s"$root/cells_stage") {
-        stored.join(displaced, displaced.columns.toSeq, "left_anti")
-          .unionByName(assigned(rows, cents, vec).select(stored.columns.map(col).toIndexedSeq: _*))
-          .write.partitionBy("cluster").parquet(s"$root/cells_stage")
+        cellFiles(stored.join(displaced, displaced.columns.toSeq, "left_anti")
+          .unionByName(assigned(rows, cents, vec).select(stored.columns.map(col).toIndexedSeq: _*)))
+          .parquet(s"$root/cells_stage")
       }
     }
 

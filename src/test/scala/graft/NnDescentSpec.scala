@@ -224,7 +224,9 @@ class NnDescentSpec extends AnyFunSuite {
       val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
     }
     try {
-      GraphLayout.writeBase(spark, base, dir, k = 8)
+      // the pin's shape: 32 buckets, which the rows rule no longer gives here
+      GraphLayout.writeBase(spark, base, dir, k = 8, buckets = 32)
+      assert(GraphLayout.storedBuckets(spark, dir) == 32)
       // counts every job, from any thread: the upsert commits from Futures.
       // The batch collect, the band probe, the mates' lists and vectors (on
       // a 450-vector base every stored id is a bucket mate, so the hop and
@@ -235,15 +237,23 @@ class NnDescentSpec extends AnyFunSuite {
     } finally rm(new java.io.File(dir))
   }
 
-  test("upsertStored's driver-written files sit where Spark's writes put them") {
-    import java.nio.file.Files
+  private def rmTree(f: java.io.File): Unit = {
+    val cs = f.listFiles(); if (cs != null) cs.foreach(rmTree); f.delete(); ()
+  }
+
+  /** A frozen band parameter (`bits` or `pparts`) from the `_graft_bands` sidecar. */
+  private def bandParam(dir: String, key: String): Int = {
+    val meta = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_graft_bands")), "UTF-8")
+    meta.split(";").map(_.split(":")).collectFirst { case Array(`key`, v) => v.toInt }.get
+  }
+
+  /** The files of the artifact at `dir`, which `batches` were upserted into
+    * as `mb-<i>`, sit where Spark's writes put them: every row in the file
+    * of its bucket or the dir of its `pb=` partition, graph files sorted by
+    * (vec_id, rn), the upserts' footers with each relation's schema. */
+  private def assertPlacement(dir: String, batches: Seq[DataFrame]): Unit = {
     import org.apache.spark.sql.types.{DataType, StructType}
-    val base = emb.filter(col("vec_id") % 10 =!= 7 && col("vec_id") % 10 =!= 3)
-    val batches = Seq(7, 3).map(m => emb.filter(col("vec_id") % 10 === m).select("vec_id", "embedding"))
-    val dir = Files.createTempDirectory("graft_graph_place").toString
-    def rm(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-    }
     def files(f: java.io.File): Seq[java.io.File] = Option(f.listFiles()).toSeq.flatten
       .flatMap(c => if (c.isDirectory) files(c) else Seq(c))
       .filter(_.getName.endsWith(".parquet"))
@@ -256,49 +266,100 @@ class NnDescentSpec extends AnyFunSuite {
         .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
       finally r.close()
     }
+    val buckets = GraphLayout.storedBuckets(spark, dir)
+    val Seq(bits, pparts) = Seq("bits", "pparts").map(bandParam(dir, _))
+    val fileId = regexp_extract(input_file_name(), "_(\\d+)\\.[^/]*$", 1).cast("int")
+    for (rel <- Seq("graph", "vectors")) {
+      val bad = spark.read.parquet(s"$dir/$rel")
+        .filter(fileId =!= pmod(hash(col("vec_id")), lit(buckets))).count()
+      assert(bad == 0, s"$rel: $bad rows in a file named for another bucket")
+    }
+    val badBands = spark.read.parquet(s"$dir/bands")
+      .filter(regexp_extract(input_file_name(), "/pb=(\\d+)/", 1).cast("int") =!=
+        pmod(hash(col("t"), col("bkey")), lit(pparts))).count()
+    assert(badBands == 0, s"bands: $badBands rows under another pb= dir")
+    // graph files in the bucketed write's sort: (vec_id, rn) within each file
+    val inFile = spark.read.parquet(s"$dir/graph")
+      .select(input_file_name(), col("vec_id"), col("rn")).collect()
+      .groupBy(_.getString(0)).values
+    inFile.foreach { rs =>
+      val keys = rs.map(r => (r.getLong(1), r.getLong(2))).toSeq
+      assert(keys == keys.sorted, s"${rs.head.getString(0)} is not sorted by (vec_id, rn)")
+    }
+    // the upserts' files carry the schema each relation's Spark write had
+    val sg = NnDescent.signsOf(batches.head, 4)
+    val want = Map(
+      "graph" -> StructType.fromDDL("vec_id LONG, nbr LONG, rn LONG, sim DOUBLE"),
+      "vectors" -> batches.head.schema,
+      "signs" -> sg.schema,
+      "bands" -> NnDescent.bandKeysAt(sg, bits).schema)
+    for ((rel, schema) <- want) {
+      val written = files(new java.io.File(s"$dir/$rel")).filter(_.getName.startsWith("mb-"))
+      assert(written.nonEmpty, s"$rel: no upsert file")
+      written.foreach(f => assert(footer(f) == schema, s"$rel: ${f.getName}: ${footer(f)}"))
+    }
+    // and the catalog's bucketed read sees exactly the files' rows
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(sorted(GraphLayout.readGraph(spark, dir)) == sorted(spark.read.parquet(s"$dir/graph")))
+  }
+
+  test("upsertStored's driver-written files sit where Spark's writes put them") {
+    val base = emb.filter(col("vec_id") % 10 =!= 7 && col("vec_id") % 10 =!= 3)
+    val batches = Seq(7, 3).map(m => emb.filter(col("vec_id") % 10 === m).select("vec_id", "embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_graph_place").toString
     try {
-      GraphLayout.writeBase(spark, base, dir, k = 8)
+      // 32 buckets: many wrong files for a misplaced row to land in
+      GraphLayout.writeBase(spark, base, dir, k = 8, buckets = 32)
+      assert(GraphLayout.storedBuckets(spark, dir) == 32)
       batches.zipWithIndex.foreach { case (b, i) =>
         GraphLayout.upsertStored(spark, dir, b, s"mb-$i", k = 8)
       }
-      val buckets = GraphLayout.storedBuckets(spark, dir)
-      val meta = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/_graft_bands")), "UTF-8")
-      val Seq(bits, pparts) = Seq("bits", "pparts").map(k =>
-        meta.split(";").map(_.split(":")).collectFirst { case Array(`k`, v) => v.toInt }.get)
-      val fileId = regexp_extract(input_file_name(), "_(\\d+)\\.[^/]*$", 1).cast("int")
-      for (rel <- Seq("graph", "vectors")) {
-        val bad = spark.read.parquet(s"$dir/$rel")
-          .filter(fileId =!= pmod(hash(col("vec_id")), lit(buckets))).count()
-        assert(bad == 0, s"$rel: $bad rows in a file named for another bucket")
+      assertPlacement(dir, batches)
+    } finally rmTree(new java.io.File(dir))
+  }
+
+  test("writeBase sizes buckets and pb= partitions by the rows alone; upserts and a search equal a 32-bucket artifact's") {
+    // (base, two batches): the sf0.001 shape (400 + 2 × 50 vectors), and a
+    // one-bucket artifact (120 vectors, n·k = 960 < 1,000) with two 40-vector batches
+    val shapes = Seq(
+      (emb.filter(col("vec_id") % 10 =!= 7 && col("vec_id") % 10 =!= 3),
+        Seq(7, 3).map(m => emb.filter(col("vec_id") % 10 === m))),
+      (emb.filter(col("vec_id") < 120L),
+        Seq(120L, 160L).map(lo => emb.filter(col("vec_id") >= lo && col("vec_id") < lo + 40L))))
+    val (k, tables) = (8, 4)
+    val q = emb.filter(col("vec_id") === 5L).select(col("embedding").as("qv"))
+    for ((base, bs) <- shapes) {
+      val batches = bs.map(_.select("vec_id", "embedding"))
+      val n = base.count()
+      val index = batches.foldLeft(base.select("vec_id", "embedding"))(_.unionByName(_))
+      // the stored (buckets, pparts), the graph rows after both upserts and
+      // one search's answer, of an artifact written with `buckets`
+      def run(buckets: Int) = {
+        val dir = java.nio.file.Files.createTempDirectory("graft_graph_grain").toString
+        try {
+          GraphLayout.writeBase(spark, base, dir, k = k, tables = tables, buckets = buckets)
+          val counts = (GraphLayout.storedBuckets(spark, dir), bandParam(dir, "pparts"))
+          batches.zipWithIndex.foreach { case (b, i) =>
+            GraphLayout.upsertStored(spark, dir, b, s"mb-$i", k = k, tables = tables)
+          }
+          if (buckets == 0) assertPlacement(dir, batches)
+          val graph = GraphLayout.readGraph(spark, dir).collect().map(_.toString).sorted.toSeq
+          val hits = NnDescent.graphSearch(index, GraphLayout.readGraph(spark, dir), q,
+              excludeId = 5L, tables = tables, signs = Some(spark.read.parquet(s"$dir/signs")))
+            .collect().map(_.toString).toSeq
+          (counts, graph, hits)
+        } finally rmTree(new java.io.File(dir))
       }
-      val badBands = spark.read.parquet(s"$dir/bands")
-        .filter(regexp_extract(input_file_name(), "/pb=(\\d+)/", 1).cast("int") =!=
-          pmod(hash(col("t"), col("bkey")), lit(pparts))).count()
-      assert(badBands == 0, s"bands: $badBands rows under another pb= dir")
-      // graph files in the bucketed write's sort: (vec_id, rn) within each file
-      val inFile = spark.read.parquet(s"$dir/graph")
-        .select(input_file_name(), col("vec_id"), col("rn")).collect()
-        .groupBy(_.getString(0)).values
-      inFile.foreach { rs =>
-        val keys = rs.map(r => (r.getLong(1), r.getLong(2))).toSeq
-        assert(keys == keys.sorted, s"${rs.head.getString(0)} is not sorted by (vec_id, rn)")
-      }
-      // the upserts' files carry the schema each relation's Spark write had
-      val sg = NnDescent.signsOf(batches.head, 4)
-      val want = Map(
-        "graph" -> StructType.fromDDL("vec_id LONG, nbr LONG, rn LONG, sim DOUBLE"),
-        "vectors" -> batches.head.schema,
-        "signs" -> sg.schema,
-        "bands" -> NnDescent.bandKeysAt(sg, bits).schema)
-      for ((rel, schema) <- want) {
-        val written = files(new java.io.File(s"$dir/$rel")).filter(_.getName.startsWith("mb-"))
-        assert(written.nonEmpty, s"$rel: no upsert file")
-        written.foreach(f => assert(footer(f) == schema, s"$rel: ${f.getName}: ${footer(f)}"))
-      }
-      // and the catalog's bucketed read sees exactly the files' rows
-      def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-      assert(sorted(GraphLayout.readGraph(spark, dir)) == sorted(spark.read.parquet(s"$dir/graph")))
-    } finally rm(new java.io.File(dir))
+      val (auto, autoGraph, autoHits) = run(0)
+      val (fixed, fixedGraph, fixedHits) = run(32)
+      // ~500 rows per bucket and per pb= dir, at least one: no floor of 32
+      val want = (math.max(1L, n * k / 500).toInt, math.max(1L, n * tables / 500).toInt)
+      assert(auto == want, s"n=$n")
+      assert(auto == (GraphLayout.bucketsFor(n * k), GraphLayout.bandPartsFor(n * tables)))
+      assert(fixed == (32, want._2))
+      assert(autoGraph.nonEmpty && autoGraph == fixedGraph, s"n=$n: the graphs differ")
+      assert(autoHits.nonEmpty && autoHits == fixedHits, s"n=$n: the searches differ")
+    }
   }
 
   test("upsertStored leaves nothing persisted") {
@@ -586,7 +647,10 @@ class NnDescentSpec extends AnyFunSuite {
       val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
     }
     try {
-      graft.sources.GraphLayout.writeBase(spark, base, dir, k = 5)
+      // 32 buckets, so a replay's touched-bucket set has room to diverge
+      // (the rows rule gives 4 here, every one touched by either commit)
+      graft.sources.GraphLayout.writeBase(spark, base, dir, k = 5, buckets = 32)
+      assert(graft.sources.GraphLayout.storedBuckets(spark, dir) == 32)
       graft.sources.GraphLayout.upsertStored(spark, dir, batch, "mb-0", k = 5)
       // crash-replay shape: the same batchId re-applied against state that
       // already absorbed it — the recomputed delta (and hence the touched

@@ -125,6 +125,19 @@ class VectorLayoutSpec extends AnyFunSuite {
       t.select(t.columns.sorted.map(t.col).toIndexedSeq: _*).collect().map(_.toString).sorted
     }
 
+  test("every cluster holds one cells file after the write and after each of 3 upserts") {
+    val d = tmp("graft_vlayout_files")
+    VectorLayout.write(spark, emb.filter(col("vec_id") % 10 =!= 7), d, numCentroids = 8, iters = 2)
+    def filesPerCluster: Map[String, Int] = new java.io.File(s"$d/cells").listFiles()
+      .filter(_.getName.startsWith("cluster="))
+      .map(c => c.getName -> c.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(filesPerCluster.nonEmpty && filesPerCluster.values.forall(_ == 1), s"write: $filesPerCluster")
+    for (i <- 0 until 3) {
+      VectorLayout.upsert(spark, d, held.filter(col("vec_id") % 3 === i))
+      assert(filesPerCluster.values.forall(_ == 1), s"upsert $i: $filesPerCluster")
+    }
+  }
+
   test("write, upsert and search leave nothing persisted, cached or set") {
     val d = tmp("graft_vlayout_leak")
     TestSpark.leavesNothing("write")(VectorLayout.write(spark,
